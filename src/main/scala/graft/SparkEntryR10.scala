@@ -49,8 +49,9 @@ object SparkEntryR10 {
     // Spark plans it as a single-partition WindowExec. Written here as
     // plain SQL — no library call — so the plan only survives 100 TB
     // because `GlobalRankRule` rewrites it into the distributed
-    // prefix-sum (`GlobalRunningAggExec`: range exchange + per-partition
-    // partial buffers + driver prefix-merge + seeded streaming fold).
+    // prefix-sum (`KeyedRunningAggExec` with no keys: range exchange +
+    // per-partition partial buffers + driver prefix-merge + seeded
+    // streaming fold).
     // The corpus total comes from a scalar subquery (a broadcast
     // aggregate), NOT `sum() OVER ()` — the empty-order form would be a
     // second single-partition window. `PlanAuditSpec` pins the plan
@@ -72,11 +73,12 @@ object SparkEntryR10 {
     // whole-frame total, all plain SQL over the whole corpus ----
     //
     // One query hitting every remaining unpartitioned-window shape the
-    // round-10 rewrite family covers: the neighbour deltas plan as
-    // `GlobalOffsetExec` (boundary values cross partitions as metadata,
-    // never a one-task sort), the size distribution as `GlobalRankExec`'s
-    // buffered cume pass, and `count(*) OVER ()` as `GlobalTotalAggExec`
-    // (ZERO exchange — per-partition partials merged on the driver).
+    // round-10 rewrite family covers, each on a keyed exec with no keys:
+    // the neighbour deltas plan as `KeyedOffsetExec` (boundary values
+    // cross partitions as metadata, never a one-task sort), the size
+    // distribution as `KeyedRankExec`'s buffered cume pass, and
+    // `count(*) OVER ()` as `KeyedTotalAggExec` (ZERO exchange —
+    // per-partition partials merged on the driver).
     // Two distinct orders → two range exchanges; the total adds none.
     "x117_doc_window_profile" -> ((s, d) => {
       Tables.documents(s, d).createOrReplaceTempView("x117_documents")

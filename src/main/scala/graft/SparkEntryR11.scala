@@ -16,9 +16,9 @@ object SparkEntryR11 {
     // written GLOBALLY (no PARTITION BY) — the r10 verdict's #1 ask.
     // Spark plans every one of these as a single-partition WindowExec;
     // here the plan only survives 100 TB because `GlobalRankRule`
-    // rewrites the bounded frames into `GlobalBoundedAggExec` (range
-    // exchange + k boundary tuples per partition + row-local re-fold)
-    // and the ignore-nulls lag(1) into `GlobalRunningAggExec`'s
+    // rewrites the bounded frames into `KeyedBoundedAggExec` with no
+    // keys (range exchange + k boundary tuples per partition + row-local
+    // re-fold) and the ignore-nulls lag(1) into `KeyedRunningAggExec`'s
     // Last(ignoreNulls) exclusive prefix. One ORDER BY → all four
     // outputs share ONE range exchange. `PlanAuditSpec` pins the plan
     // Window-free with the execs present.
@@ -86,9 +86,9 @@ object SparkEntryR11 {
     // `a PRECEDING AND b FOLLOWING` is the centered rolling mean every
     // pandas `rolling(center=True)` port writes, and `CURRENT ROW AND k
     // FOLLOWING` the lookahead budget. Both are global one-task windows
-    // in Spark; `GlobalBoundedAggExec`'s forward context (pending rows
-    // finalize when the row maxFwd ahead arrives, partition tails drain
-    // against the stitched forward tuples) plans them Window-free.
+    // in Spark; `KeyedBoundedAggExec`'s no-key forward context (pending
+    // rows finalize when the row maxFwd ahead arrives, partition tails
+    // drain against the stitched forward tuples) plans them Window-free.
     "x122_centered_smooth" -> ((s, d) => {
       Tables.documents(s, d).createOrReplaceTempView("x122_documents")
       s.sql(

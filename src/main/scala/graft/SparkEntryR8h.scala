@@ -159,7 +159,7 @@ object SparkEntryR8h {
       // Observation API (obs.get blocks on the action), so explain-only
       // tooling sees a LocalTableScan of the finished metrics, not the
       // CollectMetrics node — the plan-shape evidence for observe()
-      // lives in this query's oracle agreement, not in ExplainAudit.
+      // lives in this query's oracle agreement, not in a plan dump.
       val nPurchases = ev.where(col("event_type") === "purchase").count()
       val m = obs.get
       // an empty fixture would surface as NULL min/max metrics and a

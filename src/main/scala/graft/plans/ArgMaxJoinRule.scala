@@ -33,8 +33,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * existing rewrite family then heals it further in the same optimizer
   * fixed point: provably-low-ndv keys plan the ZERO-exchange
   * `KeyedTotalAggExec`, and the global form (`ON t.v = a.m` against an
-  * ungrouped aggregate) plans `GlobalTotalAggExec` with no exchange at
-  * all.
+  * ungrouped aggregate) plans the same exec with no keys and no
+  * exchange at all.
   *
   * Since round 14 the grouping keys may be COMPUTED — the everyday
   * latest-per-(key, period) spelling `GROUP BY o_custkey,

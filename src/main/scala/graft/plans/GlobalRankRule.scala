@@ -7,12 +7,16 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 
-/** Optimizer rule: rewrite `row_number()/rank()/dense_rank() OVER
-  * (ORDER BY ...)` — an EMPTY partition spec — into [[GlobalRankPlan]],
-  * so plain SQL/DataFrame users get the range-partitioned offset-pass
-  * plan instead of Spark's single-partition `WindowExec` sort (VERDICT
-  * r9 #1; the automatic counterpart of `stats/GlobalRank`, following
-  * the [[RangeJoinRule]] auto-rewrite precedent).
+/** Optimizer rule: rewrite unpartitioned windows — `f() OVER (ORDER BY
+  * ...)` or `agg() OVER ()`, an EMPTY partition spec — onto the window
+  * exec family with NO partition keys, so plain SQL/DataFrame users get
+  * a range-partitioned boundary-stitch plan instead of Spark's
+  * single-partition `WindowExec` sort (VERDICT r9 #1; the automatic
+  * counterpart of `stats/GlobalRank`, following the [[RangeJoinRule]]
+  * auto-rewrite precedent). A global window is a keyed window with no
+  * keys: every row projects to the same empty key, which straddles
+  * every partition seam, so the `Keyed*` execs [[KeyedWindowRule]]
+  * plans compute the global answer unchanged.
   *
   * ON by default in sessions built with
   * `spark.sql.extensions=graft.GraftExtensions`; disable per session or
@@ -21,37 +25,35 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
   *
   * Scope — a Window node is rewritten only when ALL of:
   *   - its partition spec is empty and its order spec is not;
-  *   - every window expression is either a ranking function —
-  *     row_number / rank / dense_rank / ntile(k) / percent_rank /
-  *     cume_dist, all pure functions of the global position, tie run,
-  *     and total count [[GlobalRankPlan]]'s two-pass plan computes — or
-  *     a running aggregate — sum/count/min/max/avg over an UNBOUNDED
-  *     PRECEDING → CURRENT ROW frame (ROWS or RANGE), the distributed
-  *     prefix-sum of [[GlobalRunningAggPlan]] — or a whole-frame total
-  *     (`agg() OVER ()`, [[GlobalTotalAggPlan]]: zero exchange) — or a
-  *     literal-offset respect-nulls lag/lead ([[GlobalOffsetPlan]]:
-  *     boundary values cross partitions as metadata). A mix stacks the
-  *     plans over ONE range exchange (each preserves the child's
+  *   - every window expression is one of:
+  *     - a ranking function — row_number / rank / dense_rank / ntile(k)
+  *       / percent_rank / cume_dist, all pure functions of the position,
+  *       tie run and row count ([[KeyedRankPlan]]'s two-pass count);
+  *     - a running aggregate — sum/count/min/max/avg/first_value/
+  *       last_value (ignore-nulls included; `first_value` also in its
+  *       optimizer-rewritten `nth_value(x, 1)` spelling) over an
+  *       UNBOUNDED PRECEDING → CURRENT ROW frame, ROWS or RANGE — the
+  *       distributed prefix sum of [[KeyedRunningAggPlan]];
+  *     - a whole-frame total (`agg() OVER ()`, [[KeyedTotalAggPlan]]:
+  *       zero exchange);
+  *     - a literal-offset respect-nulls lag/lead ([[KeyedOffsetPlan]]:
+  *       boundary values cross partitions as metadata);
+  *     - a BOUNDED sliding aggregate — any both-ends-bounded ROWS
+  *       frame: trailing, centered `a PRECEDING AND b FOLLOWING`,
+  *       pure-following; reach ≤ maxBoundedFrame each side
+  *       ([[KeyedBoundedAggPlan]]: boundary tuples per partition,
+  *       row-local re-fold with a ≤ maxFwd pending queue);
+  *     - a RANGE VALUE-DISTANCE frame over an int-backed ascending order
+  *       ([[KeyedRangeAggPlan]]: value-capped boundary harvest);
+  *     - `nth_value(n>1)` and ignore-nulls `lag(e, n>1)`, riding as
+  *       [[NthFirstRing]]/[[NthLastRing]] value rings.
+  *     Anything else — ignore-nulls lead (needs an unbounded pending
+  *     queue), n beyond [[RingAggs.MaxSlots]], non-literal or calendar
+  *     RANGE distances — keeps the whole Window node untouched: a mixed
+  *     node must stay one node to compute consistently. A mix stacks
+  *     the plans over ONE range exchange (each preserves the child's
   *     partitioning and order, so the outer's requirement is already
-  *     satisfied). Running aggregates include `first_value`/
-  *     `last_value` (Spark's First/Last aggregates) in every variant —
-  *     ignore-nulls included — since the fold reproduces their frame
-  *     semantics exactly (`first_value` also in its optimizer-rewritten
-  *     `nth_value(x, 1)` spelling) — or a BOUNDED sliding aggregate
-  *     (any both-ends-bounded ROWS frame: trailing, centered
-  *     `a PRECEDING AND b FOLLOWING`, pure-following; reach ≤
-  *     maxBoundedFrame each side — [[GlobalBoundedAggPlan]]: boundary
-  *     tuples per partition, row-local re-fold with a ≤ maxFwd pending
-  *     queue) — or a trailing RANGE VALUE-DISTANCE frame
-  *     (`RANGE Δ PRECEDING AND CURRENT ROW` over an int-backed ascending
-  *     order — [[GlobalRangeAggPlan]]: value-capped boundary harvest).
-  *     `nth_value(n>1)` and ignore-nulls `lag(e, n>1)` ride as
-  *     [[NthFirstRing]]/[[NthLastRing]] value rings. Anything else —
-  *     ignore-nulls lead (needs an unbounded pending queue), n beyond
-  *     [[RingAggs.MaxSlots]], non-literal or calendar RANGE distances —
-  *     keeps the whole Window node untouched: their semantics need the
-  *     frame, and a mixed node must stay one node to compute
-  *     consistently;
+  *     satisfied);
   *   - it is NOT directly under a rank-limit filter (`rn <= k` etc.)
   *     when purely ranking:
   *     that shape belongs to Spark's `InferWindowGroupLimit` top-k
@@ -325,26 +327,26 @@ case class GlobalRankRule(session: SparkSession) extends Rule[LogicalPlan]
         // requirement at all — they ride whatever partitioning is below)
         var replaced: LogicalPlan = w.child
         if (rankPairs.nonEmpty) {
-          replaced = GlobalRankPlan(w.orderSpec,
+          replaced = KeyedRankPlan(Nil, w.orderSpec,
             rankPairs.map(_._1), rankPairs.map(_._2), replaced)
         }
         if (runTriples.nonEmpty) {
-          replaced = GlobalRunningAggPlan(w.orderSpec,
+          replaced = KeyedRunningAggPlan(Nil, w.orderSpec,
             runTriples.map(_._1), runTriples.map(_._2),
             runTriples.map(_._3), replaced)
         }
         if (offQuads.nonEmpty) {
-          replaced = GlobalOffsetPlan(w.orderSpec,
+          replaced = KeyedOffsetPlan(Nil, w.orderSpec,
             offQuads.map(_._1), offQuads.map(_._2),
             offQuads.map(_._3), offQuads.map(_._4), replaced)
         }
         if (bndQuads.nonEmpty) {
-          replaced = GlobalBoundedAggPlan(w.orderSpec,
+          replaced = KeyedBoundedAggPlan(Nil, w.orderSpec,
             bndQuads.map(_._1), bndQuads.map(_._2),
             bndQuads.map(_._3), bndQuads.map(_._4), replaced)
         }
         if (rngQuads.nonEmpty) {
-          replaced = GlobalRangeAggPlan(w.orderSpec,
+          replaced = KeyedRangeAggPlan(Nil, w.orderSpec,
             rngQuads.map(_._1), rngQuads.map(_._2: Expression),
             rngQuads.map(_._3), rngQuads.map(_._4), replaced)
         }
@@ -359,7 +361,7 @@ case class GlobalRankRule(session: SparkSession) extends Rule[LogicalPlan]
               case _ => false
             }
           }
-          replaced = GlobalTotalAggPlan(
+          replaced = KeyedTotalAggPlan(Nil,
             totPairs.map(_._1), totPairs.map(_._2),
             if (orderSensitive) w.orderSpec else Nil, replaced)
         }
@@ -438,24 +440,13 @@ object GlobalRankRule {
   val MaxRangeRowsConf = "spark.graft.globalRank.maxRangeRows"
 }
 
-/** Planner strategy for [[GlobalRankPlan]] → [[GlobalRankExec]] and
-  * [[GlobalRunningAggPlan]] → [[GlobalRunningAggExec]]; registered
-  * beside the rule in `graft.GraftExtensions`.
+/** Planner strategy for the window-exec family: every plan node
+  * [[GlobalRankRule]] and [[KeyedWindowRule]] emit maps to its exec —
+  * the unpartitioned shapes are the same nodes with no partition keys.
+  * Registered beside the rules in `graft.GraftExtensions`.
   */
 object GlobalRankStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case GlobalRankPlan(order, attrs, kinds, child) =>
-      GlobalRankExec(order, attrs, kinds, planLater(child)) :: Nil
-    case GlobalRunningAggPlan(order, attrs, aggs, frames, child) =>
-      GlobalRunningAggExec(order, attrs, aggs, frames, planLater(child)) :: Nil
-    case GlobalTotalAggPlan(attrs, aggs, order, child) =>
-      GlobalTotalAggExec(attrs, aggs, order, planLater(child)) :: Nil
-    case GlobalOffsetPlan(order, attrs, ins, offs, defs, child) =>
-      GlobalOffsetExec(order, attrs, ins, offs, defs, planLater(child)) :: Nil
-    case GlobalBoundedAggPlan(order, attrs, aggs, los, ups, child) =>
-      GlobalBoundedAggExec(order, attrs, aggs, los, ups, planLater(child)) :: Nil
-    case GlobalRangeAggPlan(order, attrs, aggs, los, ups, child) =>
-      RangeAggExec(Nil, order, attrs, aggs, los, ups, planLater(child)) :: Nil
     case KeyedRangeAggPlan(keys, order, attrs, aggs, los, ups, child) =>
       RangeAggExec(keys, order, attrs, aggs, los, ups, planLater(child)) :: Nil
     case KeyedRunningAggPlan(keys, order, attrs, aggs, frames, child, opt) =>

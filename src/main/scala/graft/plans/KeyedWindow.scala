@@ -2,54 +2,108 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, Expression, GenericInternalRow, JoinedRow, MutableProjection, RowOrdering, SortOrder, SpecificInternalRow, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, Expression, GenericInternalRow, JoinedRow, Literal, MutableProjection, RowOrdering, SortOrder, SpecificInternalRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, DeclarativeAggregate}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning}
+import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning, RangePartitioning}
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 
-/** Logical plan for scale-safe KEYED running aggregates —
-  * `agg(x) OVER (PARTITION BY k ORDER BY t [ROWS|RANGE] UNBOUNDED
-  * PRECEDING → CURRENT ROW)` where k is a LOW-CARDINALITY data column
-  * (`PARTITION BY l_returnflag`: 3 values over a corpus). Spark hash-
-  * clusters the window on k, so the whole corpus rides through ndv(k)
-  * tasks at any cluster size — the classic low-ndv window hazard the
-  * library-level `stats/KeyedPrefix` healed for library callers
-  * (VERDICT r10 #3 asks for the automatic rule).
+/** Which ranking function a [[KeyedRankPlan]] output column computes.
+  * All kinds are order statistics of the SAME sort — they share one
+  * range exchange, one in-partition sort, one metadata count pass and one
+  * streaming rank pass, whatever combination a query asks for.
+  */
+sealed trait RankKind extends Serializable
+object RankKind {
+  /** 1-based row position (ties broken arbitrarily-but-deterministically
+    * by the sort, exactly like `WindowExec`). */
+  case object RowNumber extends RankKind
+  /** Competition rank: tied rows share the rank of their first row; the
+    * next distinct key jumps by the tie count. */
+  case object Rank extends RankKind
+  /** Dense rank: tied rows share a rank; the next distinct key takes the
+    * next integer. */
+  case object DenseRank extends RankKind
+  /** `ntile(buckets)`: rows split into `buckets` as-even groups, the
+    * first `N % buckets` groups one row larger — a pure function of the
+    * row position and the row count, both of which the count pass
+    * already yields. */
+  final case class Ntile(buckets: Int) extends RankKind
+  /** `percent_rank()` = (rank − 1) / (N − 1), 0.0 for N = 1 — the
+    * competition rank scaled by the row count. `DoubleType`. */
+  case object PercentRank extends RankKind
+  /** `cume_dist()` = (position of the row's LAST peer) / N — the
+    * inclusive distribution function. Unlike the other kinds it needs
+    * the tie run's END, so its presence makes the streaming pass buffer
+    * one peer run at a time (peak memory = the largest tie run; still
+    * strictly below `WindowExec`, which buffers whole partitions).
+    * `DoubleType`. */
+  case object CumeDist extends RankKind
+}
+
+/** The prefix frame of one [[KeyedRunningAggPlan]] output. */
+sealed trait RunFrame extends Serializable
+object RunFrame {
+  /** ROWS UNBOUNDED PRECEDING → CURRENT ROW: evaluate after each row. */
+  case object RowsCurrent extends RunFrame
+  /** ROWS UNBOUNDED PRECEDING → 1 PRECEDING: the EXCLUSIVE prefix —
+    * evaluate BEFORE folding the current row in (the first row of a
+    * partition sees the empty-frame value: the aggregate's own
+    * initial-buffer evaluation, i.e. null sums / zero counts). */
+  case object RowsExclusive extends RunFrame
+  /** RANGE UNBOUNDED PRECEDING → CURRENT ROW (the default frame of
+    * `agg() OVER (ORDER BY ...)`): tied rows share the value of their
+    * peer run's last row. */
+  case object RangeCurrent extends RunFrame
+}
+
+/** Logical plan for scale-safe running aggregates — `agg(x) OVER
+  * ([PARTITION BY k] ORDER BY t [ROWS|RANGE] UNBOUNDED PRECEDING →
+  * CURRENT ROW)`. Spark plans the window with one task per key: a
+  * low-cardinality k (`PARTITION BY l_returnflag`: 3 values over a
+  * corpus) rides through ndv(k) tasks at any cluster size, and an EMPTY
+  * partition spec (`partKeys = Nil`, planned by [[GlobalRankRule]]) is a
+  * `SinglePartition` requirement — at 100 TB the whole frame rides
+  * through one task. A running aggregate is a distributed prefix sum:
   *
-  * The plan here needs NO calendar bucket column: range-partition on
-  * (keys ++ order) — each key's slice becomes a CONTIGUOUS RUN of
-  * partitions, parallelism bounded by the data, never by ndv(k) — and
-  * run the [[GlobalRunningAggPlan]] prefix machinery with PER-KEY
-  * resets:
-  *
-  *   1. the metadata pass folds each partition into BOUNDARY data only
+  *   1. range-partition on (keys ++ order) — each key's slice becomes a
+  *      CONTIGUOUS RUN of partitions, parallelism bounded by the data,
+  *      never by ndv(k); with no keys every row shares the one empty key,
+  *      which straddles every seam;
+  *   2. the metadata pass folds each partition into BOUNDARY data only
   *      (first key, last key, last run's partial buffer, single-run
-  *      flag — r15): interior runs never leave their partition, so
-  *      driver state is O(partitions) buffers at ANY key cardinality
-  *      and the optimistic run budget does not apply to this shape;
-  *   2. the driver walks partitions in order keeping one accumulated
-  *      buffer for the key currently straddling the boundary — a
-  *      partition whose first key continues the previous partition's
-  *      last key is seeded with that key's accumulated prefix,
-  *      otherwise it starts fresh;
-  *   3. the streaming pass folds forward, RE-INITIALIZING the buffer at
-  *      every key change (the in-partition keys' prefixes are complete
-  *      within the partition).
+  *      flag): interior runs never leave their partition, so driver
+  *      state is O(partitions) buffers at ANY key cardinality;
+  *   3. the driver walks partitions in order keeping one accumulated
+  *      buffer for the key currently straddling the boundary (merged
+  *      with the functions' own `mergeExpressions`) — a partition whose
+  *      first key continues the previous partition's last key is seeded
+  *      with that key's accumulated prefix, otherwise it starts fresh;
+  *   4. the streaming pass folds forward with the functions' own
+  *      `updateExpressions`, RE-INITIALIZING the buffer at every key
+  *      change.
   *
-  * Frame semantics per output are [[RunFrame]]'s, identical to the
-  * global exec: ROWS evaluates per row, the EXCLUSIVE prefix before the
-  * fold, RANGE buffers one (key ∪ order)-peer run and back-fills at run
-  * end. Tie discipline matches the global family: exactness under
-  * non-total orders holds where `WindowExec`'s own answer is defined.
+  * Using each aggregate's own init/update/merge/evaluate expressions —
+  * never a reimplementation — keeps null handling, Decimal widening and
+  * ANSI overflow bit-identical to the `WindowExec` plan this replaces.
+  * Frame semantics per output are [[RunFrame]]'s: ROWS evaluates per
+  * row, the EXCLUSIVE prefix before the fold, RANGE buffers one
+  * (key ∪ order)-peer run and back-fills at run end (range partitioning
+  * never splits a peer run across a seam). Exactness under non-total
+  * orders holds where `WindowExec`'s own answer is defined.
+  *
+  * `aggs(i)` is an expression containing EXACTLY ONE
+  * `AggregateExpression` — usually the aggregate itself, but later
+  * optimizer rules may wrap it in scalar post-processing
+  * (`DecimalAggregates`); see [[KeyedWindowExec.innerAggregate]].
   */
 case class KeyedRunningAggPlan(partKeys: Seq[Expression], order: Seq[SortOrder],
                                aggAttrs: Seq[Attribute], aggs: Seq[Expression],
                                frames: Seq[RunFrame], child: LogicalPlan,
                                optimistic: Boolean = false)
     extends UnaryNode {
-  require(partKeys.nonEmpty && aggAttrs.length == aggs.length &&
+  require(aggAttrs.length == aggs.length &&
     aggs.length == frames.length && aggs.nonEmpty)
   override def output: Seq[Attribute] = child.output ++ aggAttrs
   override def producedAttributes: AttributeSet = AttributeSet(aggAttrs)
@@ -58,19 +112,36 @@ case class KeyedRunningAggPlan(partKeys: Seq[Expression], order: Seq[SortOrder],
     copy(child = newChild)
 }
 
-/** Logical plan for scale-safe KEYED lag/lead — `lag/lead(e, n) OVER
-  * (PARTITION BY k ORDER BY t)` over a low-cardinality k: the
-  * [[GlobalOffsetPlan]] boundary-value machinery with PER-KEY resets
-  * (an offset never reaches across a key change — the first rows of a
-  * key get the default, exactly as `WindowExec` partitions do). Only
-  * the boundary VALUES of keys that straddle partition boundaries cross
-  * partitions, as (key, values) metadata.
+/** Logical plan for scale-safe lag/lead — `lag/lead(e, n) OVER
+  * ([PARTITION BY k] ORDER BY t)` over a low-cardinality k, or with no
+  * partition spec at all (`partKeys = Nil`). An offset needs only a
+  * BOUNDED neighbourhood of each row, so the frame is range-partitioned
+  * and only the BOUNDARY VALUES of keys that straddle partition seams
+  * cross partitions, as (key, values) metadata — values, not rows: a lag
+  * over a 1 MB document column ships only the lagged column's values.
+  * An offset never reaches across a key change — the first rows of a
+  * key get the default, exactly as `WindowExec` partitions do.
+  *
+  * `offs(i)` is the SIGNED row offset of `attrs(i)`: negative = lag,
+  * positive = lead, 0 = the current row. `defaults(i)` is evaluated
+  * against the CURRENT row when the offset row falls off either end of
+  * the key — `WindowExec`'s exact contract for `lag(e, n, default)`.
+  * `ignoreNulls` variants are NOT rewritten (their reach is unbounded);
+  * the offset-1 ignore-nulls lag rides [[KeyedRunningAggPlan]] as a
+  * `Last(ignoreNulls)` exclusive prefix instead.
+  *
+  * Consistency caveat: the metadata and streaming passes re-read the
+  * sorted child, and shuffle-fetch order is nondeterministic, so rows
+  * TYING on the full order may reorder between them. Exactness assumes
+  * a total order or order-insensitive tied payloads; under a non-total
+  * order `WindowExec`'s own answer is only defined up to the sort's
+  * arbitrary tie placement. The bounded family shares the caveat.
   */
 case class KeyedOffsetPlan(partKeys: Seq[Expression], order: Seq[SortOrder],
                            attrs: Seq[Attribute], inputs: Seq[Expression],
                            offs: Seq[Int], defaults: Seq[Expression],
                            child: LogicalPlan) extends UnaryNode {
-  require(partKeys.nonEmpty && attrs.length == inputs.length &&
+  require(attrs.length == inputs.length &&
     inputs.length == offs.length && offs.length == defaults.length &&
     attrs.nonEmpty)
   override def output: Seq[Attribute] = child.output ++ attrs
@@ -86,6 +157,39 @@ private[plans] object KeyedWindowExec {
     * window's own order. */
   def fullOrder(partKeys: Seq[Expression], order: Seq[SortOrder]): Seq[SortOrder] =
     partKeys.map(k => SortOrder(k, Ascending)) ++ order
+
+  /** The distribution an exec demands when PEER RUNS (rows tying on
+    * `full`) must not straddle a partition seam: tie-aware ranks, RANGE
+    * running frames, value frames. `OrderedDistribution(full)` alone is
+    * not enough — Spark lets a range partitioning on a LONGER order
+    * satisfy it (`RangePartitioning(v, id)` satisfies
+    * `OrderedDistribution(v)`), and that partitioning splits a run of
+    * equal `v` across partitions whenever windows over `ORDER BY v` and
+    * `ORDER BY v, id` stack. See [[PeerOrderedDistribution]]. */
+  def peerDistribution(full: Seq[SortOrder]): Distribution =
+    new PeerOrderedDistribution(full)
+
+  /** `OrderedDistribution(full :+ constant)`: Spark's prefix test then
+    * accepts exactly the range partitionings whose order is a prefix of
+    * `full` (peers share its values) and refuses any longer one; the
+    * exchange it plans when refused is ranged on `full` itself, which
+    * later windows over a finer order (`v, id` above `v`) still share. */
+  private final class PeerOrderedDistribution(full: Seq[SortOrder])
+      extends OrderedDistribution(
+        full :+ SortOrder(Literal("graft.peerRuns"), Ascending)) {
+    override def createPartitioning(numPartitions: Int): Partitioning =
+      RangePartitioning(full, numPartitions)
+  }
+
+  /** The single `AggregateExpression` inside a (possibly wrapped) agg
+    * slot. The rules always plant a bare aggregate, but later optimizer
+    * rules may wrap it in scalar post-processing (`DecimalAggregates`:
+    * `avg(decimal)` → `cast(divide(avg(…)))`); the execs fold the inner
+    * aggregate and compose the wrapper into their evaluate projections. */
+  def innerAggregate(e: Expression): AggregateExpression =
+    e.collectFirst { case a: AggregateExpression => a }.getOrElse(
+      throw new IllegalStateException(
+        s"window agg slot lost its AggregateExpression: $e"))
 
   /** Driver-side equality of projected key rows (UnsafeRow binary
     * equality — both sides come from the same projection over range-
@@ -150,8 +254,8 @@ private[plans] object KeyedWindowExec {
   }
 }
 
-/** Physical per-key running aggregate without per-key task clustering —
-  * see [[KeyedRunningAggPlan]]. */
+/** Physical running aggregate without per-key (or single-task)
+  * clustering — see [[KeyedRunningAggPlan]]. */
 case class KeyedRunningAggExec(partKeys: Seq[Expression], order: Seq[SortOrder],
                                aggAttrs: Seq[Attribute], aggs: Seq[Expression],
                                frames: Seq[RunFrame], child: SparkPlan,
@@ -165,7 +269,8 @@ case class KeyedRunningAggExec(partKeys: Seq[Expression], order: Seq[SortOrder],
   override def outputOrdering: Seq[SortOrder] = full
   override def outputPartitioning: Partitioning = child.outputPartitioning
   override def requiredChildDistribution: Seq[Distribution] =
-    OrderedDistribution(full) :: Nil
+    (if (frames.contains(RunFrame.RangeCurrent)) KeyedWindowExec.peerDistribution(full)
+     else OrderedDistribution(full)) :: Nil
   override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(full)
 
   override lazy val metrics: Map[String, SQLMetric] = Map(
@@ -181,7 +286,7 @@ case class KeyedRunningAggExec(partKeys: Seq[Expression], order: Seq[SortOrder],
     val keyExprs = partKeys
     val outAttrs = aggAttrs
     val funcs: Seq[DeclarativeAggregate] =
-      aggs.map(GlobalRunningAggExec.innerAggregate(_).aggregateFunction
+      aggs.map(KeyedWindowExec.innerAggregate(_).aggregateFunction
         .asInstanceOf[DeclarativeAggregate])
     val bufferAttrs = funcs.flatMap(_.aggBufferAttributes)
     val bufferTypes = bufferAttrs.map(_.dataType)
@@ -375,7 +480,7 @@ case class KeyedRunningAggExec(partKeys: Seq[Expression], order: Seq[SortOrder],
   }
 }
 
-/** Physical per-key lag/lead without per-key task clustering — see
+/** Physical lag/lead without per-key (or single-task) clustering — see
   * [[KeyedOffsetPlan]]. Boundary metadata carries (key, values) so the
   * driver stitch can reset at key changes; inside a partition the rings
   * and pending queues reset whenever the key changes, reproducing
@@ -722,26 +827,37 @@ case class KeyedOffsetExec(partKeys: Seq[Expression], order: Seq[SortOrder],
   }
 }
 
-/** Logical plan for scale-safe KEYED bounded sliding aggregates —
-  * `agg(x) OVER (PARTITION BY k ORDER BY t ROWS BETWEEN n PRECEDING AND
-  * [CURRENT ROW | j PRECEDING])`: the reference's OWN W1 rolling-mean
-  * shape, exactly as a user writes it. [[GlobalBoundedAggPlan]]'s
-  * boundary-tuple machinery with PER-KEY resets: a frame never reaches
-  * across a key change, so the ring clears at each key boundary and the
-  * cross-partition back context applies only when a key straddles the
-  * partition seam. Completes the keyed family: running, offset, and
-  * bounded shapes all heal under [[KeyedWindowRule]].
+/** Logical plan for scale-safe bounded sliding aggregates — `agg(x)
+  * OVER ([PARTITION BY k] ORDER BY t ROWS BETWEEN <lo> AND <up>)` with
+  * BOTH frame ends bounded: the reference's OWN W1 rolling-mean shape
+  * (`n PRECEDING AND CURRENT ROW`), exactly as a user writes it. A
+  * bounded frame needs only a bounded neighbourhood of each row, so the
+  * frame is range-partitioned and only the BOUNDARY TUPLES of the
+  * aggregate inputs cross partitions (O(partitions × reach) driver
+  * state). A frame never reaches across a key change: the ring clears at
+  * each key boundary and the cross-partition back context applies only
+  * when a key straddles the partition seam.
+  *
+  * `lowers(i)`/`uppers(i)` are SIGNED row offsets: output i's frame is
+  * rows [t+lower, t+upper], lower ≤ upper (-k = k PRECEDING, 0 = CURRENT
+  * ROW, +k = k FOLLOWING). Frames clip at the key's head and tail like
+  * `WindowExec` (pandas `min_periods=1` parity comes from the same
+  * clipping), and an empty clipped frame evaluates the aggregate's
+  * initial buffer (null sum, zero count). Frames reaching FOLLOWING
+  * rows — centered smoothing (`a PRECEDING AND b FOLLOWING`), pure
+  * lookahead — are served only with no partition keys (`partKeys =
+  * Nil`, from [[GlobalRankRule]]); [[KeyedWindowRule]] keeps backward
+  * frames only.
   */
 case class KeyedBoundedAggPlan(partKeys: Seq[Expression], order: Seq[SortOrder],
                                aggAttrs: Seq[Attribute], aggs: Seq[Expression],
                                lowers: Seq[Int], uppers: Seq[Int],
                                child: LogicalPlan) extends UnaryNode {
-  require(partKeys.nonEmpty && aggAttrs.length == aggs.length &&
+  require(aggAttrs.length == aggs.length &&
     aggs.length == lowers.length && lowers.length == uppers.length &&
     aggs.nonEmpty)
-  // SIGNED bounds (frame = [t+lower, t+upper]); the keyed exec folds
-  // backward-reaching frames only — the rule filters upper <= 0
-  require(lowers.zip(uppers).forall { case (lo, up) => lo <= up && up <= 0 })
+  require(lowers.zip(uppers).forall { case (lo, up) => lo <= up })
+  require(partKeys.isEmpty || uppers.forall(_ <= 0))
   override def output: Seq[Attribute] = child.output ++ aggAttrs
   override def producedAttributes: AttributeSet = AttributeSet(aggAttrs)
   override def maxRows: Option[Long] = child.maxRows
@@ -749,18 +865,36 @@ case class KeyedBoundedAggPlan(partKeys: Seq[Expression], order: Seq[SortOrder],
     copy(child = newChild)
 }
 
-/** Physical per-key bounded sliding aggregate — see
-  * [[KeyedBoundedAggPlan]]. Pass 1 keeps each partition's LAST key's
-  * last kMax input tuples (ring reset at key changes); the driver
-  * stitches per-partition back contexts with the key-aware walk of
-  * [[KeyedOffsetExec]]; pass 2 re-folds each row's ≤ k+1 in-frame
-  * tuples through the aggregates' own expressions rebased onto the
-  * stored tuple slots, clearing the ring whenever the key changes.
+/** Physical bounded sliding aggregate — see [[KeyedBoundedAggPlan]].
+  *
+  *   1. Pass 1 projects each row to the flat tuple of ALL aggregate
+  *      inputs and keeps each partition's LAST key's last kMax tuples
+  *      (ring reset at key changes) and, when a frame looks forward,
+  *      its first maxFwd tuples.
+  *   2. The driver stitches per-partition back contexts with the
+  *      key-aware walk of [[KeyedOffsetExec]], and forward contexts (the
+  *      tuples after a partition's last row, wherever they live) when a
+  *      frame looks forward.
+  *   3. Pass 2 re-folds each row's in-frame tuples through the
+  *      aggregates' own init/update/evaluate expressions, rebased onto
+  *      the stored tuple slots with `withNewChildren` (null handling,
+  *      Decimal widening, ANSI overflow inherited, not reimplemented).
+  *      Backward frames stream row by row, clearing the ring whenever
+  *      the key changes. A forward frame finalizes a row once the row
+  *      maxFwd ahead of it has been read — a pending queue of ≤ maxFwd
+  *      row copies — and drains the partition's last rows against the
+  *      forward context.
+  *
+  * Re-folding per row is O(frame), `WindowExec`'s own sliding-frame
+  * cost class (aggregates have no generic inverse update); the rules cap
+  * the reach at `spark.graft.globalRank.maxBoundedFrame` rows a side.
+  * The [[KeyedOffsetPlan]] tie caveat applies.
   */
 case class KeyedBoundedAggExec(partKeys: Seq[Expression], order: Seq[SortOrder],
                                aggAttrs: Seq[Attribute], aggs: Seq[Expression],
                                lowers: Seq[Int], uppers: Seq[Int],
                                child: SparkPlan) extends UnaryExecNode {
+  require(partKeys.isEmpty || uppers.forall(_ <= 0))
 
   private val full = KeyedWindowExec.fullOrder(partKeys, order)
 
@@ -779,17 +913,21 @@ case class KeyedBoundedAggExec(partKeys: Seq[Expression], order: Seq[SortOrder],
     copy(child = newChild)
 
   protected override def doExecute(): RDD[InternalRow] = {
-    // per-partition metadata is the last key's last kMax tuples — budget
+    val loArr = lowers.toArray // signed: frame = [t+lo, t+up]
+    val upArr = uppers.toArray
+    val kMax = math.max(0, -loArr.min)
+    val maxFwd = math.max(0, upArr.max)
+    // per-partition metadata is kMax + maxFwd boundary tuples — budget
     // the partitions × reach product (see [[BoundaryBudget]])
     val childRdd = BoundaryBudget.bound(child.execute(),
-      math.max(0L, -lowers.min.toLong),
+      kMax.toLong + maxFwd,
       conf.getConfString(BoundaryBudget.Conf,
         BoundaryBudget.Default.toString).toLong)
     val childOutput = child.output
     val keyExprs = partKeys
     val outAttrs = aggAttrs
     val funcs: Seq[DeclarativeAggregate] =
-      aggs.map(GlobalRunningAggExec.innerAggregate(_).aggregateFunction
+      aggs.map(KeyedWindowExec.innerAggregate(_).aggregateFunction
         .asInstanceOf[DeclarativeAggregate])
     val inExprs: Seq[Expression] = funcs.flatMap(_.children)
     val valAttrs = inExprs.zipWithIndex.map { case (e, i) =>
@@ -812,14 +950,12 @@ case class KeyedBoundedAggExec(partKeys: Seq[Expression], order: Seq[SortOrder],
       e.transform { case _: AggregateExpression => rb.evaluateExpression }
     }
     val resultTypes = outAttrs.map(_.dataType)
-    val loArr = lowers.toArray // signed: frame = [t+lo, t+up], up <= 0
-    val upArr = uppers.toArray
-    val kMax = -loArr.min
     val numOutputRows = longMetric("numOutputRows")
 
-    // pass 1: (firstKey, lastKey, last key's last kMax tuples)
-    type Boundary = (InternalRow, InternalRow, Array[InternalRow])
-    val tails: Array[Boundary] =
+    // pass 1: (firstKey, lastKey, last key's last kMax tuples, the
+    // partition's first maxFwd tuples — forward frames have no keys)
+    type Boundary = (InternalRow, InternalRow, Array[InternalRow], Array[InternalRow])
+    val bounds: Array[Boundary] =
       if (childRdd.getNumPartitions == 0) Array.empty
       else childRdd.sparkContext.runJob(childRdd, (it: Iterator[InternalRow]) => {
         val keyProj = UnsafeProjection.create(keyExprs, childOutput)
@@ -827,6 +963,7 @@ case class KeyedBoundedAggExec(partKeys: Seq[Expression], order: Seq[SortOrder],
         var firstKey: InternalRow = null
         var lastKey: UnsafeRow = null
         var ring = new Array[InternalRow](kMax)
+        val heads = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
         var t = 0L
         while (it.hasNext) {
           val r = it.next()
@@ -838,24 +975,29 @@ case class KeyedBoundedAggExec(partKeys: Seq[Expression], order: Seq[SortOrder],
             ring = new Array[InternalRow](kMax)
             t = 0L
           }
-          ring((t % kMax).toInt) = inProj(r).copy()
+          if (kMax > 0 || heads.length < maxFwd) {
+            val tuple = inProj(r).copy()
+            if (kMax > 0) ring((t % kMax).toInt) = tuple
+            if (heads.length < maxFwd) heads += tuple
+          }
           t += 1L
         }
         val n = math.min(t, kMax.toLong).toInt
         (firstKey, lastKey,
-          Array.tabulate[InternalRow](n)(i => ring(((t - n + i) % kMax).toInt)))
+          Array.tabulate[InternalRow](n)(i => ring(((t - n + i) % kMax).toInt)),
+          heads.toArray)
       })
 
     // driver stitch: partition p's back context = its FIRST key's last
     // kMax tuples from earlier partitions (key-aware accumulation)
-    val nPart = tails.length
+    val nPart = bounds.length
     val backCtx = new Array[Array[InternalRow]](nPart)
     locally {
       var curKey: InternalRow = null
       val running = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
       var p = 0
       while (p < nPart) {
-        val b = tails(p)
+        val b = bounds(p)
         if (b._1 != null) {
           val continues = curKey != null && KeyedWindowExec.keyEq(b._1, curKey)
           backCtx(p) = if (continues) running.toArray else Array.empty
@@ -871,93 +1013,205 @@ case class KeyedBoundedAggExec(partKeys: Seq[Expression], order: Seq[SortOrder],
     }
     val ctxB = childRdd.sparkContext.broadcast(backCtx)
 
-    // pass 2: per-key ring of the last kMax+1 tuples, re-fold per row
-    childRdd.mapPartitionsWithIndex { (pid, it) =>
-      val keyProj = UnsafeProjection.create(keyExprs, childOutput)
-      val inProj = UnsafeProjection.create(inExprs, childOutput)
-      val cap = kMax + 1
-      val ring = new Array[InternalRow](cap)
-      var ctxLen = 0 // seeded context rows for the CURRENT key
-      var t = 0L     // local row index within the current key
-      var curKey: UnsafeRow = null
-      var firstKeyOfPartition = true
-      val updaters = rebased.indices.map { fi =>
-        val buf = new SpecificInternalRow(bufferTypes(fi))
-        val init = MutableProjection.create(initExprs(fi), Nil).target(buf)
-        val upd = MutableProjection.create(
-          updateExprs(fi), bufferAttrs(fi) ++ valAttrs).target(buf)
-        (buf, init, upd)
-      }.toArray
-      val resultRow = new SpecificInternalRow(resultTypes)
-      val evals = rebased.indices.map { fi =>
-        MutableProjection.create(Seq(evalExprs(fi)), bufferAttrs(fi))
-      }.toArray
-      val joinedUp = new JoinedRow
-      val joinedOut = new JoinedRow
-      val outProj = UnsafeProjection.create(
-        childOutput ++ outAttrs, childOutput ++ outAttrs)
-      it.map { r0 =>
-        val k = keyProj(r0)
-        if (curKey == null || !curKey.equals(k)) {
-          curKey = k.copy()
-          t = 0L
-          val ctx = if (firstKeyOfPartition) ctxB.value(pid)
-                    else Array.empty[InternalRow]
-          firstKeyOfPartition = false
-          ctxLen = ctx.length
-          var i = 0
-          while (i < ctxLen) { ring(i % cap) = ctx(i); i += 1 }
-        }
-        val slot = ((t + ctxLen) % cap).toInt
-        ring(slot) = inProj(r0).copy()
-        var fi = 0
-        while (fi < updaters.length) {
-          val (buf, init, upd) = updaters(fi)
-          init(InternalRow.empty)
-          val lo = -loArr(fi); val up = upArr(fi)
-          var back = math.min(lo.toLong, t + ctxLen).toInt
-          while (back >= -up) {
-            val s = ((t + ctxLen - back) % cap).toInt
-            upd(joinedUp(buf, ring(s)))
-            back -= 1
+    if (maxFwd == 0) {
+      // pass 2: per-key ring of the last kMax+1 tuples, re-fold per row
+      childRdd.mapPartitionsWithIndex { (pid, it) =>
+        val keyProj = UnsafeProjection.create(keyExprs, childOutput)
+        val inProj = UnsafeProjection.create(inExprs, childOutput)
+        val cap = kMax + 1
+        val ring = new Array[InternalRow](cap)
+        var ctxLen = 0 // seeded context rows for the CURRENT key
+        var t = 0L     // local row index within the current key
+        var curKey: UnsafeRow = null
+        var firstKeyOfPartition = true
+        val updaters = rebased.indices.map { fi =>
+          val buf = new SpecificInternalRow(bufferTypes(fi))
+          val init = MutableProjection.create(initExprs(fi), Nil).target(buf)
+          val upd = MutableProjection.create(
+            updateExprs(fi), bufferAttrs(fi) ++ valAttrs).target(buf)
+          (buf, init, upd)
+        }.toArray
+        val resultRow = new SpecificInternalRow(resultTypes)
+        val evals = rebased.indices.map { fi =>
+          MutableProjection.create(Seq(evalExprs(fi)), bufferAttrs(fi))
+        }.toArray
+        val joinedUp = new JoinedRow
+        val joinedOut = new JoinedRow
+        val outProj = UnsafeProjection.create(
+          childOutput ++ outAttrs, childOutput ++ outAttrs)
+        it.map { r0 =>
+          val k = keyProj(r0)
+          if (curKey == null || !curKey.equals(k)) {
+            curKey = k.copy()
+            t = 0L
+            val ctx = if (firstKeyOfPartition) ctxB.value(pid)
+                      else Array.empty[InternalRow]
+            firstKeyOfPartition = false
+            ctxLen = ctx.length
+            var i = 0
+            while (i < ctxLen) { ring(i % cap) = ctx(i); i += 1 }
           }
-          val res = evals(fi)(buf)
-          resultRow.update(fi,
-            InternalRow.copyValue(res.get(0, resultTypes(fi))))
-          fi += 1
+          val slot = ((t + ctxLen) % cap).toInt
+          ring(slot) = inProj(r0).copy()
+          var fi = 0
+          while (fi < updaters.length) {
+            val (buf, init, upd) = updaters(fi)
+            init(InternalRow.empty)
+            val lo = -loArr(fi); val up = upArr(fi)
+            var back = math.min(lo.toLong, t + ctxLen).toInt
+            while (back >= -up) {
+              val s = ((t + ctxLen - back) % cap).toInt
+              upd(joinedUp(buf, ring(s)))
+              back -= 1
+            }
+            val res = evals(fi)(buf)
+            resultRow.update(fi,
+              InternalRow.copyValue(res.get(0, resultTypes(fi))))
+            fi += 1
+          }
+          t += 1L
+          numOutputRows += 1L
+          outProj(joinedOut(r0, resultRow))
         }
-        t += 1L
-        numOutputRows += 1L
-        outProj(joinedOut(r0, resultRow))
+      }
+    } else {
+      // forward context: the first maxFwd tuples after partition p's
+      // last row (no keys, so every seam continues the one run)
+      val fwdCtx = new Array[Array[InternalRow]](nPart)
+      locally {
+        val running = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+        var p = nPart - 1
+        while (p >= 0) {
+          fwdCtx(p) = running.toArray
+          running.prependAll(bounds(p)._4)
+          if (running.length > maxFwd) running.remove(maxFwd, running.length - maxFwd)
+          p -= 1
+        }
+      }
+      val fwdB = childRdd.sparkContext.broadcast(fwdCtx)
+
+      // pass 2: ring over relative positions; the row at position e is
+      // finalized once position e+maxFwd is read (or at the drain,
+      // against the forward context)
+      childRdd.mapPartitionsWithIndex { (pid, it) =>
+        val inProj = UnsafeProjection.create(inExprs, childOutput)
+        // the drain overlays up to maxFwd forward-context tuples past the
+        // last row while the oldest pending row still reads kMax behind
+        // itself: kMax + pending(≤maxFwd) + fctx(≤maxFwd) + 1 slots
+        val cap = kMax + 2 * maxFwd + 1
+        val ring = new Array[InternalRow](cap)
+        val bctx = ctxB.value(pid) // oldest..newest, length <= kMax
+        val fctx = fwdB.value(pid) // first..later, length <= maxFwd
+        // context rows occupy positions [0, bctx.length); local row t
+        // sits at bctx.length + t
+        var i = 0
+        while (i < bctx.length) { ring(i % cap) = bctx(i); i += 1 }
+        var g = bctx.length.toLong - 1L // highest position ingested so far
+        val updaters = rebased.indices.map { fi =>
+          val buf = new SpecificInternalRow(bufferTypes(fi))
+          val init = MutableProjection.create(initExprs(fi), Nil).target(buf)
+          val upd = MutableProjection.create(
+            updateExprs(fi), bufferAttrs(fi) ++ valAttrs).target(buf)
+          (buf, init, upd)
+        }.toArray
+        val resultRow = new SpecificInternalRow(resultTypes)
+        val evals = rebased.indices.map { fi =>
+          MutableProjection.create(Seq(evalExprs(fi)), bufferAttrs(fi))
+        }.toArray
+        val joinedUp = new JoinedRow
+        val joinedOut = new JoinedRow
+        val outProj = UnsafeProjection.create(
+          childOutput ++ outAttrs, childOutput ++ outAttrs)
+        // evaluate the row at position e against the tuples in its frame,
+        // clipped to [0, hiCap] (hiCap = the highest EXISTING position)
+        def evaluate(e: Long, hiCap: Long): Unit = {
+          var fi = 0
+          while (fi < updaters.length) {
+            val (buf, init, upd) = updaters(fi)
+            init(InternalRow.empty)
+            var pos = math.max(e + loArr(fi), 0L)
+            val hi = math.min(e + upArr(fi), hiCap)
+            while (pos <= hi) {
+              upd(joinedUp(buf, ring((pos % cap).toInt)))
+              pos += 1L
+            }
+            val res = evals(fi)(buf)
+            resultRow.update(fi,
+              InternalRow.copyValue(res.get(0, resultTypes(fi))))
+            fi += 1
+          }
+        }
+        val pending = scala.collection.mutable.ArrayDeque.empty[InternalRow]
+        new Iterator[InternalRow] {
+          private var drained: Iterator[InternalRow] = Iterator.empty
+          override def hasNext: Boolean =
+            drained.hasNext || it.hasNext || pending.nonEmpty
+          override def next(): InternalRow = {
+            if (drained.hasNext) return drained.next()
+            while (it.hasNext) {
+              val r0 = it.next()
+              g += 1L
+              ring((g % cap).toInt) = inProj(r0).copy()
+              pending.append(r0.copy())
+              if (pending.length > maxFwd) {
+                val row = pending.removeHead()
+                evaluate(g - maxFwd, g)
+                numOutputRows += 1L
+                return outProj(joinedOut(row, resultRow))
+              }
+            }
+            // drain: extend the ring with the forward context, then
+            // finalize the pending rows against the true frame end
+            // (lazily: outProj reuses one buffer)
+            var j = 0
+            while (j < fctx.length) {
+              ring(((g + 1L + j) % cap).toInt) = fctx(j)
+              j += 1
+            }
+            val hiCap = g + fctx.length
+            val firstPos = g - pending.length + 1L
+            val snapshot = pending.toArray
+            pending.clear()
+            drained = snapshot.iterator.zipWithIndex.map { case (row, idx) =>
+              evaluate(firstPos + idx, hiCap)
+              numOutputRows += 1L
+              outProj(joinedOut(row, resultRow))
+            }
+            drained.next()
+          }
+        }
       }
     }
   }
 }
 
-/** Logical plan for KEYED whole-frame totals — `agg(x) OVER (PARTITION
-  * BY k)` (the unbounded-unbounded frame): every row gets its KEY's
-  * total. Spark plans a hash exchange + per-key sort; with provably few
-  * keys the exchange is pure waste — [[KeyedTotalAggExec]] demands
-  * NOTHING of its child: one metadata job folds a key→partial map per
-  * partition (bounded by the ndv gate), the driver merges the maps and
-  * evaluates once per key, and a map-side lookup attaches the totals.
+/** Logical plan for whole-frame totals — `agg(x) OVER ([PARTITION BY
+  * k])` (the unbounded-unbounded frame): every row gets its KEY's total
+  * — with no keys (`partKeys = Nil`), the global total. Spark plans a
+  * hash exchange + per-key sort (a single-partition window with no
+  * keys); with provably few keys the exchange is pure waste —
+  * [[KeyedTotalAggExec]] demands NOTHING of its child: one metadata job
+  * folds a key→partial map per partition (bounded by the ndv gate), the
+  * driver merges the maps and evaluates once per key, and a map-side
+  * lookup attaches the totals.
   *
   * `order` is non-empty ONLY when an aggregate is ORDER-SENSITIVE
-  * (First/Last with the window's ORDER BY written — the G6 fix,
-  * mirrored keyed per VERDICT r11 #3): the exec then requires
-  * `OrderedDistribution(keys ++ order)` — a key's rows become a
-  * contiguous ordered run of partitions, per-partition partials fold in
-  * sorted order, and the driver merges a key's partials in
-  * partition-index order, so the merged First/Last is the key's
-  * order-first/-last exactly. Orderless First/Last stays excluded by
-  * the rule (partition-order-arbitrary in either plan).
+  * (First/Last with the window's ORDER BY written — the G6 fix): the
+  * exec then requires `OrderedDistribution(keys ++ order)` — a key's
+  * rows become a contiguous ordered run of partitions, per-partition
+  * partials fold in sorted order, and the driver merges a key's
+  * partials in partition-index order, so the merged First/Last is the
+  * key's order-first/-last exactly. Orderless First/Last stays excluded
+  * by the keyed rule (partition-order-arbitrary in either plan); with no
+  * keys it is admitted and merges in partition-index order too, the
+  * order a single-partition `WindowExec` reads its child in.
   */
 case class KeyedTotalAggPlan(partKeys: Seq[Expression],
                              aggAttrs: Seq[Attribute], aggs: Seq[Expression],
                              order: Seq[SortOrder],
                              child: LogicalPlan,
                              optimistic: Boolean = false) extends UnaryNode {
-  require(partKeys.nonEmpty && aggAttrs.length == aggs.length && aggs.nonEmpty)
+  require(aggAttrs.length == aggs.length && aggs.nonEmpty)
   override def output: Seq[Attribute] = child.output ++ aggAttrs
   override def producedAttributes: AttributeSet = AttributeSet(aggAttrs)
   override def maxRows: Option[Long] = child.maxRows
@@ -1019,7 +1273,7 @@ case class KeyedTotalAggExec(partKeys: Seq[Expression],
     val keyExprs = partKeys
     val outAttrs = aggAttrs
     val funcs: Seq[DeclarativeAggregate] =
-      aggs.map(GlobalRunningAggExec.innerAggregate(_).aggregateFunction
+      aggs.map(KeyedWindowExec.innerAggregate(_).aggregateFunction
         .asInstanceOf[DeclarativeAggregate])
     val bufferAttrs = funcs.flatMap(_.aggBufferAttributes)
     val bufferTypes = bufferAttrs.map(_.dataType)
@@ -1102,9 +1356,11 @@ case class KeyedTotalAggExec(partKeys: Seq[Expression],
     // buffered pile is capped at the runs budget plus one boundary
     // duplicate per partition cut, so a straggler on an early
     // partition cannot accumulate partitions × taskCap at rest (the
-    // r16 review catch — see IndexOrderedDrain). Order-FREE totals
-    // merge commutatively (the rule excludes orderless First/Last),
-    // so they keep the cheaper fold-on-arrival.
+    // r16 review catch — see IndexOrderedDrain). Order-FREE keyed
+    // totals merge commutatively (the keyed rule excludes orderless
+    // First/Last), so they keep the cheaper fold-on-arrival; a no-key
+    // total drains in index order too (one entry per partition), so an
+    // orderless First/Last reads the child the way `WindowExec` does.
     val totalsOpt: Option[Map[UnsafeRow, InternalRow]] =
       try {
         val merge = MutableProjection.create(mergeExprs, bufferAttrs ++ inputBufferAttrs)
@@ -1152,7 +1408,7 @@ case class KeyedTotalAggExec(partKeys: Seq[Expression],
               }
             }
           val handler: (Int, Array[(UnsafeRow, InternalRow)]) => Unit =
-            if (order.isEmpty) (_, res) => foldOne(res)
+            if (order.isEmpty && partKeys.nonEmpty) (_, res) => foldOne(res)
             else {
               // partition-index-ordered drain (see merge-order note).
               // Held-entry cap (r16 review catch): under a straggler on
@@ -1301,24 +1557,27 @@ case class KeyedTotalAggExec(partKeys: Seq[Expression],
   }
 }
 
-/** Logical plan for KEYED ranking — `row_number()/rank()/dense_rank()/
-  * ntile(k)/percent_rank()/cume_dist() OVER (PARTITION BY c ORDER BY
-  * t)` over a low-cardinality c: [[GlobalRankPlan]]'s two-pass position
-  * machinery with PER-KEY resets. A key's rows span a contiguous run of
-  * range partitions, so pass 1 counts (rows, tie runs) per key-run,
-  * the driver stitches each partition's first-key (row, run) offsets
-  * AND the per-key totals (ntile/percent_rank/cume_dist need their
-  * KEY's row count — an ndv-bounded broadcast map), and pass 2 streams
-  * ranks with the position counters resetting at every key change.
-  * Top-k `rnk <= k` filters stay with Spark's `InferWindowGroupLimit`
-  * map-side prune, exactly as the global rule carves out.
+/** Logical plan for scale-safe ranking — `row_number()/rank()/
+  * dense_rank()/ntile(k)/percent_rank()/cume_dist() OVER ([PARTITION BY
+  * c] ORDER BY t)` over a low-cardinality c, or with no partition spec
+  * (`partKeys = Nil`, where Spark would sort the whole frame in one
+  * task). The frame is range-partitioned — a fully parallel sort — and
+  * the ranks come from a two-pass position count, the `zipWithIndex`
+  * technique `stats/GlobalRank` applies at the DataFrame level. A key's
+  * rows span a contiguous run of range partitions, so pass 1 counts
+  * (rows, tie runs) per key-run, the driver stitches each partition's
+  * first-key (row, run) offsets AND the per-key totals
+  * (ntile/percent_rank/cume_dist need their KEY's row count — an
+  * ndv-bounded broadcast map), and pass 2 streams ranks with the
+  * position counters resetting at every key change. Rank values are
+  * `IntegerType`, matching `RowNumber`/`RankLike`. Top-k `rnk <= k`
+  * filters stay with Spark's `InferWindowGroupLimit` map-side prune.
   */
 case class KeyedRankPlan(partKeys: Seq[Expression], order: Seq[SortOrder],
                          rankAttrs: Seq[Attribute], rankKinds: Seq[RankKind],
                          child: LogicalPlan,
                          optimistic: Boolean = false) extends UnaryNode {
-  require(partKeys.nonEmpty && rankAttrs.length == rankKinds.length &&
-    rankAttrs.nonEmpty)
+  require(rankAttrs.length == rankKinds.length && rankAttrs.nonEmpty)
   override def output: Seq[Attribute] = child.output ++ rankAttrs
   override def producedAttributes: AttributeSet = AttributeSet(rankAttrs)
   override def maxRows: Option[Long] = child.maxRows
@@ -1326,7 +1585,7 @@ case class KeyedRankPlan(partKeys: Seq[Expression], order: Seq[SortOrder],
     copy(child = newChild)
 }
 
-/** Physical per-key ranking without per-key task clustering — see
+/** Physical ranking without per-key (or single-task) clustering — see
   * [[KeyedRankPlan]]. Tie runs are compared on (keys ++ order); range
   * partitioning keeps a tie run inside one partition, so run-aware
   * ranks never straddle a seam. */
@@ -1341,8 +1600,15 @@ case class KeyedRankExec(partKeys: Seq[Expression], order: Seq[SortOrder],
   override def producedAttributes: AttributeSet = AttributeSet(rankAttrs)
   override def outputOrdering: Seq[SortOrder] = full
   override def outputPartitioning: Partitioning = child.outputPartitioning
+  // tie-aware kinds read whole peer runs (see peerDistribution)
+  private val needsPeers = rankKinds.exists {
+    case RankKind.RowNumber | RankKind.Ntile(_) => false
+    case _ => true
+  }
+
   override def requiredChildDistribution: Seq[Distribution] =
-    OrderedDistribution(full) :: Nil
+    (if (needsPeers) KeyedWindowExec.peerDistribution(full)
+     else OrderedDistribution(full)) :: Nil
   override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(full)
 
   override lazy val metrics: Map[String, SQLMetric] = Map(

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, CurrentRow, Expression, JoinedRow, Literal, MutableProjection, SortOrder, SpecificInternalRow, UnaryMinus, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, DeclarativeAggregate}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning}
+import org.apache.spark.sql.catalyst.plans.physical.{Distribution, Partitioning}
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types.{DataType, DateType, DayTimeIntervalType, IntegerType, LongType, TimestampNTZType, TimestampType, YearMonthIntervalType}
@@ -172,43 +172,28 @@ private[plans] object RangeFrames {
       s"${KeyedWindowRule.RewriteConf} for this query.")
 }
 
-/** Logical plan for the GLOBAL value-distance frame — empty partition
-  * spec. `(los(i), ups(i))` are output i's SIGNED frame distances in
-  * order units; the frame of a row with order value v is every row with
-  * value in [v + lo, v + up] — INCLUDING peers at exactly v when the
-  * bound touches 0 (RANGE CURRENT ROW semantics), which is safe to
-  * compute per partition because the range partitioner sends equal sort
-  * keys (nulls included) to one partition: peer runs and null groups
-  * never straddle a seam. Rows with a NULL order value form their own
-  * peer group (frame = the null group), matching `WindowExec`.
-  */
-case class GlobalRangeAggPlan(order: Seq[SortOrder], aggAttrs: Seq[Attribute],
-                              aggs: Seq[Expression],
-                              los: Seq[RangeFrames.RBound],
-                              ups: Seq[RangeFrames.RBound],
-                              child: LogicalPlan) extends UnaryNode {
-  require(aggAttrs.length == aggs.length && aggs.length == los.length &&
-    los.length == ups.length && aggs.nonEmpty &&
-    los.zip(ups).forall { case (l, u) => RangeFrames.boundsOrdered(l, u) })
-  override def output: Seq[Attribute] = child.output ++ aggAttrs
-  override def producedAttributes: AttributeSet = AttributeSet(aggAttrs)
-  override def maxRows: Option[Long] = child.maxRows
-  override protected def withNewChildInternal(newChild: LogicalPlan): GlobalRangeAggPlan =
-    copy(child = newChild)
-}
-
-/** Keyed cousin — `PARTITION BY k` with a provably small ndv
-  * ([[KeyedWindowRule]]'s gate): per-key resets of the sliding
-  * structures and key-scoped boundary stitches (forward contexts chain
-  * only through single-key partitions of the same key), the
-  * [[KeyedBoundedAggPlan]] discipline transplanted from row counts to
-  * value distances — two-sided included. */
+/** Logical plan for the value-distance frame — `agg(x) OVER ([PARTITION
+  * BY k] ORDER BY v RANGE BETWEEN …)`, global when `partKeys` is empty
+  * ([[GlobalRankRule]]), keyed otherwise (`PARTITION BY k` with a
+  * provably small ndv, [[KeyedWindowRule]]'s gate). `(los(i), ups(i))`
+  * are output i's SIGNED frame distances in order units; the frame of a
+  * row with order value v is every row of its key with value in
+  * [v + lo, v + up] — INCLUDING peers at exactly v when the bound
+  * touches 0 (RANGE CURRENT ROW semantics), which is safe to compute per
+  * partition because the range partitioner sends equal sort keys (nulls
+  * included) to one partition: peer runs and null groups never straddle
+  * a seam. Rows with a NULL order value form their own peer group (frame
+  * = the null group), matching `WindowExec`. Keyed frames reset the
+  * sliding structures per key and chain boundary stitches only through
+  * single-key partitions of the same key — the [[KeyedBoundedAggPlan]]
+  * discipline transplanted from row counts to value distances,
+  * two-sided included. */
 case class KeyedRangeAggPlan(partKeys: Seq[Expression], order: Seq[SortOrder],
                              aggAttrs: Seq[Attribute], aggs: Seq[Expression],
                              los: Seq[RangeFrames.RBound],
                              ups: Seq[RangeFrames.RBound],
                              child: LogicalPlan) extends UnaryNode {
-  require(partKeys.nonEmpty && aggAttrs.length == aggs.length &&
+  require(aggAttrs.length == aggs.length &&
     aggs.length == los.length && los.length == ups.length && aggs.nonEmpty &&
     los.zip(ups).forall { case (l, u) => RangeFrames.boundsOrdered(l, u) })
   override def output: Seq[Attribute] = child.output ++ aggAttrs
@@ -248,7 +233,7 @@ case class KeyedRangeAggPlan(partKeys: Seq[Expression], order: Seq[SortOrder],
   *      v + up (partition tails finalize against the stitched forward
   *      context); up ≤ 0 outputs finalize eagerly, so trailing frames
   *      stream with zero lag. Null-valued runs fold their own peer group
-  *      (wholly local, see [[GlobalRangeAggPlan]]).
+  *      (wholly local, see [[KeyedRangeAggPlan]]).
   *
   * Peak task memory is the densest value window (frame + pending +
   * staging — pending and staging refuse loudly past the row cap; the
@@ -281,15 +266,14 @@ case class RangeAggExec(partKeys: Seq[Expression], order: Seq[SortOrder],
                         los: Seq[RangeFrames.RBound], ups: Seq[RangeFrames.RBound],
                         child: SparkPlan) extends UnaryExecNode {
 
-  private val full =
-    if (partKeys.isEmpty) order else KeyedWindowExec.fullOrder(partKeys, order)
+  private val full = KeyedWindowExec.fullOrder(partKeys, order)
 
   override def output: Seq[Attribute] = child.output ++ aggAttrs
   override def producedAttributes: AttributeSet = AttributeSet(aggAttrs)
   override def outputOrdering: Seq[SortOrder] = full
   override def outputPartitioning: Partitioning = child.outputPartitioning
   override def requiredChildDistribution: Seq[Distribution] =
-    OrderedDistribution(full) :: Nil
+    KeyedWindowExec.peerDistribution(full) :: Nil
   override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(full)
 
   override lazy val metrics: Map[String, SQLMetric] = Map(
@@ -354,7 +338,7 @@ case class RangeAggExec(partKeys: Seq[Expression], order: Seq[SortOrder],
     val orderExpr = orderExprEarly
     val orderType = orderTypeEarly
     val funcs: Seq[DeclarativeAggregate] =
-      aggs.map(GlobalRunningAggExec.innerAggregate(_).aggregateFunction
+      aggs.map(KeyedWindowExec.innerAggregate(_).aggregateFunction
         .asInstanceOf[DeclarativeAggregate])
     val inExprs: Seq[Expression] = funcs.flatMap(_.children)
     val orderIdx = inExprs.length

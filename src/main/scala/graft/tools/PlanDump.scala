@@ -5,9 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** Optimization-round plan dumper: write `.explain("formatted")` for named
   * SparkEntry queries to files, under a session configured EXACTLY like
   * `graft.Bench` (extensions registered, shuffle partitions = cpus, UTC,
-  * nanos legacy read) so the dumped plan is the plan the bench measures —
-  * PlanPeek/ExplainAudit sessions omit the extensions and therefore miss
-  * every graft rewrite.
+  * nanos legacy read) so the dumped plan is the plan the bench measures,
+  * every graft rewrite included. The formatted plan also shows each
+  * scan's `PushedFilters` and `ReadSchema`.
   *
   * Usage: runMain graft.tools.PlanDump <outDir> <suffix> [query ...]
   *   e.g. runMain graft.tools.PlanDump plans/r16 before x93_basket_lift

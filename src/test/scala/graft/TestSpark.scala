@@ -44,6 +44,25 @@ object TestSpark {
     s
   }
 
+  /** Run `body` with session confs set, restoring each key's prior value
+    * (or unsetting it) afterwards. */
+  def withConf[A](pairs: (String, String)*)(body: => A): A = {
+    val olds = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally olds.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** The confs that make a range exchange keep `n` partitions on tiny
+    * test inputs: `n` shuffle partitions, and AQE's partition coalescing
+    * off (it would merge the few-KB range output into one partition). */
+  def seams(n: Int): Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> n.toString,
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+
   val Sf0001 = "/root/testdata/sf0.001"
   val Sf001 = "/root/testdata/sf0.01"
 }

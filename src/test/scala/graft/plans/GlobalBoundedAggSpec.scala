@@ -14,11 +14,12 @@ import graft.TestSpark
   * (VERDICT r10 #1): `agg(x) OVER (ORDER BY … ROWS BETWEEN k PRECEDING
   * AND [CURRENT ROW | j PRECEDING])` written in plain SQL — the
   * reference's own W1 rolling-mean shape (`etl/etl_job.py:126-130`)
-  * minus the PARTITION BY — must plan as [[GlobalBoundedAggExec]]
-  * (range partition + k boundary tuples per partition + row-local
-  * re-fold), never a single-partition `WindowExec`, and must be
-  * BIT-IDENTICAL to the window it replaces. Plus the r10 #4 arm:
-  * ignore-nulls `lag(e, 1)` rides [[GlobalRunningAggExec]] as a
+  * minus the PARTITION BY — must plan as a no-key
+  * [[KeyedBoundedAggExec]] (range partition + k boundary tuples per
+  * partition + row-local re-fold), never a single-partition
+  * `WindowExec`, and must be BIT-IDENTICAL to the window it replaces.
+  * Plus the r10 #4 arm:
+  * ignore-nulls `lag(e, 1)` rides [[KeyedRunningAggExec]] as a
   * `Last(ignoreNulls)` exclusive prefix with a coalesced default.
   *
   * All orders are TOTAL (v, id): a ROWS frame over a non-total order is
@@ -62,8 +63,8 @@ class GlobalBoundedAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     val onRows = on.collect()
     val plan = nodes(on)
     if (expectBounded)
-      assert(plan.exists(_.isInstanceOf[GlobalBoundedAggExec]),
-        s"expected GlobalBoundedAggExec:\n${on.queryExecution.executedPlan}")
+      assert(plan.exists(NoKey.bounded),
+        s"expected a no-key KeyedBoundedAggExec:\n${on.queryExecution.executedPlan}")
     assert(!plan.exists(_.isInstanceOf[WindowExec]),
       s"WindowExec survived the rewrite:\n${on.queryExecution.executedPlan}")
     spark.conf.set(GlobalRankRule.RewriteConf, "false")
@@ -145,10 +146,10 @@ class GlobalBoundedAggSpec extends AnyFunSuite with BeforeAndAfterAll {
         |FROM gba_t6""".stripMargin)
     val onRows = df.collect()
     val plan = nodes(df)
-    assert(plan.exists(_.isInstanceOf[GlobalBoundedAggExec]) &&
-      plan.exists(_.isInstanceOf[GlobalRunningAggExec]) &&
-      plan.exists(_.isInstanceOf[GlobalRankExec]) &&
-      plan.exists(_.isInstanceOf[GlobalOffsetExec]),
+    assert(plan.exists(NoKey.bounded) &&
+      plan.exists(NoKey.running) &&
+      plan.exists(NoKey.rank) &&
+      plan.exists(NoKey.offset),
       s"expected all four execs stacked:\n${df.queryExecution.executedPlan}")
     assert(!plan.exists(_.isInstanceOf[WindowExec]))
     assert(plan.count(
@@ -168,12 +169,12 @@ class GlobalBoundedAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       val df = fixture.withColumn("s",
         sum("v").over(Window.orderBy("v", "id").rowsBetween(-17, 0)))
-      assert(!nodes(df).exists(_.isInstanceOf[GlobalBoundedAggExec]),
+      assert(!nodes(df).exists(NoKey.bounded),
         s"k=17 must stay on WindowExec at cap 16:\n${df.queryExecution.executedPlan}")
       assert(nodes(df).exists(_.isInstanceOf[WindowExec]))
       val ok = fixture.withColumn("s",
         sum("v").over(Window.orderBy("v", "id").rowsBetween(-16, 0)))
-      assert(nodes(ok).exists(_.isInstanceOf[GlobalBoundedAggExec]))
+      assert(nodes(ok).exists(NoKey.bounded))
     } finally spark.conf.unset(GlobalRankRule.MaxBoundedFrameConf)
   }
 
@@ -226,7 +227,7 @@ class GlobalBoundedAggSpec extends AnyFunSuite with BeforeAndAfterAll {
       """SELECT id, stddev_samp(v) OVER (ORDER BY v, id
         |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sd
         |FROM gba_mom""".stripMargin)
-    assert(!nodes(running).exists(_.isInstanceOf[GlobalRunningAggExec]),
+    assert(!nodes(running).exists(NoKey.running),
       s"running stddev must not ride the partial-merge path:\n${running.queryExecution.executedPlan}")
     assert(nodes(running).exists(_.isInstanceOf[WindowExec]))
   }
@@ -235,7 +236,7 @@ class GlobalBoundedAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.expressions.Window
     val ranged = fixture.withColumn("s",
       sum("v").over(Window.orderBy("id").rangeBetween(-3, 0)))
-    assert(!nodes(ranged).exists(_.isInstanceOf[GlobalBoundedAggExec]))
+    assert(!nodes(ranged).exists(NoKey.bounded))
     assert(nodes(ranged).exists(_.isInstanceOf[RangeAggExec]),
       s"value-distance trailing frame must plan RangeAggExec:\n${ranged.queryExecution.executedPlan}")
     assert(!nodes(ranged).exists(_.isInstanceOf[WindowExec]))
@@ -250,7 +251,7 @@ class GlobalBoundedAggSpec extends AnyFunSuite with BeforeAndAfterAll {
         |FROM gba_ign""".stripMargin)
     val onRows = df.collect()
     val plan = nodes(df)
-    assert(plan.exists(_.isInstanceOf[GlobalRunningAggExec]),
+    assert(plan.exists(NoKey.running),
       s"expected the Last(ignoreNulls) fold:\n${df.queryExecution.executedPlan}")
     assert(!plan.exists(_.isInstanceOf[WindowExec]),
       s"WindowExec survived:\n${df.queryExecution.executedPlan}")
@@ -288,7 +289,7 @@ class GlobalBoundedAggSpec extends AnyFunSuite with BeforeAndAfterAll {
         |FROM gba_ign2""".stripMargin)
     assert(!nodes(n2).exists(_.isInstanceOf[WindowExec]),
       s"lag(e,2) ignore-nulls must ride the ring rewrite:\n${n2.queryExecution.executedPlan}")
-    assert(nodes(n2).exists(_.isInstanceOf[GlobalRunningAggExec]))
+    assert(nodes(n2).exists(NoKey.running))
   }
 
   test("empty input and a frame larger than the data are exact") {
@@ -328,7 +329,7 @@ class GlobalBoundedAggSpec extends AnyFunSuite with BeforeAndAfterAll {
         val df = spark.sql(q)
         val rows = df.collect().map(_.toString).sorted.toSeq
         assert(rows === base)
-        assert(nodes(df).exists(_.isInstanceOf[GlobalBoundedAggExec]),
+        assert(nodes(df).exists(NoKey.bounded),
           s"budget must not change the PLAN, only the runtime partition " +
             s"count:\n${df.queryExecution.executedPlan}")
         // reach 29 at budget 100 → at most 3 partitions survive

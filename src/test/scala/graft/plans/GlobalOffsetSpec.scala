@@ -11,8 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /** The automatic unpartitioned lag/lead rewrite: `lag/lead(e, n[, d])
-  * OVER (ORDER BY ...)` must plan as [[GlobalOffsetExec]] (range
-  * partition + boundary-value metadata + ring/queue pass), never a
+  * OVER (ORDER BY ...)` must plan as a no-key [[KeyedOffsetExec]]
+  * (range partition + boundary-value metadata + ring/queue pass), never a
   * single-partition `WindowExec` — and be BIT-IDENTICAL to the window
   * it replaces. Orders are TOTAL (`v, id`): like a ROWS frame, an
   * offset over a non-total order is only defined up to the sort's tie
@@ -60,8 +60,8 @@ class GlobalOffsetSpec extends AnyFunSuite with BeforeAndAfterAll {
     val on = df
     val onRows = on.collect()
     val plan = nodes(on)
-    assert(plan.exists(_.isInstanceOf[GlobalOffsetExec]),
-      s"expected GlobalOffsetExec:\n${on.queryExecution.executedPlan}")
+    assert(plan.exists(NoKey.offset),
+      s"expected a no-key KeyedOffsetExec:\n${on.queryExecution.executedPlan}")
     assert(!plan.exists(_.isInstanceOf[WindowExec]),
       s"WindowExec survived the rewrite:\n${on.queryExecution.executedPlan}")
     spark.conf.set(GlobalRankRule.RewriteConf, "false")
@@ -127,13 +127,13 @@ class GlobalOffsetSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ign = spark.sql(
       """SELECT id, lead(v) IGNORE NULLS OVER (ORDER BY v, id) AS nv
         |FROM go_t6""".stripMargin)
-    assert(!nodes(ign).exists(_.isInstanceOf[GlobalOffsetExec]),
+    assert(!nodes(ign).exists(NoKey.offset),
       "ignore-nulls reach is unbounded; must stay a window")
     assert(nodes(ign).exists(_.isInstanceOf[WindowExec]))
     import org.apache.spark.sql.expressions.Window
     val part = fixture.withColumn("pv",
       lag("v", 1).over(Window.partitionBy(pmod(col("id"), lit(7))).orderBy("v", "id")))
-    assert(!nodes(part).exists(_.isInstanceOf[GlobalOffsetExec]))
+    assert(!nodes(part).exists(NoKey.offset))
   }
 
   test("empty input, single row, and conf opt-out") {
@@ -146,7 +146,7 @@ class GlobalOffsetSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.conf.set(GlobalRankRule.RewriteConf, "false")
     try {
       val df = fixture.withColumn("pv", lag("v", 1).over(w))
-      assert(!nodes(df).exists(_.isInstanceOf[GlobalOffsetExec]),
+      assert(!nodes(df).exists(NoKey.offset),
         "conf=false must disable the rewrite")
     } finally spark.conf.set(GlobalRankRule.RewriteConf, "true")
   }

@@ -12,8 +12,8 @@ import graft.TestSpark
 
 /** The automatic unpartitioned-ranking-window rewrite (VERDICT r9 #1):
   * `row_number()/rank()/dense_rank() OVER (ORDER BY ...)` written by a
-  * plain SQL/DataFrame user must plan as [[GlobalRankExec]] (range
-  * partition + offset pass), never a single-partition `WindowExec` —
+  * plain SQL/DataFrame user must plan as a no-key [[KeyedRankExec]]
+  * (range partition + offset pass), never a single-partition `WindowExec` —
   * and the rewritten result must be BIT-IDENTICAL to the window it
   * replaces, which the spec checks by running every query twice, with
   * the rule on and off.
@@ -61,14 +61,15 @@ class GlobalRankRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   /** Run `sql` with the rewrite on and off; assert the on-plan contains
-    * GlobalRankExec and no WindowExec, and both results agree exactly.
+    * a no-key KeyedRankExec and no WindowExec, and both results agree
+    * exactly.
     */
   private def checkRewritten(df: => DataFrame): Unit = {
     val on = df
     val onRows = on.collect()
     val plan = nodes(on)
-    assert(plan.exists(_.isInstanceOf[GlobalRankExec]),
-      s"expected GlobalRankExec:\n${on.queryExecution.executedPlan}")
+    assert(plan.exists(NoKey.rank),
+      s"expected a no-key KeyedRankExec:\n${on.queryExecution.executedPlan}")
     assert(!plan.exists(_.isInstanceOf[WindowExec]),
       s"WindowExec survived the rewrite:\n${on.queryExecution.executedPlan}")
     spark.conf.set(GlobalRankRule.RewriteConf, "false")
@@ -79,7 +80,7 @@ class GlobalRankRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
       offRows.map(_.toString).sorted.toSeq)
   }
 
-  test("SQL row_number over ORDER BY plans as GlobalRankExec, no window") {
+  test("SQL row_number over ORDER BY plans as no-key KeyedRank, no window") {
     fixture.createOrReplaceTempView("grr_t")
     checkRewritten(spark.sql(
       "SELECT id, v, row_number() OVER (ORDER BY v, id) AS rn FROM grr_t"))
@@ -108,7 +109,7 @@ class GlobalRankRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     // outer exec's requirement is satisfied by the inner's preserved
     // range partitioning + order, so there must still be exactly ONE
     // exchange however the nodes stack
-    val execs = plan.collect { case g: GlobalRankExec => g }
+    val execs = plan.collect { case g: KeyedRankExec if NoKey.rank(g) => g }
     assert(execs.flatMap(_.rankKinds).toSet ===
       Set(RankKind.RowNumber, RankKind.Rank, RankKind.DenseRank))
     val exchanges = plan.filter(
@@ -161,14 +162,14 @@ class GlobalRankRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
       // upstream
       val small = fixture.limit(100)
         .withColumn("rn", row_number().over(Window.orderBy("v", "id")))
-      assert(!nodes(small).exists(_.isInstanceOf[GlobalRankExec]),
+      assert(!nodes(small).exists(NoKey.rank),
         s"guard should keep the provably-small frame on the window:\n${small.queryExecution.executedPlan}")
       assert(nodes(small).exists(_.isInstanceOf[WindowExec]))
       // bound above the threshold → rewrite (and a frame with no
       // maxRows at all — any scan — rewrites a fortiori)
       val big = spark.range(100000)
         .withColumn("rn", row_number().over(Window.orderBy("id")))
-      assert(nodes(big).exists(_.isInstanceOf[GlobalRankExec]),
+      assert(nodes(big).exists(NoKey.rank),
         "a frame without a small-bound proof must still rewrite")
     } finally spark.conf.set(GlobalRankRule.SmallFrameConf, "0")
   }
@@ -180,7 +181,7 @@ class GlobalRankRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
         |  SELECT id, v, row_number() OVER (ORDER BY v, id) AS rn FROM grr_t4
         |) WHERE rn <= 5""".stripMargin)
     val plan = nodes(df)
-    assert(!plan.exists(_.isInstanceOf[GlobalRankExec]),
+    assert(!plan.exists(NoKey.rank),
       s"top-k shape must stay with InferWindowGroupLimit:\n${df.queryExecution.executedPlan}")
     assert(plan.exists(p => p.isInstanceOf[WindowGroupLimitExec] ||
       p.isInstanceOf[WindowExec]),
@@ -192,32 +193,31 @@ class GlobalRankRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.expressions.Window
     // g = pmod(id, 7) is PROVABLY low-ndv, so since r11 the keyed rank
     // rule heals this one (KeyedWindowSpec owns that family); this
-    // GLOBAL exec must still never touch a partitioned window
+    // partitioned window must never plan as a no-key exec
     val partitioned = fixture.withColumn("rn",
       row_number().over(Window.partitionBy("g").orderBy("v", "id")))
-    assert(!nodes(partitioned).exists(_.isInstanceOf[GlobalRankExec]))
-    assert(nodes(partitioned).exists(_.isInstanceOf[KeyedRankExec]))
+    assert(!nodes(partitioned).exists(NoKey.rank))
+    assert(nodes(partitioned).exists(NoKey.keyed(_, "KeyedRank")))
     // an UNPROVABLE partition key keeps Spark's hash-clustered window
     val unprovable = fixture.withColumn("rn",
       row_number().over(Window.partitionBy("id").orderBy("v")))
-    assert(!nodes(unprovable).exists(p => p.isInstanceOf[GlobalRankExec] ||
-      p.isInstanceOf[KeyedRankExec]))
+    assert(!nodes(unprovable).exists(_.isInstanceOf[KeyedRankExec]))
     assert(nodes(unprovable).exists(_.isInstanceOf[WindowExec]))
     // running sum over the full frame: not a rank — handled by the
     // prefix-sum rewrite instead (GlobalRunningAggSpec), never by
-    // GlobalRankExec, and never left as a single-partition window
+    // the rank exec, and never left as a single-partition window
     val cumsum = fixture.limit(50).withColumn("cs",
       sum("id").over(Window.orderBy("id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    assert(!nodes(cumsum).exists(_.isInstanceOf[GlobalRankExec]))
-    assert(nodes(cumsum).exists(_.isInstanceOf[GlobalRunningAggExec]))
+    assert(!nodes(cumsum).exists(NoKey.rank))
+    assert(nodes(cumsum).exists(NoKey.running))
     assert(!nodes(cumsum).exists(_.isInstanceOf[WindowExec]))
   }
 
   test("a node mixing a rank and a lag stacks both execs over one exchange") {
     // window expressions group into nodes by (partitionSpec, orderSpec)
     // — frames are per-expression — so row_number and lag share ONE
-    // node; since round 10 BOTH kinds rewrite (GlobalRank + GlobalOffset
+    // node; since round 10 BOTH kinds rewrite (no-key rank + offset execs
     // stacked, sharing the range exchange), and the node must vanish
     import org.apache.spark.sql.expressions.Window
     val w = Window.orderBy("v", "id")
@@ -226,8 +226,8 @@ class GlobalRankRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
       .withColumn("lv", lag("v", 1).over(w))
     val onRows = mixed.collect()
     val plan = nodes(mixed)
-    assert(plan.exists(_.isInstanceOf[GlobalRankExec]) &&
-      plan.exists(_.isInstanceOf[GlobalOffsetExec]),
+    assert(plan.exists(NoKey.rank) &&
+      plan.exists(NoKey.offset),
       s"mixed rank+lag must stack both execs:\n${mixed.queryExecution.executedPlan}")
     assert(!plan.exists(_.isInstanceOf[org.apache.spark.sql.execution.window.WindowExec]))
     assert(plan.count(
@@ -250,7 +250,7 @@ class GlobalRankRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       val df = fixture.withColumn("rn",
         row_number().over(Window.orderBy("v", "id")))
-      assert(!nodes(df).exists(_.isInstanceOf[GlobalRankExec]),
+      assert(!nodes(df).exists(NoKey.rank),
         "conf=false must disable the rewrite")
     } finally spark.conf.set(GlobalRankRule.RewriteConf, "true")
   }

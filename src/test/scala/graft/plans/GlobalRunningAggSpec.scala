@@ -12,8 +12,8 @@ import graft.TestSpark
 
 /** The automatic unpartitioned running-aggregate rewrite: `sum/count/
   * min/max/avg OVER (ORDER BY ... UNBOUNDED PRECEDING → CURRENT ROW)`
-  * written by a plain SQL/DataFrame user must plan as
-  * [[GlobalRunningAggExec]] (range partition + partial buffers + driver
+  * written by a plain SQL/DataFrame user must plan as a no-key
+  * [[KeyedRunningAggExec]] (range partition + partial buffers + driver
   * prefix-merge + seeded fold), never a single-partition `WindowExec` —
   * and the rewritten result must be BIT-IDENTICAL to the window it
   * replaces, which the spec checks by running every query twice, with
@@ -66,8 +66,8 @@ class GlobalRunningAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     val on = df
     val onRows = on.collect()
     val plan = nodes(on)
-    assert(plan.exists(_.isInstanceOf[GlobalRunningAggExec]),
-      s"expected GlobalRunningAggExec:\n${on.queryExecution.executedPlan}")
+    assert(plan.exists(NoKey.running),
+      s"expected a no-key KeyedRunningAggExec:\n${on.queryExecution.executedPlan}")
     assert(!plan.exists(_.isInstanceOf[WindowExec]),
       s"WindowExec survived the rewrite:\n${on.queryExecution.executedPlan}")
     spark.conf.set(GlobalRankRule.RewriteConf, "false")
@@ -119,8 +119,8 @@ class GlobalRunningAggSpec extends AnyFunSuite with BeforeAndAfterAll {
         |FROM gra_t4""".stripMargin)
     val onRows = df.collect()
     val plan = nodes(df)
-    assert(plan.exists(_.isInstanceOf[GlobalRankExec]) &&
-      plan.exists(_.isInstanceOf[GlobalRunningAggExec]),
+    assert(plan.exists(NoKey.rank) &&
+      plan.exists(NoKey.running),
       s"expected both execs stacked:\n${df.queryExecution.executedPlan}")
     assert(!plan.exists(_.isInstanceOf[WindowExec]))
     val exchanges = plan.filter(
@@ -146,17 +146,17 @@ class GlobalRunningAggSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("partitioned windows are untouched; bounded frames ride their own exec") {
     import org.apache.spark.sql.expressions.Window
-    // bounded frames rewrite since r11 — to GlobalBoundedAggExec, never
+    // bounded frames rewrite since r11 — to KeyedBoundedAggExec, never
     // this exec (GlobalBoundedAggSpec owns that family)
     val bounded = fixture.withColumn("s3",
       sum("id").over(Window.orderBy("v", "id").rowsBetween(-3, 0)))
-    assert(!nodes(bounded).exists(_.isInstanceOf[GlobalRunningAggExec]))
-    assert(nodes(bounded).exists(_.isInstanceOf[GlobalBoundedAggExec]))
+    assert(!nodes(bounded).exists(NoKey.running))
+    assert(nodes(bounded).exists(NoKey.bounded))
     assert(bounded.count() === 1000)
     val partitioned = fixture.withColumn("cs",
       sum("id").over(Window.partitionBy(pmod(col("id"), lit(7)))
         .orderBy("id").rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    assert(!nodes(partitioned).exists(_.isInstanceOf[GlobalRunningAggExec]))
+    assert(!nodes(partitioned).exists(NoKey.running))
   }
 
   test("empty input and conf opt-out") {
@@ -168,7 +168,7 @@ class GlobalRunningAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.conf.set(GlobalRankRule.RewriteConf, "false")
     try {
       val df = fixture.withColumn("cs", sum("id").over(w))
-      assert(!nodes(df).exists(_.isInstanceOf[GlobalRunningAggExec]),
+      assert(!nodes(df).exists(NoKey.running),
         "conf=false must disable the rewrite")
     } finally spark.conf.set(GlobalRankRule.RewriteConf, "true")
   }
@@ -223,7 +223,7 @@ class GlobalRunningAggSpec extends AnyFunSuite with BeforeAndAfterAll {
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS glast
         |FROM gra_fv""".stripMargin)
     checkRewritten(tot)
-    assert(nodes(tot).exists(_.isInstanceOf[GlobalTotalAggExec]),
+    assert(nodes(tot).exists(NoKey.total),
       s"whole-frame last_value should ride TotalAgg:\n${tot.queryExecution.executedPlan}")
   }
 
@@ -238,8 +238,8 @@ class GlobalRunningAggSpec extends AnyFunSuite with BeforeAndAfterAll {
         |FROM gra_t6""".stripMargin)
     val onRows = df.collect()
     val plan = nodes(df)
-    assert(plan.exists(_.isInstanceOf[GlobalTotalAggExec]),
-      s"expected GlobalTotalAggExec:\n${df.queryExecution.executedPlan}")
+    assert(plan.exists(NoKey.total),
+      s"expected a no-key KeyedTotalAggExec:\n${df.queryExecution.executedPlan}")
     assert(!plan.exists(_.isInstanceOf[WindowExec]))
     // the whole point: NO exchange of any kind — the child's partitioning
     // is untouched, the total arrives via the metadata pass
@@ -261,8 +261,8 @@ class GlobalRunningAggSpec extends AnyFunSuite with BeforeAndAfterAll {
         |  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS tv
         |FROM gra_t7""".stripMargin)
     val onRows = df.collect()
-    assert(nodes(df).exists(_.isInstanceOf[GlobalTotalAggExec]),
-      s"expected GlobalTotalAggExec:\n${df.queryExecution.executedPlan}")
+    assert(nodes(df).exists(NoKey.total),
+      s"expected a no-key KeyedTotalAggExec:\n${df.queryExecution.executedPlan}")
     assert(!nodes(df).exists(_.isInstanceOf[WindowExec]))
     spark.conf.set(GlobalRankRule.RewriteConf, "false")
     val offRows =
@@ -286,8 +286,8 @@ class GlobalRunningAggSpec extends AnyFunSuite with BeforeAndAfterAll {
         |FROM gra_t8""".stripMargin)
     val onRows = df.collect()
     val plan = nodes(df)
-    assert(plan.exists(_.isInstanceOf[GlobalRunningAggExec]) &&
-      plan.exists(_.isInstanceOf[GlobalTotalAggExec]),
+    assert(plan.exists(NoKey.running) &&
+      plan.exists(NoKey.total),
       s"expected Run+Tot stacked:\n${df.queryExecution.executedPlan}")
     assert(!plan.exists(_.isInstanceOf[WindowExec]))
     assert(plan.count(
@@ -322,8 +322,8 @@ class GlobalRunningAggSpec extends AnyFunSuite with BeforeAndAfterAll {
         |FROM gra_tot_fl""".stripMargin)
     val onRows = df.collect()
     val plan = nodes(df)
-    assert(plan.exists(_.isInstanceOf[GlobalTotalAggExec]),
-      s"expected GlobalTotalAggExec:\n${df.queryExecution.executedPlan}")
+    assert(plan.exists(NoKey.total),
+      s"expected a no-key KeyedTotalAggExec:\n${df.queryExecution.executedPlan}")
     assert(!plan.exists(_.isInstanceOf[WindowExec]))
     // the order-sensitive total must have planned its own range sort
     assert(plan.exists(
@@ -351,7 +351,7 @@ class GlobalRunningAggSpec extends AnyFunSuite with BeforeAndAfterAll {
         |FROM gra_tot_zx""".stripMargin)
     df.collect()
     val plan = nodes(df)
-    assert(plan.exists(_.isInstanceOf[GlobalTotalAggExec]))
+    assert(plan.exists(NoKey.total))
     // exactly the explicit repartition's exchange — the total itself
     // must add no sort and no shuffle
     assert(plan.count(
@@ -384,28 +384,35 @@ class GlobalRunningAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     try {
-      def sizesAt(parts: Int): (Int, Int, Int) = {
+      def sizesAt(parts: Int): (Int, Int, Int, Int) = {
         spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
         val run = closureBytes(
           fixture.withColumn("cs", sum("id").over(Window.orderBy("v", "id")
             .rowsBetween(Window.unboundedPreceding, Window.currentRow))),
-          _.isInstanceOf[GlobalRunningAggExec])
+          NoKey.running)
         val off = closureBytes(
           fixture.withColumn("pv", lag("v", 2).over(Window.orderBy("v", "id"))),
-          _.isInstanceOf[GlobalOffsetExec])
+          NoKey.offset)
         val rank = closureBytes(
           fixture.withColumn("rn", row_number().over(Window.orderBy("v", "id"))),
-          _.isInstanceOf[GlobalRankExec])
-        (run, off, rank)
+          NoKey.rank)
+        // a centered frame: the forward context rides its own broadcast
+        val bnd = closureBytes(
+          fixture.withColumn("sm", avg("id").over(Window.orderBy("v", "id")
+            .rowsBetween(-2, 3))),
+          NoKey.bounded)
+        (run, off, rank, bnd)
       }
-      val (run2, off2, rank2) = sizesAt(2)
-      val (run64, off64, rank64) = sizesAt(64)
+      val (run2, off2, rank2, bnd2) = sizesAt(2)
+      val (run64, off64, rank64, bnd64) = sizesAt(64)
       assert(run64 <= run2 + 512,
-        s"GlobalRunningAggExec closure grew with partitions: $run2 -> $run64")
+        s"running exec closure grew with partitions: $run2 -> $run64")
       assert(off64 <= off2 + 512,
-        s"GlobalOffsetExec closure grew with partitions: $off2 -> $off64")
+        s"offset exec closure grew with partitions: $off2 -> $off64")
       assert(rank64 <= rank2 + 512,
-        s"GlobalRankExec closure grew with partitions: $rank2 -> $rank64")
+        s"rank exec closure grew with partitions: $rank2 -> $rank64")
+      assert(bnd64 <= bnd2 + 512,
+        s"bounded exec closure grew with partitions: $bnd2 -> $bnd64")
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prevParts)
       spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
@@ -427,6 +434,6 @@ class GlobalRunningAggSpec extends AnyFunSuite with BeforeAndAfterAll {
       case Array(a, b) => a <= b
       case _ => true
     }, "cumulative share must be monotone")
-    assert(nodes(share).exists(_.isInstanceOf[GlobalRunningAggExec]))
+    assert(nodes(share).exists(NoKey.running))
   }
 }

@@ -7,9 +7,12 @@ import org.scalacheck.Prop.forAll
 import graft.TestSpark
 
 /** ScalaCheck over the WHOLE rewrite family: on arbitrary null-salted
-  * inputs at arbitrary partition counts, a battery covering every
-  * rewritten shape — ranks, cume_dist, running aggregates in all three
-  * frames, whole-frame totals, lag/lead — must return EXACTLY what the
+  * inputs at arbitrary input AND shuffle partition counts (1–32 range
+  * partitions, AQE coalescing off, so the one empty key of the no-key
+  * execs straddles every seam — partitions shorter than a frame or an
+  * offset reach included), a battery covering every rewritten shape —
+  * ranks, cume_dist, running aggregates in all three frames,
+  * whole-frame totals, lag/lead — must return EXACTLY what the
   * single-partition `WindowExec` returns (rule toggled off). The
   * deterministic specs pin plan shapes; this pins the value identity on
   * inputs nobody hand-picked. Orders always carry the unique id so
@@ -24,6 +27,7 @@ object GlobalWindowRewriteProps extends Properties("GlobalWindowRewrite") {
   // small value domain → heavy ties; None → null v
   private val rows = Gen.listOf(Gen.option(Gen.choose(0L, 6L)))
   private val parts = Gen.choose(1, 8)
+  private val shuffleParts = Gen.choose(1, 32)
 
   private val battery =
     """SELECT id,
@@ -60,6 +64,7 @@ object GlobalWindowRewriteProps extends Properties("GlobalWindowRewrite") {
       |  last_value(v) OVER (ORDER BY v, id ROWS BETWEEN 3 PRECEDING AND 1 PRECEDING) AS blv,
       |  avg(v)   OVER (ORDER BY v, id ROWS BETWEEN 2 PRECEDING AND 2 FOLLOWING) AS cav,
       |  sum(v)   OVER (ORDER BY v, id ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fsum,
+      |  sum(v)   OVER (ORDER BY v, id ROWS BETWEEN CURRENT ROW AND CURRENT ROW) AS csum0,
       |  min(v)   OVER (ORDER BY v, id ROWS BETWEEN 1 FOLLOWING AND 4 FOLLOWING) AS fmn,
       |  stddev_samp(v) OVER (ORDER BY v, id ROWS BETWEEN 4 PRECEDING AND 1 FOLLOWING) AS bsd,
       |  nth_value(v, 3) OVER (ORDER BY v, id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS n3r,
@@ -127,7 +132,7 @@ object GlobalWindowRewriteProps extends Properties("GlobalWindowRewrite") {
   } yield (lo, up)
 
   property("RANGE value-distance frames are bit-identical at arbitrary signed bounds") =
-    forAll(rows, parts, rangeBounds) { (vs, np, bounds) =>
+    forAll(rows, parts, shuffleParts, rangeBounds) { (vs, np, sp, bounds) =>
       val (lo, up) = bounds
       // shrinking ignores generator constraints: skip combos the rewrite
       // refuses by design (both-unbounded, inverted)
@@ -145,8 +150,8 @@ object GlobalWindowRewriteProps extends Properties("GlobalWindowRewrite") {
         .toDF("id", "v")
         .repartition(np)
       df.createOrReplaceTempView("gwr_rt")
-      spark.conf.set(GlobalRankRule.SmallFrameConf, "0")
-      try {
+      TestSpark.withConf(TestSpark.seams(sp) :+
+          (GlobalRankRule.SmallFrameConf -> "0"): _*) {
         val on = spark.sql(rangeBattery(lo, up))
         val onRows = on.collect().map(_.toString).sorted.toSeq
         val planned = vs.nonEmpty // empty input may fold the exec away
@@ -161,12 +166,12 @@ object GlobalWindowRewriteProps extends Properties("GlobalWindowRewrite") {
             .map(_.toString).sorted.toSeq
           finally spark.conf.set(GlobalRankRule.RewriteConf, "true")
         (!planned || hasExec) && onRows == off
-      } finally spark.conf.unset(GlobalRankRule.SmallFrameConf)
+      }
       }
     }
 
   property("the full battery is bit-identical to WindowExec on arbitrary input") =
-    forAll(rows, parts) { (vs, np) =>
+    forAll(rows, parts, shuffleParts) { (vs, np, sp) =>
       import spark.implicits._
       val df = spark.createDataset(
         vs.zipWithIndex.map { case (v, i) => (i.toLong, v) })(
@@ -177,14 +182,14 @@ object GlobalWindowRewriteProps extends Properties("GlobalWindowRewrite") {
       // fixtures here are tiny; without this the cost guard keeps them
       // on the window and the property is vacuous (restored per draw —
       // the shared session serves other suites after this one)
-      spark.conf.set(GlobalRankRule.SmallFrameConf, "0")
-      try {
+      TestSpark.withConf(TestSpark.seams(sp) :+
+          (GlobalRankRule.SmallFrameConf -> "0"): _*) {
         val on = spark.sql(battery).collect().map(_.toString).sorted.toSeq
         spark.conf.set(GlobalRankRule.RewriteConf, "false")
         val off =
           try spark.sql(battery).collect().map(_.toString).sorted.toSeq
           finally spark.conf.set(GlobalRankRule.RewriteConf, "true")
         on == off
-      } finally spark.conf.unset(GlobalRankRule.SmallFrameConf)
+      }
     }
 }

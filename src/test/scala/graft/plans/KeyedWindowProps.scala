@@ -10,9 +10,10 @@ import graft.TestSpark
   * per-key running aggregates (all three frames), offsets, and the
   * ignore-nulls lag must return EXACTLY what Spark's hash-clustered
   * `WindowExec` returns (rule toggled off). Keys straddle range
-  * partitions freely here (32 shuffle partitions over ≤ a few hundred
-  * rows and ≤ 4 keys), so the boundary stitching — seeds, rings, pending
-  * drains, key resets — is exercised on inputs nobody hand-picked.
+  * partitions freely here (1–32 drawn shuffle partitions, AQE coalescing
+  * off, over ≤ a few hundred rows and ≤ 4 keys), so the boundary
+  * stitching — seeds, rings, pending drains, key resets — is exercised
+  * on inputs nobody hand-picked.
   */
 object KeyedWindowProps extends Properties("KeyedWindowRewrite") {
   private lazy val spark = TestSpark.spark
@@ -22,6 +23,7 @@ object KeyedWindowProps extends Properties("KeyedWindowRewrite") {
 
   private val rows = Gen.listOf(Gen.option(Gen.choose(0L, 6L)))
   private val parts = Gen.choose(1, 8)
+  private val shuffleParts = Gen.choose(1, 32)
   private val modulus = Gen.choose(1, 4)
 
   private def battery(k: Int) =
@@ -51,6 +53,8 @@ object KeyedWindowProps extends Properties("KeyedWindowRewrite") {
        |    ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS bav,
        |  sum(v) OVER (PARTITION BY pmod(id, $k) ORDER BY v, id
        |    ROWS BETWEEN 3 PRECEDING AND 1 PRECEDING) AS bsx,
+       |  sum(v) OVER (PARTITION BY pmod(id, $k) ORDER BY v, id
+       |    ROWS BETWEEN CURRENT ROW AND CURRENT ROW) AS bs0,
        |  max(concat('b', CAST(v AS STRING))) OVER (PARTITION BY pmod(id, $k)
        |    ORDER BY v, id ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS bmxs,
        |  stddev_samp(v) OVER (PARTITION BY pmod(id, $k) ORDER BY v, id
@@ -124,7 +128,8 @@ object KeyedWindowProps extends Properties("KeyedWindowRewrite") {
   } yield (lo, up)
 
   property("keyed RANGE value-distance frames are bit-identical at arbitrary distances") =
-    forAll(rows, parts, modulus, keyedRangeBounds) { (vs, np, k, bounds) =>
+    forAll(rows, parts, shuffleParts, modulus, keyedRangeBounds) {
+        (vs, np, sp, k, bounds) =>
       val (lo, up) = bounds
       // shrinking ignores generator constraints: skip combos the rewrite
       // refuses by design (both-unbounded, inverted)
@@ -142,8 +147,8 @@ object KeyedWindowProps extends Properties("KeyedWindowRewrite") {
         .toDF("id", "v")
         .repartition(np)
       df.createOrReplaceTempView("kwp_rt")
-      spark.conf.set(GlobalRankRule.SmallFrameConf, "0")
-      try {
+      TestSpark.withConf(TestSpark.seams(sp) :+
+          (GlobalRankRule.SmallFrameConf -> "0"): _*) {
         val on = spark.sql(rangeBattery(k, lo, up))
         val onRows = on.collect().map(_.toString).sorted.toSeq
         val planned = vs.nonEmpty
@@ -157,12 +162,12 @@ object KeyedWindowProps extends Properties("KeyedWindowRewrite") {
           try spark.sql(rangeBattery(k, lo, up)).collect().map(_.toString).sorted.toSeq
           finally spark.conf.set(KeyedWindowRule.RewriteConf, "true")
         (!planned || hasExec) && onRows == off
-      } finally spark.conf.unset(GlobalRankRule.SmallFrameConf)
+      }
       }
     }
 
   property("the keyed battery is bit-identical to WindowExec on arbitrary input") =
-    forAll(rows, parts, modulus) { (vs, np, k) =>
+    forAll(rows, parts, shuffleParts, modulus) { (vs, np, sp, k) =>
       import spark.implicits._
       val df = spark.createDataset(
         vs.zipWithIndex.map { case (v, i) => (i.toLong, v) })(
@@ -170,14 +175,14 @@ object KeyedWindowProps extends Properties("KeyedWindowRewrite") {
         .toDF("id", "v")
         .repartition(np)
       df.createOrReplaceTempView("kwp_t")
-      spark.conf.set(GlobalRankRule.SmallFrameConf, "0")
-      try {
+      TestSpark.withConf(TestSpark.seams(sp) :+
+          (GlobalRankRule.SmallFrameConf -> "0"): _*) {
         val on = spark.sql(battery(k)).collect().map(_.toString).sorted.toSeq
         spark.conf.set(KeyedWindowRule.RewriteConf, "false")
         val off =
           try spark.sql(battery(k)).collect().map(_.toString).sorted.toSeq
           finally spark.conf.set(KeyedWindowRule.RewriteConf, "true")
         on == off
-      } finally spark.conf.unset(GlobalRankRule.SmallFrameConf)
+      }
     }
 }

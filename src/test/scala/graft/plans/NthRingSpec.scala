@@ -13,7 +13,7 @@ import graft.TestSpark
 /** `nth_value(x, n>1)` and ignore-nulls `lag(x, n>1)` through the window
   * rewrite family (VERDICT r11 next #6): both now ride the value-ring
   * aggregates ([[NthFirstRing]]/[[NthLastRing]]) — running frames fold
-  * them through [[GlobalRunningAggExec]]'s partition-partial prefix merge
+  * them through [[KeyedRunningAggExec]]'s partition-partial prefix merge
   * (the ring's CaseWhen merge), bounded and RANGE value frames re-fold
   * them per frame — and every output must be BIT-IDENTICAL to the
   * `WindowExec` it replaces, nulls, defaults and short frames included.
@@ -89,7 +89,7 @@ class NthRingSpec extends AnyFunSuite with BeforeAndAfterAll {
         |FROM nring_b
         |WINDOW w AS (ORDER BY id ROWS BETWEEN 4 PRECEDING AND 1 FOLLOWING)
         |""".stripMargin)
-    assert(nodes(df).exists(_.isInstanceOf[GlobalBoundedAggExec]))
+    assert(nodes(df).exists(NoKey.bounded))
     checkRewritten(df)
   }
 
@@ -126,7 +126,7 @@ class NthRingSpec extends AnyFunSuite with BeforeAndAfterAll {
         |WINDOW wk AS (PARTITION BY pmod(id, 5) ORDER BY id
         |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
         |""".stripMargin)
-    assert(nodes(df).exists(_.isInstanceOf[KeyedRunningAggExec]),
+    assert(nodes(df).exists(NoKey.keyed(_, "KeyedRunningAgg")),
       s"expected the keyed running exec:\n${df.queryExecution.executedPlan}")
     checkRewritten(df, KeyedWindowRule.RewriteConf)
   }

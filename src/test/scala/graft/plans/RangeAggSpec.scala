@@ -183,9 +183,9 @@ class RangeAggSpec extends AnyFunSuite with BeforeAndAfterAll {
         |FROM rng_mix""".stripMargin)
     val onRows = df.collect()
     val plan = nodes(df)
-    assert(plan.exists(_.isInstanceOf[RangeAggExec]) &&
-      plan.exists(_.isInstanceOf[GlobalRunningAggExec]) &&
-      plan.exists(_.isInstanceOf[GlobalRankExec]),
+    assert(plan.exists(NoKey.range) &&
+      plan.exists(NoKey.running) &&
+      plan.exists(NoKey.rank),
       s"expected the three execs stacked:\n${df.queryExecution.executedPlan}")
     assert(!plan.exists(_.isInstanceOf[WindowExec]))
     // the RANGE node orders by (t) alone, the others by (t, id): one

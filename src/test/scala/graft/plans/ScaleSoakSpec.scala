@@ -31,15 +31,7 @@ class ScaleSoakSpec extends AnyFunSuite {
     (r.getLong(0), r.getLong(1))
   }
 
-  private def withConf[A](pairs: (String, String)*)(body: => A): A = {
-    val olds = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally olds.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+  import TestSpark.withConf
 
   test("boundary coalescer trips at the DEFAULT 1M budget and stays exact") {
     // 2048 range partitions x reach 1024 = 2.1M boundary tuples > the 1M

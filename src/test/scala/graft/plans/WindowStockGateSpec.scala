@@ -88,7 +88,7 @@ class WindowStockGateSpec extends AnyFunSuite with BeforeAndAfterAll {
     // size gate deliberately does not apply there — see the
     // KeyedWindowRule comment beside provablySmall
     val plan = withGate((1L << 30).toString) { nodes(keyedRunning) }
-    assert(plan.exists(_.isInstanceOf[KeyedRunningAggExec]),
+    assert(plan.exists(NoKey.keyed(_, "KeyedRunningAgg")),
       s"expected the keyed heal regardless of the gate:\n${plan.head}")
     assert(!plan.exists(_.isInstanceOf[WindowExec]))
   }
@@ -97,13 +97,13 @@ class WindowStockGateSpec extends AnyFunSuite with BeforeAndAfterAll {
     val plan = withGate((1L << 30).toString) { nodes(globalRunning) }
     assert(plan.exists(_.isInstanceOf[WindowExec]),
       s"expected the stock Window below the gate:\n${plan.head}")
-    assert(!plan.exists(_.isInstanceOf[GlobalRunningAggExec]))
+    assert(!plan.exists(NoKey.running))
   }
 
   test("above the threshold (1 byte) the global heal fires as before") {
     val plan = withGate("1") { nodes(globalRunning) }
-    assert(plan.exists(_.isInstanceOf[GlobalRunningAggExec]),
-      s"expected GlobalRunningAggExec above the gate:\n${plan.head}")
+    assert(plan.exists(NoKey.running),
+      s"expected the no-key KeyedRunningAggExec above the gate:\n${plan.head}")
     assert(!plan.exists(_.isInstanceOf[WindowExec]))
   }
 
@@ -132,7 +132,7 @@ class WindowStockGateSpec extends AnyFunSuite with BeforeAndAfterAll {
       val j1 = graft.SparkEntry.queries("j1_left_join_enrich")(
         spark, graft.TestSpark.Sf0001)
       val plan = nodes(j1)
-      assert(plan.exists(_.isInstanceOf[KeyedTotalAggExec]),
+      assert(plan.exists(NoKey.keyed(_, "KeyedTotalAgg")),
         s"expected the zero-join KeyedTotalAgg attach despite the gate:\n" +
           j1.queryExecution.executedPlan)
       assert(!plan.exists(_.isInstanceOf[WindowExec]))

@@ -3,6 +3,7 @@ package graft.stats
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkEntry, TestSpark}
+import graft.plans.NoKey
 
 /** `RunningDistinct.attach` — the count(DISTINCT x) OVER (PARTITION BY k
   * ORDER BY t) composition (x141) — against a brute-force replay of the
@@ -81,11 +82,12 @@ class RunningDistinctSpec extends AnyFunSuite {
   }
 
   test("x141 plans the keyed running heal: no WindowExec, broadcast flag attach") {
-    val p = SparkEntry.queries("x141_running_distinct")(
-      spark, "/root/testdata/sf0.001").queryExecution.executedPlan.toString
+    val exec = SparkEntry.queries("x141_running_distinct")(
+      spark, TestSpark.Sf0001).queryExecution.executedPlan
+    val p = exec.toString
     assert(!p.contains("Window ["),
       s"x141: a window survived the rewrite family:\n${p.take(1500)}")
-    assert(p.contains("KeyedRunningAgg"),
+    assert(NoKey.nodes(exec).exists(NoKey.keyed(_, "KeyedRunningAgg")),
       s"x141: expected the keyed running heal:\n${p.take(1500)}")
     assert(p.contains("BroadcastHashJoin"),
       s"x141: the first-occurrence attach should broadcast:\n${p.take(1500)}")
@@ -124,9 +126,11 @@ class RunningDistinctSpec extends AnyFunSuite {
     // attach — the join elimination still wins (one scan, no join), but
     // the exec is the plan that stays fast AND finishes at 100x keys
     // instead of the zero-exchange heal that aborts at the run budget.
-    val p140 = SparkEntry.queries("x140_argmax_month")(
-      spark, "/root/testdata/sf0.001").queryExecution.executedPlan.toString
-    assert(p140.contains("Window") && !p140.contains("KeyedTotalAgg"),
+    val exec140 = SparkEntry.queries("x140_argmax_month")(
+      spark, TestSpark.Sf0001).queryExecution.executedPlan
+    val p140 = exec140.toString
+    assert(p140.contains("Window") &&
+      !NoKey.nodes(exec140).exists(NoKey.keyed(_, "KeyedTotalAgg")),
       s"x140: expected the hash-clustered Window (proven-HIGH key):\n${p140.take(1500)}")
     assert(!p140.contains("Join"),
       s"x140: the self-join survived:\n${p140.take(1500)}")
@@ -137,9 +141,11 @@ class RunningDistinctSpec extends AnyFunSuite {
     // (hash clustering is already parallel; the heal's design center is
     // low ndv — q17 measured it 1.7x slower at 20k keys): the collapse
     // to ONE scan still fires, the window stays Spark's.
-    val p142 = SparkEntry.queries("x142_topn_correlated")(
-      spark, "/root/testdata/sf0.001").queryExecution.executedPlan.toString
-    assert(p142.contains("Window [") && !p142.contains("KeyedRank"),
+    val exec142 = SparkEntry.queries("x142_topn_correlated")(
+      spark, TestSpark.Sf0001).queryExecution.executedPlan
+    val p142 = exec142.toString
+    assert(p142.contains("Window [") &&
+      !NoKey.nodes(exec142).exists(NoKey.keyed(_, "KeyedRank")),
       s"x142: expected the hash-clustered rank window (proven-HIGH key):\n${p142.take(1500)}")
     assert(!p142.contains("Join"),
       s"x142: the correlated domain join survived:\n${p142.take(1500)}")

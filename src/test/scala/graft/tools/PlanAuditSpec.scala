@@ -1,8 +1,10 @@
 package graft.tools
 
+import org.apache.spark.sql.execution.SparkPlan
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkEntry, TestSpark}
+import graft.plans.NoKey
 
 /** Plan-shape regression guards: the scale-relevant physical-plan
   * properties the README's 100 TB story claims, pinned as tests so a
@@ -14,8 +16,14 @@ class PlanAuditSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
 
-  private def plan(q: String): String =
-    SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan.toString
+  private def physical(q: String): SparkPlan =
+    SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan
+
+  private def plan(q: String): String = physical(q).toString
+
+  // keyed and no-key window execs share a node name in the plan string,
+  // so pins on them match plan nodes instead
+  import NoKey.nodes
 
   test("o2_topk plans a true top-k (TakeOrderedAndProject), not a full sort") {
     assert(plan("o2_topk").contains("TakeOrderedAndProject"))
@@ -32,8 +40,9 @@ class PlanAuditSpec extends AnyFunSuite {
     val prior = spark.conf.getOption(graft.plans.KeyedWindowRule.NdvHintsConf)
     graft.plans.KeyedWindowRule.registerNdvHint(spark, "ativo", 3L)
     try {
-      val p = plan("j1_left_join_enrich")
-      assert(!p.contains("Join") && p.contains("KeyedTotalAgg"),
+      val exec = physical("j1_left_join_enrich")
+      val p = exec.toString
+      assert(!p.contains("Join") && nodes(exec).exists(NoKey.keyed(_, "KeyedTotalAgg")),
         s"j1: expected the zero-join keys-only attach:\n${p.take(1200)}")
       spark.conf.set(graft.plans.ArgMaxJoinRule.RewriteConf, "false")
       try assert(plan("j1_left_join_enrich").contains("BroadcastHashJoin"))
@@ -70,8 +79,9 @@ class PlanAuditSpec extends AnyFunSuite {
     // data, no bucket-correction machinery. Every exchange keyed on
     // ativo alone may carry only aggregated (tiny) frames (the partial
     // per-asset aggregate).
-    val p = plan("flagship_etl")
-    assert(p.contains("KeyedBoundedAgg"),
+    val exec = physical("flagship_etl")
+    val p = exec.toString
+    assert(nodes(exec).exists(NoKey.keyed(_, "KeyedBoundedAgg")),
       s"flagship rolling mean did not plan the keyed exec:\n${p.take(1500)}")
     assert(!p.contains("Window ["),
       s"flagship still plans a hash-clustered window:\n${p.take(1500)}")
@@ -548,10 +558,11 @@ class PlanAuditSpec extends AnyFunSuite {
     // as KeyedRankExec over ONE range exchange on (shard, order) — a
     // shard's rows are contiguous for the file writer but no longer
     // bound to a single task
-    val p = plan("x50_training_shuffle")
+    val exec = physical("x50_training_shuffle")
+    val p = exec.toString
     val exchanges = "Exchange ".r.findAllIn(p).size
     assert(exchanges === 1, s"expected exactly one shard exchange, got $exchanges:\n$p")
-    assert(p.contains("KeyedRank"),
+    assert(nodes(exec).exists(NoKey.keyed(_, "KeyedRank")),
       s"per-shard positions must come from the keyed rank exec:\n$p")
     assert(!p.contains("Window ["), s"no hash-clustered window expected:\n$p")
   }
@@ -726,44 +737,49 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("x116 cumulative share: prefix sum via the rewrite, never a window; total broadcasts") {
-    // The plain-SQL running sum must plan as GlobalRunningAggExec (range
-    // exchange + partial buffers + seeded fold) with NO Window node; the
-    // corpus total arrives as a scalar subquery, not sum() OVER ().
-    val p = plan("x116_cum_corpus_share")
+    // The plain-SQL running sum must plan as the no-key
+    // KeyedRunningAggExec (range exchange + partial buffers + seeded
+    // fold) with NO Window node; the corpus total arrives as a scalar
+    // subquery, not sum() OVER ().
+    val exec = physical("x116_cum_corpus_share")
+    val p = exec.toString
     assert(!p.contains("Window ["),
       s"x116: running sum still planned as a window:\n${p.take(1500)}")
-    assert(p.contains("GlobalRunningAgg"),
+    assert(nodes(exec).exists(NoKey.running),
       s"x116: expected the prefix-sum exec:\n${p.take(1500)}")
     assert(p.contains("Subquery") || p.contains("subquery"),
       s"x116: corpus total should attach as a scalar subquery:\n${p.take(1500)}")
   }
 
   test("x117 window profile: offsets, cume and total all arrive window-free") {
-    val p = plan("x117_doc_window_profile")
+    val exec = physical("x117_doc_window_profile")
+    val p = exec.toString
     assert(!p.contains("Window ["),
       s"x117: a window survived the rewrite family:\n${p.take(1500)}")
-    assert(p.contains("GlobalOffset") && p.contains("GlobalRank") &&
-      p.contains("GlobalTotalAgg"),
+    val n = nodes(exec)
+    assert(n.exists(NoKey.offset) && n.exists(NoKey.rank) && n.exists(NoKey.total),
       s"x117: expected the offset+rank+total execs:\n${p.take(1500)}")
   }
 
   test("x118 rolling profile: bounded frames and the ignore-nulls lag arrive window-free") {
     // The r10 verdict's #1 ask end-to-end: plain-SQL bounded ROWS frames
-    // plan as GlobalBoundedAggExec, the ignore-nulls lag(1) as
-    // GlobalRunningAggExec's Last exclusive prefix — one shared range
-    // exchange, NO Window node.
-    val p = plan("x118_rolling_corpus_profile")
+    // plan as the no-key KeyedBoundedAggExec, the ignore-nulls lag(1) as
+    // the no-key KeyedRunningAggExec's Last exclusive prefix — one shared
+    // range exchange, NO Window node.
+    val exec = physical("x118_rolling_corpus_profile")
+    val p = exec.toString
     assert(!p.contains("Window ["),
       s"x118: a window survived the rewrite family:\n${p.take(1500)}")
-    assert(p.contains("GlobalBoundedAgg") && p.contains("GlobalRunningAgg"),
+    assert(nodes(exec).exists(NoKey.bounded) && nodes(exec).exists(NoKey.running),
       s"x118: expected the bounded + running execs:\n${p.take(1500)}")
     // x122: TWO-SIDED frames (centered + lookahead) — same exec, forward
     // context engaged
-    val p122 = plan("x122_centered_smooth")
+    val exec122 = physical("x122_centered_smooth")
+    val p122 = exec122.toString
     assert(!p122.contains("Window ["),
       s"x122: a window survived the rewrite family:\n${p122.take(1500)}")
-    assert(p122.contains("GlobalBoundedAgg"),
-      s"x122: expected GlobalBoundedAggExec:\n${p122.take(1500)}")
+    assert(nodes(exec122).exists(NoKey.bounded),
+      s"x122: expected the no-key KeyedBoundedAggExec:\n${p122.take(1500)}")
   }
 
   test("x124 trailing time windows: RANGE value-distance frames arrive window-free") {
@@ -852,12 +868,13 @@ class PlanAuditSpec extends AnyFunSuite {
     // broadcasts the tiny top-2 set — stock Spark pays FIVE orders
     // scans for the same SQL (two for the self-join, three for the
     // correlated domain join).
-    val p = plan("x143_monthly_top_panel")
+    val exec = physical("x143_monthly_top_panel")
+    val p = exec.toString
     assert(p.linesIterator.count(_.contains("orders.parquet")) === 2,
       s"x143: orders must be scanned exactly twice:\n${p.take(2000)}")
-    assert(p.contains("Window [") && !p.contains("KeyedTotalAgg"),
+    assert(p.contains("Window [") && !nodes(exec).exists(NoKey.keyed(_, "KeyedTotalAgg")),
       s"x143: expected the hash-clustered Window attach (proven-HIGH key):\n${p.take(2000)}")
-    assert(!p.contains("KeyedRank"),
+    assert(!nodes(exec).exists(NoKey.keyed(_, "KeyedRank")),
       s"x143: the top-2 rank also keys on proven-HIGH o_custkey — " +
         s"expected Spark's rank window:\n${p.take(2000)}")
     assert(p.contains("BroadcastHashJoin") && !p.contains("SortMergeJoin"),
@@ -885,13 +902,14 @@ class PlanAuditSpec extends AnyFunSuite {
     // r13 composition: the argmax self-join is eliminated (orders read
     // ONCE), the strict-history inward frame plans RangeAggExec (no
     // Window node), and both dimension attaches broadcast
-    val p = plan("x139_latest_order_panel")
+    val exec = physical("x139_latest_order_panel")
+    val p = exec.toString
     assert(p.linesIterator.count(_.contains("orders.parquet")) === 1,
       s"x139: orders must be scanned exactly once:\n${p.take(1500)}")
     // r15: the argmax attach keys on o_custkey alone — now MEASURED
     // high, so the elimination keeps the one-scan shape but the attach
     // is Spark's hash-clustered window, not the zero-exchange heal
-    assert(p.contains("Window [") && !p.contains("KeyedTotalAgg"),
+    assert(p.contains("Window [") && !nodes(exec).exists(NoKey.keyed(_, "KeyedTotalAgg")),
       s"x139: expected the hash-clustered argmax window:\n${p.take(1500)}")
     assert(p.contains("RangeAgg"), s"x139: expected the inward frame exec:\n${p.take(1500)}")
     assert(p.contains("BroadcastHashJoin"), s"x139: expected broadcast attaches:\n${p.take(1500)}")
@@ -913,10 +931,12 @@ class PlanAuditSpec extends AnyFunSuite {
     // VERDICT r11 #6 end-to-end: nth_value(n>1) (respect + ignore nulls,
     // running + bounded) and ignore-nulls lag(n>1), global AND keyed —
     // all ride the ring aggregates on the family's execs, NO Window node
-    val p = plan("x125_nth_ignlag")
+    val exec = physical("x125_nth_ignlag")
+    val p = exec.toString
     assert(!p.contains("Window ["),
       s"x125: a window survived the rewrite family:\n${p.take(1500)}")
-    assert(p.contains("GlobalRunningAgg") && p.contains("KeyedRunningAgg"),
+    assert(nodes(exec).exists(NoKey.running) &&
+      nodes(exec).exists(NoKey.keyed(_, "KeyedRunningAgg")),
       s"x125: expected the running execs (global + keyed):\n${p.take(1500)}")
   }
 
@@ -925,33 +945,38 @@ class PlanAuditSpec extends AnyFunSuite {
     // a user would write; the rolling-stats artifact's ndv hint lets
     // KeyedWindowRule re-plan them — range exchange on (ativo, order),
     // parallelism bounded by data, never by the 3 return flags.
-    val p2 = plan("w2_daily_returns")
+    val exec2 = physical("w2_daily_returns")
+    val p2 = exec2.toString
     assert(!p2.contains("Window ["),
       s"w2: the keyed lag still plans as a hash-clustered window:\n${p2.take(1500)}")
-    assert(p2.contains("KeyedOffset"),
+    assert(nodes(exec2).exists(NoKey.keyed(_, "KeyedOffset")),
       s"w2: expected KeyedOffsetExec:\n${p2.take(1500)}")
-    val p4 = plan("w4_running_total")
+    val exec4 = physical("w4_running_total")
+    val p4 = exec4.toString
     assert(!p4.contains("Window ["),
       s"w4: the keyed running sum still plans as a hash-clustered window:\n${p4.take(1500)}")
-    assert(p4.contains("KeyedRunningAgg"),
+    assert(nodes(exec4).exists(NoKey.keyed(_, "KeyedRunningAgg")),
       s"w4: expected KeyedRunningAggExec:\n${p4.take(1500)}")
     // x120: the W1 flagship shape in plain SQL — the keyed BOUNDED arm
-    val p120 = plan("x120_rolling_mean_keyed")
+    val exec120 = physical("x120_rolling_mean_keyed")
+    val p120 = exec120.toString
     assert(!p120.contains("Window ["),
       s"x120: the keyed rolling mean still plans as a hash-clustered window:\n${p120.take(1500)}")
-    assert(p120.contains("KeyedBoundedAgg"),
+    assert(nodes(exec120).exists(NoKey.keyed(_, "KeyedBoundedAgg")),
       s"x120: expected KeyedBoundedAggExec:\n${p120.take(1500)}")
     // x123: keyed ranks — all six kinds through KeyedRankExec
-    val p123 = plan("x123_lang_length_rank")
+    val exec123 = physical("x123_lang_length_rank")
+    val p123 = exec123.toString
     assert(!p123.contains("Window ["),
       s"x123: keyed ranks still plan as a hash-clustered window:\n${p123.take(1500)}")
-    assert(p123.contains("KeyedRank"),
+    assert(nodes(exec123).exists(NoKey.keyed(_, "KeyedRank")),
       s"x123: expected KeyedRankExec:\n${p123.take(1500)}")
     // x121: the keyed whole-frame total — zero exchange, zero sort
-    val p121 = plan("x121_lang_share")
+    val exec121 = physical("x121_lang_share")
+    val p121 = exec121.toString
     assert(!p121.contains("Window ["),
       s"x121: the keyed total still plans as a hash-clustered window:\n${p121.take(1500)}")
-    assert(p121.contains("KeyedTotalAgg"),
+    assert(nodes(exec121).exists(NoKey.keyed(_, "KeyedTotalAgg")),
       s"x121: expected KeyedTotalAggExec:\n${p121.take(1500)}")
     assert(!p121.contains("Exchange hashpartitioning"),
       s"x121: the keyed total must not exchange:\n${p121.take(1500)}")
@@ -999,8 +1024,8 @@ class PlanAuditSpec extends AnyFunSuite {
         .orderBy("id").rowsBetween(-6, 0)))
     assert(unhealed(boundedProbe).isEmpty,
       "KeyedWindowRule should heal the planted keyed bounded window")
-    assert(boundedProbe.queryExecution.executedPlan.toString
-      .contains("KeyedBoundedAgg"),
+    assert(nodes(boundedProbe.queryExecution.executedPlan)
+      .exists(NoKey.keyed(_, "KeyedBoundedAgg")),
       s"keyed bounded probe should plan the exec:\n${boundedProbe.queryExecution.executedPlan}")
     val hits = SparkEntry.queries.keys.toSeq.sorted.flatMap { q =>
       val u = unhealed(SparkEntry.queries(q)(spark, sf))
@@ -1069,7 +1094,7 @@ class PlanAuditSpec extends AnyFunSuite {
         "sweep detector failed to see a known unpartitioned window")
       assert(unpartitionedBig(probe()).isEmpty &&
         unwrap(probe().queryExecution.executedPlan)
-          .collect { case g: graft.plans.GlobalRankExec => g }.nonEmpty,
+          .collect { case g if NoKey.rank(g) => g }.nonEmpty,
         "GlobalRankRule should heal the probe's unpartitioned window")
       // the other family members must heal too — a running sum, a lag,
       // and a whole-frame total each planted and checked; and a
@@ -1082,7 +1107,7 @@ class PlanAuditSpec extends AnyFunSuite {
         lag(col("id"), 1).over(Window.orderBy("id")))
       val total = spark.range(100000).withColumn("t",
         sum("id").over(Window.partitionBy()))
-      // round 11 healers: a bounded ROWS frame (GlobalBoundedAggExec)
+      // round 11 healers: a bounded ROWS frame (KeyedBoundedAggExec)
       // and the ignore-nulls gap-fill lag(1) (Last exclusive prefix)
       import org.apache.spark.sql.functions.{avg, when}
       val boundedFrame = spark.range(100000).withColumn("m7",

@@ -3,6 +3,7 @@ package graft.tools
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkEntry, TestSpark}
+import graft.plans.NoKey
 
 /** Decorrelation pins for the subquery surface (SparkEntryR5b): every
   * EXISTS / NOT EXISTS / correlated-scalar-aggregate must be rewritten by
@@ -58,8 +59,11 @@ class SubqueryPlanSpec extends AnyFunSuite {
     // which the keyed-window family plans as the zero-exchange
     // KeyedTotalAgg — the supplier table is read ONCE and never joined
     // against its own aggregate
-    val p = plan("q2_top_supplier_per_nation")
-    assert(p.contains("KeyedTotalAgg"), s"expected the argmax heal:\n$p")
+    val exec = SparkEntry.queries("q2_top_supplier_per_nation")(spark, sf)
+      .queryExecution.executedPlan
+    val p = exec.toString
+    assert(NoKey.nodes(exec).exists(NoKey.keyed(_, "KeyedTotalAgg")),
+      s"expected the argmax heal:\n$p")
     assert(p.linesIterator.count(_.contains("supplier.parquet")) === 1,
       "supplier must be scanned exactly once")
     noProduct(p, "q2")
