@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.util.Json
@@ -55,37 +55,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // library extension point: native SQL functions + the RangeJoin/
-      // GlobalRank auto-rewrites run exactly as a production session would
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is parquet TIMESTAMP(NANOS); see Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local-FS harness: skip Hadoop CRC shadow files (halves file ops
-      // on partitioned writes; checksums are a distributed-FS concern)
-      .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
-      // bucketed-layout tables (j6) live in the warehouse — keep it in tmp
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
-      // Lap-randomized sampling (r15 #6, below) spaces a query's repeats
-      // ~270 queries apart, and the default 100-entry codegen class cache
-      // evicts everything in between — every sample then re-pays janino
-      // compilation the old back-to-back protocol amortized after the
-      // first repeat. Measured A/B on a 30-query subset: totals inflate
-      // ~50% with NOTHING engine-side changing (canary laps, which were
-      // always spaced, read identical across rounds). Sizing the static
-      // cache past the suite's working set keeps spaced samples
-      // compilation-warm, so the measurand stays "cache-warm execution"
-      // — comparable with every earlier round — while the lap spreading
-      // still decorrelates ambient drift.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start(GraftSession.envCores)
 
     // optional args: bench only the named queries (dev A/B timing; the
     // driver invokes with no args → full suite)

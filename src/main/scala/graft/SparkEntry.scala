@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.etl.MarketEtl
-import graft.tables.Tables
+import graft.tables.{Scan, Tables}
 
 /** Driver contract — one `queries` entry + matching DuckDB `oracleSql` per
   * implemented operator from SURVEY.md §2. Column names are aliased
@@ -19,8 +19,9 @@ import graft.tables.Tables
   */
 object SparkEntry {
 
-  private def bars(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d).select(
+  private def bars(s: SparkSession, d: String,
+                   scan: Scan = Scan.Stock): DataFrame =
+    Tables.lineitem(s, d, scan).select(
       col("l_returnflag").as("ativo"),
       col("l_shipdate").as("dt"),
       col("l_extendedprice").as("close_price"),
@@ -95,21 +96,18 @@ object SparkEntry {
     // re-scanning (ArtifactStoreSpec pins this). Safe here because the
     // fixture dirs are immutable; the pipeline path over mutable trees
     // computes stats fresh each run.
-    // Scan-parallelize opt-out (r16): avg_close_price is a double AVG
-    // whose oracle hash equality holds because both engines fold the
-    // group's values in FILE order — the single-task stock scan is part
-    // of this query's hash contract (see Tables.stockScan).
-    "flagship_etl" -> ((s, d) => Tables.stockScan(s) {
+    // Stock scan (r16): avg_close_price is a double AVG whose oracle
+    // hash equality holds because both engines fold the group's values
+    // in FILE order — the single-task stock scan is part of this query's
+    // hash contract (see Tables.table).
+    "flagship_etl" -> ((s, d) =>
       MarketEtl.transform(bars(s, d), "ativo", barOrder, "close_price",
         "trade_volume", adaptiveOn = Some(col("dt")),
-        stats = Some(barStats(s, d)))
-    }),
+        stats = Some(barStats(s, d)))),
 
-    // A1: per-asset hash aggregate. (stockScan: double-AVG fold order is
-    // the hash contract — see flagship_etl.)
-    "a1_asset_agg" -> ((s, d) => Tables.stockScan(s) {
-      MarketEtl.assetAggregate(bars(s, d))
-    }),
+    // A1: per-asset hash aggregate. (Stock scan: double-AVG fold order
+    // is the hash contract — see flagship_etl.)
+    "a1_asset_agg" -> ((s, d) => MarketEtl.assetAggregate(bars(s, d))),
 
     // W1: 7-row rolling mean with min_periods=7 NULL semantics.
     // Bench note (VERDICT r4 #7): the apparent r3→r4 drift (0.98→1.36 s)
@@ -130,7 +128,7 @@ object SparkEntry {
     // on a fixture the driver regenerated between rounds; the
     // BroadcastHashJoin pin stayed green throughout. Same class as the
     // w1 r3→r4 drift documented below.
-    "j1_left_join_enrich" -> ((s, d) => Tables.stockScan(s) {
+    "j1_left_join_enrich" -> ((s, d) => {
       val b = bars(s, d)
       MarketEtl.enrich(b, MarketEtl.assetAggregate(b))
         .select("ativo", "l_orderkey", "l_linenumber", "close_price",
@@ -141,7 +139,7 @@ object SparkEntry {
     // enrichment join runs as a salted shuffle join instead of a
     // broadcast: the scale path when the dim side outgrows broadcast and
     // the fact side has hot keys (3-value ativo is maximal skew).
-    "j7_salted_join" -> ((s, d) => Tables.stockScan(s) {
+    "j7_salted_join" -> ((s, d) => {
       val b = bars(s, d)
       // salt from key + (orderkey, linenumber): high-entropy row identity,
       // so the hash reads 3 narrow columns instead of the whole row
@@ -233,15 +231,15 @@ object SparkEntry {
     }),
 
     // W3: per-asset volume ranking (rank + dense_rank over a total order).
-    // parallelScan (r16, measured −0.5 s): the rank window's map-side
+    // Scan.Parallel (r16, measured −0.5 s): the rank window's map-side
     // exchange work otherwise serializes through the single scan task.
-    "w3_volume_rank" -> ((s, d) => Tables.parallelScan(s) {
+    "w3_volume_rank" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("ativo"))
         .orderBy(col("trade_volume").desc, col("l_orderkey"), col("l_linenumber"),
           col("close_price"))
-      bars(s, d).select(col("ativo"), col("l_orderkey"), col("l_linenumber"),
-          rank().over(w).cast("bigint").as("rnk"),
+      bars(s, d, Scan.Parallel).select(col("ativo"), col("l_orderkey"),
+          col("l_linenumber"), rank().over(w).cast("bigint").as("rnk"),
           dense_rank().over(w).cast("bigint").as("drnk"))
         .filter(col("rnk") <= 100)
     }),
@@ -315,9 +313,9 @@ object SparkEntry {
     }),
 
     // Q1-flavor pricing summary (SQL surface over the fixture star schema).
-    // (stockScan: the double AVG/SUM columns fold in file order on both
-    // engines — the hash contract, see flagship_etl.)
-    "q1_pricing_summary" -> ((s, d) => Tables.stockScan(s) {
+    // (Stock scan: the double AVG/SUM columns fold in file order on
+    // both engines — the hash contract, see flagship_etl.)
+    "q1_pricing_summary" -> ((s, d) =>
       Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
@@ -326,8 +324,7 @@ object SparkEntry {
           avg(col("l_quantity")).as("avg_qty"),
           avg(col("l_extendedprice")).as("avg_price"),
           avg(col("l_discount")).as("avg_disc"),
-          count(lit(1)).as("count_order"))
-    }),
+          count(lit(1)).as("count_order"))),
 
     // Q3-flavor: 3-way join + grouped revenue.
     "q3_shipping_priority" -> ((s, d) => {
@@ -463,14 +460,13 @@ object SparkEntry {
       served.crossJoin(exact)
     }),
 
-    // X6: JSON column extraction. (parallelScan, r16, measured −0.2 s:
+    // X6: JSON column extraction. (Scan.Parallel, r16, measured −0.2 s:
     // the JSON parse kernel over every row otherwise runs in the single
     // scan task.)
-    "x6_json_extract" -> ((s, d) => Tables.parallelScan(s) {
-      Tables.events(s, d).select(
+    "x6_json_extract" -> ((s, d) =>
+      Tables.events(s, d, Scan.Parallel).select(
         col("event_id"),
-        get_json_object(col("props"), "$.k").cast("bigint").as("k"))
-    }),
+        get_json_object(col("props"), "$.k").cast("bigint").as("k"))),
 
     // X5: token counting (whitespace tokenizer); empty/whitespace-only text
     // counts 0 tokens (split of "" yields [""] — ADVICE r1).
@@ -504,14 +500,13 @@ object SparkEntry {
     // A3b: Spark's built-in `percentile` aggregate as a FIXTURE-SCALE
     // cross-check of a3 (shared oracle: the two formulations must agree
     // to the last bit). Not the serving path — see a3's buffer hazard.
-    // parallelScan (r16, measured −0.6 s): the built-in percentile
+    // Scan.Parallel (r16, measured −0.6 s): the built-in percentile
     // buffers and sorts per group DOWNSTREAM of the scan; the one-file/
     // one-row-group fixture otherwise feeds it from a single task.
-    "a3b_percentile_builtin" -> ((s, d) => Tables.parallelScan(s) {
-      bars(s, d).groupBy("ativo").agg(
+    "a3b_percentile_builtin" -> ((s, d) =>
+      bars(s, d, Scan.Parallel).groupBy("ativo").agg(
         round(percentile(col("close_price"), lit(0.5)), 6).as("p50"),
-        round(percentile(col("close_price"), lit(0.9)), 6).as("p90"))
-    }),
+        round(percentile(col("close_price"), lit(0.9)), 6).as("p90"))),
 
     // A4: hierarchical rollup (asset, year) — multi-level aggregate with
     // grand-total row, free from the Spark SQL surface.

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sim.SimSearch
-import graft.tables.Tables
+import graft.tables.{Scan, Tables}
 import graft.text.TextOps
 
 /** [EXT] query entries (SURVEY §2.11): similarity search over embeddings,
@@ -53,8 +53,9 @@ object SparkEntryExt {
       |                        i -> embedding[i] + 0.01*(((i-1)%7)-3))
       |  FROM embeddings""".stripMargin
 
-  private def docsWithPlanted(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
+  private def docsWithPlanted(s: SparkSession, d: String,
+                              scan: Scan = Scan.Stock): DataFrame = {
+    val docs = Tables.documents(s, d, scan).select(col("doc_id"), col("text"))
     docs.unionByName(docs.select((col("doc_id") + lit(1000000L)).as("doc_id"),
       concat(col("text"), lit(" qq")).as("text")))
   }
@@ -210,11 +211,11 @@ object SparkEntryExt {
 
     // Exact n-gram-Jaccard all-pairs on a bounded subset (the brute-force
     // twin the LSH path is verified against).
-    // parallelScan (r16, measured −0.65 s): the all-pairs jaccard verify
+    // Scan.Parallel (r16, measured −0.65 s): the all-pairs jaccard verify
     // otherwise evaluates on however few partitions the single-task
     // scan's 200-row survivor set landed in.
-    "x2_jaccard_ngram" -> ((s, d) => Tables.parallelScan(s) {
-      val sub = docsWithPlanted(s, d)
+    "x2_jaccard_ngram" -> ((s, d) => {
+      val sub = docsWithPlanted(s, d, Scan.Parallel)
         .filter(pmod(col("doc_id"), lit(1000000L)) < 100)
       val sh = sub.select(col("doc_id"),
           array_distinct(TextOps.shingles(TextOps.tokens(col("text")), 3)).as("sh"))

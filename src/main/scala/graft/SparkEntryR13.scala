@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.tables.Tables
+import graft.tables.{Scan, Tables}
 
 /** Round-13 query entries. §2.12 extension operators. */
 object SparkEntryR13 {
@@ -202,8 +202,8 @@ object SparkEntryR13 {
     // 2x frame rate for odd), so the expected pair set is pure doc_id
     // arithmetic. At 100 TB decode+hash ride the scan row-locally; the
     // only exchange is the band-key equi-join.
-    "x130_video_neardup" -> ((s, d) => Tables.parallelScan(s) {
-      // parallelScan (r16, measured −1.1 s isolated): the AVI encode +
+    "x130_video_neardup" -> ((s, d) => {
+      // Scan.Parallel (r16, measured −1.1 s isolated): the AVI encode +
       // decode + envelope-hash kernel — the heaviest media kernel in the
       // suite — otherwise rides the single-task documents scan; the heal
       // exchange ships only doc_ids (the media bytes are SYNTHESIZED from
@@ -211,7 +211,8 @@ object SparkEntryR13 {
       // near-empty shuffle. The image/audio twins (x119/x126) were A/B'd
       // the same way and LOSE (+0.1/+0.4 s — their kernels are too cheap
       // to beat the exchange); they stay stock.
-      val media = graft.media.VideoDedup.plantedCorpus(Tables.documents(s, d))
+      val media = graft.media.VideoDedup.plantedCorpus(
+        Tables.documents(s, d, Scan.Parallel))
       graft.media.VideoDedup.nearDupPairs(media)
         .orderBy("a", "b")
     }),
@@ -253,10 +254,10 @@ object SparkEntryR13 {
     // heal switched off, i.e. a stock-Spark user's plan); the oracle is
     // the CONSTANT findings table — constructor inversion: the traps
     // were planted, the linter must name exactly them.
-    // (stockScan, r16: the declared findings table describes the STOCK
+    // (Stock scan, r16: the declared findings table describes the STOCK
     // plan of the planted-bad pipeline — the scan-parallelism heal's
     // extra exchange would change the shuffle census the lint reports.)
-    "x133_plan_lint" -> ((s, d) => Tables.stockScan(s) {
+    "x133_plan_lint" -> ((s, d) => {
       import org.apache.spark.sql.expressions.{Window => W}
       import org.apache.spark.sql.functions._
       val prev = s.conf.get("spark.graft.globalRank.rewrite", "true")

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.tables.Tables
+import graft.tables.{Scan, Tables}
 
 /** Round-14 query entries. §2.12 extension operators. */
 object SparkEntryR14 {
@@ -133,11 +133,12 @@ object SparkEntryR14 {
     // crossover — recorded in README's bench notes). Key-distinctness
     // rules out replication; null-key rows drop exactly as the join
     // drops them. The oracle runs the IDENTICAL join SQL in DuckDB.
-    // parallelScan (OPTIMIZATION r16, measured −0.33 s isolated): the
+    // Scan.Parallel (OPTIMIZATION r16, measured −0.33 s isolated): the
     // zero-join attach's window and the final full-output range sort's
     // map side otherwise serialize through the single-task lineitem scan.
-    "x144_group_stats_attach" -> ((s, d) => Tables.parallelScan(s) {
-      Tables.lineitem(s, d).createOrReplaceTempView("x144_lineitem")
+    "x144_group_stats_attach" -> ((s, d) => {
+      Tables.lineitem(s, d, Scan.Parallel)
+        .createOrReplaceTempView("x144_lineitem")
       s.sql(
         """WITH flagged AS (
           |  SELECT l_orderkey, l_linenumber, l_returnflag, l_quantity

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.tables.Tables
+import graft.tables.{Scan, Tables}
 
 /** Round-15 query entries. §2.12 extension operators. */
 object SparkEntryR15 {
@@ -77,14 +77,15 @@ object SparkEntryR15 {
     // Stock Spark pays four scans (two per self-join) plus two join
     // shuffles; the composition plans TWO scans and one broadcast
     // enrich. The oracle runs the IDENTICAL SQL in DuckDB.
-    // parallelScan (OPTIMIZATION r16, measured −0.67 s isolated): the
+    // Scan.Parallel (OPTIMIZATION r16, measured −0.67 s isolated): the
     // lineitem arm's KeyedTotalAgg and the final full-panel range sort's
     // map side otherwise serialize through the single-task scan; the
     // collapse rules walk through the heal's repartition since the r16
     // RepartitionOperation transparency change.
-    "x147_flagged_lineitem_panel" -> ((s, d) => Tables.parallelScan(s) {
-      Tables.orders(s, d).createOrReplaceTempView("x147_orders")
-      Tables.lineitem(s, d).createOrReplaceTempView("x147_lineitem")
+    "x147_flagged_lineitem_panel" -> ((s, d) => {
+      Tables.orders(s, d, Scan.Parallel).createOrReplaceTempView("x147_orders")
+      Tables.lineitem(s, d, Scan.Parallel)
+        .createOrReplaceTempView("x147_lineitem")
       s.sql(
         """WITH flags AS (
           |  SELECT t.o_orderkey, r.rn

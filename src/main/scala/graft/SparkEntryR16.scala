@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.tables.Tables
+import graft.tables.{Scan, Tables}
 
 /** Round-16 query entries. §2.12 extension operators. */
 object SparkEntryR16 {
@@ -25,13 +25,14 @@ object SparkEntryR16 {
     // tie-broken by the full composite, so row_number is deterministic
     // and the oracle (the IDENTICAL two-scan join SQL in DuckDB) must
     // match bit-for-bit.
-    // parallelScan (OPTIMIZATION r16, measured −0.86 s isolated): the
+    // Scan.Parallel (OPTIMIZATION r16, measured −0.86 s isolated): the
     // collapsed one-scan plan's heavy map side (full-width sort + partial
     // WindowGroupLimit over the whole table) otherwise runs inside the
     // single-task scan; the rules walk through the heal's repartition
     // since the r16 RepartitionOperation transparency change.
-    "x149_topitems_composite_rank_join" -> ((s, d) => Tables.parallelScan(s) {
-      Tables.lineitem(s, d).createOrReplaceTempView("x149_lineitem")
+    "x149_topitems_composite_rank_join" -> ((s, d) => {
+      Tables.lineitem(s, d, Scan.Parallel)
+        .createOrReplaceTempView("x149_lineitem")
       s.sql(
         """SELECT t.l_orderkey, t.l_linenumber, t.l_returnflag,
           |       t.l_linestatus, t.l_extendedprice, r.rn

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.ZOrder
-import graft.tables.Tables
+import graft.tables.{Scan, Tables}
 import graft.text.TextOps
 
 /** Round-5d query entries: lakehouse data-layout operators — z-order
@@ -267,11 +267,12 @@ object SparkEntryR5d {
     // full-product brute force EXACTLY — which is precisely what the
     // DuckDB oracle computes. Probe set: every 5th part's name-key with
     // one substituted character.
-    // parallelScan (r16, measured −0.3 s): the levenshtein verify and
+    // Scan.Parallel (r16, measured −0.3 s): the levenshtein verify and
     // blocking-key explode otherwise ride the single scan task.
-    "x27_edit_join" -> ((s, d) => Tables.parallelScan(s) {
-      val base = Tables.part(s, d).select(col("p_partkey").as("part_id"),
-        concat(col("p_name"), lit("-"), col("p_partkey")).as("s"))
+    "x27_edit_join" -> ((s, d) => {
+      val base = Tables.part(s, d, Scan.Parallel)
+        .select(col("p_partkey").as("part_id"),
+          concat(col("p_name"), lit("-"), col("p_partkey")).as("s"))
       val probe = base.filter(col("part_id") % 5 === 0)
         .select((col("part_id") + lit(1000000L)).as("probe_id"),
           expr("concat(substring(s, 1, 2), '~', substring(s, 4, length(s)))").as("s"))

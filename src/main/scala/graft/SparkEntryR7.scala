@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.tables.Tables
+import graft.tables.{Scan, Tables}
 import graft.text.TextOps
 
 /** Round-7 extension queries: tokenizer-induction and per-source
@@ -200,14 +200,13 @@ object SparkEntryR7 {
     // cutoff comes from a <=1001-row quality-LEVEL frame, so the only
     // per-doc ordered pass is within the single boundary level — never
     // a global ordered window over the corpus.
-    // parallelScan (OPTIMIZATION r16, measured −0.26 s isolated): the
+    // Scan.Parallel (OPTIMIZATION r16, measured −0.26 s isolated): the
     // per-doc token-count kernel rides the scan, so the single-task
     // fixture layout serialized the whole counting pass.
-    "x51_token_budget_select" -> ((s, d) => Tables.parallelScan(s) {
+    "x51_token_budget_select" -> ((s, d) =>
       TextOps.tokenBudgetSelect(
-        Tables.documents(s, d).select(col("doc_id"), col("text")),
-        "doc_id", "text", budgetNum = 2L, budgetDen = 5L)
-    }),
+        Tables.documents(s, d, Scan.Parallel).select(col("doc_id"), col("text")),
+        "doc_id", "text", budgetNum = 2L, budgetDen = 5L)),
 
     // ---- X50: deterministic training shuffle (shard + order) ----------
     //

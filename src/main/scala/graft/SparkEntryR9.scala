@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.tables.Tables
+import graft.tables.{Scan, Tables}
 import graft.text.TextOps
 
 /** Round-9 query entries: the text-ingest hygiene suite the r8 verdict
@@ -116,10 +116,10 @@ object SparkEntryR9 {
     // the doubly-derived text per run: 6.3 s at sf0.1, vs ~0.6 keyed),
     // compiled into the row-local StripSegments kernel. Same
     // doubled-doc plant as x106 so the intra half provably fires.
-    // parallelScan (r16, measured −0.24 s): the segment-hash kernels
+    // Scan.Parallel (r16, measured −0.24 s): the segment-hash kernels
     // otherwise ride the single scan task.
-    "x108_exactsubstr_release" -> ((s, d) => Tables.parallelScan(s) {
-      val docs = Tables.documents(s, d).select(col("doc_id"),
+    "x108_exactsubstr_release" -> ((s, d) => {
+      val docs = Tables.documents(s, d, Scan.Parallel).select(col("doc_id"),
         when(pmod(col("doc_id"), lit(11L)) === 0,
           concat(col("text"), lit(" "), col("text")))
           .otherwise(col("text")).as("text"))

@@ -779,8 +779,9 @@ case class KeyedOffsetExec(partKeys: Seq[Expression], order: Seq[SortOrder],
           }
           throw new IllegalStateException("unreachable")
         }
-        /** Fold one row in; returns an output row when the queue
-          * overflows maxFwd, else null. */
+        /** Fold one row in; returns an output row once one is final (at
+          * once with no lead, else when the queue overflows maxFwd), else
+          * null. */
         private def ingest(r0: InternalRow): InternalRow = {
           val vals = inProj(r0)
           val defs = defProj(r0)
@@ -815,12 +816,17 @@ case class KeyedOffsetExec(partKeys: Seq[Expression], order: Seq[SortOrder],
             }
             m += 1
           }
-          pending.append((r0.copy(), res))
           t += 1L
-          if (pending.length > maxFwd) {
-            val (r, res2) = pending.removeHead()
-            emit(r, res2)
-          } else null
+          // no lead: every row is final at once — emit it without the
+          // row copy and queue entry a pending lead needs
+          if (maxFwd == 0) emit(r0, res)
+          else {
+            pending.append((r0.copy(), res))
+            if (pending.length > maxFwd) {
+              val (r, res2) = pending.removeHead()
+              emit(r, res2)
+            } else null
+          }
         }
       }
     }

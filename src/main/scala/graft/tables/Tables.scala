@@ -4,6 +4,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
+/** Whether a [[Tables]] loader applies the scan-parallelism heal
+  * ([[Tables.table]]). Chosen per load by the query that builds the
+  * DataFrame, so building never touches session state.
+  */
+sealed trait Scan
+object Scan {
+  /** The file's own scan splits. */
+  case object Stock extends Scan
+  /** Hash-repartition on the table's key when the layout gate finds a
+    * single-split file. */
+  case object Parallel extends Scan
+}
+
 /** Loaders for the driver-generated fixture tables (`TESTDATA.md`).
   *
   * Each table is a single parquet file under `<sfDir>/<name>.parquet`.
@@ -12,12 +25,10 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * should select/filter on the returned DataFrame rather than pre-trim here.
   */
 object Tables {
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val path = s"$sfDir/$name.parquet"
-    parallelizeScan(spark, path, spark.read.parquet(path), name)
-  }
-
-  /** Scan-parallelism heal (OPTIMIZATION r16, guide §2.5 "input skew:
+  /** Load `<sfDir>/<name>.parquet`, with the scan-parallelism heal when
+    * `scan` is [[Scan.Parallel]].
+    *
+    * Scan-parallelism heal (OPTIMIZATION r16, guide §2.5 "input skew:
     * one huge unsplittable file"). A parquet ROW GROUP is the atomic
     * scan unit: Spark splits files by bytes, but every split that does
     * not contain a row-group midpoint reads zero rows — a table written
@@ -30,15 +41,13 @@ object Tables {
     *
     * Scale-adaptive, NOT a local[32] constant (the optimization-round
     * ground rule): the decision is MEASURED from the file layout, once
-    * per (path, cores) per session — a table carrying at least as many
+    * per (path, cores) per JVM — a table carrying at least as many
     * row groups as cores (any production-scale table; at 100 TB a
     * table has thousands of files × row groups) or at least as many
     * files as cores keeps the stock scan-split parallelism, and the
-    * exchange never plans. Tiny tables (< minRowsPerCore × cores rows)
-    * also stay stock: 32 near-empty tasks cost more scheduling than
-    * one full task. Opt out with spark.graft.scan.parallelize=false;
-    * floor tunable via spark.graft.scan.parallelize.minRowsPerCore
-    * (default 64).
+    * exchange never plans. Tiny tables (< [[MinRowsPerCore]] × cores
+    * rows) also stay stock: 32 near-empty tasks cost more scheduling
+    * than one full task.
     *
     * The repartition key is the table's primary key (deterministic,
     * high-entropy — never rand()/round-robin, whose retry hazards and
@@ -46,7 +55,33 @@ object Tables {
     * partition-assignment-deterministic and a downstream join or
     * groupBy on the same key REUSES the exchange's hashpartitioning
     * instead of adding one.
+    *
+    * [[Scan.Stock]] is the default; a query opts in, measured, not
+    * blanket (r16 A/B at sf0.1/32 cpus): the heal wins big on
+    * single-scan plans whose downstream per-row work dwarfs one pass of
+    * the bytes (a3b −0.6 s, w3 −0.5 s, x2_jaccard −0.65 s), but a
+    * MULTI-BRANCH plan pays the repartition once per branch (column
+    * pruning gives each branch a different scan, so the exchanges never
+    * canonicalize equal and exchange reuse cannot dedupe them: x60's
+    * plan went to 19 exchanges, +1.2 s; x1/x46/w9 ~3× slower). Bench A/B
+    * of the blanket form: 150.5 s → 228.1 s. The reference-parity float
+    * aggregates (a1 / flagship / j1 / j7 / q1) must stay stock: their
+    * last-ulp equality with the DuckDB oracle holds because BOTH engines
+    * fold the values in file order, and a 32-way partial-agg fold is a
+    * different summation order.
     */
+  def table(spark: SparkSession, sfDir: String, name: String,
+            scan: Scan = Scan.Stock): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val df = spark.read.parquet(path)
+    val key = scanKeys.getOrElse(name, Seq.empty)
+    if (scan == Scan.Stock || key.isEmpty) df
+    else {
+      val n = scanTarget(spark, path)
+      if (n <= 0) df else df.repartition(n, key.map(col): _*)
+    }
+  }
+
   private val scanKeys: Map[String, Seq[String]] = Map(
     "lineitem" -> Seq("l_orderkey"),
     "orders" -> Seq("o_orderkey"),
@@ -57,74 +92,12 @@ object Tables {
     "events" -> Seq("event_id"),
     "embeddings" -> Seq("vec_id"))
 
-  /** Build `f`'s DataFrame(s) with the scan-parallelism heal OFF — for
-    * the handful of queries whose HASH CONTRACT depends on the stock
-    * single-task scan: the reference-parity float aggregates (a1 /
-    * flagship / j1 / j7 / q1 average/sum over doubles), whose last-ulp
-    * equality with the DuckDB oracle holds because BOTH engines fold
-    * the values in file order — a 32-way partial-agg fold is a
-    * different (and partitioning-dependent) summation order — and the
-    * plan-lint plant (x133), whose declared findings table describes
-    * the stock plan. The conf is read at BUILD time by
-    * [[parallelizeScan]], so scoping the flag around construction is
-    * exact; the previous value is restored either way.
-    */
-  def stockScan[A](s: SparkSession)(f: => A): A = {
-    val key = "spark.graft.scan.parallelize"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "false")
-    try f
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
+  /** Row floor of the heal: below this many rows per core a table stays
+    * on its single scan task. */
+  private val MinRowsPerCore = 64L
 
   private val scanTargetMemo =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Integer]()
-
-  private def parallelizeScan(s: SparkSession, path: String, df: DataFrame,
-                              name: String): DataFrame = {
-    val key = scanKeys.getOrElse(name, Seq.empty)
-    // Default OFF — the heal is opt-in per query ([[parallelScan]]),
-    // measured, not blanket (r16 A/B at sf0.1/32 cpus): it wins big on
-    // single-scan plans whose downstream per-row work dwarfs one pass
-    // of the bytes (a3b −0.6 s, w3 −0.5 s, x2_jaccard −0.65 s), but a
-    // MULTI-BRANCH plan pays the repartition once per branch (column
-    // pruning gives each branch a different scan, so the exchanges
-    // never canonicalize equal and exchange reuse cannot dedupe them:
-    // x60's plan went to 19 exchanges, +1.2 s; x1/x46/w9 ~3× slower),
-    // and the self-join-collapse rules (RankJoin/ArgMax) do not yet
-    // trace evidence through a Repartition layer, so a blanket heal
-    // silently re-opened two-scan joins the rules had eliminated
-    // (x145/x152 plans regrew their joins). Bench A/B of the blanket
-    // form: 150.5 s → 228.1 s. Opt-in keeps the measured wins and
-    // nothing else.
-    val on = s.conf.getOption("spark.graft.scan.parallelize")
-      .exists(_.toBoolean)
-    if (!on || key.isEmpty) df
-    else {
-      val n = scanTarget(s, path)
-      if (n <= 0) df else df.repartition(n, key.map(col): _*)
-    }
-  }
-
-  /** Build `f`'s DataFrame(s) with the scan-parallelism heal ON — the
-    * per-query opt-in for the measured winners (see
-    * [[parallelizeScan]] for why the default is off). The layout gate
-    * still applies: at production shape (files or row groups >= cores)
-    * the wrapper is a no-op.
-    */
-  def parallelScan[A](s: SparkSession)(f: => A): A = {
-    val key = "spark.graft.scan.parallelize"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "true")
-    try f
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
 
   /** 0 = leave the stock scan split; > 0 = repartition to that many
     * partitions. Measured once per (path, cores): #files, then (only
@@ -133,10 +106,7 @@ object Tables {
     */
   private def scanTarget(s: SparkSession, path: String): Int = {
     val cores = s.sparkContext.defaultParallelism
-    val minRowsPerCore = s.conf
-      .getOption("spark.graft.scan.parallelize.minRowsPerCore")
-      .map(_.toLong).getOrElse(64L)
-    scanTargetMemo.computeIfAbsent(s"$path@$cores@$minRowsPerCore", _ => {
+    scanTargetMemo.computeIfAbsent(s"$path@$cores", _ => {
       try {
         val p = new org.apache.hadoop.fs.Path(path)
         val conf = s.sparkContext.hadoopConfiguration
@@ -161,7 +131,7 @@ object Tables {
               rows += r.getRecordCount
             } finally r.close()
           }
-          if (groups >= cores || rows < minRowsPerCore * cores) 0 else cores
+          if (groups >= cores || rows < MinRowsPerCore * cores) 0 else cores
         }
       } catch { case _: Throwable => 0 } // unreadable layout: leave stock
     })
@@ -179,25 +149,27 @@ object Tables {
     s"${f.length()}-${f.lastModified()}"
   }
 
-  def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
-  def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")
+  def region(s: SparkSession, d: String, scan: Scan = Scan.Stock): DataFrame =
+    table(s, d, "region", scan)
+  def nation(s: SparkSession, d: String, scan: Scan = Scan.Stock): DataFrame =
+    table(s, d, "nation", scan)
   // primary keys carry measured-uniqueness evidence (ndv == rowcount on
   // the actual file) so rank-join collapses fire on customer/supplier/
   // part self-joins exactly as they do on orders — evidence breadth,
   // one artifact-cached measurement per (file stamp, column)
-  def customer(s: SparkSession, d: String): DataFrame  = {
+  def customer(s: SparkSession, d: String, scan: Scan = Scan.Stock): DataFrame = {
     registerMeasuredUnique(s, d, "customer", "c_custkey")
-    table(s, d, "customer")
+    table(s, d, "customer", scan)
   }
-  def supplier(s: SparkSession, d: String): DataFrame  = {
+  def supplier(s: SparkSession, d: String, scan: Scan = Scan.Stock): DataFrame = {
     registerMeasuredUnique(s, d, "supplier", "s_suppkey")
-    table(s, d, "supplier")
+    table(s, d, "supplier", scan)
   }
-  def part(s: SparkSession, d: String): DataFrame      = {
+  def part(s: SparkSession, d: String, scan: Scan = Scan.Stock): DataFrame = {
     registerMeasuredUnique(s, d, "part", "p_partkey")
-    table(s, d, "part")
+    table(s, d, "part", scan)
   }
-  def orders(s: SparkSession, d: String): DataFrame    = {
+  def orders(s: SparkSession, d: String, scan: Scan = Scan.Stock): DataFrame = {
     // o_custkey is the key real top-n / argmax spellings partition by
     // (x140/x142/x143); its measured count is HIGH at every fixture SF,
     // so registering it is refusal evidence — the keyed-window family's
@@ -209,9 +181,9 @@ object Tables {
     // pairs on (x145): measured-unique evidence (ndv == rowcount) lets
     // RankJoinRule collapse the self-join to one windowed scan.
     registerMeasuredUnique(s, d, "orders", "o_orderkey")
-    table(s, d, "orders")
+    table(s, d, "orders", scan)
   }
-  def lineitem(s: SparkSession, d: String): DataFrame  = {
+  def lineitem(s: SparkSession, d: String, scan: Scan = Scan.Stock): DataFrame = {
     registerMeasuredNdv(s, d, "lineitem", "l_suppkey")
     // composite-key evidence (VERDICT r15 #1): lineitem's only candidate
     // keys are composite, so both are MEASURED — registration fires iff
@@ -224,7 +196,7 @@ object Tables {
       Seq("l_orderkey", "l_linenumber"))
     registerMeasuredUniqueSet(s, d, "lineitem",
       Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"))
-    table(s, d, "lineitem")
+    table(s, d, "lineitem", scan)
   }
 
   /** Measured-once column ndv, registered as a [[graft.plans.KeyedWindowRule]]
@@ -305,14 +277,14 @@ object Tables {
   /** Normalize `events.ts` to TimestampType whatever the fixture vintage
     * wrote: older driver runs produced parquet TIMESTAMP(NANOS), which
     * Spark's reader rejects unless `spark.sql.legacy.parquet.nanosAsLong
-    * =true` (set by our session builders) maps it to LongType nanos —
+    * =true` (set by [[graft.GraftSession]]) maps it to LongType nanos —
     * truncate to micros; newer runs write naive micros (`timestamp[us]`,
     * no UTC adjustment), which Spark reads as TIMESTAMP_NTZ — cast to
     * TimestampType, a wall-clock-preserving no-op under our fixed UTC
     * session timezone. Either way the values match how DuckDB (a naive-
     * micros engine) reads the same file.
     */
-  def events(s: SparkSession, d: String): DataFrame = {
+  def events(s: SparkSession, d: String, scan: Scan = Scan.Stock): DataFrame = {
     registerMeasuredNdv(s, d, "events", "user_id")
     // evidence breadth (r16): event_id is the event log's primary key —
     // measured on the file, so rank self-joins on the events table
@@ -323,7 +295,7 @@ object Tables {
     // and computed columns rightly carry no uniqueness proof.
     registerMeasuredUnique(s, d, "events", "event_id")
     registerMeasuredUniqueSet(s, d, "events", Seq("user_id", "ts"))
-    val raw = table(s, d, "events")
+    val raw = table(s, d, "events", scan)
     raw.schema("ts").dataType match {
       case LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -332,11 +304,12 @@ object Tables {
       case _ => raw
     }
   }
-  def documents(s: SparkSession, d: String): DataFrame = {
+  def documents(s: SparkSession, d: String, scan: Scan = Scan.Stock): DataFrame = {
     // doc_id uniqueness powers rank-join collapses on the corpus table
     // ("top-n docs per lang by score" written as a self-join)
     registerMeasuredUnique(s, d, "documents", "doc_id")
-    table(s, d, "documents")
+    table(s, d, "documents", scan)
   }
-  def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
+  def embeddings(s: SparkSession, d: String, scan: Scan = Scan.Stock): DataFrame =
+    table(s, d, "embeddings", scan)
 }

@@ -1,13 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round plan dumper: write `.explain("formatted")` for named
-  * SparkEntry queries to files, under a session configured EXACTLY like
-  * `graft.Bench` (extensions registered, shuffle partitions = cpus, UTC,
-  * nanos legacy read) so the dumped plan is the plan the bench measures,
-  * every graft rewrite included. The formatted plan also shows each
-  * scan's `PushedFilters` and `ReadSchema`.
+  * SparkEntry queries to files, under the bench's session
+  * ([[graft.GraftSession]]) so the dumped plan is the plan the bench
+  * measures, every graft rewrite included. The formatted plan also shows
+  * each scan's `PushedFilters` and `ReadSchema`.
   *
   * Usage: runMain graft.tools.PlanDump <outDir> <suffix> [query ...]
   *   e.g. runMain graft.tools.PlanDump plans/r16 before x93_basket_lift
@@ -24,19 +21,7 @@ object PlanDump {
       if (args.length > 2) args.drop(2).toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.start(graft.GraftSession.envCores)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>
       val path = java.nio.file.Paths.get(outDir, s"${n}_$suffix.txt")

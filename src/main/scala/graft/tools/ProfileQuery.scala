@@ -1,13 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Optimization-round micro-profiler: split each named query's wall time
   * into BUILD (DataFrame construction — loaders, temp views, artifact
   * lookups), PLAN (analysis + optimization + physical planning, forced
   * via `executedPlan`) and EXEC (the bench's exact forced evaluation),
-  * under a session configured exactly like `graft.Bench`. Three repeats
+  * under the bench's session ([[graft.GraftSession]]). Three repeats
   * per query with the bench's isolation discipline, so the repeat floor
   * separates warm planning cost from execution cost — the number that
   * says whether a slow query needs a better plan or a cheaper planner.
@@ -25,24 +25,7 @@ object ProfileQuery {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // A/B lever: SPARK_GRAFT_SCANPAR=false profiles with the r16
-    // scan-parallelism heal off, isolating it from other changes
-    sys.env.get("SPARK_GRAFT_SCANPAR").foreach(v =>
-      spark.conf.set("spark.graft.scan.parallelize", v))
+    val spark = graft.GraftSession.start(graft.GraftSession.envCores)
     // General A/B lever (r16): SPARK_GRAFT_PROF_CONF="k=v,k2=v2" sets
     // arbitrary session confs, e.g. disabling a graft rewrite to time
     // the stock plan against the healed one on the same binary

@@ -6,43 +6,17 @@ import org.apache.spark.sql.SparkSession
   * concurrently in the forked test JVM — SparkSession is thread-safe).
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      // the library's extension point — native SQL functions + the
-      // RangeJoin/GlobalRank auto-rewrites — active exactly as a
-      // production session would run it
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local-FS harness: skip Hadoop CRC shadow files (halves file ops
-      // on partitioned writes; checksums are a distributed-FS concern)
-      .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft_test_warehouse")
-      // The scan-parallelism heal (Tables.parallelizeScan, r16) stays
-      // OFF in the shared test session: many suites subset a fixture
-      // with `limit(n)`, which is only a deterministic "first n rows"
-      // on the stock single-partition scan — the heal's repartition
-      // makes that subset arbitrary. Result-identity of the heal is
-      // proven by the oracle run (all 253 checkable queries green with
-      // it ON) and its behavior is pinned in ScanParallelizeSpec, which
-      // enables it explicitly.
-      .config("spark.graft.scan.parallelize", "false")
-      // The window input-size stock gate (GlobalRankRule.StockBytesConf,
-      // r16) is DISABLED in the shared test session: the KB-scale test
-      // fixtures would gate every linear window shape back to Spark's
-      // plan, and the suite's job is to exercise and pin the heal
-      // machinery itself. The gate's own behavior (stock below the
-      // threshold, heal above, RANGE frames exempt) is pinned in
-      // WindowStockGateSpec, which sets the conf explicitly.
-      .config(graft.plans.GlobalRankRule.StockBytesConf, "0")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.start(4,
+    "spark.sql.warehouse.dir" ->
+      s"${System.getProperty("java.io.tmpdir")}/graft_test_warehouse",
+    // The window input-size stock gate (GlobalRankRule.StockBytesConf,
+    // r16) is DISABLED in the shared test session: the KB-scale test
+    // fixtures would gate every linear window shape back to Spark's
+    // plan, and the suite's job is to exercise and pin the heal
+    // machinery itself. The gate's own behavior (stock below the
+    // threshold, heal above, RANGE frames exempt) is pinned in
+    // WindowStockGateSpec, which sets the conf explicitly.
+    graft.plans.GlobalRankRule.StockBytesConf -> "0")
 
   /** Run `body` with session confs set, restoring each key's prior value
     * (or unsetting it) afterwards. */

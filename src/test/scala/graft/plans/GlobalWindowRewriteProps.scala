@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.forAllNoShrink
 
 import graft.TestSpark
 
@@ -132,17 +132,9 @@ object GlobalWindowRewriteProps extends Properties("GlobalWindowRewrite") {
   } yield (lo, up)
 
   property("RANGE value-distance frames are bit-identical at arbitrary signed bounds") =
-    forAll(rows, parts, shuffleParts, rangeBounds) { (vs, np, sp, bounds) =>
+    forAllNoShrink(rows, parts, shuffleParts, rangeBounds) {
+        (vs, np, sp, bounds) =>
       val (lo, up) = bounds
-      // shrinking ignores generator constraints: skip combos the rewrite
-      // refuses by design (both-unbounded, inverted)
-      val valid = (lo, up) match {
-        case (None, None) => false
-        case (None, Some(_)) => true
-        case (Some(_), None) => true
-        case (Some(l), Some(u)) => l <= u
-      }
-      if (!valid) true else {
       import spark.implicits._
       val df = spark.createDataset(
         vs.zipWithIndex.map { case (v, i) => (i.toLong, v) })(
@@ -167,11 +159,10 @@ object GlobalWindowRewriteProps extends Properties("GlobalWindowRewrite") {
           finally spark.conf.set(GlobalRankRule.RewriteConf, "true")
         (!planned || hasExec) && onRows == off
       }
-      }
     }
 
   property("the full battery is bit-identical to WindowExec on arbitrary input") =
-    forAll(rows, parts, shuffleParts) { (vs, np, sp) =>
+    forAllNoShrink(rows, parts, shuffleParts) { (vs, np, sp) =>
       import spark.implicits._
       val df = spark.createDataset(
         vs.zipWithIndex.map { case (v, i) => (i.toLong, v) })(

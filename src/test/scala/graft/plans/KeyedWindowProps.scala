@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.scalacheck.{Gen, Properties}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.forAllNoShrink
 
 import graft.TestSpark
 
@@ -128,18 +128,9 @@ object KeyedWindowProps extends Properties("KeyedWindowRewrite") {
   } yield (lo, up)
 
   property("keyed RANGE value-distance frames are bit-identical at arbitrary distances") =
-    forAll(rows, parts, shuffleParts, modulus, keyedRangeBounds) {
+    forAllNoShrink(rows, parts, shuffleParts, modulus, keyedRangeBounds) {
         (vs, np, sp, k, bounds) =>
       val (lo, up) = bounds
-      // shrinking ignores generator constraints: skip combos the rewrite
-      // refuses by design (both-unbounded, inverted)
-      val valid = (lo, up) match {
-        case (None, None) => false
-        case (None, Some(_)) => true
-        case (Some(_), None) => true
-        case (Some(l), Some(u)) => l <= u
-      }
-      if (!valid) true else {
       import spark.implicits._
       val df = spark.createDataset(
         vs.zipWithIndex.map { case (v, i) => (i.toLong, v) })(
@@ -163,11 +154,10 @@ object KeyedWindowProps extends Properties("KeyedWindowRewrite") {
           finally spark.conf.set(KeyedWindowRule.RewriteConf, "true")
         (!planned || hasExec) && onRows == off
       }
-      }
     }
 
   property("the keyed battery is bit-identical to WindowExec on arbitrary input") =
-    forAll(rows, parts, shuffleParts, modulus) { (vs, np, sp, k) =>
+    forAllNoShrink(rows, parts, shuffleParts, modulus) { (vs, np, sp, k) =>
       import spark.implicits._
       val df = spark.createDataset(
         vs.zipWithIndex.map { case (v, i) => (i.toLong, v) })(
