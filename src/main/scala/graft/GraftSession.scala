@@ -42,4 +42,14 @@ object GraftSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** A child of `s` for a build that needs confs of its own: it shares
+    * the SparkContext, the extensions and the options `s` was started
+    * with, and `overrides` are set on the child only, so `s` is never
+    * written. */
+  def child(s: SparkSession, overrides: (String, String)*): SparkSession = {
+    val c = s.newSession()
+    overrides.foreach { case (k, v) => c.conf.set(k, v) }
+    c
+  }
 }

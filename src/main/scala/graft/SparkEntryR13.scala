@@ -257,18 +257,18 @@ object SparkEntryR13 {
     // (Stock scan, r16: the declared findings table describes the STOCK
     // plan of the planted-bad pipeline — the scan-parallelism heal's
     // extra exchange would change the shuffle census the lint reports.)
+    // The heal is off on a child session only, so concurrent builds and
+    // plans on `s` keep the rewrite.
     "x133_plan_lint" -> ((s, d) => {
       import org.apache.spark.sql.expressions.{Window => W}
       import org.apache.spark.sql.functions._
-      val prev = s.conf.get("spark.graft.globalRank.rewrite", "true")
-      s.conf.set("spark.graft.globalRank.rewrite", "false")
-      try {
-        val bad = Tables.lineitem(s, d)
-          .filter(abs(col("l_quantity")) > 30)
-          .crossJoin(Tables.region(s, d))
-          .withColumn("rn", row_number().over(W.orderBy("l_orderkey")))
-        graft.tools.PlanLint.lint(bad)(s)
-      } finally s.conf.set("spark.graft.globalRank.rewrite", prev)
+      val stock =
+        GraftSession.child(s, "spark.graft.globalRank.rewrite" -> "false")
+      val bad = Tables.lineitem(stock, d)
+        .filter(abs(col("l_quantity")) > 30)
+        .crossJoin(Tables.region(stock, d))
+        .withColumn("rn", row_number().over(W.orderBy("l_orderkey")))
+      graft.tools.PlanLint.lint(bad)(stock)
     }),
 
     // ---- X134: INWARD half-unbounded value frames — the RANGE bound

@@ -895,11 +895,19 @@ object KeyedWindowRule {
     * reaches plain SQL plans. Session-scoped; consulted only where the
     * named column is a BASE column of a leaf relation. Pass `column` as
     * `"table.column"` to scope the hint to one catalog table. */
-  def registerNdvHint(spark: SparkSession, column: String, ndv: Long): Unit = {
-    val merged = parseHints(spark.conf.get(NdvHintsConf, "")) + (column -> ndv)
-    spark.conf.set(NdvHintsConf,
-      merged.map { case (k, v) => s"$k=$v" }.mkString(","))
-  }
+  def registerNdvHint(spark: SparkSession, column: String, ndv: Long): Unit =
+    // one read-merge-write at a time, so concurrent loaders cannot drop
+    // each other's hint; a hint already held costs no conf write
+    hintLock.synchronized {
+      val hints = parseHints(spark.conf.get(NdvHintsConf, ""))
+      if (!hints.get(column).contains(ndv)) {
+        val merged = hints + (column -> ndv)
+        spark.conf.set(NdvHintsConf,
+          merged.map { case (k, v) => s"$k=$v" }.mkString(","))
+      }
+    }
+
+  private val hintLock = new Object
 }
 
 /** The optimistic keyed heal's runtime budget trip. A DEDICATED type so

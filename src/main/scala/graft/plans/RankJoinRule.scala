@@ -593,10 +593,16 @@ object RankJoinRule {
                          path: String): Unit =
     registerEntry(spark, entryOf(columns, Some(Seq(path))))
 
-  private def registerEntry(spark: SparkSession, entry: String): Unit = {
-    val merged = rawEntries(spark.conf.get(UniqueHintsConf, "")) + entry
-    spark.conf.set(UniqueHintsConf, merged.mkString(","))
-  }
+  // register/remove: one read-merge-write at a time, so concurrent
+  // loaders cannot drop each other's entry; a no-op merge writes nothing
+  private def registerEntry(spark: SparkSession, entry: String): Unit =
+    hintLock.synchronized {
+      val entries = rawEntries(spark.conf.get(UniqueHintsConf, ""))
+      if (!entries(entry))
+        spark.conf.set(UniqueHintsConf, (entries + entry).mkString(","))
+    }
+
+  private val hintLock = new Object
 
   private def rawEntries(s: String): Set[String] =
     s.split(',').iterator.map(_.trim).filter(_.nonEmpty).toSet
@@ -614,10 +620,12 @@ object RankJoinRule {
                        path: String): Unit =
     removeEntry(spark, entryOf(columns, Some(Seq(path))))
 
-  private def removeEntry(spark: SparkSession, entry: String): Unit = {
-    val remaining = rawEntries(spark.conf.get(UniqueHintsConf, "")) - entry
-    spark.conf.set(UniqueHintsConf, remaining.mkString(","))
-  }
+  private def removeEntry(spark: SparkSession, entry: String): Unit =
+    hintLock.synchronized {
+      val entries = rawEntries(spark.conf.get(UniqueHintsConf, ""))
+      if (entries(entry))
+        spark.conf.set(UniqueHintsConf, (entries - entry).mkString(","))
+    }
 
   /** The one-call path from PlanLint's `self-join-window` finding to
     * registered evidence (VERDICT r15 #5): measure

@@ -1,8 +1,10 @@
 package graft.tables
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType,
+  TimestampType}
 
 /** Whether a [[Tables]] loader applies the scan-parallelism heal
   * ([[Tables.table]]). Chosen per load by the query that builds the
@@ -20,8 +22,11 @@ object Scan {
 /** Loaders for the driver-generated fixture tables (`TESTDATA.md`).
   *
   * Each table is a single parquet file under `<sfDir>/<name>.parquet`.
-  * Reads are schema-on-file (no inference pass — parquet footers carry the
-  * schema); Catalyst handles column pruning and filter pushdown, so callers
+  * A plain `spark.read.parquet(path)` infers the schema from the footers
+  * with one Spark job on every call; the loaders instead pass the reader
+  * a schema memoised per file version ([[fileSchema]]), so a warm load
+  * launches no job — the catalog's "crawl once, query many" split.
+  * Catalyst handles column pruning and filter pushdown, so callers
   * should select/filter on the returned DataFrame rather than pre-trim here.
   */
 object Tables {
@@ -41,7 +46,7 @@ object Tables {
     *
     * Scale-adaptive, NOT a local[32] constant (the optimization-round
     * ground rule): the decision is MEASURED from the file layout, once
-    * per (path, cores) per JVM — a table carrying at least as many
+    * per (file version, cores) per JVM — a table carrying at least as many
     * row groups as cores (any production-scale table; at 100 TB a
     * table has thousands of files × row groups) or at least as many
     * files as cores keeps the stock scan-split parallelism, and the
@@ -73,13 +78,60 @@ object Tables {
   def table(spark: SparkSession, sfDir: String, name: String,
             scan: Scan = Scan.Stock): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val df = spark.read.parquet(path)
+    val files = dataFiles(spark, path)
+    val df = spark.read.schema(fileSchema(spark, path, files)).parquet(path)
     val key = scanKeys.getOrElse(name, Seq.empty)
     if (scan == Scan.Stock || key.isEmpty) df
     else {
-      val n = scanTarget(spark, path)
+      val n = scanTarget(spark, path, files)
       if (n <= 0) df else df.repartition(n, key.map(col): _*)
     }
+  }
+
+  /** The data files behind `path` (the file itself, or a directory's
+    * visible files), as Hadoop sees them — local, HDFS and `s3a://`
+    * alike. */
+  private def dataFiles(s: SparkSession, path: String): Array[FileStatus] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val st = fs.getFileStatus(p)
+    if (!st.isDirectory) Array(st)
+    else fs.listStatus(p).filter(f => f.isFile &&
+      !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
+  }
+
+  /** One version of a table: every data file's name, length and
+    * modification time. A file rewritten in place is a new version. */
+  private def version(files: Array[FileStatus]): String =
+    files.map(f => s"${f.getPath.getName}:${f.getLen}-${f.getModificationTime}")
+      .sorted.mkString(";")
+
+  /** The session confs that change the schema Spark infers from parquet
+    * footers (the inputs of its `ParquetToSparkSchemaConverter`, plus
+    * `mergeSchema` for multi-file tables). */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled")
+
+  private val schemaMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  /** Spark's own inferred schema of `path` — one footer-merge job the
+    * first time a (file version, inference confs) pair is seen in this
+    * JVM, a map lookup after that. Spark's conversion is reused, never
+    * re-implemented, so the types are exactly what an unhinted read
+    * would give. */
+  private def fileSchema(s: SparkSession, path: String,
+                         files: Array[FileStatus]): StructType = {
+    val confs = InferenceConfs.map(k => s.conf.getOption(k).getOrElse(""))
+    schemaMemo.computeIfAbsent(
+      s"$path@${version(files)}@${confs.mkString(",")}",
+      _ => s.read.parquet(path).schema)
   }
 
   private val scanKeys: Map[String, Seq[String]] = Map(
@@ -100,26 +152,18 @@ object Tables {
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Integer]()
 
   /** 0 = leave the stock scan split; > 0 = repartition to that many
-    * partitions. Measured once per (path, cores): #files, then (only
-    * when #files < cores) footer row-group and row counts of those
+    * partitions. Measured once per (file version, cores): #files, then
+    * (only when #files < cores) footer row-group and row counts of those
     * files — a handful of footer reads, never a data scan.
     */
-  private def scanTarget(s: SparkSession, path: String): Int = {
+  private def scanTarget(s: SparkSession, path: String,
+                         files: Array[FileStatus]): Int = {
     val cores = s.sparkContext.defaultParallelism
-    scanTargetMemo.computeIfAbsent(s"$path@$cores", _ => {
+    scanTargetMemo.computeIfAbsent(s"$path@${version(files)}@$cores", _ => {
       try {
-        val p = new org.apache.hadoop.fs.Path(path)
-        val conf = s.sparkContext.hadoopConfiguration
-        val fs = p.getFileSystem(conf)
-        val st = fs.getFileStatus(p)
-        val files =
-          if (st.isDirectory)
-            fs.listStatus(p).filter(f => f.isFile &&
-              !f.getPath.getName.startsWith("_") &&
-              !f.getPath.getName.startsWith("."))
-          else Array(st)
         if (files.length >= cores) 0
         else {
+          val conf = s.sparkContext.hadoopConfiguration
           var groups = 0L
           var rows = 0L
           files.foreach { f =>
@@ -214,8 +258,8 @@ object Tables {
   private def registerMeasuredNdv(s: SparkSession, d: String,
                                   name: String, column: String): Unit = {
     val memoKey = s"$d/$name/$column/${stamp(d, name)}"
-    // memoize the MEASUREMENT only — the hint itself is re-applied on
-    // every load (idempotent conf merge): session confs are mutable
+    // memoize the MEASUREMENT only — the hint itself is re-checked on
+    // every load, and written only when missing: session confs are mutable
     // state anything may reset (a test battery, a conf sweep, a
     // library caller), and a registration that survives only as a
     // memo flag silently loses the evidence for the rest of the

@@ -26,6 +26,24 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(forks === List("graft/GraftSession.scala"))
   }
 
+  test("query builders and table loaders never write session conf") {
+    // a build that sets a conf changes every concurrent build and plan on
+    // the same session; a build that needs its own confs derives a
+    // GraftSession.child
+    val root = Paths.get("src/main/scala/graft")
+    val files = {
+      val entries = Files.list(root)
+      try entries.iterator().asScala
+        .filter(_.getFileName.toString.matches("SparkEntry.*\\.scala"))
+        .toList
+      finally entries.close()
+    } :+ root.resolve("tables/Tables.scala")
+    assert(files.size > 2, s"run from the repo root; no builders under $root")
+    val writers = files.filter(p => Files.readString(p).contains("conf.set"))
+      .map(p => root.relativize(p).toString)
+    assert(writers === Nil)
+  }
+
   test("the shared test session is a GraftSession") {
     val conf = TestSpark.spark.conf
     assert(conf.get("spark.sql.extensions") === "graft.GraftExtensions")
