@@ -40,7 +40,7 @@ object SparkEntry {
     */
   private def barStats(s: SparkSession, d: String): MarketEtl.RollingStats = {
     val v = graft.util.ArtifactStore.getOrCompute(s, "rolling_stats",
-      Seq(d, Tables.stamp(d, "lineitem"), "l_returnflag", "l_shipdate"),
+      Seq(d, Tables.stamp(s, d, "lineitem"), "l_returnflag", "l_shipdate"),
       graft.util.ArtifactStore.LongsCodec) {
       val st = MarketEtl.rollingStats(bars(s, d), Seq("ativo"), col("dt"))
       Seq(st.minMonth, st.monthGroups, st.minYear, st.yearGroups, st.keys)
@@ -443,7 +443,7 @@ object SparkEntry {
     // → rows-only.
     "x3_hll_artifact" -> ((s, d) => {
       val sketches = graft.util.ArtifactStore.getOrCompute(s,
-        "hll_user_sketches", Seq(d, Tables.stamp(d, "events"), "events", "user_id"),
+        "hll_user_sketches", Seq(d, Tables.stamp(s, d, "events"), "events", "user_id"),
         graft.util.ArtifactStore.BinaryMapCodec) {
         Tables.events(s, d).groupBy(col("event_type"))
           .agg(hll_sketch_agg(col("user_id")).as("sk"))

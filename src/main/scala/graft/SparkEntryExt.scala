@@ -161,7 +161,7 @@ object SparkEntryExt {
     "x4_ivf_topk" -> ((s, d) => {
       val e = emb(s, d)
       val cents = graft.util.ArtifactStore.getOrCompute(s, "ivf_centroids",
-        Seq(d, Tables.stamp(d, "embeddings"), 16, 3),
+        Seq(d, Tables.stamp(s, d, "embeddings"), 16, 3),
         graft.util.ArtifactStore.CentroidsCodec) {
         SimSearch.fitCentroids(e, 16, iters = 3)
       }
@@ -206,7 +206,7 @@ object SparkEntryExt {
     // x38_dedup_keep_best's policy pick (one loop, two policies).
     "x2_dedup_cc" -> ((s, d) =>
       TextOps.dedupCorpusConnected(docsWithChain(s, d), 0.8,
-        labelsKey = Some(Seq(d, Tables.stamp(d, "documents"), "chain_mod4")))
+        labelsKey = Some(Seq(d, Tables.stamp(s, d, "documents"), "chain_mod4")))
         .select(col("doc_id"), length(col("text")).as("n_len"))),
 
     // Exact n-gram-Jaccard all-pairs on a bounded subset (the brute-force
@@ -297,7 +297,7 @@ object SparkEntryExt {
       val evalSet = Tables.documents(s, d)
         .filter(pmod(col("doc_id"), lit(50L)) === 0)
       TextOps.decontaminate(docsWithPlanted(s, d), evalSet, minOverlap = 5,
-        indexKey = Some(Seq(d, Tables.stamp(d, "documents"), "eval-mod50")))
+        indexKey = Some(Seq(d, Tables.stamp(s, d, "documents"), "eval-mod50")))
         .select(col("doc_id"), length(col("text")).as("n_len"))
     }),
 

@@ -37,7 +37,7 @@ object SparkEntryPipeline {
     * vintages' footer schemas without reading a row. */
   def s12VintageRoot(s: SparkSession, d: String): String = {
     queries("s12_schema_evolution")(s, d) // builds + memoizes the trees
-    val stamp = Tables.stamp(d, "lineitem")
+    val stamp = Tables.stamp(s, d, "lineitem")
     s"${base(d, "s12")}-v1-$stamp"
   }
 
@@ -116,7 +116,7 @@ object SparkEntryPipeline {
     * copies of the same write). Returns (refinedDir, fixture tag).
     */
   private def sharedRoundtrip(s: SparkSession, d: String): (String, String) = {
-    val stamp = Tables.stamp(d, "lineitem")
+    val stamp = Tables.stamp(s, d, "lineitem")
     // Concurrent first callers (test suites share the JVM) build in
     // private tmp roots and publish by atomic rename, first writer wins
     // — the ArtifactStore discipline; nobody ever overwrites a
@@ -201,7 +201,7 @@ object SparkEntryPipeline {
     // DuckDB oracle reconstructs the merged read exactly; the landing
     // write shares the memoized first-writer-wins publication.
     "s12_schema_evolution" -> ((s, d) => {
-      val stamp = Tables.stamp(d, "lineitem")
+      val stamp = Tables.stamp(s, d, "lineitem")
       val root = new java.io.File(s"${base(d, "s12")}-v1-$stamp")
       graft.util.SessionCache.getOrCompute(("s12_schema_evo", d, stamp)) {
         if (!new java.io.File(root, "_SUCCESS").exists()) {
@@ -284,7 +284,7 @@ object SparkEntryPipeline {
     * DuckDB oracle reconstructs the evolved read exactly.
     */
   private[graft] def s13Table(s: SparkSession, d: String): String = {
-    val stamp = Tables.stamp(d, "lineitem")
+    val stamp = Tables.stamp(s, d, "lineitem")
     val root = new java.io.File(s"${base(d, "s13")}-v1-$stamp")
     graft.util.SessionCache.getOrCompute(("s13_schema_evo", d, stamp)) {
       if (!new java.io.File(root, "_SUCCESS").exists()) {

@@ -27,7 +27,7 @@ object SparkEntryR10 {
     // parquet is never rescanned. Approximate by design → rows-only.
     "x110b_decontam_indexed" -> ((s, d) => {
       val (evalQ, corpus) = SparkEntryR9b.decontamFrames(s, d)
-      val key = Seq(d, Tables.stamp(d, "embeddings"), "x110b", 16, 3)
+      val key = Seq(d, Tables.stamp(s, d, "embeddings"), "x110b", 16, 3)
       val cents = graft.util.ArtifactStore.getOrCompute(s, "ivf_centroids",
         key, graft.util.ArtifactStore.CentroidsCodec) {
         SimSearch.fitCentroids(corpus, 16, iters = 3)

@@ -182,7 +182,7 @@ object SparkEntryR12 {
       val batch = media.filter(col("media_id") % 10 === 1).unionByName(fresh)
       val idx = MediaHashIndex.ensureIndex(s,
         ImageDedup.hashed(corpus),
-        Seq(d, Tables.stamp(d, "documents"), "x128_img_mod10"))
+        Seq(d, Tables.stamp(s, d, "documents"), "x128_img_mod10"))
       MediaHashIndex.probeNearDups(ImageDedup.hashed(batch), idx)
         .select(col("id").as("media_id")).orderBy("media_id")
     }),

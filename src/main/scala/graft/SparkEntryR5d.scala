@@ -162,7 +162,7 @@ object SparkEntryR5d {
       // loaded thereafter — the decision pass never re-scans per run
       val st = {
         val v = graft.util.ArtifactStore.getOrCompute(s, "rolling_stats",
-          Seq(d, Tables.stamp(d, "lineitem"), "l_returnflag", "l_shipdate"),
+          Seq(d, Tables.stamp(s, d, "lineitem"), "l_returnflag", "l_shipdate"),
           graft.util.ArtifactStore.LongsCodec) {
           val x = graft.etl.MarketEtl.rollingStats(b, Seq("ativo"), col("dt"))
           Seq(x.minMonth, x.monthGroups, x.minYear, x.yearGroups, x.keys)
@@ -291,7 +291,7 @@ object SparkEntryR5d {
       val emb = Tables.embeddings(s, d).select(col("vec_id"),
         expr("CAST(embedding AS array<double>)").as("emb"))
       val cb = Pq.ensureCodebooks(s, emb,
-        s"$d/embeddings-${Tables.stamp(d, "embeddings")}", m = 8, k = 16,
+        s"$d/embeddings-${Tables.stamp(s, d, "embeddings")}", m = 8, k = 16,
         iters = 2)
       Pq.topK(emb, emb.filter(col("vec_id") < 10), cb, k = 10, rerank = 60)
         .select(col("q_id"), col("rank"), col("vec_id"),

@@ -203,7 +203,7 @@ object SparkEntryR6 {
       // both the per-bucket Bloom sketches AND the exact-membership
       // index come from persisted artifacts: after the one-time build,
       // the per-batch plan never touches the corpus parquet
-      val memberKey = Seq(d, Tables.stamp(d, "documents"), "mod5", 16)
+      val memberKey = Seq(d, Tables.stamp(s, d, "documents"), "mod5", 16)
       val blooms = MembershipIndex.ensureBloomTable(s, existing, memberKey, 16)
       val idx = MembershipIndex.ensureIndex(s, existing, memberKey, 16)
       val probed = batch
@@ -242,7 +242,7 @@ object SparkEntryR6 {
           concat(col("text"), lit(" qq")).as("text"))
       val batch = docs.filter(col("doc_id") % 5 === 0).unionByName(recrawl)
       val idx = LshIndex.ensureIndex(s, corpus,
-        Seq(d, Tables.stamp(d, "documents"), "mod5", 3, 24, 12, 2))
+        Seq(d, Tables.stamp(s, d, "documents"), "mod5", 3, 24, 12, 2))
       val dups = LshIndex.probeNearDups(batch, corpus, idx, 0.8)
       batch.join(dups, Seq("doc_id"), "left_anti").select("doc_id")
     }),
@@ -293,7 +293,7 @@ object SparkEntryR6 {
       // once; bench repetitions and fresh JVMs read the label table
       SimSearch.semDedupSurvivors(e,
         SimSearch.allPairsCosinePairs(e, 0.35),
-        labelsKey = Some(Seq("x35_exact", d, Tables.stamp(d, "embeddings"), 0.35)))
+        labelsKey = Some(Seq("x35_exact", d, Tables.stamp(s, d, "embeddings"), 0.35)))
         .select("vec_id")
     }),
 
@@ -319,17 +319,17 @@ object SparkEntryR6 {
       // ~128 vectors per cell at any scale (memoized per fixture via
       // SessionCache; the centroid artifact key carries k)
       val n = graft.util.SessionCache.getOrCompute(
-        ("semdedup_n", d, Tables.stamp(d, "embeddings")))(e.count())
+        ("semdedup_n", d, Tables.stamp(s, d, "embeddings")))(e.count())
       val k = math.max(8, (n / 128).toInt)
       val cents = graft.util.ArtifactStore.getOrCompute(s, "semdedup_centroids",
-        Seq(d, Tables.stamp(d, "embeddings"), k, 3),
+        Seq(d, Tables.stamp(s, d, "embeddings"), k, 3),
         graft.util.ArtifactStore.CentroidsCodec) {
         SimSearch.fitCentroids(e, k, iters = 3)
       }
       // the propagated labels persist alongside the centroids (key carries
       // k + nProbe — a different clustering is a different pair graph)
       SimSearch.semDedupClustered(e, 0.35, cents, nProbe = 2,
-        labelsKey = Some(Seq("x35_cluster", d, Tables.stamp(d, "embeddings"),
+        labelsKey = Some(Seq("x35_cluster", d, Tables.stamp(s, d, "embeddings"),
           0.35, k, 2)))
         .select("vec_id")
     }),
@@ -538,7 +538,7 @@ object SparkEntryR6 {
     // both queries when each re-ran it).
     "x38_dedup_keep_best" -> ((s, d) =>
       graft.text.TextOps.dedupCorpusKeepBest(docsWithChain(s, d), 0.8,
-        labelsKey = Some(Seq(d, Tables.stamp(d, "documents"), "chain_mod4")))
+        labelsKey = Some(Seq(d, Tables.stamp(s, d, "documents"), "chain_mod4")))
         .select(col("doc_id"), length(col("text")).as("n_len"))),
 
     // ---- X39: quantile feature binning ----
@@ -618,7 +618,7 @@ object SparkEntryR6 {
       // RollingStats memo discipline, VERDICT r12 #5): computed once,
       // every later invocation skips the two rank-selection passes
       val boundRows = graft.util.SessionCache.getOrCompute(
-        ("a9_bounds", d, Tables.stamp(d, "lineitem"), "v", Seq(0.05, 0.95))) {
+        ("a9_bounds", d, Tables.stamp(s, d, "lineitem"), "v", Seq(0.05, 0.95))) {
         graft.stats.Percentiles
           .exactQuantiles(li, "flag", "v", Seq(0.05, 0.95), Seq("lo", "hi"))
           .select(col("flag"), round(col("lo"), 6).as("lo"),

@@ -55,7 +55,7 @@ object SparkEntryR7 {
           .select((col("doc_id") + 400000L).as("doc_id"),
             concat(col("text"), lit(" qq")).as("text")))
       val leaf = new java.io.File(d).getName
-      val stamp = Tables.stamp(d, "documents")
+      val stamp = Tables.stamp(s, d, "documents")
       val root = s"${System.getProperty("java.io.tmpdir")}/graft_r7/$leaf/ingest-$stamp-v1"
       val key = Seq(d, stamp, "ingest-mod5-v1")
       IncrementalIngest.processBatch(batch, 0L, root, corpus, key)
@@ -159,7 +159,7 @@ object SparkEntryR7 {
       TextOps.stripBoilerplate(
         Tables.documents(s, d).select(col("doc_id"), col("text")),
         "doc_id", "text", segTokens = 3, minDocs = 8,
-        hotSetKey = Some(Seq(d, Tables.stamp(d, "documents"))))),
+        hotSetKey = Some(Seq(d, Tables.stamp(s, d, "documents"))))),
 
     // ---- X48b: boilerplate strip, sketch-counted hot set (100 TB twin) --
     //
@@ -173,7 +173,7 @@ object SparkEntryR7 {
       TextOps.stripBoilerplate(
         Tables.documents(s, d).select(col("doc_id"), col("text")),
         "doc_id", "text", segTokens = 3, minDocs = 8, approxCounts = true,
-        hotSetKey = Some(Seq(d, Tables.stamp(d, "documents"))))),
+        hotSetKey = Some(Seq(d, Tables.stamp(s, d, "documents"))))),
 
     // ---- X49: fractional-epoch source mixing ---------------------------
     //

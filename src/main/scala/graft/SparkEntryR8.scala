@@ -23,7 +23,7 @@ object SparkEntryR8 {
   private def bpeMerges(s: SparkSession, d: String): Seq[graft.ml.Bpe.Merge] =
     graft.ml.Bpe.ensureMerges(s,
       graft.ml.Bpe.wordCounts(Tables.documents(s, d), "text"),
-      BpeRounds, Seq(d, Tables.stamp(d, "documents")))
+      BpeRounds, Seq(d, Tables.stamp(s, d, "documents")))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -113,7 +113,7 @@ object SparkEntryR8 {
       val docs = SparkEntryExt.docsWithChain(s, d)
       val labels = TextOps.ensureCcLabels(
         TextOps.nearDupPairs(docs, 0.8).select("id_a", "id_b"),
-        Seq(d, Tables.stamp(d, "documents"), "chain_mod4", 0.8, 3, 24, 12, 2))
+        Seq(d, Tables.stamp(s, d, "documents"), "chain_mod4", 0.8, 3, 24, 12, 2))
         .withColumnRenamed("id", "doc_id")
       val h = TextOps.saltedDraw(col("grp").cast("string"), "x54", 10L)
       docs.join(labels, Seq("doc_id"), "left")
@@ -167,12 +167,12 @@ object SparkEntryR8 {
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), SimSearch.castD(col("embedding")).as("emb"))
       val cents = graft.util.ArtifactStore.getOrCompute(s, "ivf_centroids",
-        Seq(d, Tables.stamp(d, "embeddings"), 16, 3),
+        Seq(d, Tables.stamp(s, d, "embeddings"), 16, 3),
         graft.util.ArtifactStore.CentroidsCodec) {
         SimSearch.fitCentroids(e, 16, iters = 3)
       }
       val idx = VectorIndex.ensureIndex(s, e,
-        Seq(d, Tables.stamp(d, "embeddings"), 16, 3), cents)
+        Seq(d, Tables.stamp(s, d, "embeddings"), 16, 3), cents)
       VectorIndex.queryTopK(idx, e.filter(col("vec_id") < 10), 10, cents,
         nProbe = 6)
         .select(col("q_id"), col("rank"), col("vec_id"),
@@ -273,7 +273,7 @@ object SparkEntryR8 {
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val w = graft.ml.HashedLogit.ensureWeights(s, docs, "doc_id", "text",
         Buckets, Thresh, Rounds, EtaDen, BiasCnt,
-        Seq(d, Tables.stamp(d, "documents")))
+        Seq(d, Tables.stamp(s, d, "documents")))
       docs.select(col("doc_id"),
           ccol(HashedBagWeightedScore(cexp(TextOps.tokens(col("text"))), w, BiasCnt))
             .as("score"))

@@ -146,7 +146,7 @@ object SparkEntryR8b {
       val docs = Tables.documents(s, d)
       val bin = expr("n_chars div 50")
       val baseline = Drift.ensureBaseline(s, docs, bin,
-        Seq(d, Tables.stamp(d, "documents"), "n_chars_div50"))
+        Seq(d, Tables.stamp(s, d, "documents"), "n_chars_div50"))
       Drift.tvVsBaseline(docs, "source", bin, baseline)
         .withColumnRenamed("grp", "source")
         .select(col("source"), col("n_a"), col("n_b"), col("tv_permill"),
@@ -166,7 +166,7 @@ object SparkEntryR8b {
     "x64b_baseline_absorb" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val bin = expr("n_chars div 50")
-      val stamp = Tables.stamp(d, "documents")
+      val stamp = Tables.stamp(s, d, "documents")
       val even = docs.where(pmod(col("doc_id"), lit(2L)) === 0)
       val odd = docs.where(pmod(col("doc_id"), lit(2L)) === 1)
       Drift.ensureBaseline(s, even, bin, Seq(d, stamp, "absorb_even"))
@@ -319,7 +319,7 @@ object SparkEntryR8b {
       val docs = Tables.documents(s, d)
       val bin = expr("n_chars div 50")
       val baseline = Drift.ensureBaseline(s, docs, bin,
-        Seq(d, Tables.stamp(d, "documents"), "n_chars_div50"))
+        Seq(d, Tables.stamp(s, d, "documents"), "n_chars_div50"))
       val verdicts = Drift.tvVsBaseline(docs, "source", bin, baseline)
         .select(col("grp").as("source"), col("tv_permill"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -447,7 +447,7 @@ object SparkEntryR8b {
       val words = Unigram.boundedWords(
         Bpe.wordCounts(Tables.documents(s, d), "text"))
       val ps = Unigram.ensurePieces(s, words,
-        Seq(d, Tables.stamp(d, "documents")))
+        Seq(d, Tables.stamp(s, d, "documents")))
       words
         .select(col("word"), col("cnt"),
           Unigram.combCostCol(col("word"), ps).as("comb"))

@@ -171,7 +171,7 @@ object SparkEntryR8d {
     "x87b_manifest_absorb" -> ((s, d) => {
       import graft.text.ShardManifest
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val stamp = Tables.stamp(d, "documents")
+      val stamp = Tables.stamp(s, d, "documents")
       ShardManifest.ensure(s, docs.where(pmod(col("doc_id"), lit(5L)) =!= 0),
         Seq(d, stamp, "x87b_base"))
       ShardManifest.absorb(s,

@@ -45,7 +45,7 @@ object SparkEntryR8g {
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val w = graft.ml.HashedLogit.ensureWeights(s, docs, "doc_id", "text",
         Buckets, Thresh, Rounds, EtaDen, BiasCnt,
-        Seq(d, Tables.stamp(d, "documents")))
+        Seq(d, Tables.stamp(s, d, "documents")))
       val scored = docs.select(col("doc_id"),
         ccol(HashedBagWeightedScore(cexp(TextOps.tokens(col("text"))), w,
           BiasCnt)).as("score"),

@@ -128,7 +128,7 @@ object SparkEntryR9 {
         .select(col("doc_id"), col("text_kept").as("text"))
       TextOps.stripBoilerplate(intra, "doc_id", "text",
           segTokens = 3, minDocs = 8,
-          hotSetKey = Some(Seq(d, Tables.stamp(d, "documents"), "x108")))
+          hotSetKey = Some(Seq(d, Tables.stamp(s, d, "documents"), "x108")))
         .orderBy("doc_id")
     }),
 

@@ -238,7 +238,15 @@ object MarketEtl {
     * machinery).
     *
     * Cost: `stats` if supplied (the table-stats lifecycle — compute once,
-    * window many), else one single-job column-pruned pass (`rollingStats`).
+    * window many). Else, when the frame's own plan already proves the
+    * single key's count at or under the rule's `maxNdv` — an `IN`/`=`
+    * filter pin, a literal, catalog column stats, read by
+    * [[graft.plans.KeyedWindowRule.planProvesKeyNdv]] — no job at all:
+    * the keyed branch is the only one the stats could pick, so the PLAIN
+    * window is emitted and no hint is registered (the streaming
+    * arrival's touched-asset pin takes this path). Session hints are not
+    * proof here: they match by column name and may be stale. Otherwise
+    * one single-job column-pruned pass (`rollingStats`).
     * The decision is exact, not estimated: min group size over ALL groups
     * ≥ n-1 (stricter than the non-final-groups precondition, so always
     * safe). Results are identical across all three branches — w1/w1b share
@@ -248,10 +256,14 @@ object MarketEtl {
                           orderCols: Seq[Column], valueCol: String, n: Int,
                           out: String, timeCol: Column,
                           stats: Option[RollingStats] = None): DataFrame = {
-    val st = stats.getOrElse(rollingStats(df, partitionCols, timeCol))
     val spark = df.sparkSession
     val ruleOn = spark.conf.get(
       graft.plans.KeyedWindowRule.RewriteConf, "true") == "true"
+    if (stats.isEmpty && ruleOn && partitionCols.length == 1 &&
+        planProvesKeyNdv(df, partitionCols.head))
+      // the stats below could only pick the keyed branch: skip the pass
+      return rollingMean(df, partitionCols, orderCols, valueCol, n, out)
+    val st = stats.getOrElse(rollingStats(df, partitionCols, timeCol))
     val maxNdv = spark.conf.get(
       graft.plans.KeyedWindowRule.MaxNdvConf, "64").toLong
     if (ruleOn && partitionCols.length == 1 && st.keys > 0 && st.keys <= maxNdv) {
@@ -275,6 +287,15 @@ object MarketEtl {
         date_trunc("year", timeCol))
     else
       rollingMean(df, partitionCols, orderCols, valueCol, n, out)
+  }
+
+  /** Does `df`'s analyzed plan alone prove `column`'s distinct count at
+    * or under the keyed rule's `maxNdv`? */
+  private def planProvesKeyNdv(df: DataFrame, column: String): Boolean = {
+    val plan = df.queryExecution.analyzed
+    plan.resolve(Seq(column), df.sparkSession.sessionState.analyzer.resolver)
+      .exists(k => graft.plans.KeyedWindowRule(df.sparkSession)
+        .planProvesKeyNdv(Seq(k), plan))
   }
 
   /** A1 (`etl/etl_job.py:133-140`): per-asset hash aggregate — mean close,

@@ -329,11 +329,15 @@ private[plans] object WindowShapes {
   *     dimension columns (`PARTITION BY n_name`) prove with zero setup;
   *   - a session NDV HINT (`spark.graft.keyedWindow.ndvHints`,
   *     `name=ndv[,name=ndv…]`) — the handoff point for runtime stats
-  *     artifacts: `MarketEtl.rollingStats` (w2/w4's bucketing stats)
-  *     registers its measured key count via [[KeyedWindowRule.registerNdvHint]],
+  *     artifacts: the flagship's bar stats (w2/w4's bucketing stats),
+  *     the fixture loaders' measured columns, and
+  *     `MarketEtl.rollingMeanAdaptive` after a stats pass register their
+  *     measured key counts via [[KeyedWindowRule.registerNdvHint]],
   *     making the library's artifact knowledge visible to plain SQL
-  *     plans in the same session. Hints match by column NAME, so they
-  *     are session-scoped facts the caller vouches for.
+  *     plans in the same session. A frame whose own plan proves its key
+  *     count (the streaming arrival's touched-asset `IN` pin) runs no
+  *     stats pass and registers nothing. Hints match by column NAME, so
+  *     they are session-scoped facts the caller vouches for.
   *
   * A PROVABLY-high ndv leaves the plan with Spark: hash clustering at
   * high ndv is already parallel, and the rewrite's range sampling job +
@@ -447,11 +451,19 @@ case class KeyedWindowRule(session: SparkSession) extends Rule[LogicalPlan]
     * decorrelated broadcast join at 20k unproven keys — q17). */
   private[plans] def provenKeyNdv(keys: Seq[Expression],
                                   child: LogicalPlan): Boolean =
-    ndvOk(keys, child)
+    ndvOk(keys, child, parseHints(session.conf.get(NdvHintsConf, "")))
 
-  private def ndvOk(keys: Seq[Expression], child: LogicalPlan): Boolean = {
+  /** The same proof from `child`'s own evidence only — a domain bound,
+    * a filter pin or catalog/CBO column stats, never a session hint
+    * (hints match by column name and may be stale). Exposed for
+    * `MarketEtl.rollingMeanAdaptive`, which skips its stats pass when
+    * the plan already proves the key count. */
+  def planProvesKeyNdv(keys: Seq[Expression], child: LogicalPlan): Boolean =
+    ndvOk(keys, child, Map.empty)
+
+  private def ndvOk(keys: Seq[Expression], child: LogicalPlan,
+                    hints: Map[String, Long]): Boolean = {
     val maxNdv = session.conf.get(MaxNdvConf, "64").toLong
-    val hints = parseHints(session.conf.get(NdvHintsConf, ""))
     val bounds = keys.map(ndvBound(_, child, hints))
     bounds.forall(_.isDefined) && {
       val product = bounds.flatten.foldLeft(1L) { (acc, b) =>
@@ -581,7 +593,7 @@ case class KeyedWindowRule(session: SparkSession) extends Rule[LogicalPlan]
           // whole-frame totals need no order; every other shape is
           // position-dependent and needs the ORDER BY to range-partition
           (w.orderSpec.nonEmpty || kinds.forall(_.exists(_.isInstanceOf[TotK]))) &&
-          (ndvOk(w.partitionSpec, w.child) ||
+          (provenKeyNdv(w.partitionSpec, w.child) ||
             ndvUnprovable(w.partitionSpec, w.child, ndvSensitiveKinds(kinds)))
       }
 
@@ -636,7 +648,7 @@ case class KeyedWindowRule(session: SparkSession) extends Rule[LogicalPlan]
       }
       // fired without a plan-time ndv proof → the ndv-dependent execs
       // (running/total/rank per-run metadata) enforce the runtime budget
-      val optimistic = !ndvOk(w.partitionSpec, w.child)
+      val optimistic = !provenKeyNdv(w.partitionSpec, w.child)
       val rankPairs = classified.collect { case (attr, RankK(k)) => (attr, k) }
       val ignMap: Map[ExprId, (Attribute, Expression)] =
         classified.collect { case (attr, IgnK(in, _, d)) =>
@@ -891,8 +903,9 @@ object KeyedWindowRule {
     }.toMap
 
   /** Record a measured ndv for `column` in the session hints — called by
-    * stats artifacts (e.g. `MarketEtl.rollingStats`) so their knowledge
-    * reaches plain SQL plans. Session-scoped; consulted only where the
+    * stats artifacts (the flagship's bar stats, a `rollingMeanAdaptive`
+    * stats pass, the fixture loaders) so their knowledge reaches plain
+    * SQL plans. Session-scoped; consulted only where the
     * named column is a BASE column of a leaf relation. Pass `column` as
     * `"table.column"` to scope the hint to one catalog table. */
   def registerNdvHint(spark: SparkSession, column: String, ndv: Long): Unit =

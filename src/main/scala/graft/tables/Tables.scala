@@ -181,17 +181,18 @@ object Tables {
     })
   }
 
-  /** Cheap content stamp (size + mtime) of a fixture table file, for use
-    * in durable-artifact keys: an artifact keyed only by PATH serves
-    * stale index data if the file is regenerated in place between
-    * sessions — the stamp makes the key change with the file. (Artifact
-    * keys must identify IMMUTABLE inputs; this makes "same path, new
-    * data" a different key rather than a silent wrong answer.)
+  /** Cheap content stamp of a fixture table — its file version (every
+    * data file's name, Hadoop length and modification time, as the
+    * schema memo keys it), for use in durable-artifact keys: an artifact
+    * keyed only by PATH serves stale index data if the file is
+    * regenerated in place between sessions — the stamp makes the key
+    * change with the file, on any Hadoop file system (`file:`, `s3a://`,
+    * `hdfs://`). (Artifact keys must identify IMMUTABLE inputs; this
+    * makes "same path, new data" a different key rather than a silent
+    * wrong answer.)
     */
-  def stamp(sfDir: String, name: String): String = {
-    val f = new java.io.File(s"$sfDir/$name.parquet")
-    s"${f.length()}-${f.lastModified()}"
-  }
+  def stamp(s: SparkSession, sfDir: String, name: String): String =
+    version(dataFiles(s, s"$sfDir/$name.parquet"))
 
   def region(s: SparkSession, d: String, scan: Scan = Scan.Stock): DataFrame =
     table(s, d, "region", scan)
@@ -257,7 +258,7 @@ object Tables {
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private def registerMeasuredNdv(s: SparkSession, d: String,
                                   name: String, column: String): Unit = {
-    val memoKey = s"$d/$name/$column/${stamp(d, name)}"
+    val memoKey = s"$d/$name/$column/${stamp(s, d, name)}"
     // memoize the MEASUREMENT only — the hint itself is re-checked on
     // every load, and written only when missing: session confs are mutable
     // state anything may reset (a test battery, a conf sweep, a
@@ -266,7 +267,7 @@ object Tables {
     // session (caught by the r15 full-suite run)
     val v = ndvMeasured.computeIfAbsent(memoKey, _ =>
       graft.util.ArtifactStore.getOrCompute(s, "col_ndv",
-        Seq(d, stamp(d, name), name, column),
+        Seq(d, stamp(s, d, name), name, column),
         graft.util.ArtifactStore.LongsCodec) {
         Seq(table(s, d, name).select(column).distinct().count())
       }.head)
@@ -294,12 +295,12 @@ object Tables {
                                         name: String,
                                         columns: Seq[String]): Unit = {
     val colKey = columns.sorted.mkString("+")
-    val memoKey = s"$d/$name/$colKey/${stamp(d, name)}"
+    val memoKey = s"$d/$name/$colKey/${stamp(s, d, name)}"
     // measurement memoized, hint re-applied per load — see
     // registerMeasuredNdv for why
     val unique = uniqueMeasured.computeIfAbsent(memoKey, _ => {
       val v = graft.util.ArtifactStore.getOrCompute(s, "col_unique",
-        Seq(d, stamp(d, name), name, colKey),
+        Seq(d, stamp(s, d, name), name, colKey),
         graft.util.ArtifactStore.LongsCodec) {
         val t = table(s, d, name)
         Seq(t.select(columns.map(col): _*).distinct().count(), t.count())

@@ -111,7 +111,7 @@ class R8bOpsSpec extends AnyFunSuite {
     // the baseline histogram must persist as an artifact (the gate must
     // not recompute the corpus histogram per run)
     val dir = graft.util.ArtifactStore.artifactDir(spark, "drift_baseline",
-      Seq(sf, graft.tables.Tables.stamp(sf, "documents"), "n_chars_div50"))
+      Seq(sf, graft.tables.Tables.stamp(spark, sf, "documents"), "n_chars_div50"))
     assert(new java.io.File(dir, "_SUCCESS").exists(), s"missing $dir")
     val before = dir.lastModified()
     q("x64_drift_gate").collect()
@@ -123,14 +123,14 @@ class R8bOpsSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.expr
     val full = Drift.ensureBaseline(spark,
       graft.tables.Tables.documents(spark, sf), expr("n_chars div 50"),
-      Seq(sf, graft.tables.Tables.stamp(sf, "documents"), "n_chars_div50"))
+      Seq(sf, graft.tables.Tables.stamp(spark, sf, "documents"), "n_chars_div50"))
       .collect().map(_.toSeq).toSet
     val absorbed = q("x64b_baseline_absorb").collect().map(_.toSeq).toSet
     assert(absorbed === full, "absorbed baseline must equal the rebuild")
     // both versions coexist on disk (consumers roll keys, never lose one)
     Seq("absorb_even", "absorb_full").foreach { v =>
       val dir = graft.util.ArtifactStore.artifactDir(spark, "drift_baseline",
-        Seq(sf, graft.tables.Tables.stamp(sf, "documents"), v))
+        Seq(sf, graft.tables.Tables.stamp(spark, sf, "documents"), v))
       assert(new java.io.File(dir, "_SUCCESS").exists(), s"missing $v")
     }
   }

@@ -95,7 +95,7 @@ class R8dOpsSpec extends AnyFunSuite {
     assert(absorbed.toSeq === rebuilt.toSeq)
     // the absorb path persisted both artifact versions
     import graft.util.ArtifactStore
-    val stamp = graft.tables.Tables.stamp(sf, "documents")
+    val stamp = graft.tables.Tables.stamp(spark, sf, "documents")
     for (v <- Seq("x87b_base", "x87b_full"))
       assert(new java.io.File(ArtifactStore.artifactDir(spark,
         "shard_manifest", Seq(sf, stamp, v)), "_SUCCESS").exists(), v)

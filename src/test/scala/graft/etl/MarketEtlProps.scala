@@ -68,9 +68,10 @@ object MarketEtlProps extends Properties("MarketEtl") {
     }
 
   /** Random (asset, month, rows-per-month) shapes: sparse months (1-row
-    * groups), dense months, 1-3 assets — steers `rollingMeanAdaptive`
-    * through all three branches (month / year / plain fallback) of the
-    * single-job stats decision (VERDICT r3 #1 rewrite).
+    * groups), dense months, 1-3 assets. With the keyed rewrite on, 1-3
+    * measured keys always take `rollingMeanAdaptive`'s keyed branch; the
+    * property draws the rewrite off too, which steers the stats decision
+    * through its month / year / plain-fallback branches.
     */
   private val monthDataGen: Gen[List[(String, java.sql.Timestamp, Double)]] = {
     val assetGen = for {
@@ -96,8 +97,10 @@ object MarketEtlProps extends Properties("MarketEtl") {
   property("adaptive rolling mean is bit-identical to the plain window on any shape") =
     // NoShrink: shrinking can mint duplicate (asset, ts) keys, making the
     // window order non-total and the comparison meaningless
-    org.scalacheck.Prop.forAllNoShrink(monthDataGen, Gen.choose(2, 5)) { (rows, n) =>
-      rows.isEmpty || {
+    org.scalacheck.Prop.forAllNoShrink(monthDataGen, Gen.choose(2, 5),
+        Gen.oneOf(true, false)) { (rows, n, rewrite) =>
+      rows.isEmpty || TestSpark.withConf(
+          graft.plans.KeyedWindowRule.RewriteConf -> rewrite.toString) {
         val df = rows.toDF("ativo", "ts", "close")
         def canon(out: org.apache.spark.sql.DataFrame) =
           out.select("ativo", "ts", "mm").collect()

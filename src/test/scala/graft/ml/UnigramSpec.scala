@@ -16,7 +16,7 @@ class UnigramSpec extends AnyFunSuite {
 
   private def pieces() =
     Unigram.ensurePieces(spark, words(),
-      Seq(sf, Tables.stamp(sf, "documents")))
+      Seq(sf, Tables.stamp(spark, sf, "documents")))
 
   test("vocabulary contains every character; costs have the penalty floor") {
     val ps = pieces()
@@ -71,7 +71,7 @@ class UnigramSpec extends AnyFunSuite {
         s"cost below structural floor: $r")
     }
     val dir = graft.util.ArtifactStore.artifactDir(spark, "unigram_pieces",
-      Seq(sf, Tables.stamp(sf, "documents")))
+      Seq(sf, Tables.stamp(spark, sf, "documents")))
     assert(new java.io.File(dir, "_SUCCESS").exists())
     val before = dir.lastModified()
     graft.SparkEntry.queries("x67_unigram_segment")(spark, sf).collect()

@@ -27,7 +27,7 @@ class StreamingDriftSpec extends AnyFunSuite {
   private def baseline() =
     Drift.ensureBaseline(spark, Tables.documents(spark, sf),
       expr("n_chars div 50"),
-      Seq(sf, Tables.stamp(sf, "documents"), "n_chars_div50"))
+      Seq(sf, Tables.stamp(spark, sf, "documents"), "n_chars_div50"))
 
   test("each micro-batch's report equals the batch kernel on that batch") {
     import spark.implicits._

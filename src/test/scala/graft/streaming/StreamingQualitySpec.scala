@@ -20,7 +20,7 @@ class StreamingQualitySpec extends AnyFunSuite {
     implicit val sc = spark.sqlContext
     val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
     val w = HashedLogit.ensureWeights(spark, docs, "doc_id", "text",
-      1024, 60, 20, 20000L, 10L, Seq(sf, Tables.stamp(sf, "documents")))
+      1024, 60, 20, 20000L, 10L, Seq(sf, Tables.stamp(spark, sf, "documents")))
     val batch = graft.SparkEntry.queries("x36b_trained_classifier")(spark, sf)
       .select(col("doc_id"), col("score"))
       .as[(Long, Long)].collect().toMap
@@ -46,7 +46,7 @@ class StreamingQualitySpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sc = spark.sqlContext
     val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
-    val key = Seq(sf, Tables.stamp(sf, "documents"))
+    val key = Seq(sf, Tables.stamp(spark, sf, "documents"))
     // ensure the artifact exists, then simulate a fresh serving JVM
     HashedLogit.ensureWeights(spark, docs, "doc_id", "text",
       1024, 60, 20, 20000L, 10L, key)

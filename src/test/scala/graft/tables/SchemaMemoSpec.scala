@@ -18,7 +18,8 @@ import graft.TestSpark
   * schema: it is keyed on the file's version and on the confs that change
   * what Spark infers from a parquet footer. The files are written with
   * parquet's own writer, so no Spark schema rides in their footer and
-  * inference reads the parquet types alone.
+  * inference reads the parquet types alone. [[Tables.stamp]], the key of
+  * the durable artifacts built from a fixture, follows the same version.
   */
 class SchemaMemoSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -55,6 +56,17 @@ class SchemaMemoSpec extends AnyFunSuite {
     val t = Tables.table(spark, dir, "t")
     assert(t.schema.fieldNames.toSeq === Seq("id", "payload", "extra"))
     assert(t.selectExpr("sum(extra)").head().getLong(0) === 100L)
+  }
+
+  test("the stamp of a file: URI changes when the file is rewritten in place") {
+    val dir = Files.createTempDirectory("graft_stamp").toString
+    write(s"$dir/t.parquet", V1, 3)
+    val before = Tables.stamp(spark, s"file:$dir", "t")
+    assert(before === Tables.stamp(spark, dir, "t"))
+    write(s"$dir/t.parquet", V2, 5)
+    val after = Tables.stamp(spark, s"file:$dir", "t")
+    assert(after !== before)
+    assert(after === Tables.stamp(spark, dir, "t"))
   }
 
   test("the inferred type follows spark.sql.parquet.binaryAsString") {
