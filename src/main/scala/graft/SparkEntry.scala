@@ -33,25 +33,6 @@ object SparkEntry {
     "l_extendedprice AS close_price, l_quantity AS trade_volume, " +
     "l_orderkey, l_linenumber FROM lineitem"
 
-  /** Bucketing-decision stats for the lineitem bar frame, following the
-    * table-stats lifecycle (computed once per immutable fixture stamp,
-    * loaded thereafter) — shared by every bar query that re-buckets its
-    * 3-key window (w1 flagship, w2, w4, w8).
-    */
-  private def barStats(s: SparkSession, d: String): MarketEtl.RollingStats = {
-    val v = graft.util.ArtifactStore.getOrCompute(s, "rolling_stats",
-      Seq(d, Tables.stamp(s, d, "lineitem"), "l_returnflag", "l_shipdate"),
-      graft.util.ArtifactStore.LongsCodec) {
-      val st = MarketEtl.rollingStats(bars(s, d), Seq("ativo"), col("dt"))
-      Seq(st.minMonth, st.monthGroups, st.minYear, st.yearGroups, st.keys)
-    }
-    // the artifact's measured key count doubles as the KeyedWindowRule
-    // ndv hint: plain `PARTITION BY ativo` windows in this session (w2,
-    // w4) re-plan through the keyed range-partitioned execs
-    graft.plans.KeyedWindowRule.registerNdvHint(s, "ativo", v(4))
-    MarketEtl.RollingStats(v(0), v(1), v(2), v(3), v(4))
-  }
-
   // (l_orderkey, l_linenumber) is NOT unique in the fixture data, so the
   // window order includes close_price: any remaining ties are then
   // value-identical w.r.t. the windowed column, keeping mm_7d deterministic
@@ -59,6 +40,12 @@ object SparkEntry {
   private def barOrder =
     Seq(col("dt"), col("l_orderkey"), col("l_linenumber"), col("close_price"))
   private val barOrderSql = "dt, l_orderkey, l_linenumber, close_price"
+
+  /** W1 over the bar frame: the plain per-asset 7-row window, which
+    * `KeyedWindowRule` re-plans on a range exchange over (ativo, order). */
+  private def barRollingMean(s: SparkSession, d: String): DataFrame =
+    MarketEtl.rollingMean(bars(s, d), Seq("ativo"), barOrder, "close_price", 7, "mm_7d")
+      .select("ativo", "l_orderkey", "l_linenumber", "mm_7d")
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
@@ -86,24 +73,18 @@ object SparkEntry {
     // ---- reference-parity core (SURVEY §2.2-§2.6) ----
 
     // Full transform() = A+B+C: W1 rolling mean + A1 aggregate + J1 join.
-    // The window is cardinality-adaptive (VERDICT r2 #2): with 3 assets it
-    // re-buckets on (asset, time bucket) so the headline plan never
-    // serializes into 3 sort tasks; results are oracle-identical. The
-    // decision stats are table-lifecycle artifacts (VERDICT r3 #1 /
-    // r4 #1): computed once per fixture dir — one single-job column-pruned
-    // scan — and PERSISTED as a tiny parquet index table, so repeat
-    // invocations (including a fresh JVM) load the stats row instead of
-    // re-scanning (ArtifactStoreSpec pins this). Safe here because the
-    // fixture dirs are immutable; the pipeline path over mutable trees
-    // computes stats fresh each run.
+    // With 3 assets the plain window would sort the corpus in 3 tasks;
+    // `KeyedWindowRule` re-plans it as `KeyedBoundedAggExec` over a range
+    // exchange on (ativo, order), so the headline plan never serializes
+    // (PlanAuditSpec pins this). Building it launches no job and writes
+    // no session conf.
     // Stock scan (r16): avg_close_price is a double AVG whose oracle
     // hash equality holds because both engines fold the group's values
     // in FILE order — the single-task stock scan is part of this query's
     // hash contract (see Tables.table).
     "flagship_etl" -> ((s, d) =>
       MarketEtl.transform(bars(s, d), "ativo", barOrder, "close_price",
-        "trade_volume", adaptiveOn = Some(col("dt")),
-        stats = Some(barStats(s, d)))),
+        "trade_volume")),
 
     // A1: per-asset hash aggregate. (Stock scan: double-AVG fold order
     // is the hash contract — see flagship_etl.)
@@ -116,9 +97,7 @@ object SparkEntry {
     // median on BOTH the r3 commit (0ba4f12) and HEAD (identical entry
     // and rollingMean source; r3's 0.98 was a favorable page-cache/GC
     // draw inside the full suite, within the documented ±50% band).
-    "w1_rolling_mean" -> ((s, d) =>
-      MarketEtl.rollingMean(bars(s, d), Seq("ativo"), barOrder, "close_price", 7, "mm_7d")
-        .select("ativo", "l_orderkey", "l_linenumber", "mm_7d")),
+    "w1_rolling_mean" -> barRollingMean,
 
     // J1: left equi-join of the tiny per-asset aggregate onto detail rows (broadcast).
     // Bench note (VERDICT r8 #3): the r8 0.58→1.09 s "regression" was
@@ -202,13 +181,11 @@ object SparkEntry {
       MarketEtl.withDefaultAsset(
         Tables.lineitem(s, d).select("l_orderkey", "l_linenumber"), "VALE3")),
 
-    // W1 skew-safe variant: same rolling mean re-partitioned on
-    // (asset, month bucket) — parallelism #assets × #months instead of 3
-    // tasks (VERDICT r1). Shares w1's oracle: results must be identical.
-    "w1b_rolling_skewsafe" -> ((s, d) =>
-      MarketEtl.rollingMeanBucketed(bars(s, d), Seq("ativo"), barOrder,
-          "close_price", 7, "mm_7d", date_trunc("month", col("dt")))
-        .select("ativo", "l_orderkey", "l_linenumber", "mm_7d")),
+    // W1 skew-safe: shares w1's builder and oracle. The skew heal is
+    // `KeyedWindowRule` on the plain window (parallelism follows the
+    // data, not the 3 assets), so the skew-safe form needs no spelling
+    // of its own.
+    "w1b_rolling_skewsafe" -> barRollingMean,
 
     // W2: daily returns via lag — the market query a reference user would
     // run first against refined/ (close / prev close - 1). ativo has
@@ -216,12 +193,11 @@ object SparkEntry {
     // per-key window caps at 3 tasks at any scale. Since r11 this is
     // written as the PLAIN window a user would write: `KeyedWindowRule`
     // re-plans it through `KeyedOffsetExec` (range exchange on
-    // (ativo, order), per-key boundary values as metadata) using the
-    // ndv=3 hint the rolling-stats artifact registers (barStats above) —
-    // the automatic path VERDICT r10 #3 asked for. PlanAuditSpec pins
-    // the plan window-free.
+    // (ativo, order), per-key boundary values as metadata); ativo's ndv
+    // is unproven here, so the rule fires on its optimistic arm — the
+    // automatic path VERDICT r10 #3 asked for. PlanAuditSpec pins the
+    // plan window-free.
     "w2_daily_returns" -> ((s, d) => {
-      barStats(s, d) // registers the ativo ndv hint for the rule
       import org.apache.spark.sql.expressions.Window
       bars(s, d)
         .withColumn("__prev", lag(col("close_price"), 1)
@@ -248,13 +224,12 @@ object SparkEntry {
     // frame over the 3-key corpus window hazard. Since r11 written as
     // the PLAIN window: `KeyedWindowRule` re-plans it through
     // `KeyedRunningAggExec` (range exchange on (ativo, order), per-key
-    // partial buffers + driver seed stitch) via the artifact's ndv=3
-    // hint — parallelism bounded by the data, not by 3 keys.
+    // partial buffers + driver seed stitch) — parallelism bounded by the
+    // data, not by 3 keys.
     // trade_volume joins the order key: rows tied on the bar order can
     // carry different volumes, and a running sum must not depend on
     // their relative order.
     "w4_running_total" -> ((s, d) => {
-      barStats(s, d) // registers the ativo ndv hint for the rule
       import org.apache.spark.sql.expressions.Window
       bars(s, d)
         .withColumn("cum_volume", sum(col("trade_volume"))
@@ -271,11 +246,9 @@ object SparkEntry {
     // hash-clusters it at 3 tasks (ativo's ndv); `KeyedWindowRule`
     // re-plans it through `KeyedBoundedAggExec` (range exchange on
     // (ativo, order), 7 boundary tuples per partition, per-key ring
-    // re-fold) via the artifact's ndv hint. The library w1/w1b paths
-    // stay as the hand-bucketed comparison; this row proves the same
-    // heal now needs NO library call. Same oracle SQL as w1b.
+    // re-fold). w1/w1b reach the same plan through the library call;
+    // this row proves the heal needs none. Same oracle SQL as w1b.
     "x120_rolling_mean_keyed" -> ((s, d) => {
-      barStats(s, d) // registers the ativo ndv hint for the rule
       bars(s, d).createOrReplaceTempView("x120_bars")
       s.sql(
         """SELECT ativo, l_orderkey, l_linenumber,

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.ZOrder
@@ -143,41 +144,31 @@ object SparkEntryR5d {
     // STATISTICS in exact integer cents (Σc, Σc² stay far under 2^53, so
     // the casts to double are exactly rounded and ORDER-FREE — equal to
     // the oracle's decimal→double sums), never a float-accumulator
-    // STDDEV. Since round 10 the stats come from RollingSufStats.attach:
-    // l_returnflag has THREE values, so a plain per-key window caps
-    // parallelism at 3 tasks at ANY scale — the adaptive path re-buckets
-    // on (flag, month) with exact boundary corrections (the w1b
-    // discipline), #keys × #months parallelism, identical results.
+    // STDDEV. The three sums share one plain per-flag window, which
+    // `KeyedWindowRule` re-plans on a range exchange over (ativo, order):
+    // l_returnflag has THREE values, and the hash-clustered window would
+    // cap parallelism at 3 tasks at any scale.
     // z derives in one spelled-identically double expression, rounded to
     // 10, and the |z| > 2 flag reads the ROUNDED value so the boundary
     // is shared.
     "w8_zscore_outliers" -> ((s, d) => {
-      val b = Tables.lineitem(s, d).select(
+      val cents = round(col("l_extendedprice") * 100).cast("long")
+      val w = Window.partitionBy("ativo")
+        .orderBy(col("dt"), col("l_orderkey"), col("l_linenumber"), col("close_price"))
+        .rowsBetween(-6, 0)
+      val stats = Tables.lineitem(s, d).select(
         col("l_returnflag").as("ativo"), col("l_shipdate").as("dt"),
         col("l_extendedprice").as("close_price"),
-        col("l_orderkey"), col("l_linenumber"))
-      val cents = round(col("close_price") * 100).cast("long")
-      // bucketing-decision stats follow the table-stats lifecycle
-      // (flagship precedent): computed once per immutable fixture stamp,
-      // loaded thereafter — the decision pass never re-scans per run
-      val st = {
-        val v = graft.util.ArtifactStore.getOrCompute(s, "rolling_stats",
-          Seq(d, Tables.stamp(s, d, "lineitem"), "l_returnflag", "l_shipdate"),
-          graft.util.ArtifactStore.LongsCodec) {
-          val x = graft.etl.MarketEtl.rollingStats(b, Seq("ativo"), col("dt"))
-          Seq(x.minMonth, x.monthGroups, x.minYear, x.yearGroups, x.keys)
-        }
-        graft.etl.MarketEtl.RollingStats(v(0), v(1), v(2), v(3), v(4))
-      }
-      val withStats = graft.stats.RollingSufStats.attach(
-        b, Seq("ativo"),
-        Seq(col("dt"), col("l_orderkey"), col("l_linenumber"), col("close_price")),
-        cents, 7, col("dt"), stats = Some(st))
-      val sx = col("__sxc").cast("double") / 100.0d
-      val sxx = col("__sxxc").cast("double") / 10000.0d
+        col("l_orderkey"), col("l_linenumber"), cents.as("cents"))
+        .select(col("ativo"), col("l_orderkey"), col("l_linenumber"),
+          col("close_price"), count(lit(1)).over(w).as("n"),
+          sum(col("cents")).over(w).as("sxc"),
+          sum(col("cents") * col("cents")).over(w).as("sxxc"))
+      val sx = col("sxc").cast("double") / 100.0d
+      val sxx = col("sxxc").cast("double") / 10000.0d
       val variance = (lit(7.0d) * sxx - sx * sx) / lit(42.0d)
-      withStats.select(col("ativo"), col("l_orderkey"), col("l_linenumber"),
-        round(when(col("__n") === 7 && variance > 0,
+      stats.select(col("ativo"), col("l_orderkey"), col("l_linenumber"),
+        round(when(col("n") === 7 && variance > 0,
           (col("close_price") - sx / lit(7.0d)) / sqrt(variance)), 10).as("z"))
         .withColumn("is_outlier", abs(col("z")) > 2.0)
     }),

@@ -614,8 +614,8 @@ object SparkEntryR6 {
       val li = Tables.lineitem(s, d)
         .select(col("l_returnflag").as("flag"), col("l_extendedprice").as("v"))
       // the per-(corpus, column, quantiles) bounds frame is KB-scale and
-      // immutable per fixture stamp — table-stats lifecycle (the
-      // RollingStats memo discipline, VERDICT r12 #5): computed once,
+      // immutable per fixture stamp — table-stats lifecycle (VERDICT
+      // r12 #5): computed once,
       // every later invocation skips the two rank-selection passes
       val boundRows = graft.util.SessionCache.getOrCompute(
         ("a9_bounds", d, Tables.stamp(s, d, "lineitem"), "v", Seq(0.05, 0.95))) {

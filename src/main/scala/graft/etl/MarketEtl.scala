@@ -3,19 +3,19 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{functions => fx}
 
 /** Core transformation library — the reference's `transform()` pipeline
   * (reference `etl/etl_job.py:101-142`) re-expressed as composable, lazy
-  * `DataFrame => DataFrame` stages. One Catalyst plan end-to-end: the only
-  * shuffle is a single hash exchange on the asset key, shared by the window
-  * (W1) and the aggregate (A1); the aggregate side of the enrichment join
-  * (J1) is broadcast (one row per asset), so the join adds no shuffle.
+  * `DataFrame => DataFrame` stages. One Catalyst plan end-to-end; the
+  * aggregate side of the enrichment join (J1) is broadcast (one row per
+  * asset), so the join adds no shuffle.
   *
   * Scale notes (100 TB): the window W1 partitions by asset — with many
-  * assets this parallelizes across executors; with few very large assets the
-  * per-partition sort is the cost, which Spark handles with external sort
-  * (spill). A1 does partial (map-side) aggregation before the exchange.
+  * assets Spark's hash-clustered window parallelizes across executors;
+  * with few very large assets [[graft.plans.KeyedWindowRule]] re-plans it
+  * on a range exchange over (asset, order), so parallelism follows the
+  * data, not the asset count. A1 does partial (map-side) aggregation
+  * before its exchange.
   */
 object MarketEtl {
 
@@ -101,203 +101,6 @@ object MarketEtl {
       when(count(col(valueCol)).over(w) === n, avg(col(valueCol)).over(w)))
   }
 
-  /** Skew-safe variant of W1 for low-cardinality partition keys (VERDICT r1:
-    * with 3 assets, `rollingMean` sorts the whole dataset in 3 tasks). The
-    * window is re-partitioned on (asset, time-bucket): each bucket computes
-    * its rolling frame locally after borrowing the previous bucket's last
-    * n-1 rows, so parallelism = #assets × #buckets instead of #assets.
-    * Identical results to `rollingMean` — verified by the shared oracle.
-    *
-    * PRECONDITION (documented, not checked — checking costs a pass): every
-    * non-final (asset, bucket) group must hold ≥ n-1 rows, i.e. pick a
-    * bucket width coarse enough for the data density. Bucket gaps are fine:
-    * buckets are re-indexed densely per asset before borrowing.
-    *
-    * `bucket` must be monotone non-decreasing in the leading order column
-    * (e.g. `date_trunc("month", orderCol)`), so borrowed rows sort before
-    * the destination bucket's own rows.
-    */
-  def rollingMeanBucketed(df: DataFrame, partitionCols: Seq[String],
-                          orderCols: Seq[Column], valueCol: String, n: Int,
-                          out: String, bucket: Column): DataFrame = {
-    // Single-shuffle design: ONE exchange+sort on (asset, bucket) computes
-    // the within-bucket rolling mean (correct for every row except the
-    // first n-1 of each bucket) plus row number/size. The per-bucket head
-    // and tail value lists (bounded, <= n-1 each) are extracted by a
-    // groupBy that REUSES the window's partitioning (no second exchange),
-    // corrections for the boundary rows are computed on that tiny
-    // per-bucket frame (prev-bucket tail ++ own head, folded in exact
-    // time order so the sum order matches a windowed avg bit-for-bit),
-    // and broadcast-joined back on (asset, bucket, row#). Shuffled bytes:
-    // 1x data + 2x(n-1) values per bucket, vs 3x data for the
-    // union-of-borrowed-rows formulation.
-    val pc = partitionCols.map(col)
-    val bucketKeys = pc :+ col("__bucket")
-    val withB = df.withColumn("__bucket", bucket)
-    val wOrd = Window.partitionBy(bucketKeys: _*).orderBy(orderCols: _*)
-    val wFrame = wOrd.rowsBetween(-(n - 1), 0)
-    val wAll = Window.partitionBy(bucketKeys: _*)
-    // The windowed frame feeds two plan branches (the result and the
-    // per-bucket head/tail extraction), so the scan + bucket exchange +
-    // sort appear twice in the plan (column pruning specializes the two
-    // subtrees, defeating ReuseExchange; persisting here was measured
-    // SLOWER at sf0.1 — cache materialization + codegen break cost more
-    // than the second pruned scan+sort, and both copies parallelize).
-    val main = withB
-      .withColumn("__rn", row_number().over(wOrd))
-      .withColumn("__sz", count(lit(1)).over(wAll))
-      .withColumn("__mm_local",
-        when(count(col(valueCol)).over(wFrame) === n, avg(col(valueCol)).over(wFrame)))
-
-    // (rn, value) structs sort by rn — direction-agnostic w.r.t. orderCols.
-    def ranked(cond: Column): Column =
-      fx.transform(
-        sort_array(collect_list(when(cond,
-          struct(col("__rn").as("r"), col(valueCol).cast("double").as("v"))))),
-        e => e.getField("v"))
-    val perBucket = main.groupBy(bucketKeys: _*).agg(
-      ranked(col("__rn") <= n - 1).as("__head"),
-      ranked(col("__rn") > col("__sz") - (n - 1)).as("__tail"))
-
-    // prev-bucket tail on the tiny frame; fold tail-slice ++ head-prefix in
-    // time order for each boundary position r = 1..min(n-1, size).
-    val wB = Window.partitionBy(pc: _*).orderBy(col("__bucket"))
-    val corrections = perBucket
-      .withColumn("__ptail", lag(col("__tail"), 1).over(wB))
-      .select(bucketKeys :+
-        posexplode(fx.transform(col("__head"), (_, i) => {
-          val need = lit(n) - (i + 1)
-          // slice start clamped to 1: slice() throws on start = 0, and the
-          // short-tail case is discarded by the `when` guard anyway
-          val combined = concat(
-            slice(col("__ptail"),
-              greatest(size(col("__ptail")) - need + 1, lit(1)), need),
-            slice(col("__head"), lit(1), i + 1))
-          when(size(col("__ptail")) >= need && size(combined) === n,
-            aggregate(combined, lit(0.0d), (acc, x) => acc + x) / n)
-        })): _*)
-      .select(bucketKeys ++ Seq((col("pos") + 1).as("__rn"), col("col").as("__mm_fix")): _*)
-
-    main
-      .join(broadcast(corrections),
-        partitionCols ++ Seq("__bucket", "__rn"), "left")
-      .withColumn(out,
-        when(col("__rn") < n, col("__mm_fix")).otherwise(col("__mm_local")))
-      .drop("__bucket", "__rn", "__sz", "__mm_local", "__mm_fix")
-  }
-
-  /** Exact decision stats for `rollingMeanAdaptive`: min/count of (key,
-    * month) groups, min/count of (key, year) groups, distinct key count.
-    * Computable once per table and reused across window invocations — at
-    * 100 TB these live with the table (computed at ingest/compaction time),
-    * not with every query.
-    */
-  final case class RollingStats(minMonth: Long, monthGroups: Long,
-                                minYear: Long, yearGroups: Long, keys: Long)
-
-  /** Compute `RollingStats` in ONE action / ONE column-pruned scan of `df`
-    * (VERDICT r3 #1 — the previous form persisted month counts and ran
-    * three driver actions): month counts roll up to year level and then to
-    * one global row inside the same job, so everything past the first
-    * map-side-combined stage operates on ≤ #keys × #months rows.
-    */
-  def rollingStats(df: DataFrame, partitionCols: Seq[String],
-                   timeCol: Column): RollingStats = {
-    val pc = partitionCols.map(col)
-    val r = df
-      .groupBy(pc :+ date_trunc("month", timeCol).as("__m"): _*)
-      .agg(count(lit(1)).as("mcnt"))
-      .groupBy(pc :+ date_trunc("year", col("__m")).as("__y"): _*)
-      .agg(sum(col("mcnt")).as("ycnt"), min(col("mcnt")).as("minm"),
-        count(lit(1)).as("gm"))
-      .agg(min(col("minm")), sum(col("gm")), min(col("ycnt")), count(lit(1)),
-        // struct-wrapped so a null key still counts as a group (bare
-        // countDistinct drops any-null rows; the pre-r4 distinct().count()
-        // counted the null-key group, and the monthGroups > keys heuristic
-        // should keep that decision semantics — ADVICE r4)
-        countDistinct(struct(pc: _*)))
-      .head()
-    RollingStats(
-      if (r.isNullAt(0)) -1L else r.getLong(0),
-      if (r.isNullAt(1)) 0L else r.getLong(1),
-      if (r.isNullAt(2)) -1L else r.getLong(2),
-      r.getLong(3), r.getLong(4))
-  }
-
-  /** Cardinality-adaptive W1 (VERDICT r2 #2). With a single low-ndv key
-    * (the flagship fixture: 3 assets) the measured key count is
-    * registered as a [[graft.plans.KeyedWindowRule]] ndv hint and the
-    * PLAIN window is emitted — the rule re-plans it as
-    * `KeyedBoundedAggExec` (range exchange on (key, order), parallelism
-    * bounded by data, no bucket machinery). Otherwise: the finest
-    * time-bucket granularity (month → year → none) whose every (key,
-    * bucket) group provably satisfies `rollingMeanBucketed`'s
-    * ≥ n-1-rows precondition AND which actually multiplies window
-    * parallelism — else the plain per-key window (many small keys
-    * already parallelize, and bucketing would only add boundary
-    * machinery).
-    *
-    * Cost: `stats` if supplied (the table-stats lifecycle — compute once,
-    * window many). Else, when the frame's own plan already proves the
-    * single key's count at or under the rule's `maxNdv` — an `IN`/`=`
-    * filter pin, a literal, catalog column stats, read by
-    * [[graft.plans.KeyedWindowRule.planProvesKeyNdv]] — no job at all:
-    * the keyed branch is the only one the stats could pick, so the PLAIN
-    * window is emitted and no hint is registered (the streaming
-    * arrival's touched-asset pin takes this path). Session hints are not
-    * proof here: they match by column name and may be stale. Otherwise
-    * one single-job column-pruned pass (`rollingStats`).
-    * The decision is exact, not estimated: min group size over ALL groups
-    * ≥ n-1 (stricter than the non-final-groups precondition, so always
-    * safe). Results are identical across all three branches — w1/w1b share
-    * one oracle, and the pipeline round-trip oracles pin this path.
-    */
-  def rollingMeanAdaptive(df: DataFrame, partitionCols: Seq[String],
-                          orderCols: Seq[Column], valueCol: String, n: Int,
-                          out: String, timeCol: Column,
-                          stats: Option[RollingStats] = None): DataFrame = {
-    val spark = df.sparkSession
-    val ruleOn = spark.conf.get(
-      graft.plans.KeyedWindowRule.RewriteConf, "true") == "true"
-    if (stats.isEmpty && ruleOn && partitionCols.length == 1 &&
-        planProvesKeyNdv(df, partitionCols.head))
-      // the stats below could only pick the keyed branch: skip the pass
-      return rollingMean(df, partitionCols, orderCols, valueCol, n, out)
-    val st = stats.getOrElse(rollingStats(df, partitionCols, timeCol))
-    val maxNdv = spark.conf.get(
-      graft.plans.KeyedWindowRule.MaxNdvConf, "64").toLong
-    if (ruleOn && partitionCols.length == 1 && st.keys > 0 && st.keys <= maxNdv) {
-      // Since the keyed rewrite exists (round 11), the measured key count
-      // doubles as its PROOF: register the hint and emit the PLAIN window
-      // — KeyedWindowRule re-plans it as KeyedBoundedAggExec (one range
-      // exchange on (key, order), parallelism bounded by data), strictly
-      // less machinery than hand-bucketing + boundary corrections.
-      // Single-key only: the hint records the COMBINED count, exact for
-      // one column but a per-column over-bound for composites (the rule
-      // multiplies per-key bounds, which could push a provably-small
-      // composite past maxNdv and land on the unhealed hash window).
-      graft.plans.KeyedWindowRule.registerNdvHint(
-        spark, partitionCols.head, st.keys)
-      rollingMean(df, partitionCols, orderCols, valueCol, n, out)
-    } else if (st.minMonth >= n - 1 && st.monthGroups > st.keys)
-      rollingMeanBucketed(df, partitionCols, orderCols, valueCol, n, out,
-        date_trunc("month", timeCol))
-    else if (st.minYear >= n - 1 && st.yearGroups > st.keys)
-      rollingMeanBucketed(df, partitionCols, orderCols, valueCol, n, out,
-        date_trunc("year", timeCol))
-    else
-      rollingMean(df, partitionCols, orderCols, valueCol, n, out)
-  }
-
-  /** Does `df`'s analyzed plan alone prove `column`'s distinct count at
-    * or under the keyed rule's `maxNdv`? */
-  private def planProvesKeyNdv(df: DataFrame, column: String): Boolean = {
-    val plan = df.queryExecution.analyzed
-    plan.resolve(Seq(column), df.sparkSession.sessionState.analyzer.resolver)
-      .exists(k => graft.plans.KeyedWindowRule(df.sparkSession)
-        .planProvesKeyNdv(Seq(k), plan))
-  }
-
   /** A1 (`etl/etl_job.py:133-140`): per-asset hash aggregate — mean close,
     * total volume. Partial aggregation (map-side combine) happens before the
     * exchange; null handling matches pandas (avg/sum skip nulls).
@@ -317,22 +120,13 @@ object MarketEtl {
 
   /** The full reference `transform()` (A+B+C, `README.md:50-56`) on a frame
     * already in standard shape (`ativo`, order columns, close, volume):
-    * rolling mean then aggregate-enrichment, one plan. With `adaptiveOn`
-    * set to the bar time column, the window goes through
-    * `rollingMeanAdaptive` — the skew-safe default for the pipeline and
-    * the flagship entry (VERDICT r2 #2).
+    * rolling mean then aggregate-enrichment, one plan. The window is the
+    * plain per-asset one; with few assets [[graft.plans.KeyedWindowRule]]
+    * re-plans it on a range exchange over (asset, order), so the sort
+    * never serializes into one task per asset.
     */
   def transform(df: DataFrame, asset: String, orderCols: Seq[Column],
-                close: String, vol: String, window: Int = 7,
-                adaptiveOn: Option[Column] = None,
-                stats: Option[RollingStats] = None): DataFrame = {
-    val withMm = adaptiveOn match {
-      case Some(t) =>
-        rollingMeanAdaptive(df, Seq(asset), orderCols, close, window, "mm_7d",
-          t, stats)
-      case None =>
-        rollingMean(df, Seq(asset), orderCols, close, window, "mm_7d")
-    }
-    enrich(withMm, assetAggregate(df, asset, close, vol), asset)
-  }
+                close: String, vol: String, window: Int = 7): DataFrame =
+    enrich(rollingMean(df, Seq(asset), orderCols, close, window, "mm_7d"),
+      assetAggregate(df, asset, close, vol), asset)
 }

@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   * cost as the sort-merge join Spark would plan for an equi-join, with no
   * row explosion and O(1) window state per row (running frame). At 100 TB
   * the skew story is the per-key window one (high-cardinality keys are
-  * fine; for few-key data use a time-bucketed variant like
-  * `MarketEtl.rollingMeanBucketed`).
+  * fine; with few keys `graft.plans.KeyedWindowRule` re-plans the running
+  * window on a range exchange over (key, time, tag)).
   */
 object AsOfJoin {
 

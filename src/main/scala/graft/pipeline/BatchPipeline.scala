@@ -97,12 +97,9 @@ object BatchPipeline {
     val std = MarketEtl.castDate(
       MarketEtl.renameStandard(MarketEtl.coalesceDuplicateColumns(raw)))
     val bars = std.select("ativo", "date", "close_price", "trade_volume")
-    // adaptive window (VERDICT r2 #2): re-buckets on (asset, time bucket)
-    // whenever that provably multiplies window parallelism — the skew-safe
-    // default for few-asset corpora like the reference's
     MarketEtl.transform(bars, "ativo",
       Seq(col("date"), col("close_price")), "close_price", "trade_volume",
-      window, adaptiveOn = Some(col("date")))
+      window)
   }
 
   /** S5: refined sink — true Hive partitioning on (ativo, data). Same

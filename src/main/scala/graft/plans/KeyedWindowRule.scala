@@ -329,15 +329,14 @@ private[plans] object WindowShapes {
   *     dimension columns (`PARTITION BY n_name`) prove with zero setup;
   *   - a session NDV HINT (`spark.graft.keyedWindow.ndvHints`,
   *     `name=ndv[,name=ndv…]`) — the handoff point for runtime stats
-  *     artifacts: the flagship's bar stats (w2/w4's bucketing stats),
-  *     the fixture loaders' measured columns, and
-  *     `MarketEtl.rollingMeanAdaptive` after a stats pass register their
-  *     measured key counts via [[KeyedWindowRule.registerNdvHint]],
-  *     making the library's artifact knowledge visible to plain SQL
-  *     plans in the same session. A frame whose own plan proves its key
-  *     count (the streaming arrival's touched-asset `IN` pin) runs no
-  *     stats pass and registers nothing. Hints match by column NAME, so
-  *     they are session-scoped facts the caller vouches for.
+  *     artifacts: the fixture loaders register their measured columns
+  *     via [[KeyedWindowRule.registerNdvHint]], making that knowledge
+  *     visible to plain SQL plans in the same session. Query builders
+  *     never register one (GraftSessionSpec guards this): the bar
+  *     queries' `PARTITION BY ativo` fires on the optimistic arm below,
+  *     and the streaming arrival's touched-asset `IN` pin proves its key
+  *     count from the plan itself. Hints match by column NAME, so they
+  *     are session-scoped facts the caller vouches for.
   *
   * A PROVABLY-high ndv leaves the plan with Spark: hash clustering at
   * high ndv is already parallel, and the rewrite's range sampling job +
@@ -450,19 +449,8 @@ case class KeyedWindowRule(session: SparkSession) extends Rule[LogicalPlan]
     * (measured: the optimistic attach ran 1.7× slower than the
     * decorrelated broadcast join at 20k unproven keys — q17). */
   private[plans] def provenKeyNdv(keys: Seq[Expression],
-                                  child: LogicalPlan): Boolean =
-    ndvOk(keys, child, parseHints(session.conf.get(NdvHintsConf, "")))
-
-  /** The same proof from `child`'s own evidence only — a domain bound,
-    * a filter pin or catalog/CBO column stats, never a session hint
-    * (hints match by column name and may be stale). Exposed for
-    * `MarketEtl.rollingMeanAdaptive`, which skips its stats pass when
-    * the plan already proves the key count. */
-  def planProvesKeyNdv(keys: Seq[Expression], child: LogicalPlan): Boolean =
-    ndvOk(keys, child, Map.empty)
-
-  private def ndvOk(keys: Seq[Expression], child: LogicalPlan,
-                    hints: Map[String, Long]): Boolean = {
+                                  child: LogicalPlan): Boolean = {
+    val hints = parseHints(session.conf.get(NdvHintsConf, ""))
     val maxNdv = session.conf.get(MaxNdvConf, "64").toLong
     val bounds = keys.map(ndvBound(_, child, hints))
     bounds.forall(_.isDefined) && {
@@ -499,10 +487,10 @@ case class KeyedWindowRule(session: SparkSession) extends Rule[LogicalPlan]
                             ndvSensitive: Boolean): Boolean = {
     session.conf.get(OptimisticConf, "true") == "true" &&
       // `__`-prefixed columns are the library's own derived plumbing
-      // (e.g. the hand-bucketed constructs' `__bucket`): those plans are
-      // already skew-healed by construction, and an optimistic re-plan
-      // on top would only stack a second exchange + stitch over the
-      // first heal — leave them exactly as built
+      // (e.g. `packSequences`' `__shard`): those plans are already
+      // skew-healed by construction, and an optimistic re-plan on top
+      // would only stack a second exchange + stitch over the first
+      // heal — leave them exactly as built
       !keys.exists(_.references.exists(_.name.startsWith("__"))) && {
       val hints = parseHints(session.conf.get(NdvHintsConf, ""))
       keys.exists(ndvBound(_, child, hints).isEmpty) && {
@@ -903,9 +891,8 @@ object KeyedWindowRule {
     }.toMap
 
   /** Record a measured ndv for `column` in the session hints — called by
-    * stats artifacts (the flagship's bar stats, a `rollingMeanAdaptive`
-    * stats pass, the fixture loaders) so their knowledge reaches plain
-    * SQL plans. Session-scoped; consulted only where the
+    * stats artifacts (the fixture loaders' measured columns) so their
+    * knowledge reaches plain SQL plans. Session-scoped; consulted only where the
     * named column is a BASE column of a leaf relation. Pass `column` as
     * `"table.column"` to scope the hint to one catalog table. */
   def registerNdvHint(spark: SparkSession, column: String, ndv: Long): Unit =

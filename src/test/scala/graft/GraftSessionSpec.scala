@@ -26,22 +26,38 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(forks === List("graft/GraftSession.scala"))
   }
 
+  private def sources(dir: Path, name: String): List[Path] = {
+    val entries = Files.list(dir)
+    try entries.iterator().asScala
+      .filter(_.getFileName.toString.matches(name)).toList
+    finally entries.close()
+  }
+
   test("query builders and table loaders never write session conf") {
     // a build that sets a conf changes every concurrent build and plan on
     // the same session; a build that needs its own confs derives a
     // GraftSession.child
     val root = Paths.get("src/main/scala/graft")
-    val files = {
-      val entries = Files.list(root)
-      try entries.iterator().asScala
-        .filter(_.getFileName.toString.matches("SparkEntry.*\\.scala"))
-        .toList
-      finally entries.close()
-    } :+ root.resolve("tables/Tables.scala")
-    assert(files.size > 2, s"run from the repo root; no builders under $root")
-    val writers = files.filter(p => Files.readString(p).contains("conf.set"))
-      .map(p => root.relativize(p).toString)
-    assert(writers === Nil)
+    val builders = sources(root, "SparkEntry.*\\.scala")
+    assert(builders.size > 2, s"run from the repo root; no builders under $root")
+    val confWriters = (builders :+ root.resolve("tables/Tables.scala"))
+      .filter(p => Files.readString(p).contains("conf.set"))
+    // an ndv hint is a session conf too: only the table loaders, which
+    // measure a column of the file they load, may register one
+    val hintWriters = (builders ++ sources(root.resolve("etl"), ".*\\.scala"))
+      .filter(p => Files.readString(p).contains("registerNdvHint"))
+    assert((confWriters ++ hintWriters).map(p => root.relativize(p).toString) === Nil)
+  }
+
+  test("building the bar queries leaves no ativo ndv hint") {
+    val s = GraftSession.child(TestSpark.spark)
+    Seq("flagship_etl", "w2_daily_returns", "w4_running_total",
+        "x120_rolling_mean_keyed", "w8_zscore_outliers").foreach { q =>
+      SparkEntry.queries(q)(s, TestSpark.Sf0001)
+      val hints = s.conf.getOption(graft.plans.KeyedWindowRule.NdvHintsConf)
+        .map(graft.plans.KeyedWindowRule.parseHints).getOrElse(Map.empty)
+      assert(!hints.contains("ativo"), s"$q registered $hints")
+    }
   }
 
   test("the shared test session is a GraftSession") {

@@ -68,10 +68,9 @@ object MarketEtlProps extends Properties("MarketEtl") {
     }
 
   /** Random (asset, month, rows-per-month) shapes: sparse months (1-row
-    * groups), dense months, 1-3 assets. With the keyed rewrite on, 1-3
-    * measured keys always take `rollingMeanAdaptive`'s keyed branch; the
-    * property draws the rewrite off too, which steers the stats decision
-    * through its month / year / plain-fallback branches.
+    * groups), dense months, 1-3 assets — keys shorter than the frame,
+    * keys spanning many range partitions, and partition seams inside a
+    * key's first n-1 rows.
     */
   private val monthDataGen: Gen[List[(String, java.sql.Timestamp, Double)]] = {
     val assetGen = for {
@@ -94,25 +93,33 @@ object MarketEtlProps extends Properties("MarketEtl") {
     }
   }
 
-  property("adaptive rolling mean is bit-identical to the plain window on any shape") =
+  property("rollingMean is bit-identical with the keyed rewrite on and off") =
     // NoShrink: shrinking can mint duplicate (asset, ts) keys, making the
     // window order non-total and the comparison meaningless
     org.scalacheck.Prop.forAllNoShrink(monthDataGen, Gen.choose(2, 5),
-        Gen.oneOf(true, false)) { (rows, n, rewrite) =>
-      rows.isEmpty || TestSpark.withConf(
-          graft.plans.KeyedWindowRule.RewriteConf -> rewrite.toString) {
+        Gen.choose(1, 8)) { (rows, n, shuffleParts) =>
+      rows.isEmpty || {
         val df = rows.toDF("ativo", "ts", "close")
-        def canon(out: org.apache.spark.sql.DataFrame) =
-          out.select("ativo", "ts", "mm").collect()
+        def run(rewrite: Boolean) = TestSpark.withConf(
+            TestSpark.seams(shuffleParts) ++ Seq(
+              graft.plans.KeyedWindowRule.RewriteConf -> rewrite.toString,
+              // the frames are tiny: without this the small-frame guard
+              // keeps Spark's plan and both sides would be the same plan
+              graft.plans.GlobalRankRule.SmallFrameConf -> "0"): _*) {
+          val out = MarketEtl.rollingMean(
+            df, Seq("ativo"), Seq(col("ts")), "close", n, "mm")
+          val keyed = graft.plans.NoKey.nodes(out.queryExecution.executedPlan)
+            .exists(_.isInstanceOf[graft.plans.KeyedBoundedAggExec])
+          val canon = out.select("ativo", "ts", "mm").collect()
             .map(r => (r.getString(0), r.getTimestamp(1).getTime,
               if (r.isNullAt(2)) None
               else Some(java.lang.Double.doubleToLongBits(r.getDouble(2)))))
             .sortBy(x => (x._1, x._2)).toSeq
-        val plain = canon(MarketEtl.rollingMean(
-          df, Seq("ativo"), Seq(col("ts")), "close", n, "mm"))
-        val adaptive = canon(MarketEtl.rollingMeanAdaptive(
-          df, Seq("ativo"), Seq(col("ts")), "close", n, "mm", col("ts")))
-        plain == adaptive
+          (keyed, canon)
+        }
+        val (healed, on) = run(rewrite = true)
+        val (stock, off) = run(rewrite = false)
+        healed && !stock && on == off
       }
     }
 

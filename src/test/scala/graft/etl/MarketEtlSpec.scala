@@ -100,16 +100,35 @@ class MarketEtlSpec extends AnyFunSuite {
     assert(u.filter(col("k") === 3L).head().isNullAt(u.columns.indexOf("price")))
   }
 
-  test("skew-safe bucketed rolling mean equals the plain window (fixture)") {
-    val bars = Tables.lineitem(spark, TestSpark.Sf0001).select(
-      col("l_returnflag").as("ativo"), col("l_shipdate").as("dt"),
-      col("l_extendedprice").as("close_price"),
-      col("l_orderkey"), col("l_linenumber"))
-    val order = Seq(col("dt"), col("l_orderkey"), col("l_linenumber"), col("close_price"))
-    // year buckets: every (asset, year) holds ≥ 6 rows at sf0.001
-    val plain = MarketEtl.rollingMean(bars, Seq("ativo"), order, "close_price", 7, "mm")
-    val bucketed = MarketEtl.rollingMeanBucketed(bars, Seq("ativo"), order,
-      "close_price", 7, "mm", date_trunc("year", col("dt")))
-    assert(plain.exceptAll(bucketed).isEmpty && bucketed.exceptAll(plain).isEmpty)
+  test("w8's one-window sums equal the plain-window z exactly at sf0.001") {
+    val d = TestSpark.Sf0001
+    val w8 = graft.SparkEntry.queries("w8_zscore_outliers")(spark, d)
+    Tables.lineitem(spark, d).createOrReplaceTempView("w8_li")
+    val plain = spark.sql("""
+      WITH b AS (SELECT l_returnflag AS ativo, l_shipdate AS dt,
+                        l_extendedprice AS close_price,
+                        l_orderkey, l_linenumber
+                 FROM w8_li),
+      w AS (
+        SELECT ativo, l_orderkey, l_linenumber, close_price,
+               COUNT(*) OVER win AS n,
+               CAST(SUM(CAST(close_price AS DECIMAL(18,2))) OVER win
+                    AS DOUBLE) AS sx,
+               CAST(SUM(CAST(CAST(close_price AS DECIMAL(18,2))
+                             * CAST(close_price AS DECIMAL(18,2))
+                        AS DECIMAL(38,4))) OVER win AS DOUBLE) AS sxx
+        FROM b
+        WINDOW win AS (PARTITION BY ativo
+                       ORDER BY dt, l_orderkey, l_linenumber, close_price
+                       ROWS BETWEEN 6 PRECEDING AND CURRENT ROW))
+      SELECT ativo, l_orderkey, l_linenumber,
+             ROUND(CASE WHEN n = 7
+                         AND (7.0D * sxx - sx * sx) / (7.0D * 6.0D) > 0
+                        THEN (close_price - sx / 7.0D)
+                             / sqrt((7.0D * sxx - sx * sx) / (7.0D * 6.0D))
+                   END, 10) AS z
+      FROM w""").withColumn("is_outlier", abs(col("z")) > 2.0)
+    assert(w8.exceptAll(plain).count() === 0L)
+    assert(plain.exceptAll(w8).count() === 0L)
   }
 }

@@ -20,12 +20,12 @@ import graft.plans.{KeyedBoundedAggExec, KeyedWindowRule, NoKey}
 
 /** The job budget of one incremental arrival. The cycle re-reads the
   * touched assets' history under `ativo IN (<touched>)`, and that pin
-  * already proves the window key's count: `rollingMeanAdaptive` runs no
-  * stats pass, registers no session hint, and the keyed rule still plans
-  * the rolling mean on `KeyedBoundedAggExec`. A frame without the pin, or
-  * whose only evidence is a session hint, keeps the stats pass. Each test
-  * runs on a child session, so a hint written there would show and none
-  * leaks into the shared one.
+  * proves the window key's count, so the keyed rule plans the rolling
+  * mean on `KeyedBoundedAggExec` as a proven rewrite. Building `refine`
+  * launches no job and registers no session hint with or without the
+  * pin: the rolling mean is the plain window, and an unpinned key takes
+  * the rule's optimistic arm. Each test runs on a child session, so a
+  * hint written there would show and none leaks into the shared one.
   */
 class ArrivalJobsSpec extends AnyFunSuite {
   private val Lake = (1 to 6).map(i => s"A$i")
@@ -75,14 +75,16 @@ class ArrivalJobsSpec extends AnyFunSuite {
     assert(s.conf.getOption(KeyedWindowRule.NdvHintsConf) === None)
   }
 
-  test("without a pin, or with only a session ndv hint, refine runs the stats job") {
+  test("refine over an unpinned or hint-only raw frame launches no job") {
     val raw = lake(TestSpark.spark)
     val s = session()
     val unpinned = BatchPipeline.readRaw(s, raw)
-    assert(SparkJobs.count(s)(BatchPipeline.refine(unpinned)) > 0)
+    assert(SparkJobs.count(s)(BatchPipeline.refine(unpinned)) === 0)
+    assert(s.conf.getOption(KeyedWindowRule.NdvHintsConf) === None)
     val hinted = session(KeyedWindowRule.NdvHintsConf -> "ativo=6")
     val byHint = BatchPipeline.readRaw(hinted, raw)
-    assert(SparkJobs.count(hinted)(BatchPipeline.refine(byHint)) > 0)
+    assert(SparkJobs.count(hinted)(BatchPipeline.refine(byHint)) === 0)
+    assert(hinted.conf.get(KeyedWindowRule.NdvHintsConf) === "ativo=6")
   }
 
   test("one incremental arrival cycle launches at most 8 jobs") {

@@ -31,8 +31,8 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("j1 enrichment: proven-ndv keys-only attach eliminates the join; broadcast otherwise") {
     // r14: the enrichment joins bars against an aggregate of the SAME
-    // lineage. With the asset key's ndv PROVEN (the stats artifact's
-    // registerNdvHint handoff — 3 here, truthfully), ArgMaxJoinRule's
+    // lineage. With the asset key's ndv PROVEN (a registerNdvHint
+    // handoff — 3 here, truthfully), ArgMaxJoinRule's
     // keys-only arm collapses the join to a zero-join single-scan
     // KeyedTotalAgg attach; without the proof (or with the rule off)
     // the plan keeps the broadcast join — never a shuffle join.
@@ -72,9 +72,8 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("flagship window rides the keyed exec (range exchange); asset-only exchanges are post-agg") {
     // VERDICT r2 #2 evolved (r13): the headline window must never
-    // serialize into #assets sort tasks. Since the keyed rewrite exists,
-    // the adaptive path registers the measured 3-key ndv and emits the
-    // PLAIN window, which KeyedWindowRule re-plans as KeyedBoundedAggExec
+    // serialize into #assets sort tasks. The flagship emits the PLAIN
+    // window, which KeyedWindowRule re-plans as KeyedBoundedAggExec
     // over a range exchange on (ativo, order) — parallelism bounded by
     // data, no bucket-correction machinery. Every exchange keyed on
     // ativo alone may carry only aggregated (tiny) frames (the partial
@@ -942,9 +941,10 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("w2/w4: the low-ndv keyed windows plan through the keyed execs, window-free") {
     // VERDICT r10 #3 end-to-end: w2/w4 are written as the PLAIN windows
-    // a user would write; the rolling-stats artifact's ndv hint lets
-    // KeyedWindowRule re-plan them — range exchange on (ativo, order),
-    // parallelism bounded by data, never by the 3 return flags.
+    // a user would write; KeyedWindowRule re-plans them on its
+    // optimistic arm (ativo's ndv is unproven) — range exchange on
+    // (ativo, order), parallelism bounded by data, never by the 3
+    // return flags.
     val exec2 = physical("w2_daily_returns")
     val p2 = exec2.toString
     assert(!p2.contains("Window ["),

@@ -52,22 +52,16 @@ class ArtifactStoreSpec extends AnyFunSuite {
     ArtifactStore.invalidate(spark, "spec_cents", key)
   }
 
-  test("x4_ivf_topk and flagship_etl serve from persisted artifacts in a fresh session") {
+  test("x4_ivf_topk serves from its persisted artifact in a fresh session") {
     // warm: fit whatever this JVM hasn't fitted yet, then simulate restart
     val ivfWarm = SparkEntry.queries("x4_ivf_topk")(spark, sf).collect()
-    val flagWarm = SparkEntry.queries("flagship_etl")(spark, sf)
-      .orderBy("l_orderkey", "l_linenumber", "close_price").collect()
     SessionCache.clear()
 
     val fitsBefore = ArtifactStore.fits
     val ivfCold = SparkEntry.queries("x4_ivf_topk")(spark, sf).collect()
-    val flagCold = SparkEntry.queries("flagship_etl")(spark, sf)
-      .orderBy("l_orderkey", "l_linenumber", "close_price").collect()
     assert(ArtifactStore.fits === fitsBefore,
-      "post-restart queries re-fitted instead of loading the index artifacts")
+      "post-restart query re-fitted instead of loading the index artifact")
     assert(ivfCold.toSeq === ivfWarm.toSeq,
       "artifact-served IVF ranking differs from the fitted one")
-    assert(flagCold.toSeq === flagWarm.toSeq,
-      "artifact-served rolling stats changed the flagship result")
   }
 }
