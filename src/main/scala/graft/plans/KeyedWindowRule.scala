@@ -891,8 +891,8 @@ object KeyedWindowRule {
     }.toMap
 
   /** Record a measured ndv for `column` in the session hints — called by
-    * stats artifacts (the fixture loaders' measured columns) so their
-    * knowledge reaches plain SQL plans. Session-scoped; consulted only where the
+    * the fixture loaders for the columns they measure, so that knowledge
+    * reaches plain SQL plans. Session-scoped; consulted only where the
     * named column is a BASE column of a leaf relation. Pass `column` as
     * `"table.column"` to scope the hint to one catalog table. */
   def registerNdvHint(spark: SparkSession, column: String, ndv: Long): Unit =
