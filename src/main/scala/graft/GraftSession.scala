@@ -16,7 +16,7 @@ object GraftSession {
     val b = SparkSession.builder()
       .master(s"local[$cores]")
       // library extension point: native SQL functions + the RangeJoin/
-      // GlobalRank auto-rewrites run exactly as a production session would
+      // window auto-rewrites run exactly as a production session would
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.ui.enabled", "false")

@@ -48,7 +48,7 @@ object SparkEntryR10 {
     // document?") and the canonical unpartitioned-window scale killer:
     // Spark plans it as a single-partition WindowExec. Written here as
     // plain SQL — no library call — so the plan only survives 100 TB
-    // because `GlobalRankRule` rewrites it into the distributed
+    // because `KeyedWindowRule` rewrites it into the distributed
     // prefix-sum (`KeyedRunningAggExec` with no keys: range exchange +
     // per-partition partial buffers + driver prefix-merge + seeded
     // streaming fold).

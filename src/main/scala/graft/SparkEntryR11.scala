@@ -15,7 +15,7 @@ object SparkEntryR11 {
     // The reference's own W1 rolling-mean shape (etl/etl_job.py:126-130)
     // written GLOBALLY (no PARTITION BY) — the r10 verdict's #1 ask.
     // Spark plans every one of these as a single-partition WindowExec;
-    // here the plan only survives 100 TB because `GlobalRankRule`
+    // here the plan only survives 100 TB because `KeyedWindowRule`
     // rewrites the bounded frames into `KeyedBoundedAggExec` with no
     // keys (range exchange + k boundary tuples per partition + row-local
     // re-fold) and the ignore-nulls lag(1) into `KeyedRunningAggExec`'s

@@ -788,8 +788,8 @@ case class ArgMaxJoinRule(session: SparkSession) extends Rule[LogicalPlan]
         val w = Window(winAliases.map(_._2), partitionExprs, Nil, winChild)
         // this Window exists because the collapse traded a join for the
         // keyed/global total heal — exempt it from the input-size stock
-        // gate (GlobalRankRule.HealExpectedTag scaladoc)
-        w.setTagValue(GlobalRankRule.HealExpectedTag, true)
+        // gate (KeyedWindowRule.HealExpectedTag scaladoc)
+        w.setTagValue(KeyedWindowRule.HealExpectedTag, true)
         w
       }
     val matchPred = (partitionExprs.map(IsNotNull(_): Expression) ++

@@ -63,7 +63,7 @@ object RunFrame {
   * CURRENT ROW)`. Spark plans the window with one task per key: a
   * low-cardinality k (`PARTITION BY l_returnflag`: 3 values over a
   * corpus) rides through ndv(k) tasks at any cluster size, and an EMPTY
-  * partition spec (`partKeys = Nil`, planned by [[GlobalRankRule]]) is a
+  * partition spec (`partKeys = Nil`, [[KeyedWindowRule]]'s no-key arm) is a
   * `SinglePartition` requirement — at 100 TB the whole frame rides
   * through one task. A running aggregate is a distributed prefix sum:
   *
@@ -852,8 +852,8 @@ case class KeyedOffsetExec(partKeys: Seq[Expression], order: Seq[SortOrder],
   * initial buffer (null sum, zero count). Frames reaching FOLLOWING
   * rows — centered smoothing (`a PRECEDING AND b FOLLOWING`), pure
   * lookahead — are served only with no partition keys (`partKeys =
-  * Nil`, from [[GlobalRankRule]]); [[KeyedWindowRule]] keeps backward
-  * frames only.
+  * Nil`): the forward context and pending queue are not key-scoped, so
+  * [[KeyedWindowRule]]'s keyed arm plans backward frames only.
   */
 case class KeyedBoundedAggPlan(partKeys: Seq[Expression], order: Seq[SortOrder],
                                aggAttrs: Seq[Attribute], aggs: Seq[Expression],

@@ -167,15 +167,15 @@ private[plans] object RangeFrames {
     s"Range-frame rewrite ($site): more than $maxHarvest rows fell within " +
       "the RANGE distance of a partition edge (or of one frame), so the " +
       "rewrite cannot serve the frame exactly within its row budget. " +
-      s"Raise ${GlobalRankRule.MaxRangeRowsConf} for denser frames, or " +
-      s"disable ${GlobalRankRule.RewriteConf} / " +
+      s"Raise ${KeyedWindowRule.MaxRangeRowsConf} for denser frames, or " +
+      s"disable ${KeyedWindowRule.GlobalRewriteConf} / " +
       s"${KeyedWindowRule.RewriteConf} for this query.")
 }
 
 /** Logical plan for the value-distance frame — `agg(x) OVER ([PARTITION
   * BY k] ORDER BY v RANGE BETWEEN …)`, global when `partKeys` is empty
-  * ([[GlobalRankRule]]), keyed otherwise (`PARTITION BY k` with a
-  * provably small ndv, [[KeyedWindowRule]]'s gate). `(los(i), ups(i))`
+  * ([[KeyedWindowRule]]'s no-key arm), keyed otherwise (`PARTITION BY k`
+  * with a provably small ndv, its keyed arm). `(los(i), ups(i))`
   * are output i's SIGNED frame distances in order units; the frame of a
   * row with order value v is every row of its key with value in
   * [v + lo, v + up] — INCLUDING peers at exactly v when the bound
@@ -284,7 +284,7 @@ case class RangeAggExec(partKeys: Seq[Expression], order: Seq[SortOrder],
 
   protected override def doExecute(): RDD[InternalRow] = {
     val maxHarvest =
-      conf.getConfString(GlobalRankRule.MaxRangeRowsConf, "16384").toInt
+      conf.getConfString(KeyedWindowRule.MaxRangeRowsConf, "16384").toInt
     val orderExprEarly = order.head.child
     val orderTypeEarly = orderExprEarly.dataType
     // half-unbounded classification is needed up front: INWARD shapes

@@ -452,8 +452,8 @@ case class RankJoinRule(session: SparkSession) extends Rule[LogicalPlan]
       "__graft_rankjoin")()
     val win = Window(Seq(newAlias), newPart, newOrder, core)
     // the collapse traded a two-scan join for this window — exempt it
-    // from the input-size stock gate (GlobalRankRule.HealExpectedTag)
-    win.setTagValue(GlobalRankRule.HealExpectedTag, true)
+    // from the input-size stock gate (KeyedWindowRule.HealExpectedTag)
+    win.setTagValue(KeyedWindowRule.HealExpectedTag, true)
 
     // rank predicates in terms of the NEW rank column; paired nullable
     // columns must be non-null (the join's own null-drop)

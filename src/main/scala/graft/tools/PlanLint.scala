@@ -27,7 +27,7 @@ import org.apache.spark.sql.execution.window.WindowExec
   *    everywhere else.
   *  - `unpartitioned-window` (error): `WindowExec` with no PARTITION BY —
   *    one task sorts and folds the entire input (the shape
-  *    `GlobalRankRule` heals when the extensions are active).
+  *    `KeyedWindowRule` heals when the extensions are active).
   *  - `keyed-window` (info): any surviving `WindowExec` — parallelism is
   *    capped at ndv(keys); in a session with the graft extensions active
   *    a surviving window means the rewrite family REFUSED (high/unproven

@@ -9,14 +9,14 @@ object TestSpark {
   lazy val spark: SparkSession = GraftSession.start(4,
     "spark.sql.warehouse.dir" ->
       s"${System.getProperty("java.io.tmpdir")}/graft_test_warehouse",
-    // The window input-size stock gate (GlobalRankRule.StockBytesConf,
+    // The window input-size stock gate (KeyedWindowRule.StockBytesConf,
     // r16) is DISABLED in the shared test session: the KB-scale test
     // fixtures would gate every linear window shape back to Spark's
     // plan, and the suite's job is to exercise and pin the heal
     // machinery itself. The gate's own behavior (stock below the
     // threshold, heal above, RANGE frames exempt) is pinned in
     // WindowStockGateSpec, which sets the conf explicitly.
-    graft.plans.GlobalRankRule.StockBytesConf -> "0")
+    graft.plans.KeyedWindowRule.StockBytesConf -> "0")
 
   /** Run `body` with session confs set, restoring each key's prior value
     * (or unsetting it) afterwards. */

@@ -105,7 +105,7 @@ object MarketEtlProps extends Properties("MarketEtl") {
               graft.plans.KeyedWindowRule.RewriteConf -> rewrite.toString,
               // the frames are tiny: without this the small-frame guard
               // keeps Spark's plan and both sides would be the same plan
-              graft.plans.GlobalRankRule.SmallFrameConf -> "0"): _*) {
+              graft.plans.KeyedWindowRule.SmallFrameConf -> "0"): _*) {
           val out = MarketEtl.rollingMean(
             df, Seq("ativo"), Seq(col("ts")), "close", n, "mm")
           val keyed = graft.plans.NoKey.nodes(out.queryExecution.executedPlan)

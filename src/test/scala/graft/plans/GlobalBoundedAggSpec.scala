@@ -28,10 +28,10 @@ import graft.TestSpark
 class GlobalBoundedAggSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def beforeAll(): Unit = {
     super.beforeAll()
-    spark.conf.set(GlobalRankRule.SmallFrameConf, "0")
+    spark.conf.set(KeyedWindowRule.SmallFrameConf, "0")
   }
   override def afterAll(): Unit = {
-    spark.conf.unset(GlobalRankRule.SmallFrameConf)
+    spark.conf.unset(KeyedWindowRule.SmallFrameConf)
     super.afterAll()
   }
 
@@ -67,10 +67,10 @@ class GlobalBoundedAggSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"expected a no-key KeyedBoundedAggExec:\n${on.queryExecution.executedPlan}")
     assert(!plan.exists(_.isInstanceOf[WindowExec]),
       s"WindowExec survived the rewrite:\n${on.queryExecution.executedPlan}")
-    spark.conf.set(GlobalRankRule.RewriteConf, "false")
+    spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "false")
     val offRows =
       try df.collect()
-      finally spark.conf.set(GlobalRankRule.RewriteConf, "true")
+      finally spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "true")
     assert(onRows.map(_.toString).sorted.toSeq ===
       offRows.map(_.toString).sorted.toSeq)
   }
@@ -155,17 +155,17 @@ class GlobalBoundedAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(plan.count(
       _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike]) === 1,
       s"stack must share one range exchange:\n${df.queryExecution.executedPlan}")
-    spark.conf.set(GlobalRankRule.RewriteConf, "false")
+    spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "false")
     val offRows =
       try df.collect()
-      finally spark.conf.set(GlobalRankRule.RewriteConf, "true")
+      finally spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "true")
     assert(onRows.map(_.toString).sorted.toSeq ===
       offRows.map(_.toString).sorted.toSeq)
   }
 
   test("frames beyond maxBoundedFrame keep Spark's plan") {
     import org.apache.spark.sql.expressions.Window
-    spark.conf.set(GlobalRankRule.MaxBoundedFrameConf, "16")
+    spark.conf.set(KeyedWindowRule.MaxBoundedFrameConf, "16")
     try {
       val df = fixture.withColumn("s",
         sum("v").over(Window.orderBy("v", "id").rowsBetween(-17, 0)))
@@ -175,7 +175,7 @@ class GlobalBoundedAggSpec extends AnyFunSuite with BeforeAndAfterAll {
       val ok = fixture.withColumn("s",
         sum("v").over(Window.orderBy("v", "id").rowsBetween(-16, 0)))
       assert(nodes(ok).exists(NoKey.bounded))
-    } finally spark.conf.unset(GlobalRankRule.MaxBoundedFrameConf)
+    } finally spark.conf.unset(KeyedWindowRule.MaxBoundedFrameConf)
   }
 
   test("centered and FOLLOWING frames fold exactly through the forward context") {
@@ -255,10 +255,10 @@ class GlobalBoundedAggSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"expected the Last(ignoreNulls) fold:\n${df.queryExecution.executedPlan}")
     assert(!plan.exists(_.isInstanceOf[WindowExec]),
       s"WindowExec survived:\n${df.queryExecution.executedPlan}")
-    spark.conf.set(GlobalRankRule.RewriteConf, "false")
+    spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "false")
     val offRows =
       try df.collect()
-      finally spark.conf.set(GlobalRankRule.RewriteConf, "true")
+      finally spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "true")
     assert(onRows.map(_.toString).sorted.toSeq ===
       offRows.map(_.toString).sorted.toSeq)
   }
@@ -275,10 +275,10 @@ class GlobalBoundedAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!nodes(df).exists(_.isInstanceOf[WindowExec]))
     assert(onRows.count(_.getAs[Long]("pv") == -99L) >= 1,
       "at least the global head row must carry the default")
-    spark.conf.set(GlobalRankRule.RewriteConf, "false")
+    spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "false")
     val offRows =
       try df.collect()
-      finally spark.conf.set(GlobalRankRule.RewriteConf, "true")
+      finally spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "true")
     assert(onRows.map(_.toString).sorted.toSeq ===
       offRows.map(_.toString).sorted.toSeq)
     // n > 1 ignore-nulls: since round 12 the NthLastRing value-ring

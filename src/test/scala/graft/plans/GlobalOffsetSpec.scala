@@ -30,10 +30,10 @@ class GlobalOffsetSpec extends AnyFunSuite with BeforeAndAfterAll {
   // sequentially, so the conf toggle cannot race another suite)
   override def beforeAll(): Unit = {
     super.beforeAll()
-    spark.conf.set(GlobalRankRule.SmallFrameConf, "0")
+    spark.conf.set(KeyedWindowRule.SmallFrameConf, "0")
   }
   override def afterAll(): Unit = {
-    spark.conf.unset(GlobalRankRule.SmallFrameConf)
+    spark.conf.unset(KeyedWindowRule.SmallFrameConf)
     super.afterAll()
   }
 
@@ -64,10 +64,10 @@ class GlobalOffsetSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"expected a no-key KeyedOffsetExec:\n${on.queryExecution.executedPlan}")
     assert(!plan.exists(_.isInstanceOf[WindowExec]),
       s"WindowExec survived the rewrite:\n${on.queryExecution.executedPlan}")
-    spark.conf.set(GlobalRankRule.RewriteConf, "false")
+    spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "false")
     val offRows =
       try df.collect()
-      finally spark.conf.set(GlobalRankRule.RewriteConf, "true")
+      finally spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "true")
     assert(onRows.map(_.toString).sorted.toSeq ===
       offRows.map(_.toString).sorted.toSeq)
   }
@@ -143,11 +143,11 @@ class GlobalOffsetSpec extends AnyFunSuite with BeforeAndAfterAll {
       .withColumn("pv", lag("v", 1).over(w))
     assert(empty.collect().isEmpty)
     checkRewritten(fixture.limit(1).withColumn("pv", lag("v", 1).over(w)))
-    spark.conf.set(GlobalRankRule.RewriteConf, "false")
+    spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "false")
     try {
       val df = fixture.withColumn("pv", lag("v", 1).over(w))
       assert(!nodes(df).exists(NoKey.offset),
         "conf=false must disable the rewrite")
-    } finally spark.conf.set(GlobalRankRule.RewriteConf, "true")
+    } finally spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "true")
   }
 }

@@ -25,10 +25,10 @@ class GlobalRankRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
   // sequentially, so the conf toggle cannot race another suite)
   override def beforeAll(): Unit = {
     super.beforeAll()
-    spark.conf.set(GlobalRankRule.SmallFrameConf, "0")
+    spark.conf.set(KeyedWindowRule.SmallFrameConf, "0")
   }
   override def afterAll(): Unit = {
-    spark.conf.unset(GlobalRankRule.SmallFrameConf)
+    spark.conf.unset(KeyedWindowRule.SmallFrameConf)
     super.afterAll()
   }
 
@@ -72,10 +72,10 @@ class GlobalRankRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"expected a no-key KeyedRankExec:\n${on.queryExecution.executedPlan}")
     assert(!plan.exists(_.isInstanceOf[WindowExec]),
       s"WindowExec survived the rewrite:\n${on.queryExecution.executedPlan}")
-    spark.conf.set(GlobalRankRule.RewriteConf, "false")
+    spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "false")
     val offRows =
       try df.collect()
-      finally spark.conf.set(GlobalRankRule.RewriteConf, "true")
+      finally spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "true")
     assert(onRows.map(_.toString).sorted.toSeq ===
       offRows.map(_.toString).sorted.toSeq)
   }
@@ -154,7 +154,7 @@ class GlobalRankRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("the small-frame cost guard keeps provably tiny frames on the window") {
     import org.apache.spark.sql.expressions.Window
     // restore the DEFAULT guard for this test (the suite disables it)
-    spark.conf.set(GlobalRankRule.SmallFrameConf, "4096")
+    spark.conf.set(KeyedWindowRule.SmallFrameConf, "4096")
     try {
       // a LIMIT gives the plan a hard maxRows bound — the marker library
       // code puts on bounded level frames; the one-task sort of ≤4096
@@ -171,7 +171,7 @@ class GlobalRankRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
         .withColumn("rn", row_number().over(Window.orderBy("id")))
       assert(nodes(big).exists(NoKey.rank),
         "a frame without a small-bound proof must still rewrite")
-    } finally spark.conf.set(GlobalRankRule.SmallFrameConf, "0")
+    } finally spark.conf.set(KeyedWindowRule.SmallFrameConf, "0")
   }
 
   test("top-k rank filters keep Spark's WindowGroupLimit path") {
@@ -233,10 +233,10 @@ class GlobalRankRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(plan.count(
       _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike]) === 1,
       s"stack must share one exchange:\n${mixed.queryExecution.executedPlan}")
-    spark.conf.set(GlobalRankRule.RewriteConf, "false")
+    spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "false")
     val offRows =
       try mixed.collect()
-      finally spark.conf.set(GlobalRankRule.RewriteConf, "true")
+      finally spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "true")
     assert(onRows.map(_.toString).sorted.toSeq ===
       offRows.map(_.toString).sorted.toSeq)
   }
@@ -246,13 +246,13 @@ class GlobalRankRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     val empty = fixture.filter(col("id") < 0)
       .withColumn("rn", row_number().over(Window.orderBy("id")))
     assert(empty.collect().isEmpty)
-    spark.conf.set(GlobalRankRule.RewriteConf, "false")
+    spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "false")
     try {
       val df = fixture.withColumn("rn",
         row_number().over(Window.orderBy("v", "id")))
       assert(!nodes(df).exists(NoKey.rank),
         "conf=false must disable the rewrite")
-    } finally spark.conf.set(GlobalRankRule.RewriteConf, "true")
+    } finally spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "true")
   }
 
   test("rewritten rank agrees with GlobalRank.withRowNumber on a total order") {

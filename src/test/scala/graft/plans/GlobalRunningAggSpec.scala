@@ -32,10 +32,10 @@ class GlobalRunningAggSpec extends AnyFunSuite with BeforeAndAfterAll {
   // sequentially, so the conf toggle cannot race another suite)
   override def beforeAll(): Unit = {
     super.beforeAll()
-    spark.conf.set(GlobalRankRule.SmallFrameConf, "0")
+    spark.conf.set(KeyedWindowRule.SmallFrameConf, "0")
   }
   override def afterAll(): Unit = {
-    spark.conf.unset(GlobalRankRule.SmallFrameConf)
+    spark.conf.unset(KeyedWindowRule.SmallFrameConf)
     super.afterAll()
   }
 
@@ -70,10 +70,10 @@ class GlobalRunningAggSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"expected a no-key KeyedRunningAggExec:\n${on.queryExecution.executedPlan}")
     assert(!plan.exists(_.isInstanceOf[WindowExec]),
       s"WindowExec survived the rewrite:\n${on.queryExecution.executedPlan}")
-    spark.conf.set(GlobalRankRule.RewriteConf, "false")
+    spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "false")
     val offRows =
       try df.collect()
-      finally spark.conf.set(GlobalRankRule.RewriteConf, "true")
+      finally spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "true")
     assert(onRows.map(_.toString).sorted.toSeq ===
       offRows.map(_.toString).sorted.toSeq)
   }
@@ -165,12 +165,12 @@ class GlobalRunningAggSpec extends AnyFunSuite with BeforeAndAfterAll {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val empty = fixture.filter(col("id") < 0).withColumn("cs", sum("id").over(w))
     assert(empty.collect().isEmpty)
-    spark.conf.set(GlobalRankRule.RewriteConf, "false")
+    spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "false")
     try {
       val df = fixture.withColumn("cs", sum("id").over(w))
       assert(!nodes(df).exists(NoKey.running),
         "conf=false must disable the rewrite")
-    } finally spark.conf.set(GlobalRankRule.RewriteConf, "true")
+    } finally spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "true")
   }
 
   test("the EXCLUSIVE prefix (ROWS ... AND 1 PRECEDING) evaluates before the fold") {
@@ -246,10 +246,10 @@ class GlobalRunningAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!plan.exists(
       _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike]),
       s"global total must not shuffle:\n${df.queryExecution.executedPlan}")
-    spark.conf.set(GlobalRankRule.RewriteConf, "false")
+    spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "false")
     val offRows =
       try df.collect()
-      finally spark.conf.set(GlobalRankRule.RewriteConf, "true")
+      finally spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "true")
     assert(onRows.map(_.toString).sorted.toSeq ===
       offRows.map(_.toString).sorted.toSeq)
   }
@@ -264,10 +264,10 @@ class GlobalRunningAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(nodes(df).exists(NoKey.total),
       s"expected a no-key KeyedTotalAggExec:\n${df.queryExecution.executedPlan}")
     assert(!nodes(df).exists(_.isInstanceOf[WindowExec]))
-    spark.conf.set(GlobalRankRule.RewriteConf, "false")
+    spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "false")
     val offRows =
       try df.collect()
-      finally spark.conf.set(GlobalRankRule.RewriteConf, "true")
+      finally spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "true")
     assert(onRows.map(_.toString).sorted.toSeq ===
       offRows.map(_.toString).sorted.toSeq)
   }
@@ -296,10 +296,10 @@ class GlobalRunningAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     // every row: tot = the last run value = sum of all ids
     val total = (0L until 1000L).sum
     assert(onRows.forall(_.getAs[Long]("tot") === total))
-    spark.conf.set(GlobalRankRule.RewriteConf, "false")
+    spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "false")
     val offRows =
       try df.collect()
-      finally spark.conf.set(GlobalRankRule.RewriteConf, "true")
+      finally spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "true")
     assert(onRows.map(_.toString).sorted.toSeq ===
       offRows.map(_.toString).sorted.toSeq)
   }
@@ -335,10 +335,10 @@ class GlobalRunningAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(onRows.forall(_.isNullAt(1)), "gfirst must be the null-v id-0 row")
     assert(onRows.forall(_.getAs[Long]("glast") === 19L))
     assert(onRows.forall(_.getAs[Long]("gfirstn") === 1L))
-    spark.conf.set(GlobalRankRule.RewriteConf, "false")
+    spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "false")
     val offRows =
       try df.collect()
-      finally spark.conf.set(GlobalRankRule.RewriteConf, "true")
+      finally spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "true")
     assert(onRows.map(_.toString).sorted.toSeq ===
       offRows.map(_.toString).sorted.toSeq)
   }

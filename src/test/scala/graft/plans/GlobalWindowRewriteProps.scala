@@ -143,7 +143,7 @@ object GlobalWindowRewriteProps extends Properties("GlobalWindowRewrite") {
         .repartition(np)
       df.createOrReplaceTempView("gwr_rt")
       TestSpark.withConf(TestSpark.seams(sp) :+
-          (GlobalRankRule.SmallFrameConf -> "0"): _*) {
+          (KeyedWindowRule.SmallFrameConf -> "0"): _*) {
         val on = spark.sql(rangeBattery(lo, up))
         val onRows = on.collect().map(_.toString).sorted.toSeq
         val planned = vs.nonEmpty // empty input may fold the exec away
@@ -152,11 +152,11 @@ object GlobalWindowRewriteProps extends Properties("GlobalWindowRewrite") {
         val planStr = on.queryExecution.executedPlan.toString
         val hasExec = planStr.contains("RangeAgg") ||
           (lo.isEmpty && up.contains(0L) && planStr.contains("RunningAgg"))
-        spark.conf.set(GlobalRankRule.RewriteConf, "false")
+        spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "false")
         val off =
           try spark.sql(rangeBattery(lo, up)).collect()
             .map(_.toString).sorted.toSeq
-          finally spark.conf.set(GlobalRankRule.RewriteConf, "true")
+          finally spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "true")
         (!planned || hasExec) && onRows == off
       }
     }
@@ -174,12 +174,12 @@ object GlobalWindowRewriteProps extends Properties("GlobalWindowRewrite") {
       // on the window and the property is vacuous (restored per draw —
       // the shared session serves other suites after this one)
       TestSpark.withConf(TestSpark.seams(sp) :+
-          (GlobalRankRule.SmallFrameConf -> "0"): _*) {
+          (KeyedWindowRule.SmallFrameConf -> "0"): _*) {
         val on = spark.sql(battery).collect().map(_.toString).sorted.toSeq
-        spark.conf.set(GlobalRankRule.RewriteConf, "false")
+        spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "false")
         val off =
           try spark.sql(battery).collect().map(_.toString).sorted.toSeq
-          finally spark.conf.set(GlobalRankRule.RewriteConf, "true")
+          finally spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "true")
         on == off
       }
     }

@@ -139,7 +139,7 @@ object KeyedWindowProps extends Properties("KeyedWindowRewrite") {
         .repartition(np)
       df.createOrReplaceTempView("kwp_rt")
       TestSpark.withConf(TestSpark.seams(sp) :+
-          (GlobalRankRule.SmallFrameConf -> "0"): _*) {
+          (KeyedWindowRule.SmallFrameConf -> "0"): _*) {
         val on = spark.sql(rangeBattery(k, lo, up))
         val onRows = on.collect().map(_.toString).sorted.toSeq
         val planned = vs.nonEmpty
@@ -166,7 +166,7 @@ object KeyedWindowProps extends Properties("KeyedWindowRewrite") {
         .repartition(np)
       df.createOrReplaceTempView("kwp_t")
       TestSpark.withConf(TestSpark.seams(sp) :+
-          (GlobalRankRule.SmallFrameConf -> "0"): _*) {
+          (KeyedWindowRule.SmallFrameConf -> "0"): _*) {
         val on = spark.sql(battery(k)).collect().map(_.toString).sorted.toSeq
         spark.conf.set(KeyedWindowRule.RewriteConf, "false")
         val off =

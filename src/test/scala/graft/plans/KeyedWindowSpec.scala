@@ -21,10 +21,10 @@ import graft.TestSpark
 class KeyedWindowSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def beforeAll(): Unit = {
     super.beforeAll()
-    spark.conf.set(GlobalRankRule.SmallFrameConf, "0")
+    spark.conf.set(KeyedWindowRule.SmallFrameConf, "0")
   }
   override def afterAll(): Unit = {
-    spark.conf.unset(GlobalRankRule.SmallFrameConf)
+    spark.conf.unset(KeyedWindowRule.SmallFrameConf)
     spark.conf.unset(KeyedWindowRule.NdvHintsConf)
     super.afterAll()
   }
@@ -351,7 +351,7 @@ class KeyedWindowSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(!nodes(raw).exists(_.isInstanceOf[KeyedRunningAggExec]))
     } finally spark.conf.unset(KeyedWindowRule.OptimisticConf)
     // bounded keyed frames beyond the reach cap stay with Spark
-    spark.conf.set(GlobalRankRule.MaxBoundedFrameConf, "8")
+    spark.conf.set(KeyedWindowRule.MaxBoundedFrameConf, "8")
     try {
       val farBounded = spark.sql(
         """SELECT id, sum(v) OVER (PARTITION BY pmod(id, 3) ORDER BY v, id
@@ -359,7 +359,30 @@ class KeyedWindowSpec extends AnyFunSuite with BeforeAndAfterAll {
           |FROM kw_t8""".stripMargin)
       assert(!nodes(farBounded).exists(_.isInstanceOf[KeyedBoundedAggExec]))
       assert(nodes(farBounded).exists(_.isInstanceOf[WindowExec]))
-    } finally spark.conf.unset(GlobalRankRule.MaxBoundedFrameConf)
+    } finally spark.conf.unset(KeyedWindowRule.MaxBoundedFrameConf)
+    // a FOLLOWING frame end heals only with no keys: the bounded exec's
+    // forward context is not key-scoped
+    val centeredKeyed = spark.sql(
+      """SELECT id, sum(v) OVER (PARTITION BY pmod(id, 3) ORDER BY v, id
+        |  ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING) AS cs
+        |FROM kw_t8""".stripMargin)
+    assert(!nodes(centeredKeyed).exists(_.isInstanceOf[KeyedBoundedAggExec]))
+    assert(nodes(centeredKeyed).exists(_.isInstanceOf[WindowExec]))
+    val centeredNoKey = spark.sql(
+      """SELECT id, sum(v) OVER (ORDER BY v, id
+        |  ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING) AS cs
+        |FROM kw_t8""".stripMargin)
+    assert(nodes(centeredNoKey).exists(NoKey.bounded))
+    assert(!nodes(centeredNoKey).exists(_.isInstanceOf[WindowExec]))
+    // an orderless first_value total picks a partition-order-arbitrary
+    // row: keyed it stays with Spark, with no keys the one pick heals
+    val firstKeyed = spark.sql(
+      "SELECT id, first_value(v) OVER (PARTITION BY pmod(id, 3)) AS f FROM kw_t8")
+    assert(!nodes(firstKeyed).exists(_.isInstanceOf[KeyedTotalAggExec]))
+    assert(nodes(firstKeyed).exists(_.isInstanceOf[WindowExec]))
+    val firstNoKey = spark.sql("SELECT id, first_value(v) OVER () AS f FROM kw_t8")
+    assert(nodes(firstNoKey).exists(NoKey.total))
+    assert(!nodes(firstNoKey).exists(_.isInstanceOf[WindowExec]))
   }
 
   test("the W1 shape — keyed bounded rolling mean with the min_periods guard — heals") {

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
-/** Plan-pin predicates for the unpartitioned window shapes: `GlobalRankRule`
+/** Plan-pin predicates for the unpartitioned window shapes: `KeyedWindowRule`
   * plans them on the keyed execs with NO partition keys, so a pin on a
   * global shape must match the exec AND its empty key list (a keyed node
   * of the same class is a different plan). */

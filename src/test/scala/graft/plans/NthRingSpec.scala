@@ -24,10 +24,10 @@ class NthRingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def beforeAll(): Unit = {
     super.beforeAll()
-    spark.conf.set(GlobalRankRule.SmallFrameConf, "0")
+    spark.conf.set(KeyedWindowRule.SmallFrameConf, "0")
   }
   override def afterAll(): Unit = {
-    spark.conf.unset(GlobalRankRule.SmallFrameConf)
+    spark.conf.unset(KeyedWindowRule.SmallFrameConf)
     super.afterAll()
   }
 
@@ -53,7 +53,7 @@ class NthRingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def checkRewritten(df: => DataFrame, conf: String =
-      GlobalRankRule.RewriteConf): Unit = {
+      KeyedWindowRule.GlobalRewriteConf): Unit = {
     val on = df
     val onRows = on.collect()
     val plan = nodes(on)

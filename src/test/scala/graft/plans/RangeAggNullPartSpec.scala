@@ -17,11 +17,11 @@ import graft.TestSpark
 class RangeAggNullPartSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def beforeAll(): Unit = {
     super.beforeAll()
-    spark.conf.set(GlobalRankRule.SmallFrameConf, "0")
+    spark.conf.set(KeyedWindowRule.SmallFrameConf, "0")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
   }
   override def afterAll(): Unit = {
-    spark.conf.unset(GlobalRankRule.SmallFrameConf)
+    spark.conf.unset(KeyedWindowRule.SmallFrameConf)
     spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
     super.afterAll()
   }
@@ -44,7 +44,7 @@ class RangeAggNullPartSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(on.queryExecution.executedPlan.toString.contains("RangeAgg"),
       s"rewrite did not fire:\n${on.queryExecution.executedPlan}")
     val conf =
-      if (keyed) KeyedWindowRule.RewriteConf else GlobalRankRule.RewriteConf
+      if (keyed) KeyedWindowRule.RewriteConf else KeyedWindowRule.GlobalRewriteConf
     spark.conf.set(conf, "false")
     val off =
       try spark.sql(sql).collect().map(_.toString).sorted.toSeq

@@ -26,10 +26,10 @@ import graft.TestSpark
 class RangeAggSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def beforeAll(): Unit = {
     super.beforeAll()
-    spark.conf.set(GlobalRankRule.SmallFrameConf, "0")
+    spark.conf.set(KeyedWindowRule.SmallFrameConf, "0")
   }
   override def afterAll(): Unit = {
-    spark.conf.unset(GlobalRankRule.SmallFrameConf)
+    spark.conf.unset(KeyedWindowRule.SmallFrameConf)
     super.afterAll()
   }
 
@@ -72,7 +72,7 @@ class RangeAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!plan.exists(_.isInstanceOf[WindowExec]),
       s"WindowExec survived the rewrite:\n${on.queryExecution.executedPlan}")
     val conf =
-      if (keyed) KeyedWindowRule.RewriteConf else GlobalRankRule.RewriteConf
+      if (keyed) KeyedWindowRule.RewriteConf else KeyedWindowRule.GlobalRewriteConf
     spark.conf.set(conf, "false")
     val offRows =
       try df.collect()
@@ -194,10 +194,10 @@ class RangeAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(plan.count(
       _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike]) === 1,
       s"stack must share one range exchange:\n${df.queryExecution.executedPlan}")
-    spark.conf.set(GlobalRankRule.RewriteConf, "false")
+    spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "false")
     val offRows =
       try df.collect()
-      finally spark.conf.set(GlobalRankRule.RewriteConf, "true")
+      finally spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "true")
     assert(onRows.map(_.toString).sorted.toSeq ===
       offRows.map(_.toString).sorted.toSeq)
   }
@@ -259,7 +259,7 @@ class RangeAggSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("forward harvest overflow refuses loudly instead of answering wrong") {
     fixture.createOrReplaceTempView("rng_fovf")
-    spark.conf.set(GlobalRankRule.MaxRangeRowsConf, "16")
+    spark.conf.set(KeyedWindowRule.MaxRangeRowsConf, "16")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     try {
       val ex = intercept[SparkException] {
@@ -273,7 +273,7 @@ class RangeAggSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(msgs(ex).exists(_.contains("Range-frame rewrite")),
         s"unexpected failure: $ex")
     } finally {
-      spark.conf.unset(GlobalRankRule.MaxRangeRowsConf)
+      spark.conf.unset(KeyedWindowRule.MaxRangeRowsConf)
       spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
     }
   }
@@ -478,7 +478,7 @@ class RangeAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     // later partition edge) at a 16-row cap: pass 1 must record the drop
     // and the driver stitch must refuse — never emit a silent undercount.
     fixture.createOrReplaceTempView("rng_ovf")
-    spark.conf.set(GlobalRankRule.MaxRangeRowsConf, "16")
+    spark.conf.set(KeyedWindowRule.MaxRangeRowsConf, "16")
     // AQE would coalesce the tiny shuffle to ONE partition — no seams,
     // no harvest, no refusal to exercise
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
@@ -494,7 +494,7 @@ class RangeAggSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(msgs(ex).exists(_.contains("Range-frame rewrite")),
         s"unexpected failure: $ex")
     } finally {
-      spark.conf.unset(GlobalRankRule.MaxRangeRowsConf)
+      spark.conf.unset(KeyedWindowRule.MaxRangeRowsConf)
       spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
     }
   }
@@ -507,7 +507,7 @@ class RangeAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     // back-stitch guard fires exactly when that fold could be wrong),
     // never answer with a silently mis-split seed/context.
     fixture.createOrReplaceTempView("rng_in_ovf")
-    spark.conf.set(GlobalRankRule.MaxRangeRowsConf, "16")
+    spark.conf.set(KeyedWindowRule.MaxRangeRowsConf, "16")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     try {
       val ex = intercept[SparkException] {
@@ -521,13 +521,13 @@ class RangeAggSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(msgs(ex).exists(_.contains("Range-frame rewrite")),
         s"unexpected failure: $ex")
       // and at a workable cap the same shape answers exactly
-      spark.conf.set(GlobalRankRule.MaxRangeRowsConf, "16384")
+      spark.conf.set(KeyedWindowRule.MaxRangeRowsConf, "16384")
       checkRewritten(spark.sql(
         """SELECT id, sum(t) OVER (ORDER BY t
           |  RANGE BETWEEN UNBOUNDED PRECEDING AND 1000 PRECEDING) AS s
           |FROM rng_in_ovf""".stripMargin))
     } finally {
-      spark.conf.unset(GlobalRankRule.MaxRangeRowsConf)
+      spark.conf.unset(KeyedWindowRule.MaxRangeRowsConf)
       spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
     }
   }

@@ -20,10 +20,10 @@ import graft.TestSpark
 class RowsShiftSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def beforeAll(): Unit = {
     super.beforeAll()
-    spark.conf.set(GlobalRankRule.SmallFrameConf, "0")
+    spark.conf.set(KeyedWindowRule.SmallFrameConf, "0")
   }
   override def afterAll(): Unit = {
-    spark.conf.unset(GlobalRankRule.SmallFrameConf)
+    spark.conf.unset(KeyedWindowRule.SmallFrameConf)
     super.afterAll()
   }
 
@@ -54,10 +54,10 @@ class RowsShiftSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"WindowExec survived:\n${on.queryExecution.executedPlan}")
     val planStr = on.queryExecution.executedPlan.toString
     assert(planStr.contains("RunningAgg"), s"no running piece:\n$planStr")
-    spark.conf.set(GlobalRankRule.RewriteConf, "false")
+    spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "false")
     val off =
       try spark.sql(sql).collect().map(_.toString).sorted.toSeq
-      finally spark.conf.set(GlobalRankRule.RewriteConf, "true")
+      finally spark.conf.set(KeyedWindowRule.GlobalRewriteConf, "true")
     assert(onRows === off)
   }
 
@@ -146,7 +146,7 @@ class RowsShiftSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("plan-provably tiny frames keep the single-task window (cost guard)") {
-    spark.conf.unset(GlobalRankRule.SmallFrameConf) // restore default 4096
+    spark.conf.unset(KeyedWindowRule.SmallFrameConf) // restore default 4096
     try {
       val tiny = fixture.limit(50)
       tiny.createOrReplaceTempView("rshift_tiny")
@@ -156,6 +156,6 @@ class RowsShiftSpec extends AnyFunSuite with BeforeAndAfterAll {
           |FROM rshift_tiny""".stripMargin)
       assert(nodes(df).exists(_.isInstanceOf[WindowExec]),
         s"tiny frame must stay a window:\n${df.queryExecution.executedPlan}")
-    } finally spark.conf.set(GlobalRankRule.SmallFrameConf, "0")
+    } finally spark.conf.set(KeyedWindowRule.SmallFrameConf, "0")
   }
 }

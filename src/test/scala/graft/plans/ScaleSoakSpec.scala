@@ -61,7 +61,7 @@ class ScaleSoakSpec extends AnyFunSuite {
       assert(parts.toLong * 1023 <= 1000000L + 1023,
         s"coalescer did not bound: $parts partitions")
       assert(parts > 100, s"coalescer over-collapsed: $parts partitions")
-      val (hOff, nOff) = withConf(GlobalRankRule.RewriteConf -> "false") {
+      val (hOff, nOff) = withConf(KeyedWindowRule.GlobalRewriteConf -> "false") {
         checksum(q, "id", "v", "s")
       }
       assert((hOn, nOn) === (hOff, nOff), "coalesced rewrite diverged")
@@ -290,7 +290,7 @@ class ScaleSoakSpec extends AnyFunSuite {
     }
     def chain(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ chain(t.getCause)
-    assert(chain(ex).exists(_.contains(GlobalRankRule.MaxRangeRowsConf)),
+    assert(chain(ex).exists(_.contains(KeyedWindowRule.MaxRangeRowsConf)),
       s"expected the range-row refusal, got: ${chain(ex).mkString(" | ")}")
   }
 }

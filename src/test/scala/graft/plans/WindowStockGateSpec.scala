@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /** The input-size stock gate (OPTIMIZATION r16,
-  * [[GlobalRankRule.StockBytesConf]]): below the byte threshold, window
+  * [[KeyedWindowRule.StockBytesConf]]): below the byte threshold, window
   * shapes whose stock evaluation is LINEAR in the input keep Spark's
   * plan — the heal's fixed job cascade (range sampling + boundary
   * passes) never amortizes over a few MB — while RANGE value-distance
@@ -27,11 +27,11 @@ class WindowStockGateSpec extends AnyFunSuite with BeforeAndAfterAll {
     super.beforeAll()
     // isolate the SIZE gate from the maxRows guard (the range fixture
     // carries a maxRows proof that would keep stock on its own)
-    spark.conf.set(GlobalRankRule.SmallFrameConf, "0")
+    spark.conf.set(KeyedWindowRule.SmallFrameConf, "0")
   }
   override def afterAll(): Unit = {
-    spark.conf.unset(GlobalRankRule.SmallFrameConf)
-    spark.conf.set(GlobalRankRule.StockBytesConf, "0") // TestSpark default
+    spark.conf.unset(KeyedWindowRule.SmallFrameConf)
+    spark.conf.set(KeyedWindowRule.StockBytesConf, "0") // TestSpark default
     super.afterAll()
   }
 
@@ -54,8 +54,8 @@ class WindowStockGateSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def withGate[A](bytes: String)(f: => A): A = {
-    spark.conf.set(GlobalRankRule.StockBytesConf, bytes)
-    try f finally spark.conf.set(GlobalRankRule.StockBytesConf, "0")
+    spark.conf.set(KeyedWindowRule.StockBytesConf, bytes)
+    try f finally spark.conf.set(KeyedWindowRule.StockBytesConf, "0")
   }
 
   private def keyedRunning: DataFrame = {

@@ -1076,7 +1076,7 @@ class PlanAuditSpec extends AnyFunSuite {
           s"Window over ${w.child.nodeName}(maxRows=${w.child.maxRows})"
       }
     // detector self-check: a hand-built unpartitioned window MUST be
-    // seen, or the sweep below is vacuously green. The GlobalRankRule
+    // seen, or the sweep below is vacuously green. The no-key window
     // rewrite (round 10) would heal the probe before the detector looks,
     // so it is disabled FOR THE PROBE ONLY — and further probes pin that
     // with the rule active each family shape is in fact healed (probes
@@ -1086,16 +1086,16 @@ class PlanAuditSpec extends AnyFunSuite {
       import org.apache.spark.sql.functions.row_number
       def probe() = spark.range(100000)
         .withColumn("rn", row_number().over(Window.orderBy("id")))
-      spark.conf.set(graft.plans.GlobalRankRule.RewriteConf, "false")
+      spark.conf.set(graft.plans.KeyedWindowRule.GlobalRewriteConf, "false")
       val seen =
         try unpartitionedBig(probe())
-        finally spark.conf.set(graft.plans.GlobalRankRule.RewriteConf, "true")
+        finally spark.conf.set(graft.plans.KeyedWindowRule.GlobalRewriteConf, "true")
       assert(seen.nonEmpty,
         "sweep detector failed to see a known unpartitioned window")
       assert(unpartitionedBig(probe()).isEmpty &&
         unwrap(probe().queryExecution.executedPlan)
           .collect { case g if NoKey.rank(g) => g }.nonEmpty,
-        "GlobalRankRule should heal the probe's unpartitioned window")
+        "KeyedWindowRule should heal the probe's unpartitioned window")
       // the other family members must heal too — a running sum, a lag,
       // and a whole-frame total each planted and checked; and a
       // LIMIT-bounded frame is exempt by proof, not by rewrite
