@@ -387,15 +387,16 @@ private[plans] object WindowShapes {
   *     under `spark.graft.autoAnalyze.maxBytes` at registration, so
   *     dimension columns (`PARTITION BY n_name`) prove with zero setup;
   *   - a session NDV HINT (`spark.graft.keyedWindow.ndvHints`,
-  *     `name=ndv[,name=ndv…]`) — the handoff point for runtime stats
-  *     artifacts: the fixture loaders register their measured columns
-  *     via [[KeyedWindowRule.registerNdvHint]], making that knowledge
-  *     visible to plain SQL plans in the same session. Query builders
-  *     never register one (GraftSessionSpec guards this): the bar
+  *     `name=ndv[,name=ndv…]`, [[KeyedWindowRule.registerNdvHint]]) — a
+  *     fact a user declares. Hints match by column NAME, so they are
+  *     session-scoped facts the caller vouches for. Nothing in the
+  *     library registers one (GraftSessionSpec guards this): the bar
   *     queries' `PARTITION BY ativo` fires on the optimistic arm below,
   *     and the streaming arrival's touched-asset `IN` pin proves its key
-  *     count from the plan itself. Hints match by column NAME, so they
-  *     are session-scoped facts the caller vouches for.
+  *     count from the plan itself;
+  *   - a MEASURED ndv of the column in the file version the leaf scans
+  *     ([[FileEvidence]]), which the fixture loaders fill — it never
+  *     reaches a rewritten file or a same-named column of another file.
   *
   * A PROVABLY-high ndv leaves the plan with Spark: hash clustering at
   * high ndv is already parallel, and the rewrite's range sampling job +
@@ -566,11 +567,12 @@ case class KeyedWindowRule(session: SparkSession) extends Rule[LogicalPlan]
     * refuses the wager even though another component is unprovable —
     * `(o_custkey, month)` keeps Spark's hash-clustered Window once
     * `o_custkey` is measured high. Only MEASURED evidence (session
-    * hints, catalog/CBO distinct counts) counts: a domain UPPER bound
-    * (pmod k, IN-list pin) above `maxNdv` proves nothing about the
-    * floor. Shapes with O(partitions) driver state (running aggs and
-    * plain row_number/rank/dense_rank) stay eligible — their heal does
-    * not degrade with ndv, so high measurement is not a loss signal. */
+    * hints, file evidence, catalog/CBO distinct counts) counts: a
+    * domain UPPER bound (pmod k, IN-list pin) above `maxNdv` proves
+    * nothing about the floor. Shapes with O(partitions) driver state
+    * (running aggs and plain row_number/rank/dense_rank) stay eligible —
+    * their heal does not degrade with ndv, so high measurement is not a
+    * loss signal. */
   private def ndvUnprovable(keys: Seq[Expression], child: LogicalPlan,
                             ndvSensitive: Boolean): Boolean = {
     session.conf.get(OptimisticConf, "true") == "true" &&
@@ -1006,33 +1008,26 @@ case class KeyedWindowRule(session: SparkSession) extends Rule[LogicalPlan]
       }
   }
 
-  /** Hint lookup at a leaf relation: `table.column` keys first (scoped
-    * registration), then bare keys for any name the column carried on
-    * the walk down — which now only ever match a BASE column of a leaf
-    * (possibly renamed en route), never a same-named COMPUTED column
-    * elsewhere in the session. Catalog column stats on the leaf's
-    * CatalogTable are read directly (no CBO flag needed — the walk is
-    * ours, not the stats propagation framework's). */
+  /** Evidence at a leaf relation, in order: session hints under any
+    * name the column carried on the walk down — which only ever match a
+    * BASE column of a leaf (possibly renamed en route), never a
+    * same-named COMPUTED column elsewhere in the session; the measured
+    * ndv of the column in the file version the leaf scans
+    * ([[FileEvidence]]); the leaf's CatalogTable column stats, read
+    * directly (no CBO flag needed — the walk is ours, not the stats
+    * propagation framework's). */
   private def leafHint(a: Attribute, leaf: LogicalPlan,
                        hints: Map[String, Long],
                        names: Set[String]): Option[Long] = {
-    val tableName: Option[String] = leaf match {
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        r.catalogTable.map(_.identifier.table)
-      case _ => None
-    }
     val catalogNdv: Option[Long] = leaf match {
       case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         r.catalogTable.flatMap(_.stats).flatMap(_.colStats.get(a.name))
           .flatMap(_.distinctCount).map(_.toLong)
       case _ => None
     }
-    val allNames = names + a.name
-    tableName.flatMap(t =>
-        allNames.toSeq.sorted.iterator.map(n => hints.get(s"$t.$n"))
-          .collectFirst { case Some(v) => v })
-      .orElse(allNames.toSeq.sorted.iterator.map(hints.get)
-        .collectFirst { case Some(v) => v })
+    (names + a.name).toSeq.sorted.iterator.map(hints.get)
+      .collectFirst { case Some(v) => v }
+      .orElse(FileEvidence.ndv(leaf, a.name))
       .orElse(catalogNdv)
       .orElse(statsNdv(a, leaf))
   }
@@ -1156,13 +1151,13 @@ object KeyedWindowRule {
       }
     }.toMap
 
-  /** Record a measured ndv for `column` in the session hints — called by
-    * the fixture loaders for the columns they measure, so that knowledge
+  /** Declare an ndv for `column` in the session hints, so that knowledge
     * reaches plain SQL plans. Session-scoped; consulted only where the
-    * named column is a BASE column of a leaf relation. Pass `column` as
-    * `"table.column"` to scope the hint to one catalog table. */
+    * named column is a BASE column of a leaf relation. Measured facts of
+    * a file belong in [[FileEvidence]] instead, which the fixture loaders
+    * fill. */
   def registerNdvHint(spark: SparkSession, column: String, ndv: Long): Unit =
-    // one read-merge-write at a time, so concurrent loaders cannot drop
+    // one read-merge-write at a time, so concurrent callers cannot drop
     // each other's hint; a hint already held costs no conf write
     hintLock.synchronized {
       val hints = parseHints(spark.conf.get(NdvHintsConf, ""))

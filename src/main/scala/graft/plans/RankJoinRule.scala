@@ -1,5 +1,7 @@
 package graft.plans
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter, RightOuter}
@@ -39,11 +41,12 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * r15 #1) a registered COMPOSITE key jointly covered by the pairings:
   * `lineitem`-shaped tables whose only key is `(k₁, k₂)` collapse when
   * the join pairs both, and refuse when it pairs either alone.
-  * Uniqueness is never assumed — it must be MEASURED evidence:
-  * [[RankJoinRule.registerUniqueHint]] / [[RankJoinRule.measureAndRegister]]
-  * (table loaders register it when `countDistinct(struct(cols)) ==
-  * count(*)`, the same measured-once discipline as the ndv hints),
-  * consulted only where the paired columns trace to BASE columns of the
+  * Uniqueness is never assumed — it must be MEASURED evidence of the
+  * file version the twin scans ([[FileEvidence]], filled by the table
+  * loaders and [[RankJoinRule.measureAndRegister]] when
+  * `countDistinct(struct(cols)) == count(*)`), or a session-wide
+  * declaration ([[RankJoinRule.registerUniqueHint]]), consulted only
+  * where the paired columns trace to BASE columns of the
   * twin relation through pure renames and filters (both
   * uniqueness-preserving — a subset of distinct tuples is still
   * distinct; joins/aggregates/unions stop the walk). With a unique
@@ -274,24 +277,21 @@ case class RankJoinRule(session: SparkSession) extends Rule[LogicalPlan]
     * EXTRA columns only narrows the match further: a superset of a
     * unique key is unique).
     *
-    * Uniqueness drives a MULTIPLICITY-changing rewrite, so unlike the
-    * perf-only ndv hints its blast radius must be scoped: a PATH-SCOPED
-    * entry (what the table loaders register) matches only when the
-    * scan's root-path set EQUALS the entry's — uniqueness measured on
-    * file A proves nothing about a scan of A ∪ B, in either direction.
-    * A BARE entry matches any leaf carrying those columns — the
-    * explicit caller-vouches-for-the-session mode (tests, notebooks),
-    * never what the library registers on its own. */
+    * Uniqueness drives a MULTIPLICITY-changing rewrite, so its blast
+    * radius must be scoped: MEASURED evidence ([[FileEvidence]]) matches
+    * only the file version it was measured on — uniqueness measured on
+    * file A proves nothing about a scan of A ∪ B, nor about A rewritten
+    * in place. A declared set (`spark.graft.uniqueCols`) matches any leaf
+    * carrying those columns — the explicit caller-vouches-for-the-session
+    * mode (tests, notebooks), never what the library registers on its
+    * own. */
   private def pairingsProven(pairings: Seq[Attribute], plan: LogicalPlan,
-                             evidence: Set[UniqueEvidence]): Boolean = {
+                             declared: Set[Set[String]]): Boolean = {
     val traced = pairings.flatMap(a => RankJoinRule.traceToLeaf(a, plan))
     traced.groupBy(_._1).exists { case (leaf, cs) =>
       val names = cs.map(_._2).toSet
-      lazy val paths = RankJoinRule.leafPathsOf(leaf)
-      evidence.exists { ev =>
-        ev.cols.nonEmpty && ev.cols.subsetOf(names) &&
-          ev.paths.forall(ps => ps.nonEmpty && ps == paths)
-      }
+      (declared.iterator ++ FileEvidence.uniqueSets(leaf))
+        .exists(c => c.nonEmpty && c.subsetOf(names))
     }
   }
 
@@ -329,8 +329,9 @@ case class RankJoinRule(session: SparkSession) extends Rule[LogicalPlan]
   }
 
   private def rewrite(j: Join): Option[LogicalPlan] = {
-    val uniques = parseUniques(session.conf.get(UniqueHintsConf, ""))
-    if (uniques.isEmpty) return None // no evidence, no wager — cheap exit
+    val declared = parseUniques(session.conf.get(UniqueHintsConf, ""))
+    // no evidence, no wager — cheap exit
+    if (declared.isEmpty && !FileEvidence.anyUnique) return None
 
     // orient: which side peels as the rank subquery? For OUTER joins
     // the rank side must be the NON-PRESERVED side ("flag the top-n
@@ -413,7 +414,7 @@ case class RankJoinRule(session: SparkSession) extends Rule[LogicalPlan]
 
     // the wager's evidence: the paired probe columns jointly cover a
     // measured-unique column set (single or composite) of the leaf
-    if (!pairingsProven(pairings, probe, uniques)) return None
+    if (!pairingsProven(pairings, probe, declared)) return None
 
     // ---- rewrite ----
     // twin the window spec onto the probe lineage
@@ -512,133 +513,66 @@ object RankJoinRule {
   /** ON by default; set false to keep the two-scan join plan. */
   val RewriteConf = "spark.graft.rankJoin.rewrite"
 
-  /** Session uniqueness evidence consumed by [[RankJoinRule]]:
+  /** Session-wide uniqueness a caller DECLARES for [[RankJoinRule]]:
     * comma-separated entries, each
     *
-    * {{{ enc(col)[+enc(col)…][@@enc(path)[;enc(path)…]] }}}
+    * {{{ enc(col)[+enc(col)…] }}}
     *
     * — a SET of column names (a composite key when more than one),
-    * optionally scoped to the exact root-path set of one scan. Every
-    * segment is URL-encoded (`%XX`, space as `%20`) so names and paths
-    * containing the separators `,` `+` `@@` `;` round-trip intact
-    * (ADVICE r15). Matching rules (implemented in `pairingsProven`):
-    * the entry's columns must be covered by the join's pairing set,
-    * each pairing traced to the LEAF attribute's OWN name — a rename
-    * never inherits another column's proof — and a path-scoped entry
-    * matches only a scan whose root-path set EQUALS the entry's.
-    * BARE (path-less) entries vouch for every leaf in the session —
-    * the explicit caller-opt-in mode (tests, notebooks), never what
-    * the library registers on its own. Register MEASURED evidence only,
-    * through [[registerUniqueHint]] or [[measureAndRegister]]; don't
-    * hand-write the conf unless the segments are already encoded. */
+    * jointly unique in EVERY leaf that carries them: the explicit
+    * caller-opt-in mode (tests, notebooks). Every name is URL-encoded
+    * (`%XX`, space as `%20`) so names containing the separators `,` `+`
+    * round-trip intact (ADVICE r15). An entry's columns must be covered
+    * by the join's pairing set, each pairing traced to the LEAF
+    * attribute's OWN name — a rename never inherits another column's
+    * proof. Measured uniqueness of one file version lives in
+    * [[FileEvidence]] instead ([[measureAndRegister]]). Register through
+    * [[registerUniqueHint]]; don't hand-write the conf unless the names
+    * are already encoded. */
   val UniqueHintsConf = "spark.graft.uniqueCols"
-
-  /** One parsed evidence entry: the column name SET is jointly unique
-    * in the relation at `paths` (None = session-wide caller voucher). */
-  final case class UniqueEvidence(cols: Set[String], paths: Option[Set[String]])
 
   private def enc(s: String): String =
     java.net.URLEncoder.encode(s, "UTF-8").replace("+", "%20")
   private def dec(s: String): String =
-    try java.net.URLDecoder.decode(s, "UTF-8") catch { case _: Throwable => s }
+    try java.net.URLDecoder.decode(s, "UTF-8") catch { case NonFatal(_) => s }
 
-  /** Canonical wire form (columns deduped + sorted, paths normalized +
-    * sorted, all segments encoded) so register/remove round-trip. */
-  private def entryOf(columns: Seq[String], paths: Option[Seq[String]]): String = {
-    val cols = columns.distinct.sorted.map(enc).mkString("+")
-    paths match {
-      case Some(ps) =>
-        s"$cols@@${ps.map(normalizePath).distinct.sorted.map(enc).mkString(";")}"
-      case None => cols
-    }
-  }
+  def parseUniques(s: String): Set[Set[String]] =
+    s.split(',').iterator.map(_.trim).filter(_.nonEmpty)
+      .map(_.split('+').iterator.map(dec).filter(_.nonEmpty).toSet).toSet
 
-  def parseUniques(s: String): Set[UniqueEvidence] =
-    s.split(',').iterator.map(_.trim).filter(_.nonEmpty).map { e =>
-      val at = e.indexOf("@@")
-      val (colsPart, pathsPart) =
-        if (at > 0) (e.substring(0, at), Some(e.substring(at + 2))) else (e, None)
-      UniqueEvidence(
-        colsPart.split('+').iterator.map(dec).filter(_.nonEmpty).toSet,
-        pathsPart.map(_.split(';').iterator.map(p => normalizePath(dec(p)))
-          .filter(_.nonEmpty).toSet))
-    }.toSet
-
-  /** Record measured uniqueness for `column` — called after verifying
-    * `countDistinct(column) == count(*)` on the actual data (the
-    * ndv-hint discipline: evidence, never declaration). The BARE form
-    * vouches for every leaf column of that name in the session
-    * (tests/notebooks); pass `path` to scope the evidence to one file —
-    * what the library's own loaders always do, because a same-named
-    * column in a DIFFERENT file may not be unique and this hint changes
-    * result multiplicity, not just the plan's cost. Either way the name
-    * must be the LEAF column's OWN name: a rename (`SELECT _1 AS id` —
-    * every tuple-Dataset `toDF`) never inherits evidence, because the
-    * identical shape is also how a non-unique column would wear a
-    * registered name. Prefer [[measureAndRegister]], which measures,
-    * scopes, and name-resolves in one call. */
+  /** Declare `column` unique in every leaf of the session that carries
+    * it — the caller vouches for it, having verified `countDistinct ==
+    * count(*)` (evidence, never guesswork). The name must be the LEAF
+    * column's OWN name: a rename (`SELECT _1 AS id` — every tuple-Dataset
+    * `toDF`) never inherits evidence, because the identical shape is also
+    * how a non-unique column would wear a registered name. Prefer
+    * [[measureAndRegister]], which measures, scopes to the file version,
+    * and name-resolves in one call. */
   def registerUniqueHint(spark: SparkSession, column: String): Unit =
-    registerEntry(spark, entryOf(Seq(column), None))
-
-  def registerUniqueHint(spark: SparkSession, column: String,
-                         path: String): Unit =
-    registerEntry(spark, entryOf(Seq(column), Some(Seq(path))))
-
-  /** Composite-key form (VERDICT r15 #1): `columns` is a column SET
-    * verified jointly unique — `countDistinct(struct(c₁…cₙ)) ==
-    * count(*)` — on the file at `path`. A rank self-join collapses when
-    * its pairings COVER the set; pairing any strict subset proves
-    * nothing and refuses. */
-  def registerUniqueHint(spark: SparkSession, columns: Seq[String],
-                         path: String): Unit =
-    registerEntry(spark, entryOf(columns, Some(Seq(path))))
-
-  // register/remove: one read-merge-write at a time, so concurrent
-  // loaders cannot drop each other's entry; a no-op merge writes nothing
-  private def registerEntry(spark: SparkSession, entry: String): Unit =
+    // one read-merge-write at a time, so concurrent callers cannot drop
+    // each other's entry; an entry already held costs no conf write
     hintLock.synchronized {
-      val entries = rawEntries(spark.conf.get(UniqueHintsConf, ""))
+      val entry = enc(column)
+      val entries = spark.conf.get(UniqueHintsConf, "").split(',')
+        .iterator.map(_.trim).filter(_.nonEmpty).toSet
       if (!entries(entry))
         spark.conf.set(UniqueHintsConf, (entries + entry).mkString(","))
     }
 
   private val hintLock = new Object
 
-  private def rawEntries(s: String): Set[String] =
-    s.split(',').iterator.map(_.trim).filter(_.nonEmpty).toSet
-
-  /** Withdraw the path-scoped evidence for (column(s), path) — called
-    * by table loaders when a RE-MEASURE (new file stamp at the same
-    * path) finds the column(s) no longer unique: a stale entry would
-    * keep collapsing joins on a file that now holds duplicates, the
-    * exact wrong-multiset hazard the scoping exists to prevent. */
-  def removeUniqueHint(spark: SparkSession, column: String,
-                       path: String): Unit =
-    removeEntry(spark, entryOf(Seq(column), Some(Seq(path))))
-
-  def removeUniqueHint(spark: SparkSession, columns: Seq[String],
-                       path: String): Unit =
-    removeEntry(spark, entryOf(columns, Some(Seq(path))))
-
-  private def removeEntry(spark: SparkSession, entry: String): Unit =
-    hintLock.synchronized {
-      val entries = rawEntries(spark.conf.get(UniqueHintsConf, ""))
-      if (entries(entry))
-        spark.conf.set(UniqueHintsConf, (entries - entry).mkString(","))
-    }
-
   /** The one-call path from PlanLint's `self-join-window` finding to
-    * registered evidence (VERDICT r15 #5): measure
+    * measured evidence (VERDICT r15 #5): measure
     * `countDistinct(struct(columns…)) == count(*)` EXACTLY on `df` and
-    * register the outcome scoped to the scanned file(s). Returns true
-    * when unique (evidence registered), false when not (any stale entry
-    * for the same columns and paths is withdrawn).
+    * record the outcome in [[FileEvidence]] for the file version `df`
+    * scans. Returns true when unique, false when not. A later rewrite of
+    * the file is a new version that this evidence never reaches.
     *
     * `df` must be a BARE scan — aliases and pure column selections are
     * fine; filters, joins, and computed columns refuse — so the
     * measurement describes the FILE, not a subset that happens to be
-    * duplicate-free: evidence scoped to a path licenses collapses for
-    * EVERY scan of that path.
+    * duplicate-free: evidence of a file version licenses collapses for
+    * EVERY scan of that version.
     *
     * Exact, never ANALYZE's HLL++ distinct estimate: this evidence
     * licenses a MULTIPLICITY-changing rewrite, and a sketch that
@@ -668,11 +602,12 @@ object RankJoinRule {
         "column selections only) — a filtered or derived frame proves " +
         "nothing about the underlying file, and this evidence changes " +
         "result multiplicity. Measure on spark.read.<format>(path) directly."))
-    val paths = leafPathsOf(leaf)
-    if (paths.isEmpty) throw new IllegalArgumentException(
-      "measureAndRegister: the scan has no file root paths to scope the " +
-        "evidence to (in-memory or non-file relation). If you vouch for the " +
-        "whole session, call registerUniqueHint(spark, column) explicitly.")
+    val at = FileEvidence.versionOf(leaf).filter(_.paths.nonEmpty).getOrElse(
+      throw new IllegalArgumentException(
+        "measureAndRegister: the scan has no file root paths to scope the " +
+          "evidence to (in-memory or non-file relation). If you vouch for " +
+          "the whole session, call registerUniqueHint(spark, column) " +
+          "explicitly."))
     val resolver = df.sparkSession.sessionState.analyzer.resolver
     val leafNames = columns.map { c =>
       val attr = plan.output.find(a => resolver(a.name, c)).getOrElse(
@@ -689,8 +624,7 @@ object RankJoinRule {
       countDistinct(struct(columns.map(col): _*)).as("d"),
       count(lit(1)).as("n")).collect()(0)
     val unique = r.getLong(0) == r.getLong(1) && r.getLong(1) > 0L
-    if (unique) registerEntry(df.sparkSession, entryOf(leafNames, Some(paths.toSeq)))
-    else removeEntry(df.sparkSession, entryOf(leafNames, Some(paths.toSeq)))
+    FileEvidence.putUnique(at, leafNames, unique)
     unique
   }
 
@@ -712,37 +646,5 @@ object RankJoinRule {
     case Filter(_, gc) => traceToLeaf(a, gc)
     case l: LeafNode if l.outputSet.contains(a) => Some((l, a.name))
     case _ => None
-  }
-
-  /** The scan's root paths, normalized; empty for non-file leaves. */
-  private[plans] def leafPathsOf(l: LeafNode): Set[String] = l match {
-    case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-      r.relation match {
-        case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-          fs.location.rootPaths.map(p => normalizePath(p.toString)).toSet
-        case _ => Set.empty
-      }
-    case _ => Set.empty
-  }
-
-  /** Canonical path form so registration and the scan's rootPaths
-    * compare equal: local paths (bare or `file:`) become scheme-less
-    * absolute paths via Hadoop's Path normalization (`//`, trailing
-    * `/`, `.` segments collapse); non-file URIs (`s3a://`, `hdfs://`…)
-    * pass through Path normalization UNTOUCHED in scheme and authority
-    * — never through java.io.File, which would mangle them into
-    * cwd-relative strings (ADVICE r15). Idempotent. */
-  def normalizePath(p: String): String = {
-    try {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      val uri = hp.toUri
-      uri.getScheme match {
-        case null =>
-          new org.apache.hadoop.fs.Path(
-            new java.io.File(p).getAbsolutePath).toUri.getPath
-        case "file" => hp.toUri.getPath
-        case _ => hp.toString
-      }
-    } catch { case _: Throwable => p }
   }
 }

@@ -1,10 +1,15 @@
 package graft.tables
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType,
   TimestampType}
+
+import graft.plans.FileEvidence
+import graft.util.ArtifactStore
 
 /** Whether a [[Tables]] loader applies the scan-parallelism heal
   * ([[Tables.table]]). Chosen per load by the query that builds the
@@ -25,7 +30,9 @@ object Scan {
   * A plain `spark.read.parquet(path)` infers the schema from the footers
   * with one Spark job on every call; the loaders instead pass the reader
   * a schema memoised per file version ([[fileSchema]]), so a warm load
-  * launches no job — the catalog's "crawl once, query many" split.
+  * launches no job — the catalog's "crawl once, query many" split. The
+  * loaders of keyed tables also measure column facts of the file version
+  * into [[FileEvidence]], once per version, and write no session conf.
   * Catalyst handles column pruning and filter pushdown, so callers
   * should select/filter on the returned DataFrame rather than pre-trim here.
   */
@@ -76,14 +83,47 @@ object Tables {
     * different summation order.
     */
   def table(spark: SparkSession, sfDir: String, name: String,
-            scan: Scan = Scan.Stock): DataFrame = {
-    val path = s"$sfDir/$name.parquet"
-    val files = dataFiles(spark, path)
-    val df = spark.read.schema(fileSchema(spark, path, files)).parquet(path)
+            scan: Scan = Scan.Stock): DataFrame =
+    load(spark, sfDir, name, scan)
+
+  /** [[table]] from ONE listing of the file, which also keys the
+    * measured evidence of that version in [[FileEvidence]]: the distinct
+    * count of each `ndv` column and the joint uniqueness of each `unique`
+    * column set, measured once per (file version, columns) through
+    * [[graft.util.ArtifactStore]] — the fixture-dir analogue of catalog
+    * `ANALYZE … FOR COLUMNS` (path reads have no CatalogTable, so catalog
+    * stats can never prove them). The evidence is honest in both
+    * directions: a measured low count lets `PARTITION BY <column>` heal
+    * as a PROVEN plan, a measured high count keeps Spark's already
+    * parallel hash window, and a key set measured non-unique lets no
+    * rank self-join collapse. Uniqueness is `countDistinct(struct(c₁…cₙ))
+    * == count(*)`, EXACT (see RankJoinRule.measureAndRegister for why a
+    * sketch estimate is unsound here). */
+  private def load(s: SparkSession, d: String, name: String, scan: Scan,
+                   ndv: Seq[String] = Nil,
+                   unique: Seq[Seq[String]] = Nil): DataFrame = {
+    val path = s"$d/$name.parquet"
+    val files = dataFiles(s, path)
+    val v = FileEvidence.version(files.toSeq)
+    val df = s.read.schema(fileSchema(s, path, v)).parquet(path)
+    val at = FileEvidence.FileVersion(Set(FileEvidence.normalizePath(path)), v)
+    ndv.filter(FileEvidence.ndvOf(at, _).isEmpty).foreach { c =>
+      FileEvidence.putNdv(at, c, ArtifactStore.getOrCompute(s, "col_ndv",
+        Seq(d, v, name, c), ArtifactStore.LongsCodec) {
+        Seq(df.select(c).distinct().count())
+      }.head)
+    }
+    unique.filter(FileEvidence.uniqueOf(at, _).isEmpty).foreach { cs =>
+      val m = ArtifactStore.getOrCompute(s, "col_unique",
+        Seq(d, v, name, cs.sorted.mkString("+")), ArtifactStore.LongsCodec) {
+        Seq(df.select(cs.map(col): _*).distinct().count(), df.count())
+      }
+      FileEvidence.putUnique(at, cs, m.length == 2 && m(0) == m(1) && m(1) > 0L)
+    }
     val key = scanKeys.getOrElse(name, Seq.empty)
     if (scan == Scan.Stock || key.isEmpty) df
     else {
-      val n = scanTarget(spark, path, files)
+      val n = scanTarget(s, path, files, v)
       if (n <= 0) df else df.repartition(n, key.map(col): _*)
     }
   }
@@ -99,12 +139,6 @@ object Tables {
     else fs.listStatus(p).filter(f => f.isFile &&
       !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
   }
-
-  /** One version of a table: every data file's name, length and
-    * modification time. A file rewritten in place is a new version. */
-  private def version(files: Array[FileStatus]): String =
-    files.map(f => s"${f.getPath.getName}:${f.getLen}-${f.getModificationTime}")
-      .sorted.mkString(";")
 
   /** The session confs that change the schema Spark infers from parquet
     * footers (the inputs of its `ParquetToSparkSchemaConverter`, plus
@@ -127,10 +161,10 @@ object Tables {
     * re-implemented, so the types are exactly what an unhinted read
     * would give. */
   private def fileSchema(s: SparkSession, path: String,
-                         files: Array[FileStatus]): StructType = {
+                         version: String): StructType = {
     val confs = InferenceConfs.map(k => s.conf.getOption(k).getOrElse(""))
     schemaMemo.computeIfAbsent(
-      s"$path@${version(files)}@${confs.mkString(",")}",
+      s"$path@$version@${confs.mkString(",")}",
       _ => s.read.parquet(path).schema)
   }
 
@@ -157,9 +191,9 @@ object Tables {
     * files — a handful of footer reads, never a data scan.
     */
   private def scanTarget(s: SparkSession, path: String,
-                         files: Array[FileStatus]): Int = {
+                         files: Array[FileStatus], version: String): Int = {
     val cores = s.sparkContext.defaultParallelism
-    scanTargetMemo.computeIfAbsent(s"$path@${version(files)}@$cores", _ => {
+    scanTargetMemo.computeIfAbsent(s"$path@$version@$cores", _ => {
       try {
         if (files.length >= cores) 0
         else {
@@ -177,7 +211,7 @@ object Tables {
           }
           if (groups >= cores || rows < MinRowsPerCore * cores) 0 else cores
         }
-      } catch { case _: Throwable => 0 } // unreadable layout: leave stock
+      } catch { case NonFatal(_) => 0 } // unreadable layout: leave stock
     })
   }
 
@@ -192,7 +226,7 @@ object Tables {
     * wrong answer.)
     */
   def stamp(s: SparkSession, sfDir: String, name: String): String =
-    version(dataFiles(s, s"$sfDir/$name.parquet"))
+    FileEvidence.version(dataFiles(s, s"$sfDir/$name.parquet").toSeq)
 
   def region(s: SparkSession, d: String, scan: Scan = Scan.Stock): DataFrame =
     table(s, d, "region", scan)
@@ -201,123 +235,34 @@ object Tables {
   // primary keys carry measured-uniqueness evidence (ndv == rowcount on
   // the actual file) so rank-join collapses fire on customer/supplier/
   // part self-joins exactly as they do on orders — evidence breadth,
-  // one artifact-cached measurement per (file stamp, column)
-  def customer(s: SparkSession, d: String, scan: Scan = Scan.Stock): DataFrame = {
-    registerMeasuredUnique(s, d, "customer", "c_custkey")
-    table(s, d, "customer", scan)
-  }
-  def supplier(s: SparkSession, d: String, scan: Scan = Scan.Stock): DataFrame = {
-    registerMeasuredUnique(s, d, "supplier", "s_suppkey")
-    table(s, d, "supplier", scan)
-  }
-  def part(s: SparkSession, d: String, scan: Scan = Scan.Stock): DataFrame = {
-    registerMeasuredUnique(s, d, "part", "p_partkey")
-    table(s, d, "part", scan)
-  }
-  def orders(s: SparkSession, d: String, scan: Scan = Scan.Stock): DataFrame = {
-    // o_custkey is the key real top-n / argmax spellings partition by
-    // (x140/x142/x143); its measured count is HIGH at every fixture SF,
-    // so registering it is refusal evidence — the keyed-window family's
-    // lower-bound reasoning (ndv(k1..kn) >= max ndv(ki)) keeps Spark's
-    // hash-clustered Window for composites like (o_custkey, month)
-    // instead of wagering on the zero-exchange heal (VERDICT r14 #1).
-    registerMeasuredNdv(s, d, "orders", "o_custkey")
-    // o_orderkey is the primary key the rank-subquery JOIN spelling
-    // pairs on (x145): measured-unique evidence (ndv == rowcount) lets
-    // RankJoinRule collapse the self-join to one windowed scan.
-    registerMeasuredUnique(s, d, "orders", "o_orderkey")
-    table(s, d, "orders", scan)
-  }
-  def lineitem(s: SparkSession, d: String, scan: Scan = Scan.Stock): DataFrame = {
-    registerMeasuredNdv(s, d, "lineitem", "l_suppkey")
-    // composite-key evidence (VERDICT r15 #1): lineitem's only candidate
-    // keys are composite, so both are MEASURED — registration fires iff
-    // the data proves joint uniqueness. In the driver fixtures
-    // (l_orderkey, l_linenumber) is NOT unique (measured: 45,832
-    // distinct pairs over 60,000 rows at sf0.01), so its entry never
-    // registers and rank self-joins pairing it alone correctly refuse;
-    // the 4-column set is unique at sf ≥ 0.01 and registers there.
-    registerMeasuredUniqueSet(s, d, "lineitem",
-      Seq("l_orderkey", "l_linenumber"))
-    registerMeasuredUniqueSet(s, d, "lineitem",
-      Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"))
-    table(s, d, "lineitem", scan)
-  }
-
-  /** Measured-once column ndv, registered as a [[graft.plans.KeyedWindowRule]]
-    * session hint — the fixture-dir analogue of catalog `ANALYZE … FOR
-    * COLUMNS` (path reads have no CatalogTable, so catalog stats can
-    * never prove them). One distinct-count per (fixture stamp, column),
-    * persisted through [[graft.util.ArtifactStore]] and memoized per
-    * session, so repeat query builds cost a Set lookup. The hint is
-    * HONEST evidence in both directions: a measured low count lets
-    * `PARTITION BY <column>` heal as a PROVEN plan (no runtime pre-pass),
-    * a measured high count keeps Spark's already-parallel hash window
-    * instead of an optimistic re-plan that could only add overhead. */
-  private val ndvMeasured =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private def registerMeasuredNdv(s: SparkSession, d: String,
-                                  name: String, column: String): Unit = {
-    val memoKey = s"$d/$name/$column/${stamp(s, d, name)}"
-    // memoize the MEASUREMENT only — the hint itself is re-checked on
-    // every load, and written only when missing: session confs are mutable
-    // state anything may reset (a test battery, a conf sweep, a
-    // library caller), and a registration that survives only as a
-    // memo flag silently loses the evidence for the rest of the
-    // session (caught by the r15 full-suite run)
-    val v = ndvMeasured.computeIfAbsent(memoKey, _ =>
-      graft.util.ArtifactStore.getOrCompute(s, "col_ndv",
-        Seq(d, stamp(s, d, name), name, column),
-        graft.util.ArtifactStore.LongsCodec) {
-        Seq(table(s, d, name).select(column).distinct().count())
-      }.head)
-    graft.plans.KeyedWindowRule.registerNdvHint(s, column, v)
-  }
-
-  /** Measured-once column UNIQUENESS, registered as a
-    * [[graft.plans.RankJoinRule]] session hint when — and only when —
-    * the data proves it: `countDistinct(column) == count(*)` on the
-    * actual fixture file (persisted through the ArtifactStore under the
-    * file stamp, so a regenerated fixture re-measures). Evidence, not
-    * declaration: a fixture written with duplicate keys simply never
-    * registers, and the rank-join collapse refuses. */
-  private val uniqueMeasured =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-  private def registerMeasuredUnique(s: SparkSession, d: String,
-                                     name: String, column: String): Unit =
-    registerMeasuredUniqueSet(s, d, name, Seq(column))
-
-  /** Composite form (VERDICT r15 #1): joint uniqueness of a column SET
-    * — `countDistinct(struct(c₁…cₙ)) == count(*)` on the actual file,
-    * EXACT (see RankJoinRule.measureAndRegister for why a sketch
-    * estimate is unsound here). Single columns are the n = 1 case. */
-  private def registerMeasuredUniqueSet(s: SparkSession, d: String,
-                                        name: String,
-                                        columns: Seq[String]): Unit = {
-    val colKey = columns.sorted.mkString("+")
-    val memoKey = s"$d/$name/$colKey/${stamp(s, d, name)}"
-    // measurement memoized, hint re-applied per load — see
-    // registerMeasuredNdv for why
-    val unique = uniqueMeasured.computeIfAbsent(memoKey, _ => {
-      val v = graft.util.ArtifactStore.getOrCompute(s, "col_unique",
-        Seq(d, stamp(s, d, name), name, colKey),
-        graft.util.ArtifactStore.LongsCodec) {
-        val t = table(s, d, name)
-        Seq(t.select(columns.map(col): _*).distinct().count(), t.count())
-      }
-      v.length == 2 && v(0) == v(1) && v(1) > 0L
-    })
-    // path-scoped: uniqueness changes result multiplicity, so the
-    // evidence must name the exact file it was measured on — a
-    // same-named column in another parquet may not be unique. A
-    // NON-unique re-measure (regenerated fixture, new stamp, same
-    // path) WITHDRAWS any stale entry for the path: evidence must
-    // track the file it describes in both directions.
-    if (unique) graft.plans.RankJoinRule.registerUniqueHint(
-      s, columns, s"$d/$name.parquet")
-    else graft.plans.RankJoinRule.removeUniqueHint(
-      s, columns, s"$d/$name.parquet")
-  }
+  // one artifact-cached measurement per (file version, column)
+  def customer(s: SparkSession, d: String, scan: Scan = Scan.Stock): DataFrame =
+    load(s, d, "customer", scan, unique = Seq(Seq("c_custkey")))
+  def supplier(s: SparkSession, d: String, scan: Scan = Scan.Stock): DataFrame =
+    load(s, d, "supplier", scan, unique = Seq(Seq("s_suppkey")))
+  def part(s: SparkSession, d: String, scan: Scan = Scan.Stock): DataFrame =
+    load(s, d, "part", scan, unique = Seq(Seq("p_partkey")))
+  // o_custkey is the key real top-n / argmax spellings partition by
+  // (x140/x142/x143); its measured count is HIGH at every fixture SF, so
+  // it is refusal evidence — the keyed-window family's lower-bound
+  // reasoning (ndv(k1..kn) >= max ndv(ki)) keeps Spark's hash-clustered
+  // Window for composites like (o_custkey, month) instead of wagering on
+  // the zero-exchange heal (VERDICT r14 #1). o_orderkey is the primary
+  // key the rank-subquery JOIN spelling pairs on (x145): measured-unique
+  // evidence lets RankJoinRule collapse the self-join to one windowed scan.
+  def orders(s: SparkSession, d: String, scan: Scan = Scan.Stock): DataFrame =
+    load(s, d, "orders", scan, ndv = Seq("o_custkey"),
+      unique = Seq(Seq("o_orderkey")))
+  // composite-key evidence (VERDICT r15 #1): lineitem's only candidate
+  // keys are composite, so both are MEASURED — the evidence holds iff the
+  // data proves joint uniqueness. In the driver fixtures (l_orderkey,
+  // l_linenumber) is NOT unique (measured: 45,832 distinct pairs over
+  // 60,000 rows at sf0.01), so rank self-joins pairing it alone correctly
+  // refuse; the 4-column set is unique at sf ≥ 0.01.
+  def lineitem(s: SparkSession, d: String, scan: Scan = Scan.Stock): DataFrame =
+    load(s, d, "lineitem", scan, ndv = Seq("l_suppkey"),
+      unique = Seq(Seq("l_orderkey", "l_linenumber"),
+        Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")))
 
   /** Normalize `events.ts` to TimestampType whatever the fixture vintage
     * wrote: older driver runs produced parquet TIMESTAMP(NANOS), which
@@ -330,17 +275,15 @@ object Tables {
     * micros engine) reads the same file.
     */
   def events(s: SparkSession, d: String, scan: Scan = Scan.Stock): DataFrame = {
-    registerMeasuredNdv(s, d, "events", "user_id")
     // evidence breadth (r16): event_id is the event log's primary key —
     // measured on the file, so rank self-joins on the events table
     // ("each user's top-k events by value" written the x145 way)
     // collapse exactly as on orders/documents. The (user_id, ts)
-    // composite is registered too (true of the file) but only reaches
+    // composite is measured too (true of the file) but only reaches
     // RAW scans: this loader rewrites ts into a computed column below,
     // and computed columns rightly carry no uniqueness proof.
-    registerMeasuredUnique(s, d, "events", "event_id")
-    registerMeasuredUniqueSet(s, d, "events", Seq("user_id", "ts"))
-    val raw = table(s, d, "events", scan)
+    val raw = load(s, d, "events", scan, ndv = Seq("user_id"),
+      unique = Seq(Seq("event_id"), Seq("user_id", "ts")))
     raw.schema("ts").dataType match {
       case LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -349,12 +292,10 @@ object Tables {
       case _ => raw
     }
   }
-  def documents(s: SparkSession, d: String, scan: Scan = Scan.Stock): DataFrame = {
-    // doc_id uniqueness powers rank-join collapses on the corpus table
-    // ("top-n docs per lang by score" written as a self-join)
-    registerMeasuredUnique(s, d, "documents", "doc_id")
-    table(s, d, "documents", scan)
-  }
+  // doc_id uniqueness powers rank-join collapses on the corpus table
+  // ("top-n docs per lang by score" written as a self-join)
+  def documents(s: SparkSession, d: String, scan: Scan = Scan.Stock): DataFrame =
+    load(s, d, "documents", scan, unique = Seq(Seq("doc_id")))
   def embeddings(s: SparkSession, d: String, scan: Scan = Scan.Stock): DataFrame =
     table(s, d, "embeddings", scan)
 }

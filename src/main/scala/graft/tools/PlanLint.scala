@@ -129,14 +129,14 @@ object PlanLint {
         else if (sameRel && (hasWindow(j.left) || hasWindow(j.right)))
           // the rank-subquery JOIN spelling (r15): same relation on
           // both sides, one windowed — collapses to one scan when a
-          // paired column's uniqueness is registered evidence
+          // paired column's uniqueness is measured evidence
           out += Finding("self-join-window", "info", j.nodeName,
             "both join sides scan the same relation and one windows " +
               "it; the rank-subquery top-n spelling collapses to one " +
               "windowed scan under measured key uniqueness - one call: " +
               "RankJoinRule.measureAndRegister(spark.read.parquet(path), " +
-              "keyCols...) measures exact distinctness and registers " +
-              "path-scoped evidence (spark.graft.rankJoin.rewrite)")
+              "keyCols...) measures exact distinctness and records it " +
+              "for that file version (spark.graft.rankJoin.rewrite)")
       case _ =>
     }
     out += Finding("shuffle-census", "info", "plan",

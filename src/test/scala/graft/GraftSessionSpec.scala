@@ -40,23 +40,30 @@ class GraftSessionSpec extends AnyFunSuite {
     val root = Paths.get("src/main/scala/graft")
     val builders = sources(root, "SparkEntry.*\\.scala")
     assert(builders.size > 2, s"run from the repo root; no builders under $root")
-    val confWriters = (builders :+ root.resolve("tables/Tables.scala"))
+    val loaders = root.resolve("tables/Tables.scala")
+    val confWriters = (builders :+ loaders)
       .filter(p => Files.readString(p).contains("conf.set"))
-    // an ndv hint is a session conf too: only the table loaders, which
-    // measure a column of the file they load, may register one
-    val hintWriters = (builders ++ sources(root.resolve("etl"), ".*\\.scala"))
-      .filter(p => Files.readString(p).contains("registerNdvHint"))
+    // a hint is a session conf too, and a measured fact belongs to its
+    // file version (graft.plans.FileEvidence): none of these registers one
+    val hintWriters = (builders ++ sources(root.resolve("etl"), ".*\\.scala") :+ loaders)
+      .filter { p =>
+        val src = Files.readString(p)
+        src.contains("registerNdvHint") || src.contains("registerUniqueHint")
+      }
     assert((confWriters ++ hintWriters).map(p => root.relativize(p).toString) === Nil)
   }
 
-  test("building the bar queries leaves no ativo ndv hint") {
+  test("building every declared query leaves the session conf unchanged") {
     val s = GraftSession.child(TestSpark.spark)
-    Seq("flagship_etl", "w2_daily_returns", "w4_running_total",
-        "x120_rolling_mean_keyed", "w8_zscore_outliers").foreach { q =>
+    val before = s.conf.getAll
+    val names = SparkEntry.queries.keys.toSeq.sorted
+    assert(names.size === 272)
+    names.foreach { q =>
       SparkEntry.queries(q)(s, TestSpark.Sf0001)
-      val hints = s.conf.getOption(graft.plans.KeyedWindowRule.NdvHintsConf)
-        .map(graft.plans.KeyedWindowRule.parseHints).getOrElse(Map.empty)
-      assert(!hints.contains("ativo"), s"$q registered $hints")
+      val after = s.conf.getAll
+      val changed = (after.toSet diff before.toSet).map(_._1) ++
+        (before.keySet diff after.keySet)
+      assert(changed.isEmpty, s"building $q changed ${changed.mkString(", ")}")
     }
   }
 

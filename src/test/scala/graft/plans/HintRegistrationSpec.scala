@@ -6,10 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{GraftSession, TestSpark}
 
-/** Hint registration is a read-merge-write of one session conf. Loaders
-  * building DataFrames on the same session run it concurrently, and a
-  * lost update would silently disable a collapse for the rest of the
-  * session. Each test runs on its own child session.
+/** Evidence registration runs concurrently: loaders building DataFrames
+  * measure into the JVM-wide [[FileEvidence]] store, and a user's ndv
+  * hint is a read-merge-write of one session conf. A lost update would
+  * silently disable a heal or a collapse. Conf tests run on their own
+  * child session.
   */
 class HintRegistrationSpec extends AnyFunSuite {
 
@@ -41,17 +42,10 @@ class HintRegistrationSpec extends AnyFunSuite {
   }
 
   test("concurrent uniqueness hints: all 400 survive") {
-    val s = GraftSession.child(TestSpark.spark)
-    hammer((t, i) =>
-      RankJoinRule.registerUniqueHint(s, s"u${t}_$i", s"/data/t$t.parquet"))
-    val entries =
-      RankJoinRule.parseUniques(s.conf.get(RankJoinRule.UniqueHintsConf))
-    assert(entries.size === 400)
-  }
-
-  test("withdrawing an absent entry writes nothing") {
-    val s = GraftSession.child(TestSpark.spark)
-    RankJoinRule.removeUniqueHint(s, "u", "/data/t.parquet")
-    assert(s.conf.getOption(RankJoinRule.UniqueHintsConf).isEmpty)
+    val at = FileEvidence.FileVersion(
+      Set(s"/data/hammer-${System.nanoTime()}.parquet"), "v1")
+    hammer((t, i) => FileEvidence.putUnique(at, Seq(s"u${t}_$i"), unique = true))
+    for (t <- 0 until 8; i <- 0 until 50)
+      assert(FileEvidence.uniqueOf(at, Seq(s"u${t}_$i")) === Some(true), s"u${t}_$i")
   }
 }

@@ -183,9 +183,9 @@ class KeyedWindowSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("a session ndv hint proves a raw data column (the loader handoff)") {
     // hints are LEAF-scoped (r11 ADVICE): they vouch for a BASE column of
     // a source relation, so the fixture goes through parquet — k3 is then
-    // a leaf attribute, exactly the shape the fixture loaders register
-    // (and the bars shape, where a name arrives via a pure rename of a
-    // parquet column)
+    // a leaf attribute, the shape the fixture loaders measure (and the
+    // bars shape, where a name arrives via a pure rename of a parquet
+    // column)
     val dir = java.nio.file.Files.createTempDirectory("kw_hint").toString
     fixture.write.mode("overwrite").parquet(dir)
     spark.read.parquet(dir).createOrReplaceTempView("kw_t7")

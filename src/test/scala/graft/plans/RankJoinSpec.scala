@@ -11,7 +11,7 @@ import graft.TestSpark
   * Every parity test runs the SAME SQL twice — rule on (the session
   * default) vs `spark.graft.rankJoin.rewrite=false` (the two-scan
   * shuffle join) — and compares full row MULTISETS. The fixture's `id`
-  * is measured-unique and registered the way table loaders do it; the
+  * is genuinely unique and declared session-wide; the
   * battery also runs an UNREGISTERED twin fixture to pin the
   * no-evidence refusal.
   */
@@ -33,8 +33,7 @@ class RankJoinSpec extends AnyFunSuite {
     val big = (1 to 3000).map(i => (i.toLong, i % 23, i % 97))
     big.toDF("id", "k", "v").write.parquet(s"$dir/big")
     spark.read.parquet(s"$dir/big").createOrReplaceTempView("rj_big")
-    // id is genuinely unique in both — register the measured evidence
-    // exactly as a table loader would after verifying ndv == rowcount
+    // id is genuinely unique in both — declare it for the session
     RankJoinRule.registerUniqueHint(spark, "id")
     // a DUPLICATE-key fixture that must never be registered
     val dup = (1 to 200).map(i => (i.toLong % 50, i % 7, i % 13))
@@ -241,9 +240,9 @@ class RankJoinSpec extends AnyFunSuite {
   }
 
   test("path-scoped uniqueness does not leak to a same-named column in another file (r15)") {
-    // uniqueness changes result MULTIPLICITY, so the loaders register it
-    // scoped to the measured file; a same-named column in a different
-    // parquet gets no proof from it
+    // uniqueness changes result MULTIPLICITY, so measured evidence
+    // belongs to the measured file version; a same-named column in a
+    // different parquet gets no proof from it
     val dir = java.nio.file.Files.createTempDirectory("rjscope_").toString
     (1 to 200).map(i => (i.toLong, i % 9, i % 31)).toDF("pid", "k", "v")
       .write.parquet(s"$dir/uniq")
@@ -251,7 +250,7 @@ class RankJoinSpec extends AnyFunSuite {
       .write.parquet(s"$dir/dups")
     spark.read.parquet(s"$dir/uniq").createOrReplaceTempView("rj_uniq")
     spark.read.parquet(s"$dir/dups").createOrReplaceTempView("rj_dups")
-    RankJoinRule.registerUniqueHint(spark, "pid", s"$dir/uniq")
+    assert(RankJoinRule.measureAndRegister(spark.read.parquet(s"$dir/uniq"), "pid"))
     def sqlFor(view: String) =
       s"""SELECT t.pid, t.k, t.v, r.rn
          |FROM $view t
@@ -259,7 +258,7 @@ class RankJoinSpec extends AnyFunSuite {
          |        ORDER BY v, pid) AS rn FROM $view) r
          |ON t.pid = r.pid AND r.rn <= 2""".stripMargin
     assert(parity(sqlFor("rj_uniq")),
-      "the measured file must collapse under its path-scoped evidence")
+      "the measured file must collapse under its file evidence")
     assert(!parity(sqlFor("rj_dups")),
       "a same-named column in another file must refuse (and stay correct)")
   }
@@ -274,7 +273,7 @@ class RankJoinSpec extends AnyFunSuite {
     (1 to 200).map(i => (i.toLong, i % 9, i % 13)).toDF("pid", "k", "v")
       .write.parquet(s"$dir/t")
     spark.read.parquet(s"$dir/t").createOrReplaceTempView("rj_alias_base")
-    RankJoinRule.registerUniqueHint(spark, "pid", s"$dir/t")
+    assert(RankJoinRule.measureAndRegister(spark.read.parquet(s"$dir/t"), "pid"))
     // the disguise: v (duplicated) wearing the registered name
     spark.sql("SELECT v AS pid, k FROM rj_alias_base")
       .createOrReplaceTempView("rj_alias")
@@ -374,7 +373,7 @@ class RankJoinSpec extends AnyFunSuite {
       "a pairing superset of the registered key must collapse")
   }
 
-  test("measureAndRegister: non-unique returns false and WITHDRAWS stale evidence (r16)") {
+  test("measureAndRegister: non-unique is false; old evidence stops applying (r16)") {
     val dir = java.nio.file.Files.createTempDirectory("rjmeas_").toString
     (0 until 300).map(n => (n.toLong, n % 11, n % 5))
       .toDF("mid", "k", "v").write.parquet(s"$dir/t")
@@ -393,7 +392,7 @@ class RankJoinSpec extends AnyFunSuite {
         |JOIN (SELECT mid, row_number() OVER (PARTITION BY k
         |        ORDER BY v, mid) AS rn FROM rj_meas) r
         |ON t.mid = r.mid AND r.rn <= 2""".stripMargin),
-      "the withdrawn evidence must not keep collapsing")
+      "the old version's evidence must not keep collapsing")
   }
 
   test("measureAndRegister refuses non-bare frames; resolves renames to leaf names (r16)") {
@@ -499,39 +498,32 @@ class RankJoinSpec extends AnyFunSuite {
       "expected at least one rank to differ between the two spellings")
   }
 
-  test("separator-hostile paths round-trip through the hint conf (r16, ADVICE r15)") {
-    // a path with a comma and a space: the old comma-joined raw conf
-    // would have split it apart and silently dropped the evidence
+  test("separator-hostile paths key the file evidence (r16, ADVICE r15)") {
+    // a path with a comma and a space keys its file's evidence intact
     val root = java.nio.file.Files.createTempDirectory("rj,enc ").toString
     (1 to 200).map(i => (i.toLong, i % 9, i % 13)).toDF("eid", "k", "v")
       .write.parquet(s"$root/t")
     spark.read.parquet(s"$root/t").createOrReplaceTempView("rj_enc")
-    RankJoinRule.registerUniqueHint(spark, "eid", s"$root/t")
+    assert(RankJoinRule.measureAndRegister(spark.read.parquet(s"$root/t"), "eid"))
     assert(parity(
       """SELECT t.eid, t.k, r.rn
         |FROM rj_enc t
         |JOIN (SELECT eid, row_number() OVER (PARTITION BY k
         |        ORDER BY v, eid) AS rn FROM rj_enc) r
         |ON t.eid = r.eid AND r.rn <= 2""".stripMargin),
-      "comma-and-space path evidence must survive the conf round-trip")
-    // and other entries in the same conf are not corrupted by it
-    val parsed = RankJoinRule.parseUniques(
-      spark.conf.get(RankJoinRule.UniqueHintsConf))
-    assert(parsed.exists(ev => ev.cols == Set("eid") &&
-      ev.paths.exists(_.exists(_.contains("rj,enc")))),
-      s"entry lost or mangled: $parsed")
+      "comma-and-space path evidence must reach its scan")
   }
 
   test("normalizePath: non-file URIs pass through untouched; local forms converge (r16)") {
-    assert(RankJoinRule.normalizePath("s3a://bucket/data/t") === "s3a://bucket/data/t")
-    assert(RankJoinRule.normalizePath("hdfs://nn:8020/warehouse/t") ===
+    assert(FileEvidence.normalizePath("s3a://bucket/data/t") === "s3a://bucket/data/t")
+    assert(FileEvidence.normalizePath("hdfs://nn:8020/warehouse/t") ===
       "hdfs://nn:8020/warehouse/t")
-    val local = RankJoinRule.normalizePath("/x/y//z/")
+    val local = FileEvidence.normalizePath("/x/y//z/")
     assert(local === "/x/y/z", s"got $local")
-    assert(RankJoinRule.normalizePath("file:/x/y/z") === "/x/y/z")
+    assert(FileEvidence.normalizePath("file:/x/y/z") === "/x/y/z")
     // idempotent — parse-time re-normalization must be safe
-    val once = RankJoinRule.normalizePath("s3a://b/p")
-    assert(RankJoinRule.normalizePath(once) === once)
+    val once = FileEvidence.normalizePath("s3a://b/p")
+    assert(FileEvidence.normalizePath(once) === once)
   }
 
   test("x149 composite-key rank join plans one scan, no join, group limit (sf0.01)") {
