@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one session factory: every main (Bench, Verify, Smoke, PlanDump,
-  * ProfileQuery) and the shared test session start here, so they all run
-  * the plan a production session runs. `overrides` are applied last, on
+/** The one session factory: every main (Bench, Verify, Smoke, PlanDump)
+  * and the shared test session start here, so they all run the plan a
+  * production session runs. `overrides` are applied last, on
   * top of the library's configuration.
   */
 object GraftSession {

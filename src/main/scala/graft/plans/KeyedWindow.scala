@@ -224,34 +224,6 @@ private[plans] object KeyedWindowExec {
     val total = counts.sum
     if (total > maxRuns) KeyedWindowRule.runsOverflow(site, maxRuns, total)
   }
-
-  /** The unsorted-input variant ([[KeyedTotalAggExec]] without an ORDER
-    * BY): per-partition DISTINCT-key counts via an in-task key set,
-    * itself capped at the budget (so a task can never build an unbounded
-    * map either); the driver sum is conservative — a key present in many
-    * partitions counts once per partition — which can only refuse early,
-    * never admit late. */
-  def enforceDistinctBudget(childRdd: RDD[InternalRow], keyExprs: Seq[Expression],
-                            childOutput: Seq[Attribute], maxRuns: Long,
-                            site: String): Unit = {
-    if (childRdd.getNumPartitions == 0) return
-    val counts = childRdd.sparkContext.runJob(childRdd,
-      (it: Iterator[InternalRow]) => {
-        val keyProj = UnsafeProjection.create(keyExprs, childOutput)
-        val seen = scala.collection.mutable.HashSet.empty[UnsafeRow]
-        while (it.hasNext) {
-          val k = keyProj(it.next())
-          if (!seen.contains(k)) {
-            if (seen.size.toLong >= maxRuns)
-              KeyedWindowRule.runsOverflow(site, maxRuns, seen.size.toLong + 1L)
-            seen.add(k.copy())
-          }
-        }
-        seen.size.toLong
-      })
-    val total = counts.sum
-    if (total > maxRuns) KeyedWindowRule.runsOverflow(site, maxRuns, total)
-  }
 }
 
 /** Physical running aggregate without per-key (or single-task)

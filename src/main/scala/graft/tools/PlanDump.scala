@@ -1,5 +1,7 @@
 package graft.tools
 
+import scala.util.control.NonFatal
+
 /** Optimization-round plan dumper: write `.explain("formatted")` for named
   * SparkEntry queries to files, under the bench's session
   * ([[graft.GraftSession]]) so the dumped plan is the plan the bench
@@ -29,7 +31,7 @@ object PlanDump {
         try {
           val qe = graft.SparkEntry.queries(n)(spark, sfDir).queryExecution
           qe.explainString(org.apache.spark.sql.execution.FormattedMode)
-        } catch { case e: Throwable => s"EXPLAIN FAILED: ${e.getMessage}" }
+        } catch { case NonFatal(e) => s"EXPLAIN FAILED: ${e.getMessage}" }
       java.nio.file.Files.write(path, text.getBytes("UTF-8"))
       System.err.println(s"[plandump] wrote $path")
     }

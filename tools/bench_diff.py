@@ -7,7 +7,9 @@ Scala library). Usage:
 Prints per-query median ratios for queries present in both files, flagging
 |ratio| beyond the threshold (default 1.5x), plus added/removed queries and
 the total. Medians are compared; the [min,max] spread is shown so a noisy
-median is visible as such. Exit code 1 if any regression beyond threshold.
+median is visible as such. When both files carry per-query `exec_jobs`
+medians, each flagged query also shows its old -> new Spark job count.
+Exit code 1 if any regression beyond threshold.
 """
 import json
 import sys
@@ -34,11 +36,16 @@ def main():
             regressions.append((r, q, a, b))
         elif r <= 1.0 / thr:
             improvements.append((r, q, a, b))
+    oj, nj = old.get("exec_jobs", {}), new.get("exec_jobs", {})
+
+    def jobs(q):
+        return f" [jobs {oj[q]} -> {nj[q]}]" if q in oj and q in nj else ""
+
     for r, q, a, b in sorted(regressions, reverse=True):
         lo, hi = new.get("spread", {}).get(q, (b, b))
-        print(f"SLOWER {r:5.2f}x  {q}: {a:.2f}s -> {b:.2f}s (new spread [{lo:.2f}, {hi:.2f}])")
+        print(f"SLOWER {r:5.2f}x  {q}: {a:.2f}s -> {b:.2f}s (new spread [{lo:.2f}, {hi:.2f}]){jobs(q)}")
     for r, q, a, b in sorted(improvements):
-        print(f"faster {r:5.2f}x  {q}: {a:.2f}s -> {b:.2f}s")
+        print(f"faster {r:5.2f}x  {q}: {a:.2f}s -> {b:.2f}s{jobs(q)}")
     for q in sorted(set(nq) - set(oq)):
         print(f"added           {q}: {nq[q]:.2f}s")
     for q in sorted(set(oq) - set(nq)):
