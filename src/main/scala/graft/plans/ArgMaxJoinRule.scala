@@ -76,9 +76,9 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * excluded from that strip whitelist below.
   *
   * Guards (all refusals leave the plan untouched):
-  *  - both sides must peel (through attribute-only Projects and
-  *    IsNotNull-only Filters) to CANONICALLY EQUAL deterministic batch
-  *    subtrees — a genuine self-join of the same lineage;
+  *  - both sides must peel (through wrappers, attribute-only Projects
+  *    and IsNotNull-only Filters) to CANONICALLY EQUAL deterministic
+  *    batch subtrees — a genuine self-join of the same lineage;
   *  - peeled IsNotNull filters are tolerated only where they provably
   *    cannot change a surviving group's aggregate value: on columns some
   *    grouping key NULL-FORCES (null column ⇒ null key along a
@@ -193,9 +193,10 @@ case class ArgMaxJoinRule(session: SparkSession) extends Rule[LogicalPlan]
                             toBase: Map[ExprId, Attribute],
                             strippedNotNull: Set[ExprId])
 
-  /** Peel attribute-only Projects and IsNotNull-only Filters, composing
-    * the attr rename map (and the stripped-filter attrs) down to the base
-    * plan's attribute space. Stops at the first node that is neither.
+  /** Peel [[Lineage.Wrapper]]s, attribute-only Projects and IsNotNull-only
+    * Filters, composing the attr rename map (and the stripped-filter
+    * attrs) down to the base plan's attribute space. Stops at the first
+    * node that is none of these.
     */
   private def peel(plan: LogicalPlan): Peeled = {
     var cur = plan
@@ -225,26 +226,17 @@ case class ArgMaxJoinRule(session: SparkSession) extends Rule[LogicalPlan]
             case IsNotNull(a: AttributeReference) => a
           }
           cur = child
-        // row- and exprId-preserving placement layer (the r16 scan
-        // heal's hash repartition): content-identical, so base twinning
-        // walks through it (OPTIMIZATION r16 #1). The rewrite builds
-        // over the un-peeled probe, so the layer survives in the
-        // collapsed plan except on the rare missing-input rebuild path.
-        case r: RepartitionOperation =>
-          cur = r.child
+        // content-identical, so base twinning walks through (the scan
+        // heal's repartition, OPTIMIZATION r16 #1). The rewrite builds
+        // over the un-peeled probe, so a layer survives in the collapsed
+        // plan except on the rare missing-input rebuild path.
+        case Lineage.Wrapper(c) =>
+          cur = c
         case _ => done = true
       }
     }
     Peeled(cur, map, stripped.map(_.exprId))
   }
-
-  // DELIBERATELY stricter than WindowShapes.deterministicTree (the
-  // normalization rules' shared contract): this rule runs in the
-  // OPTIMIZER where nested subquery expressions it has not validated
-  // can still appear — a PlanExpression here is grounds for refusal,
-  // not exemption.
-  private def deterministicTree(p: LogicalPlan): Boolean =
-    p.find(n => n.expressions.exists(e => !e.deterministic)).isEmpty
 
   /** Null-ignoring aggregate over attribute/literal children? */
   private def supportedAgg(f: AggregateFunction): Boolean = f match {
@@ -584,7 +576,7 @@ case class ArgMaxJoinRule(session: SparkSession) extends Rule[LogicalPlan]
     if (baseA.output.length != baseP.output.length) return None
     if (baseA.canonicalized != baseP.canonicalized) return None
     if (baseA.isStreaming || baseP.isStreaming) return None
-    if (!deterministicTree(baseP)) return None
+    if (!WindowShapes.deterministicTree(baseP)) return None
 
     // positional base correspondence aggChild-base attr -> probe-base attr
     val posMap: Map[ExprId, Attribute] =
@@ -763,13 +755,13 @@ case class ArgMaxJoinRule(session: SparkSession) extends Rule[LogicalPlan]
     // — the keys-only join already has a good Spark plan (AQE broadcasts
     // the group side), and the zero-exchange attach only beats it inside
     // its low-ndv design center (measured: 1.7× slower at 20k unproven
-    // keys). The proof machinery is the keyed-window family's own.
+    // keys). The proof is Lineage's, the keyed window arm's own.
     // (exempt from the proof: a keys-only join with NO aggregate outputs
     // reduces to the bare IS NOT NULL filter, and a keys-only SEMI never
     // materializes the aggregates — column pruning drops the unused
     // window and only the filter remains)
     if (aggPartners.isEmpty && aggVals.nonEmpty && mode != Mode.Semi &&
-        !KeyedWindowRule(session).provenKeyNdv(partitionExprs, winChild))
+        !Lineage.provenKeyNdv(session, partitionExprs, winChild))
       return None
 
     // one window alias per aggregate output, all over the same spec; a

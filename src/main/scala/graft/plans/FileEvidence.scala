@@ -17,10 +17,10 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * measured distinct count or a measured uniqueness verdict. Only
   * measurement fills it: the [[graft.tables.Tables]] loaders (through
   * `ArtifactStore`, under `col_ndv`/`col_unique`) and
-  * [[RankJoinRule.measureAndRegister]]. [[KeyedWindowRule]]'s ndv walk
-  * and [[RankJoinRule]]'s uniqueness walk read it at the leaf relation a
-  * column traces to, with that relation's own root paths and file
-  * listing. So a fact never reaches a file rewritten in place (a new
+  * [[RankJoinRule.measureAndRegister]]. Only [[Lineage]]'s evidence
+  * lookups read it ([[Lineage.leafNdv]], [[Lineage.uniqueSets]]), at the
+  * leaf relation a column traces to, with that relation's own root paths
+  * and file listing. So a fact never reaches a file rewritten in place (a new
   * version, with no facts yet) or a same-named column of another file,
   * and nothing is ever withdrawn. Building a DataFrame writes no session
   * conf for it; facts a user declares for a whole session stay in the

@@ -4,10 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, Average, Complete, Count, DeclarativeAggregate, First, Last, Max, Min, Sum}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, UnaryNode, Window}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Window}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
-import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType}
+import org.apache.spark.sql.types.IntegerType
 
 /** The window-expression shapes the rewrite family executes — shared by
   * [[KeyedWindowRule]]'s no-key and keyed arms and the self-join
@@ -49,7 +49,9 @@ private[plans] object WindowShapes {
     * own rewrites). ONE definition shared by the whole self-join
     * elimination family (`ArgMaxJoinRule`/`TopNSubqueryRule`/
     * `RankJoinRule`) so the determinism contract can never drift
-    * between rules. */
+    * between rules. The exemption holds in the optimizer too, where
+    * `ArgMaxJoinRule` runs: ArgMaxJoinSpec collapses a self-join whose
+    * shared base filter holds a `rand()` scalar subquery with parity. */
   def deterministicTree(p: LogicalPlan): Boolean =
     p.find(n => n.expressions.exists(e =>
       !e.deterministic && !e.exists(_.isInstanceOf[PlanExpression[_]]))).isEmpty
@@ -372,31 +374,25 @@ private[plans] object WindowShapes {
   *   - keys: the keys' ndv must be provably small, or unprovable (the
   *     optimistic arm, below).
   *
-  * "Provably small" (≤ `spark.graft.keyedWindow.maxNdv`, default 64),
-  * in evidence order:
+  * "Provably small" (≤ `spark.graft.keyedWindow.maxNdv`, default 64,
+  * [[Lineage.provenKeyNdv]]):
   *   - the EXPRESSION bounds its own domain: boolean (≤3 with null),
   *     `pmod(x, k)`/`x % k` with a literal k, a literal, a CASE WHEN
   *     whose outputs are all literals, a cast of any of these (a cast
   *     never increases ndv);
-  *   - an upstream `Filter` pins the column to a literal set
-  *     (`c IN (…)`, `c = lit`), walked through intervening projects;
-  *   - CATALOG/CBO column statistics (`distinctCount` from
-  *     `ANALYZE TABLE … FOR COLUMNS`) on the child plan — ALSO read
-  *     directly off the leaf relation's CatalogTable (no CBO flag
-  *     needed); `BatchPipeline.registerRefined` auto-ANALYZEs tables
-  *     under `spark.graft.autoAnalyze.maxBytes` at registration, so
-  *     dimension columns (`PARTITION BY n_name`) prove with zero setup;
-  *   - a session NDV HINT (`spark.graft.keyedWindow.ndvHints`,
-  *     `name=ndv[,name=ndv…]`, [[KeyedWindowRule.registerNdvHint]]) — a
-  *     fact a user declares. Hints match by column NAME, so they are
-  *     session-scoped facts the caller vouches for. Nothing in the
-  *     library registers one (GraftSessionSpec guards this): the bar
+  *   - else the column's [[Lineage]] trace bounds it: CBO stats at each
+  *     step, an upstream `c IN (…)`/`c = lit` filter pin, then at the
+  *     leaf a session NDV HINT (`spark.graft.keyedWindow.ndvHints`,
+  *     [[KeyedWindowRule.registerNdvHint]], a fact a user vouches for),
+  *     the MEASURED ndv of the file version it scans ([[FileEvidence]],
+  *     filled by the fixture loaders), its CatalogTable stats (`ANALYZE
+  *     TABLE … FOR COLUMNS`, no CBO flag needed; `BatchPipeline.
+  *     registerRefined` auto-ANALYZEs small tables, so `PARTITION BY
+  *     n_name` proves with zero setup), its plan stats. Nothing in the
+  *     library registers a hint (GraftSessionSpec guards this): the bar
   *     queries' `PARTITION BY ativo` fires on the optimistic arm below,
   *     and the streaming arrival's touched-asset `IN` pin proves its key
-  *     count from the plan itself;
-  *   - a MEASURED ndv of the column in the file version the leaf scans
-  *     ([[FileEvidence]]), which the fixture loaders fill — it never
-  *     reaches a rewritten file or a same-named column of another file.
+  *     count from the plan itself.
   *
   * A PROVABLY-high ndv leaves the plan with Spark: hash clustering at
   * high ndv is already parallel, and the rewrite's range sampling job +
@@ -530,26 +526,6 @@ case class KeyedWindowRule(session: SparkSession) extends Rule[LogicalPlan]
       w.child.stats.sizeInBytes <= BigInt(bytes)
   }
 
-  /** Plan-time PROOF that the keys' ndv is at or under `maxNdv` —
-    * exposed for `ArgMaxJoinRule`'s keys-only arm (r14): a keys-only
-    * group-stats join already has a good Spark plan (AQE picks
-    * broadcast), so eliminating it is only justified when the
-    * zero-exchange attach is provably in its low-ndv design center
-    * (measured: the optimistic attach ran 1.7× slower than the
-    * decorrelated broadcast join at 20k unproven keys — q17). */
-  private[plans] def provenKeyNdv(keys: Seq[Expression],
-                                  child: LogicalPlan): Boolean = {
-    val hints = parseHints(session.conf.get(NdvHintsConf, ""))
-    val maxNdv = session.conf.get(MaxNdvConf, "64").toLong
-    val bounds = keys.map(ndvBound(_, child, hints))
-    bounds.forall(_.isDefined) && {
-      val product = bounds.flatten.foldLeft(1L) { (acc, b) =>
-        if (acc > maxNdv) acc else math.min(acc * math.max(b, 1L), Long.MaxValue / 2)
-      }
-      product <= maxNdv
-    }
-  }
-
   /** The OPTIMISTIC arm (VERDICT r12 #1): some key's ndv has NO plan-time
     * evidence at all — the stats-less ad-hoc lineage. Fires the rewrite
     * under the runtime [[KeyedWindowRule.MaxRunsConf]] budget (the execs
@@ -582,67 +558,19 @@ case class KeyedWindowRule(session: SparkSession) extends Rule[LogicalPlan]
       // would only stack a second exchange + stitch over the first
       // heal — leave them exactly as built
       !keys.exists(_.references.exists(_.name.startsWith("__"))) && {
-      val hints = parseHints(session.conf.get(NdvHintsConf, ""))
-      keys.exists(ndvBound(_, child, hints).isEmpty) && {
+      val hints = Lineage.ndvHints(session)
+      keys.exists(Lineage.ndvBound(_, child, hints).isEmpty) && {
         !ndvSensitive || {
           val maxNdv = session.conf.get(MaxNdvConf, "64").toLong
-          !keys.exists(measuredFloor(_, child, hints).exists(_ > maxNdv))
+          // a cast can collapse values and a computed key has only
+          // domain reasoning: neither carries a measurement
+          !keys.exists {
+            case a: Attribute => Lineage.measuredNdv(a, child, hints).exists(_ > maxNdv)
+            case _ => false
+          }
         }
       }
     }
-  }
-
-  /** MEASURED ndv of a key component, for the lower-bound refusal — or
-    * None when the only evidence is a domain bound (which caps ndv but
-    * never floors it) or a filter pin (which proves the POST-filter
-    * domain small, overriding the table-level measurement). The walk
-    * crosses only ndv-preserving edges by construction (pure renames,
-    * unary pass-throughs); it also crosses Filters and Joins, which can
-    * REDUCE the true count below the table-level measurement — there the
-    * value is an estimate, not a floor, and using it to refuse is the
-    * engine's no-wager posture: both candidate plans are correct, the
-    * refusal keeps Spark's always-parallel one, and a user who KNOWS the
-    * filtered subset is small holds the proof tools (filter pin, hint,
-    * ANALYZE) that win outright via the proven arm. Exposed for spec. */
-  private[plans] def measuredFloor(e: Expression, child: LogicalPlan,
-                                   hints: Map[String, Long]): Option[Long] = e match {
-    case a: Attribute => measuredAttr(a, child, hints, Set(a.name))
-    case c: Cast => None // cast can collapse values — measurement doesn't carry
-    case _ => None // computed keys: domain reasoning only, no measurement
-  }
-
-  private def measuredAttr(a: Attribute, plan: LogicalPlan,
-                           hints: Map[String, Long],
-                           names: Set[String]): Option[Long] = plan match {
-    case Project(list, gc) =>
-      list.collectFirst {
-        case al @ Alias(at: Attribute, _) if al.exprId == a.exprId =>
-          measuredAttr(at, gc, hints, names + al.name + at.name)
-        case al @ Alias(_, _) if al.exprId == a.exprId =>
-          None // computed column: no measurement to carry
-        case at: Attribute if at.exprId == a.exprId =>
-          measuredAttr(at, gc, hints, names + at.name)
-      }.flatten
-    case Filter(cond, gc) =>
-      // a pin on THIS column proves the post-filter domain small — the
-      // table-level measurement no longer describes what the window sees
-      val pinned = splitConjunctivePredicates(cond).exists {
-        case In(at: Attribute, list) =>
-          at.exprId == a.exprId && list.forall(_.foldable)
-        case InSet(at: Attribute, _) => at.exprId == a.exprId
-        case EqualTo(at: Attribute, _: Literal) => at.exprId == a.exprId
-        case EqualTo(_: Literal, at: Attribute) => at.exprId == a.exprId
-        case _ => false
-      }
-      if (pinned) None else measuredAttr(a, gc, hints, names)
-    case l: org.apache.spark.sql.catalyst.plans.logical.LeafNode
-        if l.outputSet.contains(a) =>
-      leafHint(a, l, hints, names)
-    case u: UnaryNode if u.child.outputSet.contains(a) =>
-      measuredAttr(a, u.child, hints, names)
-    case other =>
-      other.children.find(_.outputSet.contains(a))
-        .flatMap(measuredAttr(a, _, hints, names))
   }
 
   /** The shapes whose HEAL holds O(ndv) driver/broadcast state — totals
@@ -676,7 +604,7 @@ case class KeyedWindowRule(session: SparkSession) extends Rule[LogicalPlan]
         val kinds = w.windowExpressions.map(classify(_, keys.nonEmpty))
         kinds.forall(_.isDefined) &&
           (w.orderSpec.nonEmpty || kinds.forall(_.exists(_.isInstanceOf[TotK]))) &&
-          (keys.isEmpty || provenKeyNdv(keys, w.child) ||
+          (keys.isEmpty || Lineage.provenKeyNdv(session, keys, w.child) ||
             ndvUnprovable(keys, w.child, ndvSensitiveKinds(kinds)))
       }
   }
@@ -838,7 +766,7 @@ case class KeyedWindowRule(session: SparkSession) extends Rule[LogicalPlan]
     }
     // fired without a plan-time ndv proof → the ndv-dependent execs
     // (running/total/rank per-run metadata) enforce the runtime budget
-    val optimistic = keys.nonEmpty && !provenKeyNdv(keys, w.child)
+    val optimistic = keys.nonEmpty && !Lineage.provenKeyNdv(session, keys, w.child)
     val rankPairs = classified.collect { case (attr, RankK(k)) => (attr, k) }
     // ignore-nulls lag(e, 1) = Last(e, ignoreNulls) over the exclusive
     // prefix, computed into a HIDDEN attribute; the final projection
@@ -922,114 +850,6 @@ case class KeyedWindowRule(session: SparkSession) extends Rule[LogicalPlan]
         case None => a
       }
     }, replaced)
-  }
-
-  /** Largest provable distinct-value bound of `e` over `child`, or None.
-    * pmod/remainder account for the NULL group explicitly: `pmod(null,
-    * k)` is null and PARTITION BY makes null its own group, so a
-    * nullable input admits one more key than the arithmetic bound
-    * (matching the boolean arm's true/false/null accounting). */
-  private def ndvBound(e: Expression, child: LogicalPlan,
-                       hints: Map[String, Long]): Option[Long] = e match {
-    case _: Literal => Some(1L)
-    case _ if e.dataType == BooleanType => Some(3L) // true/false/null
-    case p @ Pmod(_, Literal(k: Int, IntegerType), _) if k > 0 =>
-      Some(k.toLong + (if (p.nullable) 1L else 0L))
-    case p @ Pmod(_, Literal(k: Long, LongType), _) if k > 0 =>
-      Some(k + (if (p.nullable) 1L else 0L))
-    case r @ Remainder(_, Literal(k: Int, IntegerType), _) if k > 0 =>
-      Some(2L * k - 1 + (if (r.nullable) 1L else 0L)) // remainder keeps the sign
-    case r @ Remainder(_, Literal(k: Long, LongType), _) if k > 0 =>
-      Some(2L * k - 1 + (if (r.nullable) 1L else 0L))
-    case c: Cast => ndvBound(c.child, child, hints) // never increases ndv
-    case CaseWhen(branches, elseValue)
-        if branches.forall(_._2.foldable) && elseValue.forall(_.foldable) =>
-      Some(branches.length + 1L) // branch outputs + else/null
-    case ElementAt(CreateArray(items, _), _, _, _) if items.forall(_.foldable) =>
-      Some(items.length + 1L) // literal decode table + out-of-bounds null
-    case a: Attribute =>
-      statsNdv(a, child).orElse(lineageNdv(a, child, hints, Set(a.name)))
-    case _ => None
-  }
-
-  /** CBO/catalog column stats, when the plan carries them. */
-  private def statsNdv(a: Attribute, plan: LogicalPlan): Option[Long] =
-    scala.util.Try(plan.stats.attributeStats.get(a)
-      .flatMap(_.distinctCount).map(_.toLong)).toOption.flatten
-
-  /** Walk the attribute down through projects/filters: an upstream
-    * `c IN (literals)` / `c = literal` bounds the domain; a project
-    * alias recurses into the defining expression. Session ndv hints are
-    * consulted ONLY at the LEAF relation the column traces to through
-    * pass-throughs and pure RENAMES (`names` collects every name the
-    * column has carried on the way down) — the caller vouches for a base
-    * column of a specific source, not for every same-named derived
-    * column in the session. Filter pins anchor at TOP-LEVEL conjuncts —
-    * an `In`/`EqualTo` under `NOT(…)` or as one disjunct of an `OR`
-    * proves nothing about the domain. */
-  private def lineageNdv(a: Attribute, plan: LogicalPlan,
-                         hints: Map[String, Long],
-                         names: Set[String]): Option[Long] = plan match {
-    case Project(list, gc) =>
-      list.collectFirst {
-        // pure rename: keep walking toward the leaf, remembering the name
-        case al @ Alias(at: Attribute, _) if al.exprId == a.exprId =>
-          statsNdv(at, gc).orElse(
-            lineageNdv(at, gc, hints, names + al.name + at.name))
-        case al @ Alias(inner, _) if al.exprId == a.exprId =>
-          ndvBound(inner, gc, hints)
-        case at: Attribute if at.exprId == a.exprId =>
-          statsNdv(at, gc).orElse(lineageNdv(at, gc, hints, names + at.name))
-      }.flatten
-    case Filter(cond, gc) =>
-      // anchor at each conjunct's ROOT: the pin must BE the conjunct
-      val fromCond = splitConjunctivePredicates(cond).collectFirst {
-        case In(at: Attribute, list)
-            if at.exprId == a.exprId && list.forall(_.foldable) =>
-          list.length.toLong
-        case InSet(at: Attribute, set) if at.exprId == a.exprId =>
-          set.size.toLong
-        case EqualTo(at: Attribute, l: Literal) if at.exprId == a.exprId => 1L
-        case EqualTo(l: Literal, at: Attribute) if at.exprId == a.exprId => 1L
-      }
-      fromCond.orElse(
-        statsNdv(a, gc).orElse(lineageNdv(a, gc, hints, names)))
-    case l: org.apache.spark.sql.catalyst.plans.logical.LeafNode
-        if l.outputSet.contains(a) =>
-      leafHint(a, l, hints, names)
-    case u: UnaryNode if u.child.outputSet.contains(a) =>
-      // pass-through: a unary node cannot raise a forwarded column's ndv
-      statsNdv(a, u.child).orElse(lineageNdv(a, u.child, hints, names))
-    case other =>
-      // multi-child pass-through (joins): descend into the side that
-      // outputs the column — a join cannot raise its ndv either
-      other.children.find(_.outputSet.contains(a)).flatMap { c =>
-        statsNdv(a, c).orElse(lineageNdv(a, c, hints, names))
-      }
-  }
-
-  /** Evidence at a leaf relation, in order: session hints under any
-    * name the column carried on the walk down — which only ever match a
-    * BASE column of a leaf (possibly renamed en route), never a
-    * same-named COMPUTED column elsewhere in the session; the measured
-    * ndv of the column in the file version the leaf scans
-    * ([[FileEvidence]]); the leaf's CatalogTable column stats, read
-    * directly (no CBO flag needed — the walk is ours, not the stats
-    * propagation framework's). */
-  private def leafHint(a: Attribute, leaf: LogicalPlan,
-                       hints: Map[String, Long],
-                       names: Set[String]): Option[Long] = {
-    val catalogNdv: Option[Long] = leaf match {
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        r.catalogTable.flatMap(_.stats).flatMap(_.colStats.get(a.name))
-          .flatMap(_.distinctCount).map(_.toLong)
-      case _ => None
-    }
-    (names + a.name).toSeq.sorted.iterator.map(hints.get)
-      .collectFirst { case Some(v) => v }
-      .orElse(FileEvidence.ndv(leaf, a.name))
-      .orElse(catalogNdv)
-      .orElse(statsNdv(a, leaf))
   }
 }
 

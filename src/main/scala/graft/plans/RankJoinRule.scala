@@ -81,7 +81,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *    conjunct is either a twin pairing or a predicate over the rank
   *    column alone (any shape: `<= n`, `< n`, `= 1`, `BETWEEN`… —
   *    transferred verbatim);
-  *  - the rank side peels as [SubqueryAlias|Project|Filter]* over ONE
+  *  - the rank side peels as [wrapper|Project|Filter]* over ONE
   *    Window with exactly one row_number/rank/dense_rank expression;
   *    Project entries are attributes, renames, or the rank column;
   *    Filter conjuncts above the Window reference the rank column only
@@ -118,16 +118,7 @@ case class RankJoinRule(session: SparkSession) extends Rule[LogicalPlan]
     }
   }
 
-  private def strip(p: LogicalPlan): LogicalPlan = p match {
-    case SubqueryAlias(_, c) => strip(c)
-    case v: View => strip(v.child)
-    case _ => p
-  }
-
-  private def deterministicTree(p: LogicalPlan): Boolean =
-    WindowShapes.deterministicTree(p) // one shared contract — see there
-
-  /** Strip SubqueryAlias/View AND Projects whose entries are
+  /** Strip the [[Lineage.Wrapper]]s AND Projects whose entries are
     * attributes, renames, or DETERMINISTIC computed aliases (the
     * analyzer's window-extraction `_w0 = k % 5` shape), remembering the
     * rename chain: returns (base, out-attr exprId → base-attr,
@@ -137,12 +128,9 @@ case class RankJoinRule(session: SparkSession) extends Rule[LogicalPlan]
     * absent — any reference to it refuses downstream. */
   private def stripToBase(p: LogicalPlan)
       : (LogicalPlan, Map[ExprId, Attribute], Map[ExprId, Expression]) = p match {
-    case SubqueryAlias(_, c) => stripToBase(c)
-    case v: View => stripToBase(v.child) // temp-view wrapper: same exprIds
-    // row-preserving, exprId-preserving placement layer (the r16 scan
-    // heal's hash repartition): the multiset is untouched, so twin
-    // equality and uniqueness both carry through (OPTIMIZATION r16 #1)
-    case r: RepartitionOperation => stripToBase(r.child)
+    // the multiset is untouched, so twin equality and uniqueness both
+    // carry through the wrappers (OPTIMIZATION r16 #1)
+    case Lineage.Wrapper(c) => stripToBase(c)
     case Project(list, c) if list.forall(_.deterministic) =>
       val (base, below, belowDefs) = stripToBase(c)
       def toBase(e: Expression): Option[Expression] = {
@@ -182,7 +170,7 @@ case class RankJoinRule(session: SparkSession) extends Rule[LogicalPlan]
                               defs: Map[ExprId, Expression])
 
   private def peelRankSide(side: LogicalPlan): Option[RankSide] = {
-    // walk down through SubqueryAlias / Project / Filter to the Window
+    // walk down through wrappers / Project / Filter to the Window
     var filters = Seq.empty[Expression]
     // meaning of each CURRENT-level output exprId, maintained as we
     // descend: starts as identity on the side's outputs
@@ -193,8 +181,7 @@ case class RankJoinRule(session: SparkSession) extends Rule[LogicalPlan]
     while (steps < 32) {
       steps += 1
       cur match {
-        case SubqueryAlias(_, c) => cur = c
-        case v: View => cur = v.child
+        case Lineage.Wrapper(c) => cur = c
         case Project(list, c) =>
           // refuse COMPUTED entries explicitly (duplicate attribute
           // entries — the analyzer's window-extraction Project emits
@@ -266,16 +253,11 @@ case class RankJoinRule(session: SparkSession) extends Rule[LogicalPlan]
     * (VERDICT r15 #1): the pairing SET must jointly cover some
     * registered unique column set of the leaf both sides scan.
     *
-    * Each pairing traces through renames and filters (both preserve
-    * joint distinctness — a subset of distinct tuples is still
-    * distinct) to the LEAF attribute's OWN name — never the names the
-    * column carried through renames: `SELECT other AS key` would
-    * otherwise inherit key's evidence for a column that was never
-    * measured (an alias is a rename of the REFERENCE, not a claim
-    * about the underlying data). An evidence entry matches when its
-    * column set is a SUBSET of the traced pairing names (pairing on
-    * EXTRA columns only narrows the match further: a superset of a
-    * unique key is unique).
+    * Each pairing traces to the LEAF attribute's OWN name under the
+    * multiplicity contract ([[Lineage.leafColumn]]: an alias is a rename
+    * of the REFERENCE, not a claim about the underlying data). An
+    * evidence entry matches when its column set is a SUBSET of the
+    * traced pairing names (a superset of a unique key is unique).
     *
     * Uniqueness drives a MULTIPLICITY-changing rewrite, so its blast
     * radius must be scoped: MEASURED evidence ([[FileEvidence]]) matches
@@ -287,11 +269,10 @@ case class RankJoinRule(session: SparkSession) extends Rule[LogicalPlan]
     * own. */
   private def pairingsProven(pairings: Seq[Attribute], plan: LogicalPlan,
                              declared: Set[Set[String]]): Boolean = {
-    val traced = pairings.flatMap(a => RankJoinRule.traceToLeaf(a, plan))
+    val traced = pairings.flatMap(Lineage.leafColumn(_, plan, filters = true))
     traced.groupBy(_._1).exists { case (leaf, cs) =>
       val names = cs.map(_._2).toSet
-      (declared.iterator ++ FileEvidence.uniqueSets(leaf))
-        .exists(c => c.nonEmpty && c.subsetOf(names))
+      Lineage.uniqueSets(leaf, declared).exists(c => c.nonEmpty && c.subsetOf(names))
     }
   }
 
@@ -314,8 +295,11 @@ case class RankJoinRule(session: SparkSession) extends Rule[LogicalPlan]
     while (cont && steps < 32) {
       steps += 1
       cur match {
-        case SubqueryAlias(_, c) => cur = c
-        case v: View => cur = v.child
+        // not a repartition: the rewrite attaches the window to the
+        // peeled core, so a placement layer above a hoisted filter would
+        // be dropped from the plan
+        case _: RepartitionOperation => cont = false
+        case Lineage.Wrapper(c) => cur = c
         case Project(list, c) if list.forall(_.isInstanceOf[AttributeReference]) =>
           cur = c
         case Filter(cond, c) if cond.deterministic =>
@@ -348,7 +332,8 @@ case class RankJoinRule(session: SparkSession) extends Rule[LogicalPlan]
     }
     val (probe, rank, swapped) = oriented.getOrElse(return None)
 
-    if (!deterministicTree(probe) || !deterministicTree(rank.win)) return None
+    if (!WindowShapes.deterministicTree(probe) ||
+      !WindowShapes.deterministicTree(rank.win)) return None
     if (probe.isStreaming || rank.win.isStreaming) return None
 
     // twin discipline: both sides strip to canonically equal subtrees.
@@ -568,8 +553,9 @@ object RankJoinRule {
     * scans. Returns true when unique, false when not. A later rewrite of
     * the file is a new version that this evidence never reaches.
     *
-    * `df` must be a BARE scan — aliases and pure column selections are
-    * fine; filters, joins, and computed columns refuse — so the
+    * Each column must be a base column of a BARE scan — it may be
+    * renamed, selected and wrapped ([[Lineage.leafColumn]] without
+    * filters); a filter, a join or a computed column refuses — so the
     * measurement describes the FILE, not a subset that happens to be
     * duplicate-free: evidence of a file version licenses collapses for
     * EVERY scan of that version.
@@ -584,67 +570,31 @@ object RankJoinRule {
                          columns: String*): Boolean = {
     require(columns.nonEmpty, "measureAndRegister: name at least one column")
     val plan = df.queryExecution.analyzed
-    def bareScan(p: LogicalPlan): Option[LeafNode] = p match {
-      case SubqueryAlias(_, c) => bareScan(c)
-      case v: View => bareScan(v.child)
-      // a repartitioned scan is still the whole file, row for row
-      case r: RepartitionOperation => bareScan(r.child)
-      case Project(list, c) if list.forall {
-        case _: AttributeReference => true
-        case Alias(_: AttributeReference, _) => true
-        case _ => false
-      } => bareScan(c)
-      case l: LeafNode => Some(l)
-      case _ => None
+    val resolver = df.sparkSession.sessionState.analyzer.resolver
+    val leafCols = columns.map { c =>
+      val attr = plan.output.find(a => resolver(a.name, c)).getOrElse(
+        throw new IllegalArgumentException(
+          s"measureAndRegister: no column '$c' in ${plan.output.map(_.name)}"))
+      Lineage.leafColumn(attr, plan, filters = false).getOrElse(
+        throw new IllegalArgumentException(
+          s"measureAndRegister: '$c' is not a column of a bare scan (renames " +
+            "and column selections only) — a filtered, derived or computed " +
+            "column proves nothing about the underlying file, and this " +
+            "evidence changes result multiplicity. Measure on " +
+            "spark.read.<format>(path) directly."))
     }
-    val leaf = bareScan(plan).getOrElse(throw new IllegalArgumentException(
-      "measureAndRegister: the DataFrame must be a bare scan (renames and " +
-        "column selections only) — a filtered or derived frame proves " +
-        "nothing about the underlying file, and this evidence changes " +
-        "result multiplicity. Measure on spark.read.<format>(path) directly."))
-    val at = FileEvidence.versionOf(leaf).filter(_.paths.nonEmpty).getOrElse(
+    val at = FileEvidence.versionOf(leafCols.head._1).filter(_.paths.nonEmpty).getOrElse(
       throw new IllegalArgumentException(
         "measureAndRegister: the scan has no file root paths to scope the " +
           "evidence to (in-memory or non-file relation). If you vouch for " +
           "the whole session, call registerUniqueHint(spark, column) " +
           "explicitly."))
-    val resolver = df.sparkSession.sessionState.analyzer.resolver
-    val leafNames = columns.map { c =>
-      val attr = plan.output.find(a => resolver(a.name, c)).getOrElse(
-        throw new IllegalArgumentException(
-          s"measureAndRegister: no column '$c' in ${plan.output.map(_.name)}"))
-      traceToLeaf(attr, plan).map(_._2).getOrElse(
-        throw new IllegalArgumentException(
-          s"measureAndRegister: '$c' does not trace to a leaf column of the " +
-            "scan — computed or constant columns cannot carry file-level " +
-            "uniqueness"))
-    }
     import org.apache.spark.sql.functions.{col, count, countDistinct, lit, struct}
     val r = df.select(
       countDistinct(struct(columns.map(col): _*)).as("d"),
       count(lit(1)).as("n")).collect()(0)
     val unique = r.getLong(0) == r.getLong(1) && r.getLong(1) > 0L
-    FileEvidence.putUnique(at, leafNames, unique)
+    FileEvidence.putUnique(at, leafCols.map(_._2), unique)
     unique
-  }
-
-  /** Trace `a` through renames and filters (both uniqueness-preserving)
-    * to the LEAF relation and the leaf attribute's OWN name — see
-    * `pairingsProven` for why renames never carry evidence. */
-  private[plans] def traceToLeaf(a: Attribute, plan: LogicalPlan)
-      : Option[(LeafNode, String)] = plan match {
-    case SubqueryAlias(_, c) => traceToLeaf(a, c)
-    case v: View => traceToLeaf(a, v.child)
-    // a repartition moves rows, never changes the multiset — joint
-    // distinctness of any column set is preserved (OPTIMIZATION r16 #1)
-    case r: RepartitionOperation => traceToLeaf(a, r.child)
-    case Project(list, gc) =>
-      list.collectFirst {
-        case al @ Alias(at: AttributeReference, _) if al.exprId == a.exprId => at
-        case at: AttributeReference if at.exprId == a.exprId => at
-      }.flatMap(traceToLeaf(_, gc))
-    case Filter(_, gc) => traceToLeaf(a, gc)
-    case l: LeafNode if l.outputSet.contains(a) => Some((l, a.name))
-    case _ => None
   }
 }

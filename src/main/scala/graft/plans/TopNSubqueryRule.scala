@@ -58,9 +58,9 @@ import org.apache.spark.sql.types.LongType
   *  - the comparison is `< n` (n ≥ 1) or `<= n` (n ≥ 0) against a
   *    foldable integer — n below that floor can pass no row with c = 0,
   *    a degenerate query left alone;
-  *  - both relations strip (through SubqueryAlias) to CANONICALLY EQUAL
-  *    deterministic subtrees and every correlated column maps to its
-  *    positional twin.
+  *  - both relations strip (through [[Lineage.Wrapper]]s) to
+  *    CANONICALLY EQUAL deterministic subtrees and every correlated
+  *    column maps to its positional twin.
   *
   * The [NOT] EXISTS spelling of the same question — `WHERE NOT EXISTS
   * (SELECT 1 FROM t t2 WHERE t2.k = t.k AND t2.v > t.v)`, the textbook
@@ -88,15 +88,6 @@ case class TopNSubqueryRule(session: SparkSession) extends Rule[LogicalPlan]
         rewriteFilter(cond, child).getOrElse(f)
     }
   }
-
-  /** Strip SubqueryAlias layers (they carry only name qualifiers). */
-  private def strip(p: LogicalPlan): LogicalPlan = p match {
-    case SubqueryAlias(_, c) => strip(c)
-    case _ => p
-  }
-
-  private def deterministicTree(p: LogicalPlan): Boolean =
-    WindowShapes.deterministicTree(p) // one shared contract — see there
 
   private def rewriteFilter(cond: Expression,
                             child: LogicalPlan): Option[LogicalPlan] = {
@@ -156,11 +147,11 @@ case class TopNSubqueryRule(session: SparkSession) extends Rule[LogicalPlan]
 
     // subquery shape: ungrouped count over one correlated Filter
     val (cnt: Count, distinct: Boolean, corrFilter: Filter, subRel: LogicalPlan) =
-      strip(sub.plan) match {
+      Lineage.strip(sub.plan) match {
         case Aggregate(Nil, Seq(Alias(
               AggregateExpression(cf: Count, Complete, dist, None, _), _)),
             f @ Filter(_, sq), _) =>
-          (cf, dist, f, strip(sq))
+          (cf, dist, f, Lineage.strip(sq))
         case _ => return None
       }
     val (dedupKeys, v2, vo, descending) =
@@ -212,15 +203,16 @@ case class TopNSubqueryRule(session: SparkSession) extends Rule[LogicalPlan]
     val filterRefs = corrFilter.condition.collect { case o: OuterReference => o }
     if (outerRefs.size != filterRefs.size) return None
 
-    if (!deterministicTree(subPlan) || !deterministicTree(child)) return None
-    val base = strip(child)
+    if (!WindowShapes.deterministicTree(subPlan) ||
+      !WindowShapes.deterministicTree(child)) return None
+    val base = Lineage.strip(child)
     if (subRel.output.length != base.output.length) return None
     if (subRel.canonicalized != base.canonicalized) return None
     if (subRel.isStreaming || base.isStreaming) return None
     // positional twin: subquery-side attr -> outer-side attr
     val pos: Map[ExprId, Attribute] =
       subRel.output.zip(base.output).map { case (a, b) => a.exprId -> b }.toMap
-    // the outer output attr for a base attr (SubqueryAlias keeps exprIds)
+    // the outer output attr for a base attr (wrappers keep exprIds)
     val outAttr: Map[ExprId, Attribute] =
       child.output.map(a => a.exprId -> a).toMap
     def twin(a: Attribute): Option[Attribute] =
@@ -286,10 +278,10 @@ case class TopNSubqueryRule(session: SparkSession) extends Rule[LogicalPlan]
     if (ex.joinCond.nonEmpty) return None
     // subquery shape: an optional row-local Project (the analyzer's
     // `SELECT 1`) over ONE correlated Filter over the twin relation
-    val (corrFilter, subRel) = strip(ex.plan) match {
+    val (corrFilter, subRel) = Lineage.strip(ex.plan) match {
       case Project(list, f @ Filter(_, sq)) if list.forall(_.deterministic) =>
-        (f, strip(sq))
-      case f @ Filter(_, sq) => (f, strip(sq))
+        (f, Lineage.strip(sq))
+      case f @ Filter(_, sq) => (f, Lineage.strip(sq))
       case _ => return None
     }
     val (dedupKeys, _, vo, descending) =

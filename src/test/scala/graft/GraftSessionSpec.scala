@@ -53,6 +53,18 @@ class GraftSessionSpec extends AnyFunSuite {
     assert((confWriters ++ hintWriters).map(p => root.relativize(p).toString) === Nil)
   }
 
+  test("under graft/plans only Lineage reads column evidence") {
+    // one lookup per fact, in one order: a rule that reads file evidence
+    // or catalog column stats itself forks that order
+    val root = Paths.get("src/main/scala/graft/plans")
+    assert(Files.isDirectory(root), s"run from the repo root; no $root")
+    val readers = sources(root, ".*\\.scala").filter { p =>
+      val src = Files.readString(p)
+      Seq("FileEvidence.ndv(", "FileEvidence.uniqueSets(", "colStats").exists(src.contains)
+    }
+    assert(readers.map(_.getFileName.toString) === List("Lineage.scala"))
+  }
+
   test("building every declared query leaves the session conf unchanged") {
     val s = GraftSession.child(TestSpark.spark)
     val before = s.conf.getAll

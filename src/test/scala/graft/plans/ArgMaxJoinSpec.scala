@@ -584,6 +584,27 @@ class ArgMaxJoinSpec extends AnyFunSuite {
       "must not collapse a nondeterministic self-join")
   }
 
+  test("a shared base filter holding a rand() scalar subquery collapses with parity") {
+    // the subquery is a PlanExpression, which the shared determinism
+    // contract (WindowShapes.deterministicTree) exempts: the view's plan
+    // fixes rand's seed, so both sides of the join spelling read the same
+    // threshold, and the one-scan form reads it once
+    fixture
+    spark.sql(
+      "SELECT k, v, id FROM amx_big WHERE v < (SELECT 40 + rand() * max(v) / 2 FROM amx)")
+      .createOrReplaceTempView("amx_randsub")
+    val sql =
+      """SELECT t.id, t.k, t.v, a.m
+        |FROM amx_randsub t
+        |JOIN (SELECT k, max(v) AS m FROM amx_randsub GROUP BY k) a
+        |ON t.k = a.k AND t.v = a.m""".stripMargin
+    val base = spark.sql(sql).queryExecution.optimizedPlan
+    assert(base.exists(_.expressions.exists(
+      _.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ScalarSubquery]))),
+      s"the shared filter must keep its scalar subquery:\n$base")
+    assert(parity(sql), s"expected the join to be eliminated:\n$base")
+  }
+
   test("opt-out conf keeps Spark's join plan") {
     fixture
     spark.conf.set(ArgMaxJoinRule.RewriteConf, "false")
